@@ -1,5 +1,5 @@
 """Persisted ANN index: the build-once / search-many split for the PQ
-family (SURVEY.md §2.2 similarity surface; VERDICT r5 next-round #1).
+family (SURVEY.md §2.2 similarity surface).
 
 The fused query operators (``similarity.pq_adc_topk`` / ``ivfpq_topk``)
 re-encode the corpus inside every query — right for oracle-checkability,
@@ -18,28 +18,6 @@ and searches them through the SAME ``adc_tables``/``adc_rank`` (and
 ``ivfpq_probe_tables``/ADC-join) code path the fused operators use, so
 index search results are IDENTICAL to the fused query by construction
 (pinned in tests/test_ann_index.py).
-
-Transaction machinery is the shared ``VersionedSegmentStore``
-(``operators/index_store.py``, factored out of this module so the
-MinHash text-dedup index runs the same tested implementation; the
-pattern mirrors ``streaming.materialized``'s sharded MV): immutable
-segment dirs, a JSON manifest per committed version
-naming the segment set + codebook version, an atomic ``_LATEST`` pointer
-(``os.replace``), and superseded segments/codebooks pruned once no
-retained manifest references them. The artifact VERSION counter is
-internal (every commit — build, ingest, delete, compact — takes
-``latest + 1``); the stream replay guard is the SEPARATE manifest field
-``last_batch_id`` (replayed micro-batches skipped by ``batch_id <=
-last_batch_id`` — exactly-once under foreachBatch replay). Keeping the
-two counters apart is load-bearing: a compact()/rebuild version that
-shadowed a future batch id would make the replay guard silently drop
-that genuine batch. Codes are APPEND-ONLY — a vector's code never
-changes under a frozen codebook — so ingest writes one new segment per
-micro-batch and carries prior segments forward by reference: write
-amplification is O(|delta|), independent of index size. Deletion is
-CDC-style (the ``KeyedUpsertTable`` tombstone pattern): ``delete()``
-commits a tombstone id-list, reads anti-join it out, and ``compact()``
-physically drops the dead codes.
 
 Reference parity note: the reference connector (app.py) has no ANN; this
 implements the LLM-pipeline surface's production index lifecycle.
@@ -63,6 +41,10 @@ from cses2humio_spark.operators.similarity import (
 )
 
 
+def _dvec(c):
+    return F.transform(c, lambda x: x.cast("double"))
+
+
 class PQIndex(VersionedSegmentStore):
     """Versioned on-disk PQ / IVF-PQ index.
 
@@ -76,6 +58,13 @@ class PQIndex(VersionedSegmentStore):
     for the index's lifetime: codes are meaningless under a different
     codebook shape, so reopening with different geometry is a loud
     error, never a silent re-interpretation.
+
+    ``build(corpus, codebook_src=None, centroids=None, cid_col="cid",
+    codebook="prefix", codebook_iter=4)`` trains the codebook (see
+    ``_build_artifacts``) and encodes the corpus — the one pass that
+    touches every embedding. Ingest encodes each micro-batch with the
+    FROZEN codebook: retraining it would invalidate every stored code,
+    so codes are append-only and a new segment never rewrites old ones.
     """
 
     def __init__(
@@ -101,26 +90,18 @@ class PQIndex(VersionedSegmentStore):
             keep_versions,
         )
 
-    # version pointer / manifests / atomic writes / prune: inherited from
-    # VersionedSegmentStore (operators/index_store.py)
+    @property
+    def partition_col(self) -> str | None:
+        return "cid" if self.mode == "ivfpq" else None
 
     def _live_artifacts(self, manifest: dict) -> dict[str, set[int]]:
         return {
-            r"seg=(-?\d+)": set(manifest["segments"]),
+            **super()._live_artifacts(manifest),
             r"codebook_v=(-?\d+)": {manifest["codebook"]},
             r"centroids_v=(-?\d+)": (
                 {manifest["centroids"]} if "centroids" in manifest else set()
             ),
-            r"tomb=(-?\d+)": set(manifest.get("tombstones", [])),
         }
-
-    # -- artifact paths ----------------------------------------------------
-
-    def _seg_dir(self, seg: int) -> str:
-        return os.path.join(self.index_dir, f"seg={seg}")
-
-    def _tomb_dir(self, version: int) -> str:
-        return os.path.join(self.index_dir, f"tomb={version}")
 
     def _codebook_dir(self, version: int) -> str:
         return os.path.join(self.index_dir, f"codebook_v={version}")
@@ -128,47 +109,33 @@ class PQIndex(VersionedSegmentStore):
     def _centroids_dir(self, version: int) -> str:
         return os.path.join(self.index_dir, f"centroids_v={version}")
 
-    # -- build -------------------------------------------------------------
+    # -- build / encode ----------------------------------------------------
 
-    def build(
+    def _build_artifacts(
         self,
         corpus: DataFrame,
+        version: int,
+        manifest: dict,
         codebook_src: DataFrame | None = None,
         centroids: DataFrame | None = None,
         cid_col: str = "cid",
         codebook: str = "prefix",
         codebook_iter: int = 4,
-    ) -> int:
-        """Full index build: train/derive the codebook, encode every
-        corpus vector, commit as a fresh version (prior segments are NOT
-        carried forward — a rebuild supersedes them). This is the one
-        pass that touches every embedding; every subsequent search
-        touches only codes. Returns the committed version (-1 for the
-        first build; the version counter is internal bookkeeping and
-        never interacts with stream batch ids).
-
-        Rebuild contract: a rebuild CARRIES FORWARD the manifest's
-        ``last_batch_id``, so a restarted stream replaying an old
-        checkpoint still skips already-applied batches, and a genuine
-        next batch is still applied — the rebuild's version number
-        cannot shadow it (the two counters are independent). Attaching
-        a FRESH checkpoint (batch ids restart at 0) after ingests
-        requires a fresh index dir — same batch-id monotonicity
-        contract as the sharded materialized view. A rebuild also
-        clears tombstones: the new segment set is re-encoded from the
-        corpus handed in, which is the new truth.
+    ) -> None:
+        """Write the build's codebook (and, ivfpq, its coarse
+        ``centroids`` with cell ids in ``cid_col``) before the corpus is
+        encoded under them.
 
         ``codebook="kmeans"`` opts into Lloyd-trained codebooks
         (``similarity.pq_codebook_kmeans``, ``codebook_iter`` rounds) —
-        higher recall on clustered corpora; the default ``"prefix"``
-        stays the deterministic id-slice convention the oracle-paired
-        queries replay."""
+        higher recall on clustered corpora; the default ``"prefix"`` is
+        the deterministic id-slice convention the oracle-paired queries
+        replay. Flat PQ trains on ``codebook_src`` (default the corpus);
+        ivfpq trains on the corpus RESIDUALS against the centroids."""
         if codebook not in ("prefix", "kmeans"):
             raise ValueError(
                 f"codebook must be 'prefix' or 'kmeans', got {codebook!r}"
             )
-        latest = self.latest_version()
-        version = -1 if latest is None else latest + 1
         if self.mode == "ivfpq":
             if centroids is None:
                 raise ValueError("ivfpq mode needs centroids= at build")
@@ -178,243 +145,76 @@ class PQIndex(VersionedSegmentStore):
                     "an external codebook_src would encode a different "
                     "space; omit it"
                 )
-            dvec = lambda c: F.transform(c, lambda x: x.cast("double"))  # noqa: E731
-            cents = centroids.select(
-                F.col(cid_col).alias("cid"),
-                dvec(F.col(self.vec_col)).alias("cvec"),
+            self._write_dir(
+                centroids.select(
+                    F.col(cid_col).alias("cid"),
+                    _dvec(F.col(self.vec_col)).alias("cvec"),
+                ),
+                self._centroids_dir(version),
             )
-            self._write_dir(cents, self._centroids_dir(version))
-            assign = ivf_assign(
-                corpus, centroids, self.id_col, self.vec_col, "cid"
-            )
-            cvecs = centroids.select(
-                F.col(cid_col).alias("cid"), F.col(self.vec_col).alias("__cvec")
-            )
-            resid = (
-                corpus.join(assign, on=self.id_col)
-                .join(F.broadcast(cvecs), on="cid")
-                .select(
-                    self.id_col,
-                    "cid",
-                    F.zip_with(
-                        dvec(F.col(self.vec_col)),
-                        dvec(F.col("__cvec")),
-                        lambda a, b: a - b,
-                    ).alias("__rvec"),
-                )
-            )
-            if codebook == "kmeans":
-                from cses2humio_spark.operators.similarity import (
-                    pq_codebook_kmeans,
-                )
-
-                cb = pq_codebook_kmeans(
-                    resid, self.m, self.k_codes, self.dim,
-                    n_iter=codebook_iter, id_col=self.id_col,
-                    vec_col="__rvec",
-                )
-            else:
-                cb = pq_codebook(
-                    resid, self.m, self.k_codes, self.dim, self.id_col,
-                    "__rvec",
-                )
-            self._write_dir(cb, self._codebook_dir(version))
-            cb_stored = self._read_codebook_at(corpus.sparkSession, version)
-            codes = pq_encode(
-                resid, cb_stored, self.m, self.dim, self.id_col, "__rvec"
-            ).join(resid.select(self.id_col, "cid"), on=self.id_col)
-            self._write_dir(codes, self._seg_dir(version), partition_by=["cid"])
+            manifest["centroids"] = version
+            src, vec_col = self._residuals(corpus, manifest), "__rvec"
         else:
             if centroids is not None:
                 raise ValueError("centroids= only apply to ivfpq mode")
             src = codebook_src if codebook_src is not None else corpus
-            if codebook == "kmeans":
-                from cses2humio_spark.operators.similarity import (
-                    pq_codebook_kmeans,
-                )
-
-                cb = pq_codebook_kmeans(
-                    src, self.m, self.k_codes, self.dim,
-                    n_iter=codebook_iter, id_col=self.id_col,
-                    vec_col=self.vec_col,
-                )
-            else:
-                cb = pq_codebook(
-                    src, self.m, self.k_codes, self.dim, self.id_col,
-                    self.vec_col,
-                )
-            self._write_dir(cb, self._codebook_dir(version))
-            cb_stored = self._read_codebook_at(corpus.sparkSession, version)
-            codes = pq_encode(
-                corpus, cb_stored, self.m, self.dim, self.id_col, self.vec_col
+            vec_col = self.vec_col
+        if codebook == "kmeans":
+            from cses2humio_spark.operators.similarity import (
+                pq_codebook_kmeans,
             )
-            self._write_dir(codes, self._seg_dir(version))
-        prior_lb = (
-            self._last_batch_id(self._load_manifest(latest), latest)
-            if latest is not None
-            else -1
+
+            cb = pq_codebook_kmeans(
+                src, self.m, self.k_codes, self.dim,
+                n_iter=codebook_iter, id_col=self.id_col, vec_col=vec_col,
+            )
+        else:
+            cb = pq_codebook(
+                src, self.m, self.k_codes, self.dim, self.id_col, vec_col
+            )
+        self._write_dir(cb, self._codebook_dir(version))
+        manifest["codebook"] = version
+
+    def _residuals(self, vecs: DataFrame, manifest: dict) -> DataFrame:
+        """``(id, cid, __rvec)``: each vector minus its nearest coarse
+        centroid from the manifest's stored (double) centroids."""
+        cents = self._read_centroids_at(vecs.sparkSession, manifest["centroids"])
+        assign = ivf_assign(
+            vecs,
+            cents.select("cid", F.col("cvec").alias(self.vec_col)),
+            self.id_col,
+            self.vec_col,
+            "cid",
         )
-        manifest = {
-            "segments": [version],
-            "codebook": version,
-            "last_batch_id": prior_lb,
-            "tombstones": [],
-        }
-        if self.mode == "ivfpq":
-            manifest["centroids"] = version
-        self._write_manifest(version, manifest)
-        self._commit(version)
-        self._prune(version)
-        return version
+        return (
+            vecs.join(assign, on=self.id_col)
+            .join(
+                F.broadcast(cents.select("cid", F.col("cvec").alias("__cvec"))),
+                on="cid",
+            )
+            .select(
+                self.id_col,
+                "cid",
+                F.zip_with(
+                    _dvec(F.col(self.vec_col)),
+                    F.col("__cvec"),
+                    lambda a, b: a - b,
+                ).alias("__rvec"),
+            )
+        )
 
-    # -- streaming ingest --------------------------------------------------
-
-    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        """foreachBatch sink: encode the micro-batch's NEW vectors with
-        the FROZEN codebook (the production contract — retraining the
-        codebook would invalidate every stored code) and append them as
-        one immutable segment. Replayed batches (crash after segment
-        commit, before checkpoint commit) are detected by ``batch_id <=
-        last_batch_id`` — the DEDICATED manifest field, not the artifact
-        version counter, so an interleaved compact()/rebuild/delete()
-        (which bump the version) can never make the guard swallow a
-        genuine future batch — exactly-once, same guard as the sharded
-        MV."""
-        latest = self.latest_version()
-        if latest is None:
-            raise ValueError(
-                f"{self.index_dir}: ingest before build() — the codebook "
-                "must exist (and stay frozen) before deltas can be encoded"
+    def _segment_rows(self, vecs: DataFrame, manifest: dict) -> DataFrame:
+        """Codes under the manifest's codebook; ivfpq encodes the
+        residuals and keeps each code's cell id."""
+        cb = self._read_codebook_at(vecs.sparkSession, manifest["codebook"])
+        if self.mode == "pq":
+            return pq_encode(
+                vecs, cb, self.m, self.dim, self.id_col, self.vec_col
             )
-        manifest = dict(self._load_manifest(latest))
-        if batch_id <= self._last_batch_id(manifest, latest):
-            return  # replayed micro-batch: segment already committed
-        version = latest + 1
-        manifest["last_batch_id"] = batch_id
-        spark = batch_df.sparkSession
-        if batch_df.isEmpty():
-            # empty batch: advance the replay guard without a segment —
-            # no data is read or written
-            self._write_manifest(version, manifest)
-            self._commit(version)
-            self._prune(version)
-            return
-        cb = self._read_codebook_at(spark, manifest["codebook"])
-        if self.mode == "ivfpq":
-            cents_raw = spark.read.parquet(
-                self._centroids_dir(manifest["centroids"])
-            )
-            cents = cents_raw.select(
-                "cid", F.col("cvec").alias(self.vec_col)
-            )
-            assign = ivf_assign(
-                batch_df, cents, self.id_col, self.vec_col, "cid"
-            )
-            cvecs = cents_raw.select("cid", F.col("cvec").alias("__cvec"))
-            resid = (
-                batch_df.join(assign, on=self.id_col)
-                .join(F.broadcast(cvecs), on="cid")
-                .select(
-                    self.id_col,
-                    "cid",
-                    F.zip_with(
-                        F.transform(
-                            F.col(self.vec_col), lambda x: x.cast("double")
-                        ),
-                        F.col("__cvec"),
-                        lambda a, b: a - b,
-                    ).alias("__rvec"),
-                )
-            )
-            codes = pq_encode(
-                resid, cb, self.m, self.dim, self.id_col, "__rvec"
-            ).join(resid.select(self.id_col, "cid"), on=self.id_col)
-            self._write_dir(
-                codes, self._seg_dir(version), partition_by=["cid"]
-            )
-        else:
-            codes = pq_encode(
-                batch_df, cb, self.m, self.dim, self.id_col, self.vec_col
-            )
-            self._write_dir(codes, self._seg_dir(version))
-        manifest["segments"] = list(manifest["segments"]) + [version]
-        self._write_manifest(version, manifest)
-        self._commit(version)
-        self._prune(version)
-
-    def delete(self, ids: DataFrame, id_list: list | None = None) -> int:
-        """Tombstone the given vector ids (VERDICT r6 #2 — the missing
-        end of the crawl → dedup → index story: near-dup losers and
-        GDPR deletes must leave the index without a full rebuild). The
-        CDC pattern from ``streaming.materialized.KeyedUpsertTable``:
-        commits an id-list tombstone artifact under the next version —
-        O(|deleted|) bytes written, no segment is touched — and every
-        read/search anti-joins live tombstones out (broadcast-sized:
-        one id per deleted vector). ``compact()`` physically drops the
-        dead codes and clears the tombstone list. Deleting an id not in
-        the index is a no-op; re-ingesting a deleted id later
-        resurrects it ONLY after a compact has dropped the tombstone
-        (tombstones are by-id, not by-(id, segment)) — documented, not
-        silently special-cased.
-
-        ``ids``: a DataFrame with the index's id column (extra columns
-        ignored). ``last_batch_id`` carries forward — deletion never
-        perturbs the stream replay guard."""
-        latest = self.latest_version()
-        if latest is None:
-            raise ValueError(
-                f"{self.index_dir}: delete before build() — nothing to "
-                "tombstone"
-            )
-        manifest = dict(self._load_manifest(latest))
-        manifest["last_batch_id"] = self._last_batch_id(manifest, latest)
-        version = latest + 1
-        tomb = ids.select(F.col(self.id_col)).distinct()
-        self._write_dir(tomb, self._tomb_dir(version))
-        manifest["tombstones"] = list(manifest.get("tombstones", [])) + [
-            version
-        ]
-        self._write_manifest(version, manifest)
-        self._commit(version)
-        self._prune(version)
-        return version
-
-    def compact(self, spark: SparkSession) -> int:
-        """Merge all live segments into ONE and physically drop
-        tombstoned codes — the small-files AND the deferred-delete
-        answer for a long-running ingest stream (every micro-batch
-        appends a segment; a thousand batches otherwise mean a thousand
-        file listings per search; every delete() otherwise means one
-        more anti-join input forever). Reads the current codes (already
-        tombstone-filtered by ``read_codes``), rewrites them as a single
-        segment under the NEXT version, and commits a manifest
-        referencing only it with an EMPTY tombstone list
-        (codebook/centroids carry forward unchanged); old segments age
-        out with the retention window. Search results are identical
-        before and after by construction — the surviving codes are the
-        same rows. The stream replay guard is untouched:
-        ``last_batch_id`` carries forward, and the compaction's version
-        number is internal bookkeeping that cannot shadow a future
-        batch id."""
-        latest = self.latest_version()
-        if latest is None:
-            raise ValueError(
-                f"{self.index_dir}: nothing to compact — run build() first"
-            )
-        manifest = dict(self._load_manifest(latest))
-        manifest["last_batch_id"] = self._last_batch_id(manifest, latest)
-        version = latest + 1
-        codes = self.read_codes(spark, latest)
-        if self.mode == "ivfpq":
-            self._write_dir(codes, self._seg_dir(version), partition_by=["cid"])
-        else:
-            self._write_dir(codes, self._seg_dir(version))
-        manifest["segments"] = [version]
-        manifest["tombstones"] = []
-        self._write_manifest(version, manifest)
-        self._commit(version)
-        self._prune(version)
-        return version
+        resid = self._residuals(vecs, manifest)
+        return pq_encode(
+            resid, cb, self.m, self.dim, self.id_col, "__rvec"
+        ).join(resid.select(self.id_col, "cid"), on=self.id_col)
 
     # -- read --------------------------------------------------------------
 
@@ -423,56 +223,21 @@ class PQIndex(VersionedSegmentStore):
             "sub_id", "code", "cvec"
         )
 
+    def _read_centroids_at(self, spark: SparkSession, version: int) -> DataFrame:
+        return spark.read.parquet(self._centroids_dir(version))
+
     def read_codebook(
         self, spark: SparkSession, version: int | None = None
     ) -> DataFrame:
         man = self._load_manifest(self._resolve_version(version))
         return self._read_codebook_at(spark, man["codebook"])
 
-    def read_tombstones(
-        self, spark: SparkSession, version: int | None = None
-    ) -> DataFrame | None:
-        """The live deleted-id set as of ``version`` (None if nothing is
-        tombstoned): the union of the manifest's tombstone id-lists.
-        Broadcast-sized by design — one id per deleted vector, cleared
-        at each compact()."""
-        man = self._load_manifest(self._resolve_version(version))
-        tombs = man.get("tombstones", [])
-        if not tombs:
-            return None
-        paths = [self._tomb_dir(t) for t in tombs]
-        return (
-            spark.read.option("basePath", self.index_dir)
-            .parquet(*paths)
-            .select(self.id_col)
-            .distinct()
-        )
-
     def read_codes(
         self, spark: SparkSession, version: int | None = None
     ) -> DataFrame:
-        """The codes table as of ``version`` (default latest): the union
-        of that manifest's immutable segments, minus tombstoned ids (a
-        broadcast anti-join — deletes are visible to every reader the
-        moment delete() commits, long before compact() rewrites
-        anything). ``basePath`` anchors partition discovery at the index
-        root — the ``seg=<id>`` dirs are themselves key=value-shaped,
-        and a multi-segment ivfpq read would otherwise see conflicting
-        partition depths (seg=N/cid=M); the synthetic ``seg`` column is
-        dropped, ``cid`` (ivfpq) stays the partition column the nprobe
-        prune lands on."""
-        at = self._resolve_version(version)
-        man = self._load_manifest(at)
-        paths = [self._seg_dir(s) for s in man["segments"]]
-        codes = (
-            spark.read.option("basePath", self.index_dir)
-            .parquet(*paths)
-            .drop("seg")
-        )
-        tombs = self.read_tombstones(spark, at)
-        if tombs is not None:
-            codes = codes.join(F.broadcast(tombs), on=self.id_col, how="left_anti")
-        return codes
+        """The live codes table as of ``version`` (default latest); ivfpq
+        keeps ``cid``, the partition column the nprobe prune lands on."""
+        return self.read_segments(spark, version)
 
     # -- search ------------------------------------------------------------
 
@@ -531,9 +296,9 @@ class PQIndex(VersionedSegmentStore):
                 codes, tables, self.m, k_adc, self.id_col, probe_id_col
             )
         else:
-            cents = spark.read.parquet(
-                self._centroids_dir(man["centroids"])
-            ).select("cid", F.col("cvec").alias(self.vec_col))
+            cents = self._read_centroids_at(spark, man["centroids"]).select(
+                "cid", F.col("cvec").alias(self.vec_col)
+            )
             probe_cells, tables = ivfpq_probe_tables(
                 probes, cents, cb, self.m, self.dim, nprobe,
                 self.vec_col, probe_id_col, "cid",
@@ -594,15 +359,14 @@ class PQIndex(VersionedSegmentStore):
         double probes meet in one space."""
         from pyspark.sql.window import Window
 
-        dvec = lambda c: F.transform(c, lambda x: x.cast("double"))  # noqa: E731
         from cses2humio_spark.operators.similarity import _l2sq
 
         cand_ids = candidates.select(probe_id_col, self.id_col)
         cvecs = vectors.select(
-            F.col(self.id_col), dvec(F.col(self.vec_col)).alias("__cv")
+            F.col(self.id_col), _dvec(F.col(self.vec_col)).alias("__cv")
         )
         pvecs = probes.select(
-            F.col(probe_id_col), dvec(F.col(self.vec_col)).alias("__pv")
+            F.col(probe_id_col), _dvec(F.col(self.vec_col)).alias("__pv")
         )
         exact = (
             cvecs.join(F.broadcast(cand_ids), on=self.id_col)

@@ -1,7 +1,6 @@
 """Persisted MinHash LSH index: the build-once / probe-many split for
 TEXT near-duplicate detection — the dedup counterpart of
-``operators/ann_index.PQIndex`` (VERDICT r6 closed the vector index's
-lifecycle; this closes the text side).
+``operators/ann_index.PQIndex``.
 
 The fused query operators (``dedup.minhash_candidate_pairs`` /
 ``jaccard_near_dups``) re-shingle and re-hash the whole corpus inside
@@ -18,13 +17,6 @@ rebalance when the local input is single-split, a no-op at scale)
 followed by ONE (band, sig) equi-join. Corpus text never rides a key
 shuffle; at 100 TB of documents the index is tens of GB.
 
-Transaction machinery is the shared ``VersionedSegmentStore``
-(``operators/index_store.py``): immutable signature segments, manifest
-per version, atomic ``_LATEST``, a dedicated ``last_batch_id`` replay
-guard (exactly-once under foreachBatch replay — never keyed on the
-artifact version counter), CDC-style tombstone deletes, compaction, and
-grace-window pruning.
-
 Geometry (shingle n, bands, rows_per_band) is pinned in ``_TABLE.json``:
 signatures hashed under different banding are incomparable, so reopening
 with different parameters is a loud error.
@@ -34,8 +26,6 @@ this implements the LLM-pipeline surface's production dedup lifecycle.
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -101,18 +91,6 @@ class MinHashIndex(VersionedSegmentStore):
             keep_versions,
         )
 
-    def _live_artifacts(self, manifest: dict) -> dict[str, set[int]]:
-        return {
-            r"seg=(-?\d+)": set(manifest["segments"]),
-            r"tomb=(-?\d+)": set(manifest.get("tombstones", [])),
-        }
-
-    def _seg_dir(self, seg: int) -> str:
-        return os.path.join(self.index_dir, f"seg={seg}")
-
-    def _tomb_dir(self, version: int) -> str:
-        return os.path.join(self.index_dir, f"tomb={version}")
-
     def _signatures(self, docs: DataFrame) -> DataFrame:
         """Zero-shuffle rowwise banded signatures (the streaming-safe
         projection; identical output to the groupBy formulation — pinned
@@ -132,168 +110,14 @@ class MinHashIndex(VersionedSegmentStore):
             self.id_col, "band", F.xxhash64("sig").alias("sig")
         )
 
-    # -- build ---------------------------------------------------------------
-
-    def build(self, docs: DataFrame) -> int:
-        """Sign the full corpus and commit as a fresh version (prior
-        segments are NOT carried forward — a rebuild supersedes them;
-        tombstones clear, since the handed-in corpus is the new truth).
-        This is the one pass that reads corpus text; every subsequent
-        probe reads signatures only. ``last_batch_id`` carries forward so
-        a restarted ingest stream's replay guard survives a rebuild."""
-        latest = self.latest_version()
-        version = -1 if latest is None else latest + 1
-        self._write_dir(self._signatures(docs), self._seg_dir(version))
-        prior_lb = (
-            self._last_batch_id(self._load_manifest(latest), latest)
-            if latest is not None
-            else -1
-        )
-        self._write_manifest(
-            version,
-            {
-                "segments": [version],
-                "last_batch_id": prior_lb,
-                "tombstones": [],
-            },
-        )
-        self._commit(version)
-        self._prune(version)
-        return version
-
-    # -- streaming ingest ------------------------------------------------------
-
-    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        """foreachBatch sink: sign the micro-batch's documents (rowwise —
-        no stateful aggregation, legal in any output mode) and append
-        them as one immutable segment; write amplification is O(|delta|),
-        independent of index size. Replayed batches are skipped by the
-        dedicated ``last_batch_id`` manifest field — exactly-once, and an
-        interleaved compact()/rebuild/delete() can never shadow a genuine
-        future batch id."""
-        latest = self.latest_version()
-        if latest is None:
-            raise ValueError(
-                f"{self.index_dir}: ingest before build() — the geometry "
-                "must be committed before deltas can be signed"
-            )
-        manifest = dict(self._load_manifest(latest))
-        if batch_id <= self._last_batch_id(manifest, latest):
-            return  # replayed micro-batch: segment already committed
-        version = latest + 1
-        manifest["last_batch_id"] = batch_id
-        # emptiness rides the segment write's row-count Observation
-        # (r14): the standalone isEmpty pre-check cost one extra job per
-        # micro-batch; a no-signature segment is left out of the
-        # manifest (readers never see it) and its unlisted dir is
-        # reclaimed by the NEXT commit's _prune — this commit's own
-        # prune only removes ids below the committed version
-        from pyspark.sql import Observation
-
-        obs = Observation()
-        self._write_dir(
-            self._signatures(batch_df).observe(
-                obs, F.count(F.lit(1)).alias("n")
-            ),
-            self._seg_dir(version),
-        )
-        if int(obs.get["n"] or 0) > 0:
-            manifest["segments"] = list(manifest["segments"]) + [version]
-        self._write_manifest(version, manifest)
-        self._commit(version)
-        self._prune(version)
-
-    # -- delete / compact -------------------------------------------------------
-
-    def delete(self, ids: DataFrame) -> int:
-        """Tombstone the given document ids (near-dup losers leaving the
-        corpus, takedowns): commits an id-list artifact under the next
-        version — O(|deleted|) bytes, no segment touched — and every
-        read/probe anti-joins live tombstones out immediately.
-        ``compact()`` physically drops the dead signatures. Deleting an
-        id not in the index is a no-op; re-ingesting a deleted id
-        resurrects it only after a compact has dropped the tombstone."""
-        latest = self.latest_version()
-        if latest is None:
-            raise ValueError(
-                f"{self.index_dir}: delete before build() — nothing to "
-                "tombstone"
-            )
-        manifest = dict(self._load_manifest(latest))
-        manifest["last_batch_id"] = self._last_batch_id(manifest, latest)
-        version = latest + 1
-        self._write_dir(
-            ids.select(F.col(self.id_col)).distinct(), self._tomb_dir(version)
-        )
-        manifest["tombstones"] = list(manifest.get("tombstones", [])) + [
-            version
-        ]
-        self._write_manifest(version, manifest)
-        self._commit(version)
-        self._prune(version)
-        return version
-
-    def compact(self, spark: SparkSession) -> int:
-        """Merge all live segments into ONE and physically drop
-        tombstoned signatures — the small-files + deferred-delete answer
-        for a long-running ingest stream. Probe results are identical
-        before and after by construction (the surviving rows are the
-        same); ``last_batch_id`` carries forward untouched."""
-        latest = self.latest_version()
-        if latest is None:
-            raise ValueError(
-                f"{self.index_dir}: nothing to compact — run build() first"
-            )
-        manifest = dict(self._load_manifest(latest))
-        manifest["last_batch_id"] = self._last_batch_id(manifest, latest)
-        version = latest + 1
-        self._write_dir(
-            self.read_signatures(spark, latest), self._seg_dir(version)
-        )
-        manifest["segments"] = [version]
-        manifest["tombstones"] = []
-        self._write_manifest(version, manifest)
-        self._commit(version)
-        self._prune(version)
-        return version
-
-    # -- read / probe -------------------------------------------------------------
-
-    def read_tombstones(
-        self, spark: SparkSession, version: int | None = None
-    ) -> DataFrame | None:
-        man = self._load_manifest(self._resolve_version(version))
-        tombs = man.get("tombstones", [])
-        if not tombs:
-            return None
-        return (
-            spark.read.option("basePath", self.index_dir)
-            .parquet(*[self._tomb_dir(t) for t in tombs])
-            .select(self.id_col)
-            .distinct()
-        )
+    def _segment_rows(self, docs: DataFrame, manifest: dict) -> DataFrame:
+        return self._signatures(docs)
 
     def read_signatures(
         self, spark: SparkSession, version: int | None = None
     ) -> DataFrame:
-        """The signature table as of ``version`` (default latest): the
-        union of that manifest's immutable segments minus tombstoned ids
-        (broadcast anti-join — deletes are visible the moment delete()
-        commits). ``basePath`` anchors partition discovery at the index
-        root because the ``seg=<id>`` dirs are key=value-shaped."""
-        at = self._resolve_version(version)
-        man = self._load_manifest(at)
-        sigs = (
-            spark.read.option("basePath", self.index_dir)
-            .parquet(*[self._seg_dir(s) for s in man["segments"]])
-            .drop("seg")
-        )
-        tombs = self.read_tombstones(spark, at)
-        if tombs is not None:
-            sigs = sigs.join(
-                F.broadcast(tombs), on=self.id_col, how="left_anti"
-            )
-        return sigs
+        """The live ``(id, band, sig)`` table as of ``version``."""
+        return self.read_segments(spark, version)
 
     def query_candidates(
         self,
@@ -789,8 +613,8 @@ class MinHashIndex(VersionedSegmentStore):
 
 class EmbeddingLshIndex(VersionedSegmentStore):
     """Persisted banded hyperplane-LSH signature index over EMBEDDINGS —
-    the vector-space twin of ``MinHashIndex`` (VERDICT r8 task #8:
-    streaming SEMANTIC dedup): the standing corpus's vectors are signed
+    the vector-space twin of ``MinHashIndex`` (streaming semantic
+    dedup): the standing corpus's vectors are signed
     ONCE into a versioned on-disk table of ``(id, lsh_sig)`` — one
     bigint per vector, ~16 bytes, 100-1000x smaller than the float
     vectors — and incoming batches are probed by a rowwise signature
@@ -806,10 +630,6 @@ class EmbeddingLshIndex(VersionedSegmentStore):
     and the DuckDB oracle mirror (``_EMB_NEARDUP_CTES``) applies
     unchanged. Geometry (dim, n_planes, n_bands) is pinned in
     ``_TABLE.json``; n_planes * n_bands <= 62 (bigint signature).
-
-    Transaction machinery is the shared ``VersionedSegmentStore``:
-    immutable segments, atomic ``_LATEST``, the dedicated
-    ``last_batch_id`` replay guard, tombstones, compaction.
     """
 
     def __init__(
@@ -838,18 +658,6 @@ class EmbeddingLshIndex(VersionedSegmentStore):
             {"dim": dim, "n_planes": n_planes, "n_bands": n_bands},
             keep_versions,
         )
-
-    def _live_artifacts(self, manifest: dict) -> dict[str, set[int]]:
-        return {
-            r"seg=(-?\d+)": set(manifest["segments"]),
-            r"tomb=(-?\d+)": set(manifest.get("tombstones", [])),
-        }
-
-    def _seg_dir(self, seg: int) -> str:
-        return os.path.join(self.index_dir, f"seg={seg}")
-
-    def _tomb_dir(self, version: int) -> str:
-        return os.path.join(self.index_dir, f"tomb={version}")
 
     def _signatures(self, vecs: DataFrame) -> DataFrame:
         """One Arrow-batched rowwise projection per vector — no
@@ -890,136 +698,14 @@ class EmbeddingLshIndex(VersionedSegmentStore):
             F.col("__b.band_sig").alias("band_sig"),
         )
 
-    # -- build / ingest / delete / compact ---------------------------------
-
-    def build(self, vecs: DataFrame) -> int:
-        """Sign the full corpus and commit as a fresh version; the one
-        pass that reads corpus vectors. ``last_batch_id`` carries
-        forward across rebuilds (same contract as MinHashIndex.build)."""
-        latest = self.latest_version()
-        version = -1 if latest is None else latest + 1
-        self._write_dir(self._signatures(vecs), self._seg_dir(version))
-        prior_lb = (
-            self._last_batch_id(self._load_manifest(latest), latest)
-            if latest is not None
-            else -1
-        )
-        self._write_manifest(
-            version,
-            {
-                "segments": [version],
-                "last_batch_id": prior_lb,
-                "tombstones": [],
-            },
-        )
-        self._commit(version)
-        self._prune(version)
-        return version
-
-    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        """foreachBatch sink: append the micro-batch's signatures as one
-        immutable segment — O(|delta|) write amplification; replayed
-        batch ids are skipped via the dedicated manifest guard."""
-        latest = self.latest_version()
-        if latest is None:
-            raise ValueError(
-                f"{self.index_dir}: ingest before build() — the geometry "
-                "must be committed before deltas can be signed"
-            )
-        manifest = dict(self._load_manifest(latest))
-        if batch_id <= self._last_batch_id(manifest, latest):
-            return
-        version = latest + 1
-        manifest["last_batch_id"] = batch_id
-        # emptiness rides the segment write's row-count Observation (r14)
-        # — see MinHashIndex.__call__; one fewer job per micro-batch
-        from pyspark.sql import Observation
-
-        obs = Observation()
-        self._write_dir(
-            self._signatures(batch_df).observe(
-                obs, F.count(F.lit(1)).alias("n")
-            ),
-            self._seg_dir(version),
-        )
-        if int(obs.get["n"] or 0) > 0:
-            manifest["segments"] = list(manifest["segments"]) + [version]
-        self._write_manifest(version, manifest)
-        self._commit(version)
-        self._prune(version)
-
-    def delete(self, ids: DataFrame) -> int:
-        latest = self.latest_version()
-        if latest is None:
-            raise ValueError(
-                f"{self.index_dir}: delete before build() — nothing to "
-                "tombstone"
-            )
-        manifest = dict(self._load_manifest(latest))
-        manifest["last_batch_id"] = self._last_batch_id(manifest, latest)
-        version = latest + 1
-        self._write_dir(
-            ids.select(F.col(self.id_col)).distinct(), self._tomb_dir(version)
-        )
-        manifest["tombstones"] = list(manifest.get("tombstones", [])) + [
-            version
-        ]
-        self._write_manifest(version, manifest)
-        self._commit(version)
-        self._prune(version)
-        return version
-
-    def compact(self, spark: SparkSession) -> int:
-        latest = self.latest_version()
-        if latest is None:
-            raise ValueError(
-                f"{self.index_dir}: nothing to compact — run build() first"
-            )
-        manifest = dict(self._load_manifest(latest))
-        manifest["last_batch_id"] = self._last_batch_id(manifest, latest)
-        version = latest + 1
-        self._write_dir(
-            self.read_signatures(spark, latest), self._seg_dir(version)
-        )
-        manifest["segments"] = [version]
-        manifest["tombstones"] = []
-        self._write_manifest(version, manifest)
-        self._commit(version)
-        self._prune(version)
-        return version
-
-    # -- read / probe -------------------------------------------------------
-
-    def read_tombstones(
-        self, spark: SparkSession, version: int | None = None
-    ) -> DataFrame | None:
-        man = self._load_manifest(self._resolve_version(version))
-        tombs = man.get("tombstones", [])
-        if not tombs:
-            return None
-        return (
-            spark.read.option("basePath", self.index_dir)
-            .parquet(*[self._tomb_dir(t) for t in tombs])
-            .select(self.id_col)
-            .distinct()
-        )
+    def _segment_rows(self, vecs: DataFrame, manifest: dict) -> DataFrame:
+        return self._signatures(vecs)
 
     def read_signatures(
         self, spark: SparkSession, version: int | None = None
     ) -> DataFrame:
-        at = self._resolve_version(version)
-        man = self._load_manifest(at)
-        sigs = (
-            spark.read.option("basePath", self.index_dir)
-            .parquet(*[self._seg_dir(s) for s in man["segments"]])
-            .drop("seg")
-        )
-        tombs = self.read_tombstones(spark, at)
-        if tombs is not None:
-            sigs = sigs.join(
-                F.broadcast(tombs), on=self.id_col, how="left_anti"
-            )
-        return sigs
+        """The live ``(id, lsh_sig)`` table as of ``version``."""
+        return self.read_segments(spark, version)
 
     def query_candidates(
         self,

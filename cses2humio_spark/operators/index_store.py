@@ -1,27 +1,64 @@
-"""Shared transaction machinery for persisted, versioned index artifacts
-(the sharded-MV pattern factored out of ``operators/ann_index.PQIndex``
-so every index family — PQ/IVF-PQ vectors, MinHash text signatures —
-runs ONE tested implementation of the tricky parts):
+"""The one lifecycle every persisted index family runs (``PQIndex``,
+``MinHashIndex``, ``EmbeddingLshIndex``, ``InvertedTextIndex``).
 
-- immutable artifact dirs under the index root (``seg=<id>``, ...);
-- a JSON manifest per committed version naming the live artifact set;
-- an atomic ``_LATEST`` pointer (``os.replace``) — readers always see a
-  fully-written version or the previous one, never a torn state;
-- a geometry descriptor (``_TABLE.json``) pinned for the index's
-  lifetime: artifacts are meaningless under different geometry, so
-  reopening with different parameters is a loud error;
-- the stream replay guard: ``last_batch_id`` is a DEDICATED manifest
-  field carried forward by every commit — the artifact version counter
-  is internal bookkeeping, so a compact()/rebuild/delete() version can
-  never shadow a genuine future micro-batch id (exactly-once under
-  foreachBatch replay);
-- pruning with a one-version grace window: reads are lazy DataFrames
-  over artifact paths, so artifacts referenced by a just-evicted
-  manifest survive until the NEXT commit's prune.
+On-disk layout under the index root:
 
-Subclasses provide the domain logic (what a segment contains, how to
-build/search) plus ``_live_artifacts(manifest)`` naming the dir patterns
-their manifests reference.
+- ``seg=<v>``: immutable segment rows (codes, signatures, postings),
+  partitioned by the family's ``partition_col`` when it has one;
+- ``tomb=<v>``: an id list committed by ``delete``;
+- family artifacts named by ``_live_artifacts`` (text ``dl=<v>``, PQ
+  ``codebook_v=<v>`` / ``centroids_v=<v>``);
+- ``manifest_v=<v>.json`` per committed version: the live ``segments``
+  and ``tombstones``, the stream replay guard ``last_batch_id``, and any
+  family keys;
+- ``_LATEST``: the committed version, switched with ``os.replace`` —
+  readers see a fully-written version or the previous one, never a torn
+  state;
+- ``_TABLE.json``: the geometry, pinned for the index's lifetime —
+  artifacts are meaningless under different geometry, so reopening with
+  different parameters is a loud error.
+
+Lifecycle contract:
+
+- ``build(df)`` writes one segment from the full input and commits a
+  fresh manifest: prior segments and tombstones are dropped (the input
+  is the new truth) and ``last_batch_id`` carries forward, so a
+  restarted stream's replay guard survives a rebuild.
+- ``index(batch_df, batch_id)`` is a foreachBatch sink. A batch id at or
+  below ``last_batch_id`` is a replay and is skipped (exactly-once);
+  otherwise the batch becomes one appended segment, so write
+  amplification is O(|delta|), independent of index size. Batch ids
+  must keep rising across restarts: attaching a fresh checkpoint (ids
+  restart at 0) after ingests needs a fresh index dir. Emptiness is
+  read from the segment write's own row-count Observation (no separate
+  job): an empty batch advances the guard, lists no segment, and its
+  segment dir is removed at once.
+- ``delete(ids)`` commits a tombstone id list; every read anti-joins it
+  out at once. ``compact(spark)`` rewrites the live rows as one segment
+  and clears the tombstones, so reads are unchanged. A deleted id that
+  is ingested again reappears only after a compact.
+- ingest, delete and compact refuse before the first build.
+- the version counter is internal: every commit takes ``latest + 1``.
+  ``last_batch_id`` is a separate manifest field, so a build, delete or
+  compact version can never shadow a future batch id.
+- every commit writes the manifest, switches ``_LATEST`` and prunes:
+  manifests beyond ``keep_versions`` are dropped, and artifacts outlive
+  their last manifest by one commit — reads are lazy DataFrames over
+  artifact paths, so a reader of a just-evicted version survives until
+  the next commit.
+
+A family supplies:
+
+- ``id_col``, plus ``_key_col`` when the stored rows name the id
+  differently, and ``partition_col`` for partitioned segments;
+- ``_segment_rows(df, manifest)``: input rows -> segment rows;
+- optionally ``_build_artifacts`` (written by ``build`` before its
+  segment, e.g. the PQ codebook; ``build``'s keyword arguments go
+  there) and ``_segment_artifacts`` (derived after each segment write,
+  e.g. text doc lengths), with ``_live_artifacts`` naming their dirs;
+- ``empty_segment_readable = False`` to commit ``segments: []`` for an
+  empty build and refuse a compact that would leave no rows (text: a
+  zero-row partitioned write leaves no files to infer a schema from).
 """
 
 from __future__ import annotations
@@ -31,11 +68,17 @@ import os
 import re
 import shutil
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 
 class VersionedSegmentStore:
-    """Base class: version pointer + manifests + atomic writes + prune."""
+    """Base class: version pointer, manifests, atomic writes, prune, and
+    the build / ingest / delete / compact / read lifecycle."""
+
+    id_col: str
+    partition_col: str | None = None
+    empty_segment_readable = True
 
     def __init__(self, index_dir: str, geometry: dict, keep_versions: int = 2):
         if keep_versions < 1:
@@ -58,6 +101,11 @@ class VersionedSegmentStore:
             with open(tmp, "w", encoding="ascii") as fh:
                 json.dump(geometry, fh)
             os.replace(tmp, cfg_path)
+
+    @property
+    def _key_col(self) -> str:
+        """The id column of stored segment and tombstone rows."""
+        return self.id_col
 
     # -- version pointer + manifests ---------------------------------------
 
@@ -85,12 +133,6 @@ class VersionedSegmentStore:
             json.dump(manifest, fh)
         os.replace(tmp, self._manifest_path(version))
 
-    def _commit(self, version: int) -> None:
-        tmp = self._pointer + ".tmp"
-        with open(tmp, "w", encoding="ascii") as fh:
-            fh.write(str(version))
-        os.replace(tmp, self._pointer)
-
     def versions(self) -> list[int]:
         return sorted(
             int(m.group(1))
@@ -117,12 +159,44 @@ class VersionedSegmentStore:
     @staticmethod
     def _last_batch_id(manifest: dict, version: int) -> int:
         """The highest stream batch id applied as of ``manifest``.
-        Pre-upgrade manifests (no ``last_batch_id`` field) used the
-        artifact version AS the batch id, so the manifest's own version
-        is the faithful legacy value."""
+        Manifests written before the field existed used the artifact
+        version AS the batch id, so the manifest's own version is the
+        faithful value for them."""
         return int(manifest.get("last_batch_id", version))
 
+    def _next_version(self, action: str | None) -> tuple[int, dict]:
+        """The version the next commit writes, and the latest manifest
+        (a copy, ``last_batch_id`` made explicit) it starts from.
+        ``action`` names the operation refused when nothing is committed
+        yet; ``build`` passes None and starts at version -1."""
+        latest = self.latest_version()
+        if latest is None:
+            if action is not None:
+                raise ValueError(
+                    f"{self.index_dir}: {action} before build() — the "
+                    "index has no committed version"
+                )
+            return -1, {"last_batch_id": -1}
+        manifest = dict(self._load_manifest(latest))
+        manifest["last_batch_id"] = self._last_batch_id(manifest, latest)
+        return latest + 1, manifest
+
+    def _commit(self, version: int, manifest: dict) -> None:
+        """Write ``manifest``, switch ``_LATEST`` to ``version``, prune."""
+        self._write_manifest(version, manifest)
+        tmp = self._pointer + ".tmp"
+        with open(tmp, "w", encoding="ascii") as fh:
+            fh.write(str(version))
+        os.replace(tmp, self._pointer)
+        self._prune(version)
+
     # -- atomic artifact writes ---------------------------------------------
+
+    def _seg_dir(self, seg: int) -> str:
+        return os.path.join(self.index_dir, f"seg={seg}")
+
+    def _tomb_dir(self, version: int) -> str:
+        return os.path.join(self.index_dir, f"tomb={version}")
 
     def _write_dir(self, df: DataFrame, dst: str, partition_by=None) -> None:
         """Write to a staging dir, then atomically rename into place (a
@@ -138,53 +212,205 @@ class VersionedSegmentStore:
             shutil.rmtree(dst)
         os.replace(staging, dst)
 
-    # -- pruning -------------------------------------------------------------
+    def _write_segment(
+        self, rows: DataFrame, version: int, manifest: dict, keep_empty: bool
+    ) -> int:
+        """Write ``rows`` as segment ``version`` and list it in
+        ``manifest``. A zero-row segment is listed only when
+        ``keep_empty``; otherwise its dir is removed at once. Returns the
+        row count, observed on the write itself."""
+        obs = Observation()
+        self._write_dir(
+            rows.observe(obs, F.count(F.lit(1)).alias("n")),
+            self._seg_dir(version),
+            partition_by=[self.partition_col] if self.partition_col else None,
+        )
+        n_rows = int(obs.get["n"] or 0)
+        if n_rows or keep_empty:
+            manifest["segments"] = list(manifest["segments"]) + [version]
+        else:
+            shutil.rmtree(self._seg_dir(version), ignore_errors=True)
+        self._segment_artifacts(rows.sparkSession, version, manifest, n_rows)
+        return n_rows
+
+    # -- family hooks --------------------------------------------------------
+
+    def _segment_rows(self, df: DataFrame, manifest: dict) -> DataFrame:
+        """Input rows -> segment rows, under the artifacts ``manifest``
+        names (PQ encodes with its frozen codebook)."""
+        raise NotImplementedError
+
+    def _build_artifacts(
+        self, df: DataFrame, version: int, manifest: dict
+    ) -> None:
+        """Artifacts ``build`` writes before its segment; record them in
+        ``manifest``. Receives ``build``'s keyword arguments."""
+
+    def _segment_artifacts(
+        self, spark: SparkSession, version: int, manifest: dict, n_rows: int
+    ) -> None:
+        """Artifacts derived from the just-written segment ``version``
+        (``n_rows`` rows; listed in ``manifest`` iff it is kept)."""
 
     def _live_artifacts(self, manifest: dict) -> dict[str, set[int]]:
-        """Subclass hook: dir-name regex pattern (one int group) -> the
-        artifact ids this manifest keeps alive."""
-        raise NotImplementedError
+        """Dir-name regex pattern (one int group) -> the artifact ids
+        ``manifest`` keeps alive."""
+        return {
+            r"seg=(-?\d+)": set(manifest["segments"]),
+            r"tomb=(-?\d+)": set(manifest.get("tombstones", [])),
+        }
+
+    # -- lifecycle -------------------------------------------------------------
+
+    def build(self, df: DataFrame, **build_args) -> int:
+        """Index the full input ``df`` as a fresh version and return it
+        (-1 for the first build). Prior segments and tombstones are
+        dropped; ``last_batch_id`` carries forward."""
+        version, prior = self._next_version(None)
+        manifest = {
+            "segments": [],
+            "last_batch_id": prior["last_batch_id"],
+            "tombstones": [],
+        }
+        self._build_artifacts(df, version, manifest, **build_args)
+        self._write_segment(
+            self._segment_rows(df, manifest),
+            version,
+            manifest,
+            keep_empty=self.empty_segment_readable,
+        )
+        self._commit(version, manifest)
+        return version
+
+    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
+        """foreachBatch sink: append the batch as one segment, or skip a
+        replayed ``batch_id``."""
+        version, manifest = self._next_version("ingest")
+        if batch_id <= manifest["last_batch_id"]:
+            return  # replayed micro-batch: segment already committed
+        manifest["last_batch_id"] = batch_id
+        self._write_segment(
+            self._segment_rows(batch_df, manifest),
+            version,
+            manifest,
+            keep_empty=False,
+        )
+        self._commit(version, manifest)
+
+    def delete(self, ids: DataFrame) -> int:
+        """Tombstone the ids in ``ids``' ``id_col`` (extra columns are
+        ignored): O(|deleted|) bytes, no segment touched. Deleting an id
+        not in the index is a no-op."""
+        version, manifest = self._next_version("delete")
+        self._write_dir(
+            ids.select(F.col(self.id_col).alias(self._key_col)).distinct(),
+            self._tomb_dir(version),
+        )
+        manifest["tombstones"] = list(manifest.get("tombstones", [])) + [
+            version
+        ]
+        self._commit(version, manifest)
+        return version
+
+    def compact(self, spark: SparkSession) -> int:
+        """Rewrite the live rows as ONE segment and clear the tombstones
+        — the small-files and deferred-delete answer for a long ingest
+        stream. Reads are identical before and after."""
+        version, manifest = self._next_version("compact")
+        rows = self.read_segments(spark, version - 1)
+        manifest["segments"], manifest["tombstones"] = [], []
+        self._write_segment(
+            rows, version, manifest, keep_empty=self.empty_segment_readable
+        )
+        if not manifest["segments"]:
+            # the pre-compact version stays committed and fully live
+            raise ValueError(
+                f"{self.index_dir}: index is empty after compaction — "
+                "every row is tombstoned; rebuild() with a fresh corpus "
+                "instead of compacting away the last row"
+            )
+        self._commit(version, manifest)
+        return version
+
+    # -- reads -----------------------------------------------------------------
+
+    def read_tombstones(
+        self, spark: SparkSession, version: int | None = None
+    ) -> DataFrame | None:
+        """The deleted-id set as of ``version`` (None if nothing is
+        tombstoned) — one id per deleted row, cleared by compact, so it
+        is broadcast-sized by design."""
+        man = self._load_manifest(self._resolve_version(version))
+        tombs = man.get("tombstones", [])
+        if not tombs:
+            return None
+        return (
+            spark.read.option("basePath", self.index_dir)
+            .parquet(*[self._tomb_dir(t) for t in tombs])
+            .select(self._key_col)
+            .distinct()
+        )
+
+    def read_segments(
+        self,
+        spark: SparkSession,
+        version: int | None = None,
+        artifact: str = "seg",
+    ) -> DataFrame:
+        """The live rows as of ``version`` (default latest): the union of
+        the manifest's ``<artifact>=<segment>`` dirs minus tombstoned ids,
+        by a broadcast anti-join — a delete is visible the moment it
+        commits, long before compact rewrites anything."""
+        at = self._resolve_version(version)
+        segments = self._load_manifest(at)["segments"]
+        if not segments:
+            raise ValueError(
+                f"{self.index_dir}: index is empty at version {at} — "
+                "no live segments to read"
+            )
+        paths = [os.path.join(self.index_dir, f"{artifact}={s}") for s in segments]
+        if artifact == "seg":
+            # seg=<v> dirs are key=value-shaped: anchor partition discovery
+            # at the root, or a multi-segment read of partitioned segments
+            # reports conflicting directory structures; the partition_col
+            # survives, the synthetic seg column is dropped
+            rows = (
+                spark.read.option("basePath", self.index_dir)
+                .parquet(*paths)
+                .drop("seg")
+            )
+        else:
+            # each leaf dir is its own root: a root anchor would surface
+            # the dir key as a partition column that can collide with a
+            # data column (text's dl)
+            rows = spark.read.parquet(*paths)
+        tombs = self.read_tombstones(spark, at)
+        if tombs is not None:
+            rows = rows.join(F.broadcast(tombs), on=self._key_col, how="left_anti")
+        return rows
+
+    # -- pruning -------------------------------------------------------------
 
     def _prune(self, committed: int) -> None:
         """Drop manifests beyond the retained window, then any artifact
-        dir no retained manifest references. Artifacts are retained for
-        ONE version beyond the manifest window: reads are lazy
-        DataFrames over the artifact paths, so a reader that resolved
-        version V must survive a concurrent commit of V+1 evicting V
-        from the manifest window — its files are only physically dropped
-        at the commit AFTER that. Readers slower than one full commit
-        interval still race deletion; hold a version= pin and
-        materialize promptly, or raise keep_versions."""
-        manifest_ids = sorted(
-            (
-                int(m.group(1))
-                for name in os.listdir(self.index_dir)
-                if (m := re.fullmatch(r"manifest_v=(-?\d+)\.json", name))
-            ),
-            reverse=True,
-        )
-        retained = [i for i in manifest_ids if i <= committed][
-            : self.keep_versions
-        ]
-        # grace window: artifacts referenced by one extra (just-evicted)
-        # manifest stay on disk until the NEXT commit's prune
-        grace = [i for i in manifest_ids if i <= committed][
-            : self.keep_versions + 1
-        ]
+        dir below ``committed`` that no retained manifest — nor the one
+        just evicted (the one-commit read grace) — references. Readers
+        slower than one full commit interval still race deletion; pin a
+        version and materialize promptly, or raise keep_versions."""
+        older = [v for v in reversed(self.versions()) if v <= committed]
         live: dict[str, set[int]] = {}
-        for mid in grace:
+        for v in older[: self.keep_versions + 1]:
             try:
-                man = self._load_manifest(mid)
+                man = self._load_manifest(v)
             except FileNotFoundError:
                 continue  # evicted manifest already removed at a prior prune
             for pat, ids in self._live_artifacts(man).items():
                 live.setdefault(pat, set()).update(ids)
-        for mid in manifest_ids:
-            if mid < committed and mid not in retained:
-                try:
-                    os.remove(self._manifest_path(mid))
-                except FileNotFoundError:
-                    pass
+        for v in older[self.keep_versions :]:
+            try:
+                os.remove(self._manifest_path(v))
+            except FileNotFoundError:
+                pass
         for name in os.listdir(self.index_dir):
             for pat, keep in live.items():
                 m = re.fullmatch(pat, name)

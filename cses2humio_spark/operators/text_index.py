@@ -31,14 +31,9 @@ At 100 TB of documents the postings are a few TB (they carry token
 hashes' worth of text once, not per query), the doc-length table is
 ~16 B/doc, and a search shuffles only |query terms| posting lists.
 
-Transaction machinery is the shared ``VersionedSegmentStore``
-(``operators/index_store.py``): immutable segments, manifest per version,
-atomic ``_LATEST``, the dedicated ``last_batch_id`` replay guard
-(exactly-once under foreachBatch replay), CDC-style tombstone deletes,
-compaction, and grace-window pruning. Geometry (tokenizer id, bucket
-count) is pinned in ``_TABLE.json`` — postings built under a different
-tokenization are incomparable, so reopening with different parameters is
-a loud error.
+Geometry (tokenizer id, bucket count, positional) is pinned in
+``_TABLE.json`` — postings built under a different tokenization are
+incomparable, so reopening with different parameters is a loud error.
 
 Reference parity note: the reference connector (app.py) has no retrieval
 surface; this implements the LLM-pipeline / log-search production
@@ -49,7 +44,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from cses2humio_spark.operators.index_store import VersionedSegmentStore
@@ -61,7 +56,31 @@ _TOKENIZER_ID = "ws-split-v1"
 
 
 class InvertedTextIndex(VersionedSegmentStore):
-    """Versioned on-disk BM25 posting-list index over documents."""
+    """Versioned on-disk BM25 posting-list index over documents.
+
+    Ingest contract — append-only, unique doc ids: a doc_id must be
+    indexed at most once across all live segments, within a build's
+    input too (the upstream admission dedup is the natural enforcer).
+    Re-ingesting a live id double-counts it in tf/df/N/avgdl, breaks
+    search_prefix's COUNT(*)-as-distinct-terms identity and
+    cross-products the per-term doc_id joins in search_phrase.
+    ``guard_duplicates=True`` enforces the contract in-band: each batch
+    is anti-joined against the existing segment doc ids (unfiltered by
+    tombstones, so a deleted id still reappears only after a compact)
+    before tokenization. The guard reads only the narrow doc-length
+    artifacts, but at billions of docs that anti-join shuffles a
+    corpus-sized id table per micro-batch — it is off by default
+    because the admission pipeline already guarantees uniqueness.
+
+    Collection statistics need no maintenance: they are computed from
+    the tombstone-filtered doc-length artifacts at search time, so an
+    appended segment or a delete is consistent at once. An empty build
+    commits ``segments: []`` (a zero-row partitioned write leaves no
+    files) and every read then raises "index is empty"."""
+
+    _key_col = "doc_id"
+    partition_col = "tb"
+    empty_segment_readable = False
 
     def __init__(
         self,
@@ -91,19 +110,12 @@ class InvertedTextIndex(VersionedSegmentStore):
 
     def _live_artifacts(self, manifest: dict) -> dict[str, set[int]]:
         return {
-            r"seg=(-?\d+)": set(manifest["segments"]),
+            **super()._live_artifacts(manifest),
             r"dl=(-?\d+)": set(manifest["segments"]),
-            r"tomb=(-?\d+)": set(manifest.get("tombstones", [])),
         }
-
-    def _seg_dir(self, seg: int) -> str:
-        return os.path.join(self.index_dir, f"seg={seg}")
 
     def _dl_dir(self, seg: int) -> str:
         return os.path.join(self.index_dir, f"dl={seg}")
-
-    def _tomb_dir(self, version: int) -> str:
-        return os.path.join(self.index_dir, f"tomb={version}")
 
     def _token_bucket(self, tok) -> F.Column:
         return F.pmod(F.xxhash64(tok), F.lit(self.n_buckets)).cast("int")
@@ -171,322 +183,75 @@ class InvertedTextIndex(VersionedSegmentStore):
             *extra,
         )
 
-    def _write_segment(self, docs: DataFrame, version: int) -> tuple[bool, int]:
-        """Write the postings for ``docs`` as segment ``version``, then
-        derive its doc-length artifact FROM the written postings (one
-        (doc_id, dl) row per doc via max — dl is constant within a doc)
-        — corpus text is tokenized exactly once per segment. Returns
-        ``(seg_ws1, n_posting_rows)``: the segment's corpus-wide ``ws1``
-        AND (computed from the just-written narrow doc-length artifact —
-        17 B/doc, one scalar aggregate) so the writers can COMMIT it
-        into the manifest (``ws_single_all`` then answers from manifest
-        metadata instead of re-aggregating a corpus-sized table on every
-        routed phrase query; ADVICE r12), and the posting row count,
-        which rides the postings WRITE as an Observation so the ingest
-        path can detect an empty micro-batch without the standalone
-        ``isEmpty`` job it used to launch (r14). An empty segment skips
-        the doc-length derivation outright — reading back an empty
-        partitioned parquet dir would fail schema inference."""
-        from pyspark.sql import Observation
-
-        obs_n = Observation()
-        self._write_dir(
-            self._postings(docs).observe(
-                obs_n, F.count(F.lit(1)).alias("n")
-            ),
-            self._seg_dir(version),
-            partition_by=["tb"],
-        )
-        n_rows = int(obs_n.get["n"] or 0)
-        if n_rows == 0:
-            return False, 0
-        spark = docs.sparkSession
-        written = spark.read.option("basePath", self.index_dir).parquet(
-            self._seg_dir(version)
-        )
-        dl = written.groupBy("doc_id").agg(
-            F.max("dl").alias("dl"), F.min("ws1").alias("ws1")
-        )
-        # the segment-wide ws1 AND rides the dl WRITE as an Observation —
-        # the same min(coalesce(ws1, false)) the old read-back job
-        # computed, now collected during the action that already runs
-        # (one fewer job per segment commit; r14)
-        obs = Observation()
-        self._write_dir(
-            dl.observe(
-                obs, F.min(F.coalesce(F.col("ws1"), F.lit(False))).alias("w")
-            ),
-            self._dl_dir(version),
-        )
-        w = obs.get["w"]
-        return (bool(w) if w is not None else False), n_rows
-
-    # -- build ---------------------------------------------------------------
-
-    def build(self, docs: DataFrame) -> int:
-        """Tokenize the full corpus and commit as a fresh version (prior
-        segments are NOT carried forward — a rebuild supersedes them;
-        tombstones clear, since the handed-in corpus is the new truth).
-        ``last_batch_id`` carries forward so a restarted ingest stream's
-        replay guard survives a rebuild. The unique-doc_id ingest
-        contract (see ``__call__``) applies within ``docs`` too: one row
-        per document id, or the duplicate rows double-count in every
-        collection statistic."""
-        latest = self.latest_version()
-        version = -1 if latest is None else latest + 1
-        seg_ws1, _n = self._write_segment(docs, version)
-        prior_lb = (
-            self._last_batch_id(self._load_manifest(latest), latest)
-            if latest is not None
-            else -1
-        )
-        # An EMPTY corpus commits an empty segment list (mirroring
-        # __call__'s n_rows guard; ADVICE r14): _write_segment skipped
-        # the doc-length artifact, so registering the version would
-        # commit a segment whose dl dir does not exist — every later
-        # search/ws_single_all read of it would crash.
-        self._write_manifest(
-            version,
-            {
-                "segments": [version] if _n > 0 else [],
-                "last_batch_id": prior_lb,
-                "tombstones": [],
-                "ws1": {str(version): seg_ws1} if _n > 0 else {},
-            },
-        )
-        self._commit(version)
-        self._prune(version)
-        return version
-
-    # -- streaming ingest ----------------------------------------------------
-
-    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        """foreachBatch sink: tokenize the micro-batch's documents and
-        append them as one immutable segment pair (postings + doclens);
-        write amplification is O(|delta postings|), independent of index
-        size. Replayed batches are skipped by the dedicated
-        ``last_batch_id`` manifest field — exactly-once, and an
-        interleaved compact()/rebuild/delete() can never shadow a
-        genuine future batch id. Collection statistics need no
-        maintenance: they are computed from the doc-length artifacts at
-        search time, so an appended segment is immediately consistent.
-
-        INGEST CONTRACT — append-only, unique doc ids: a doc_id must be
-        indexed at most once across all live segments (the upstream
-        admission dedup is the natural enforcer). Re-ingesting a live id
-        would double-count it in tf/df/N/avgdl, break search_prefix's
-        COUNT(*)-as-distinct-terms identity and cross-product the
-        per-term doc_id joins in search_phrase — same class of breakage
-        as the documented deleted-then-reingested case (resurrection
-        only lands after a compact has dropped the tombstone).
-        ``guard_duplicates=True`` enforces the contract in-band: the
-        batch is anti-joined against the existing segment doc ids
-        (UNFILTERED by tombstones, so the resurrection rule above is
-        preserved exactly) before tokenization. The guard reads only the
-        narrow (doc_id, dl) artifacts, but at billions of docs that
-        anti-join shuffles a corpus-sized id table per micro-batch —
-        it's off by default because the admission pipeline already
-        guarantees uniqueness for free."""
-        latest = self.latest_version()
-        if latest is None:
-            raise ValueError(
-                f"{self.index_dir}: ingest before build() — the geometry "
-                "must be committed before deltas can be tokenized"
-            )
-        manifest = dict(self._load_manifest(latest))
-        if batch_id <= self._last_batch_id(manifest, latest):
-            return  # replayed micro-batch: segment already committed
-        version = latest + 1
-        manifest["last_batch_id"] = batch_id
+    def _segment_rows(self, docs: DataFrame, manifest: dict) -> DataFrame:
+        """The postings of ``docs``, after the ``guard_duplicates``
+        anti-join against the ids of the manifest's live segments."""
         if self.guard_duplicates and manifest["segments"]:
-            spark = batch_df.sparkSession
-            existing = spark.read.parquet(
+            existing = docs.sparkSession.read.parquet(
                 *[self._dl_dir(s) for s in manifest["segments"]]
             ).select("doc_id")
-            batch_df = batch_df.join(
-                existing,
-                batch_df[self.id_col] == existing["doc_id"],
-                "left_anti",
+            docs = docs.join(
+                existing, docs[self.id_col] == existing["doc_id"], "left_anti"
             )
-        # Emptiness is detected from the segment write's own row-count
-        # Observation (r14) — the standalone ``isEmpty`` pre-check cost
-        # one extra job per micro-batch; an empty batch's postings write
-        # is no dearer than the scan isEmpty ran. The unlisted segment
-        # dir it leaves behind is reclaimed by the NEXT commit's
-        # ``_prune`` (``_prune`` only removes artifact dirs with id <
-        # the committed version, so this commit's own prune skips it);
-        # readers are manifest-driven and never see it either way.
-        seg_ws1, n_rows = self._write_segment(batch_df, version)
-        if n_rows > 0:
-            manifest["segments"] = list(manifest["segments"]) + [version]
-            manifest["ws1"] = {
-                **manifest.get("ws1", {}),
-                str(version): seg_ws1,
-            }
-        self._write_manifest(version, manifest)
-        self._commit(version)
-        self._prune(version)
+        return self._postings(docs)
 
-    # -- delete / compact ----------------------------------------------------
-
-    def delete(self, ids: DataFrame) -> int:
-        """Tombstone the given document ids (takedowns, dedup losers):
-        commits an id-list artifact under the next version — O(|deleted|)
-        bytes, no segment touched — and every search anti-joins live
-        tombstones out immediately, INCLUDING from the collection
-        statistics (N and avgdl shrink the moment the tombstone commits,
-        because both are computed from the tombstone-filtered doc-length
-        table). ``compact()`` physically drops the dead postings.
-        Deleting an id not in the index is a no-op; re-ingesting a
-        deleted id resurrects it only after a compact has dropped the
-        tombstone."""
-        latest = self.latest_version()
-        if latest is None:
-            raise ValueError(
-                f"{self.index_dir}: delete before build() — nothing to "
-                "tombstone"
+    def _segment_artifacts(
+        self, spark: SparkSession, version: int, manifest: dict, n_rows: int
+    ) -> None:
+        """Derive segment ``version``'s doc-length artifact FROM its
+        written postings (one (doc_id, dl, ws1) row per doc via max/min —
+        both are constant within a doc), so corpus text is tokenized once
+        per segment, and commit the segment's corpus-wide ``ws1`` AND
+        into the manifest: ``ws_single_all`` then answers from metadata
+        instead of re-aggregating a corpus-sized table per routed phrase
+        query. The AND rides the dl write as an Observation (no extra
+        job). A zero-row segment is unlisted and gets no artifact:
+        reading back an empty partitioned dir would fail schema
+        inference. Postings from writers that predate the flag carry no
+        ``ws1`` column; their docs record NULL, which reads as False."""
+        ws1 = {
+            k: w
+            for k, w in manifest.get("ws1", {}).items()
+            if int(k) in manifest["segments"]
+        }
+        if n_rows:
+            written = spark.read.option("basePath", self.index_dir).parquet(
+                self._seg_dir(version)
             )
-        manifest = dict(self._load_manifest(latest))
-        manifest["last_batch_id"] = self._last_batch_id(manifest, latest)
-        version = latest + 1
-        self._write_dir(
-            ids.select(F.col(self.id_col).alias("doc_id")).distinct(),
-            self._tomb_dir(version),
-        )
-        manifest["tombstones"] = list(manifest.get("tombstones", [])) + [
-            version
-        ]
-        self._write_manifest(version, manifest)
-        self._commit(version)
-        self._prune(version)
-        return version
-
-    def compact(self, spark: SparkSession) -> int:
-        """Merge all live segments into ONE and physically drop
-        tombstoned postings — the small-files + deferred-delete answer
-        for a long-running ingest stream. Search results are identical
-        before and after by construction (the surviving rows are the
-        same, and statistics are recomputed from the surviving doc
-        lengths either way); ``last_batch_id`` carries forward
-        untouched."""
-        latest = self.latest_version()
-        if latest is None:
-            raise ValueError(
-                f"{self.index_dir}: nothing to compact — run build() first"
+            doc_ws1 = (
+                F.col("ws1")
+                if "ws1" in written.columns
+                else F.lit(None).cast("boolean")
             )
-        manifest = dict(self._load_manifest(latest))
-        manifest["last_batch_id"] = self._last_batch_id(manifest, latest)
-        version = latest + 1
-        survivors = self.read_doclens(spark, latest)
-        if survivors.isEmpty():
-            # every document is tombstoned: the merged segment would be
-            # an EMPTY parquet dir, and a later read would die with
-            # Spark's "unable to infer schema" instead of search()'s
-            # intended "index is empty" — refuse loudly before touching
-            # the manifest (the pre-compact version stays fully live)
-            raise ValueError(
-                f"{self.index_dir}: index is empty after compaction — "
-                "every document is tombstoned; rebuild() with a fresh "
-                "corpus instead of compacting away the last row"
+            dl = written.groupBy("doc_id").agg(
+                F.max("dl").alias("dl"), F.min(doc_ws1).alias("ws1")
             )
-        self._write_dir(
-            self.read_postings(spark, latest),
-            self._seg_dir(version),
-            partition_by=["tb"],
-        )
-        self._write_dir(survivors, self._dl_dir(version))
-        # re-derive the merged segment's ws1 AND from the SURVIVORS: a
-        # tombstoned mixed-separator doc no longer drags the flag False,
-        # so a compact can re-enable phrase routing. NULL ws1 (rows from
-        # pre-flag segments) coalesces to False — unknown separator
-        # shapes must force the scan path (ADVICE r12).
-        if "ws1" in survivors.columns:
-            row = survivors.agg(
-                F.min(F.coalesce(F.col("ws1"), F.lit(False))).alias("w")
-            ).collect()[0]
-            seg_ws1 = bool(row["w"]) if row["w"] is not None else False
-        else:
-            seg_ws1 = False
-        manifest["segments"] = [version]
-        manifest["tombstones"] = []
-        manifest["ws1"] = {str(version): seg_ws1}
-        self._write_manifest(version, manifest)
-        self._commit(version)
-        self._prune(version)
-        return version
-
-    # -- read / search -------------------------------------------------------
-
-    def read_tombstones(
-        self, spark: SparkSession, version: int | None = None
-    ) -> DataFrame | None:
-        man = self._load_manifest(self._resolve_version(version))
-        tombs = man.get("tombstones", [])
-        if not tombs:
-            return None
-        return (
-            spark.read.option("basePath", self.index_dir)
-            .parquet(*[self._tomb_dir(t) for t in tombs])
-            .select("doc_id")
-            .distinct()
-        )
+            obs = Observation()
+            self._write_dir(
+                dl.observe(
+                    obs,
+                    F.min(F.coalesce(F.col("ws1"), F.lit(False))).alias("w"),
+                ),
+                self._dl_dir(version),
+            )
+            ws1[str(version)] = bool(obs.get["w"])
+        manifest["ws1"] = ws1
 
     def read_postings(
         self, spark: SparkSession, version: int | None = None
     ) -> DataFrame:
-        """The posting table as of ``version`` (default latest): the
-        union of that manifest's immutable segments minus tombstoned ids
-        (broadcast anti-join). ``basePath`` anchors partition discovery
-        at the index root because ``seg=<id>``/``tb=<b>`` dirs are
-        key=value-shaped — the ``tb`` partition column survives into the
-        frame so a term filter prunes directories."""
-        at = self._resolve_version(version)
-        man = self._load_manifest(at)
-        if not man["segments"]:
-            # zero live segments (an empty-corpus build commits an empty
-            # list — ADVICE r14): refuse loudly instead of handing
-            # spark.read.parquet() zero paths (UNABLE_TO_INFER_SCHEMA)
-            raise ValueError(
-                f"{self.index_dir}: index is empty at version {at} — "
-                "no live segments to read"
-            )
-        post = (
-            spark.read.option("basePath", self.index_dir)
-            .parquet(*[self._seg_dir(s) for s in man["segments"]])
-            .drop("seg")
-        )
-        tombs = self.read_tombstones(spark, at)
-        if tombs is not None:
-            post = post.join(F.broadcast(tombs), on="doc_id", how="left_anti")
-        return post
+        """The live posting table as of ``version`` (default latest); the
+        ``tb`` partition column survives, so a term filter prunes
+        directories."""
+        return self.read_segments(spark, version)
 
     def read_doclens(
         self, spark: SparkSession, version: int | None = None
     ) -> DataFrame:
-        at = self._resolve_version(version)
-        man = self._load_manifest(at)
-        if not man["segments"]:
-            raise ValueError(
-                f"{self.index_dir}: index is empty at version {at} — "
-                "no live segments to read"
-            )
-        # No basePath here (unlike read_postings): the artifact dirs are
-        # named ``dl=<v>``, and root-anchored partition discovery would
-        # surface a partition column named ``dl`` colliding with the data
-        # column. Passing the leaf dirs directly treats each as its own
-        # root — only the file columns (doc_id, dl) come back.
-        dl = spark.read.parquet(
-            *[self._dl_dir(s) for s in man["segments"]]
-        )
-        tombs = self.read_tombstones(spark, at)
-        if tombs is not None:
-            # tombstones filter HERE, not just in search(): the
-            # collection statistics (N, avgdl) and compact()'s rewritten
-            # doc-length artifact must both exclude deleted docs, or a
-            # compaction would clear the tombstone list while the dead
-            # lengths keep inflating every surviving score
-            dl = dl.join(F.broadcast(tombs), on="doc_id", how="left_anti")
-        return dl
+        """The live ``(doc_id, dl, ws1)`` table as of ``version``.
+        Tombstones filter here too: the collection statistics (N, avgdl)
+        must exclude deleted docs."""
+        return self.read_segments(spark, version, artifact="dl")
 
     def ws_single_all(
         self, spark: SparkSession, version: int | None = None

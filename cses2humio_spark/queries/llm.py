@@ -2297,45 +2297,52 @@ def sq8_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_PQ_INDEX_DIRS: dict[tuple, str] = {}
+_STANDING_INDEXES: dict[tuple, object] = {}
 
 
-def _corpus_fingerprint(sf_dir: str, table: str = "embeddings") -> tuple:
-    """Cache key component that changes when the underlying parquet is
-    regenerated in-process (testdata rebuilds between bench rounds):
-    path + mtime + size. Without it a cached index silently serves
-    codes built from the OLD data (round-6 advice)."""
-    p = os.path.join(sf_dir, f"{table}.parquet")
-    try:
-        st = os.stat(p)
-        return (sf_dir, int(st.st_mtime_ns), st.st_size)
-    except OSError:
-        return (sf_dir, 0, 0)
-
-
-def _pq_index_for(spark: SparkSession, sf_dir: str):
-    """Build-once per (process, corpus fingerprint): the index is a
-    standing artifact — searches after the first call touch only the
-    persisted codes, which is exactly the production build/search split
-    the fused pq_adc_topk query cannot show. Keyed on the corpus
-    file's (mtime, size), not just the path, so an in-process testdata
-    regeneration invalidates the cache instead of serving stale codes."""
+def _standing_index(kind, spark, sf_dir, table, factory, corpus, **build_args):
+    """Build-once per (process, ``kind``, corpus fingerprint): the index
+    is a standing artifact, built into a process-lifetime temp dir on
+    first use, so every later query touches only its persisted segments
+    — the production build/search split a fused query cannot show.
+    ``corpus(spark, sf_dir)`` is the frame indexed and
+    ``factory(index_dir, corpus)`` opens the index over it. Keyed on
+    ``table``'s (mtime, size), not just the path, so an in-process
+    testdata regeneration rebuilds instead of serving a stale index."""
     import atexit
     import shutil
     import tempfile
 
+    try:
+        st = os.stat(os.path.join(sf_dir, f"{table}.parquet"))
+        key = (kind, sf_dir, int(st.st_mtime_ns), st.st_size)
+    except OSError:
+        key = (kind, sf_dir, 0, 0)
+    if key not in _STANDING_INDEXES:
+        d = tempfile.mkdtemp(prefix=f"{kind}_index_")
+        atexit.register(shutil.rmtree, d, ignore_errors=True)
+        docs = corpus(spark, sf_dir)
+        idx = factory(d, docs)
+        idx.build(docs, **build_args)
+        _STANDING_INDEXES[key] = idx
+    return _STANDING_INDEXES[key]
+
+
+def _documents(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return load_table(spark, sf_dir, "documents")
+
+
+def _embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return load_table(spark, sf_dir, "embeddings")
+
+
+def _pq_index_for(spark: SparkSession, sf_dir: str):
     from cses2humio_spark.operators.ann_index import PQIndex
 
-    key = _corpus_fingerprint(sf_dir)
-    if key not in _PQ_INDEX_DIRS:
-        d = tempfile.mkdtemp(prefix="pq_index_")
-        atexit.register(shutil.rmtree, d, ignore_errors=True)
-        idx = PQIndex(d, m=4, k_codes=16, dim=64)
-        idx.build(load_table(spark, sf_dir, "embeddings"))
-        _PQ_INDEX_DIRS[key] = d
-    from cses2humio_spark.operators.ann_index import PQIndex as _P
-
-    return _P(_PQ_INDEX_DIRS[key], m=4, k_codes=16, dim=64)
+    return _standing_index(
+        "pq", spark, sf_dir, "embeddings",
+        lambda d, _c: PQIndex(d, m=4, k_codes=16, dim=64), _embeddings,
+    )
 
 
 @query("pq_index_search", oracle=_PQ_ADC_ORACLE)
@@ -2503,9 +2510,6 @@ def ivfpq_topk_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_IVFPQ_INDEX_DIRS: dict[tuple, str] = {}
-
-
 @query("ivfpq_index_search", oracle=_IVFPQ_ORACLE)
 def ivfpq_index_search_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Search against the PERSISTED IVF-PQ index — the production twin
@@ -2514,25 +2518,16 @@ def ivfpq_index_search_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     coarse-cell id and the segments are PARTITIONED by it, so the
     nprobe prune is one equi-join against cell-pruned files; the search
     plan has no assignment or encode stage."""
-    import atexit
-    import shutil
-    import tempfile
-
     from cses2humio_spark.operators.ann_index import PQIndex
 
     emb = load_table(spark, sf_dir, "embeddings")
-    key = _corpus_fingerprint(sf_dir)
-    if key not in _IVFPQ_INDEX_DIRS:
-        d = tempfile.mkdtemp(prefix="ivfpq_index_")
-        atexit.register(shutil.rmtree, d, ignore_errors=True)
-        cent = emb.filter(F.col("vec_id") < 16).select(
+    idx = _standing_index(
+        "ivfpq", spark, sf_dir, "embeddings",
+        lambda d, _c: PQIndex(d, m=4, k_codes=16, dim=64, mode="ivfpq"),
+        _embeddings,
+        centroids=emb.filter(F.col("vec_id") < 16).select(
             F.col("vec_id").alias("cid"), "embedding"
-        )
-        idx = PQIndex(d, m=4, k_codes=16, dim=64, mode="ivfpq")
-        idx.build(emb, centroids=cent)
-        _IVFPQ_INDEX_DIRS[key] = d
-    idx = PQIndex(
-        _IVFPQ_INDEX_DIRS[key], m=4, k_codes=16, dim=64, mode="ivfpq"
+        ),
     )
     probes = emb.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("probe_id"), "embedding"
@@ -2979,33 +2974,14 @@ def mjpeg_avi_frame_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_MINHASH_INDEX_DIRS: dict[tuple, str] = {}
-
-
 def _minhash_index_for(spark: SparkSession, sf_dir: str):
-    """Build-once per (process, corpus fingerprint) — the text-dedup
-    counterpart of ``_pq_index_for``: the standing corpus is signed once
-    into a persisted banded-signature table; every probe after the first
-    call reads signatures only (corpus text never re-read). Keyed on the
-    documents file's (mtime, size) so an in-process testdata
-    regeneration invalidates the cache instead of serving stale
-    signatures."""
-    import atexit
-    import shutil
-    import tempfile
-
     from cses2humio_spark.operators.dedup_index import MinHashIndex
 
-    key = _corpus_fingerprint(sf_dir, table="documents")
-    if key not in _MINHASH_INDEX_DIRS:
-        d = tempfile.mkdtemp(prefix="minhash_index_")
-        atexit.register(shutil.rmtree, d, ignore_errors=True)
-        idx = MinHashIndex(d, n=3, bands=4, rows_per_band=2)
-        idx.build(load_table(spark, sf_dir, "documents"))
-        _MINHASH_INDEX_DIRS[key] = d
-    from cses2humio_spark.operators.dedup_index import MinHashIndex as _M
-
-    return _M(_MINHASH_INDEX_DIRS[key], n=3, bands=4, rows_per_band=2)
+    return _standing_index(
+        "minhash", spark, sf_dir, "documents",
+        lambda d, _c: MinHashIndex(d, n=3, bands=4, rows_per_band=2),
+        _documents,
+    )
 
 
 @query(
@@ -3037,34 +3013,16 @@ def minhash_index_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     return idx.query_candidates(probes)
 
 
-_MINHASH_ADMIT_DIRS: dict[tuple, str] = {}
-
-
 def _minhash_admission_index_for(spark: SparkSession, sf_dir: str):
-    """Build-once cached MinHash index over the ADMISSION corpus slice
-    (doc_id % 5 != 3) — the standing corpus of
-    ``crawl_admission_decisions``. Same fingerprint-keyed lifecycle as
-    ``_minhash_index_for``."""
-    import atexit
-    import shutil
-    import tempfile
-
+    """The standing corpus of ``crawl_admission_decisions``: the
+    documents outside the admission batch (doc_id % 5 != 3)."""
     from cses2humio_spark.operators.dedup_index import MinHashIndex
 
-    key = _corpus_fingerprint(sf_dir, table="documents")
-    if key not in _MINHASH_ADMIT_DIRS:
-        d = tempfile.mkdtemp(prefix="minhash_admit_")
-        atexit.register(shutil.rmtree, d, ignore_errors=True)
-        idx = MinHashIndex(d, n=3, bands=4, rows_per_band=2)
-        idx.build(
-            load_table(spark, sf_dir, "documents").filter(
-                F.col("doc_id") % 5 != 3
-            )
-        )
-        _MINHASH_ADMIT_DIRS[key] = d
-    from cses2humio_spark.operators.dedup_index import MinHashIndex as _M
-
-    return _M(_MINHASH_ADMIT_DIRS[key], n=3, bands=4, rows_per_band=2)
+    return _standing_index(
+        "minhash_admit", spark, sf_dir, "documents",
+        lambda d, _c: MinHashIndex(d, n=3, bands=4, rows_per_band=2),
+        lambda sp, sf: _documents(sp, sf).filter(F.col("doc_id") % 5 != 3),
+    )
 
 
 @query(
@@ -3276,35 +3234,20 @@ def decontaminating_admission_decisions(
     )
 
 
-_EMB_LSH_INDEX_DIRS: dict[tuple, tuple] = {}
-
-
 def _embedding_admission_index_for(spark: SparkSession, sf_dir: str):
-    """Build-once cached EmbeddingLshIndex over the ADMISSION corpus
-    slice (vec_id % 5 != 3), geometry from ``auto_band_params`` of the
-    corpus size — the vector twin of ``_minhash_admission_index_for``."""
-    import atexit
-    import shutil
-    import tempfile
-
+    """The standing corpus of ``vector_admission_decisions`` (vec_id %
+    5 != 3), geometry from ``auto_band_params`` of the corpus size."""
     from cses2humio_spark.operators.dedup_index import EmbeddingLshIndex
     from cses2humio_spark.operators.similarity import auto_band_params
 
-    key = _corpus_fingerprint(sf_dir, table="embeddings")
-    if key not in _EMB_LSH_INDEX_DIRS:
-        d = tempfile.mkdtemp(prefix="emb_lsh_index_")
-        atexit.register(shutil.rmtree, d, ignore_errors=True)
-        corpus = load_table(spark, sf_dir, "embeddings").filter(
-            F.col("vec_id") % 5 != 3
-        )
+    def factory(d, corpus):
         w, b = auto_band_params(corpus.count())
-        idx = EmbeddingLshIndex(d, dim=64, n_planes=w, n_bands=b)
-        idx.build(corpus)
-        _EMB_LSH_INDEX_DIRS[key] = (d, w, b)
-    from cses2humio_spark.operators.dedup_index import EmbeddingLshIndex as _E
+        return EmbeddingLshIndex(d, dim=64, n_planes=w, n_bands=b)
 
-    d, w, b = _EMB_LSH_INDEX_DIRS[key]
-    return _E(d, dim=64, n_planes=w, n_bands=b)
+    return _standing_index(
+        "emb_lsh", spark, sf_dir, "embeddings", factory,
+        lambda sp, sf: _embeddings(sp, sf).filter(F.col("vec_id") % 5 != 3),
+    )
 
 
 @query(
@@ -3662,36 +3605,17 @@ def embedding_dedup_cluster_reps(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("vec_id", "cluster_rep")
 
 
-_TEXT_INDEX_DIRS: dict[tuple, str] = {}
-
-
 def _text_index_for(spark: SparkSession, sf_dir: str):
-    """Build-once per (process, corpus fingerprint) InvertedTextIndex
-    over the documents table — the lexical sibling of ``_pq_index_for``:
-    the one corpus-text pass happens at first call, every subsequent
-    search touches persisted posting lists only. Keyed on the corpus
-    file's (mtime, size) so an in-process testdata regeneration
-    invalidates the cache instead of serving stale postings."""
-    import atexit
-    import shutil
-    import tempfile
-
+    """Positional, so ONE index serves both the BM25 ranking query and
+    the phrase query (the ranking path never reads the pos column —
+    column pruning keeps its scan as lean as a flat index's)."""
     from cses2humio_spark.operators.text_index import InvertedTextIndex
 
-    key = _corpus_fingerprint(sf_dir, table="documents")
-    if key not in _TEXT_INDEX_DIRS:
-        d = tempfile.mkdtemp(prefix="text_index_")
-        atexit.register(shutil.rmtree, d, ignore_errors=True)
-        # positional: ONE index serves both the BM25 ranking query and
-        # the phrase query (positions ride inside posting rows; the
-        # ranking path simply never reads the pos column — column
-        # pruning keeps its scan as lean as a flat index's)
-        idx = InvertedTextIndex(d, n_buckets=64, positional=True)
-        idx.build(load_table(spark, sf_dir, "documents"))
-        _TEXT_INDEX_DIRS[key] = d
-    from cses2humio_spark.operators.text_index import InvertedTextIndex as _I
-
-    return _I(_TEXT_INDEX_DIRS[key], n_buckets=64, positional=True)
+    return _standing_index(
+        "text", spark, sf_dir, "documents",
+        lambda d, _c: InvertedTextIndex(d, n_buckets=64, positional=True),
+        _documents,
+    )
 
 
 @query("bm25_index_search", oracle=_BM25_ORACLE)

@@ -1,5 +1,5 @@
 """Measure the ADMISSION-LOOP scale claims (round 9), mirroring
-scripts/dedup_index_probe.py:
+scripts/index_ingest_probe.py:
 
 A fixed 500-document micro-batch is decided (admit_batch) against a
 small index and a 10x index. The claim under test: per-batch decision

@@ -1,0 +1,225 @@
+"""The one index lifecycle (operators/index_store.VersionedSegmentStore),
+pinned once for every persisted index family at tiny sizes: geometry
+pin, refusal before build, the stream replay guard across interleaved
+deletes and compactions, empty batches, tombstones, rebuilds, pruning,
+and each family's empty-build behaviour. Family-specific search and
+probe contracts live in the per-family test modules.
+"""
+
+from __future__ import annotations
+
+import os
+from dataclasses import dataclass
+from typing import Callable
+
+import pytest
+from pyspark.sql import functions as F
+
+from cses2humio_spark.operators.ann_index import PQIndex
+from cses2humio_spark.operators.dedup_index import EmbeddingLshIndex, MinHashIndex
+from cses2humio_spark.operators.text_index import InvertedTextIndex
+from cses2humio_spark.sources.catalog import load_table
+from tests.conftest import SF_SMALL
+
+
+@dataclass(frozen=True)
+class Family:
+    table: str
+    key: str  # id column of the stored rows
+    open: Callable  # (index_dir, **geometry) -> index
+    other_geometry: dict
+    read: Callable  # (index, spark, version) -> live rows
+    empty_build_lists_segment: bool
+
+
+FAMILIES = {
+    "minhash": Family(
+        "documents", "doc_id", MinHashIndex, {"bands": 8},
+        lambda idx, spark, v=None: idx.read_signatures(spark, v), True,
+    ),
+    "lsh": Family(
+        "embeddings", "vec_id",
+        lambda d, **g: EmbeddingLshIndex(d, dim=64, **g), {"n_bands": 10},
+        lambda idx, spark, v=None: idx.read_signatures(spark, v), True,
+    ),
+    "text": Family(
+        "documents", "doc_id",
+        lambda d, **g: InvertedTextIndex(d, **{"n_buckets": 4, **g}),
+        {"n_buckets": 8},
+        lambda idx, spark, v=None: idx.read_postings(spark, v), False,
+    ),
+    "pq": Family(
+        "embeddings", "vec_id",
+        lambda d, **g: PQIndex(d, **{"m": 4, "k_codes": 16, "dim": 64, **g}),
+        {"m": 8},
+        lambda idx, spark, v=None: idx.read_codes(spark, v), True,
+    ),
+}
+
+
+@pytest.fixture(params=sorted(FAMILIES))
+def fam(request):
+    return FAMILIES[request.param]
+
+
+@pytest.fixture()
+def rows(spark, fam):
+    """``rows(lo, hi)``: the family's input rows with ids in [lo, hi)."""
+    df = load_table(spark, SF_SMALL, fam.table)
+    return lambda lo, hi: df.filter((F.col(fam.key) >= lo) & (F.col(fam.key) < hi))
+
+
+def _sorted(df):
+    return sorted(map(tuple, df.collect()), key=repr)
+
+
+def _ids(fam, idx, spark, version=None):
+    return {r[0] for r in fam.read(idx, spark, version).select(fam.key).distinct().collect()}
+
+
+def _seg_dirs(index_dir):
+    return {n for n in os.listdir(index_dir) if n.startswith("seg=")}
+
+
+def test_geometry_pinned(fam, tmp_path):
+    fam.open(str(tmp_path / "g"))
+    with pytest.raises(ValueError, match="geometry"):
+        fam.open(str(tmp_path / "g"), **fam.other_geometry)
+
+
+def test_ingest_delete_compact_refused_before_build(spark, fam, rows, tmp_path):
+    idx = fam.open(str(tmp_path / "nb"))
+    with pytest.raises(ValueError, match="ingest before build"):
+        idx(rows(0, 10), 0)
+    with pytest.raises(ValueError, match="delete before build"):
+        idx.delete(rows(0, 1))
+    with pytest.raises(ValueError, match="compact before build"):
+        idx.compact(spark)
+    assert idx.latest_version() is None
+    assert idx.versions() == []
+
+
+def test_replay_skipped_across_delete_and_compact(spark, fam, rows, tmp_path):
+    """A replayed batch id is a no-op even after a delete and a compact
+    bumped the version past it, and those versions never shadow a
+    genuine future batch id."""
+    idx = fam.open(str(tmp_path / "r"))
+    idx.build(rows(0, 20))
+    idx(rows(20, 30), 0)
+    v = idx.latest_version()
+    idx(rows(20, 30), 0)  # replay
+    assert idx.latest_version() == v
+    idx.delete(rows(3, 4))
+    idx.compact(spark)
+    v = idx.latest_version()
+    assert v == 2  # build -1, ingest 0, delete 1, compact 2
+    idx(rows(30, 40), 0)  # replay after delete + compact: skipped
+    assert idx.latest_version() == v
+    assert _ids(fam, idx, spark) == set(range(30)) - {3}
+    idx(rows(30, 40), 1)  # batch id 1 < version 2: still applied
+    assert idx.latest_version() == v + 1
+    assert _ids(fam, idx, spark) == set(range(40)) - {3}
+
+
+def test_empty_batch_advances_guard_and_leaves_no_segment(
+    spark, fam, rows, tmp_path, monkeypatch
+):
+    """Emptiness is read from the segment write's Observation: ingest
+    runs no separate emptiness job, and the empty segment's dir is
+    removed at once instead of waiting for the next commit's prune."""
+    d = str(tmp_path / "e")
+    idx = fam.open(d)
+    v0 = idx.build(rows(0, 20))
+    before = _sorted(fam.read(idx, spark))
+
+    def no_emptiness_job(self):
+        raise AssertionError("ingest ran a separate isEmpty job")
+
+    empty = rows(0, 0)
+    monkeypatch.setattr(type(empty), "isEmpty", no_emptiness_job)
+    idx(empty, 5)
+    v = idx.latest_version()
+    man = idx._load_manifest(v)
+    assert v == v0 + 1
+    assert man["last_batch_id"] == 5
+    assert man["segments"] == [v0]
+    assert _seg_dirs(d) == {f"seg={v0}"}  # the empty segment is gone at once
+    assert _sorted(fam.read(idx, spark)) == before
+    idx(rows(20, 30), 5)  # replay of the empty batch: skipped
+    assert idx.latest_version() == v
+
+
+def test_delete_hides_at_once_and_compact_drops_tombstones(
+    spark, fam, rows, tmp_path
+):
+    idx = fam.open(str(tmp_path / "d"))
+    idx.build(rows(0, 20))
+    idx(rows(20, 30), 0)
+    idx.delete(rows(2, 5))
+    assert _ids(fam, idx, spark) == set(range(30)) - {2, 3, 4}
+    live = _sorted(fam.read(idx, spark))
+    v = idx.compact(spark)
+    man = idx._load_manifest(v)
+    assert man["segments"] == [v]
+    assert man["tombstones"] == []
+    assert man["last_batch_id"] == 0
+    assert _sorted(fam.read(idx, spark)) == live
+
+
+def test_rebuild_carries_batch_id_and_clears_tombstones(
+    spark, fam, rows, tmp_path
+):
+    idx = fam.open(str(tmp_path / "b"))
+    idx.build(rows(0, 20))
+    idx(rows(20, 30), 7)
+    idx.delete(rows(1, 2))
+    v = idx.build(rows(0, 30))
+    man = idx._load_manifest(v)
+    assert man["last_batch_id"] == 7
+    assert man["tombstones"] == []
+    assert man["segments"] == [v]
+    assert _ids(fam, idx, spark) == set(range(30))  # id 1 is live again
+    idx(rows(30, 40), 7)  # replay across the rebuild: skipped
+    assert idx.latest_version() == v
+
+
+def test_pruning_keeps_retained_window_readable(spark, fam, rows, tmp_path):
+    d = str(tmp_path / "p")
+    idx = fam.open(d)
+    idx.build(rows(0, 20))
+    for b, lo in enumerate((20, 25, 30)):
+        idx(rows(lo, lo + 5), b)
+    assert idx.versions() == [1, 2]  # keep_versions=2
+    assert _ids(fam, idx, spark, 1) == set(range(30))
+    assert _ids(fam, idx, spark) == set(range(35))
+    with pytest.raises(ValueError, match="not available"):
+        fam.read(idx, spark, 0)
+    idx.compact(spark)  # version 3: one segment
+    stale = fam.read(idx, spark, 2)  # lazy reader of the pre-compact version
+    idx(rows(0, 0), 3)  # version 4 evicts manifest 2 ...
+    # ... but its segments outlive it by one commit, so the reader survives
+    assert _seg_dirs(d) == {"seg=-1", "seg=0", "seg=1", "seg=2", "seg=3"}
+    assert {r[0] for r in stale.select(fam.key).distinct().collect()} == set(
+        range(35)
+    )
+    idx(rows(0, 0), 4)
+    assert _seg_dirs(d) == {"seg=3"}
+    assert _ids(fam, idx, spark) == set(range(35))
+
+
+def test_empty_build(spark, fam, rows, tmp_path):
+    """Text commits ``segments: []`` (a zero-row partitioned write has
+    no files to read back) and its reads refuse; the other families
+    list the empty segment and read zero rows."""
+    idx = fam.open(str(tmp_path / "eb"))
+    v = idx.build(rows(0, 0))
+    man = idx._load_manifest(v)
+    if fam.empty_build_lists_segment:
+        assert man["segments"] == [v]
+        assert fam.read(idx, spark).count() == 0
+    else:
+        assert man["segments"] == []
+        with pytest.raises(ValueError, match="index is empty"):
+            fam.read(idx, spark)
+    idx(rows(0, 20), 0)  # the committed geometry accepts ingest
+    assert idx.latest_version() == v + 1
