@@ -21,7 +21,8 @@ Surface:
   (``err*`` / ``*err*`` / ``ab*cd`` — unanchored glob over each string
   column's value; quoted strings keep a literal ``*``) and REGEX
   free-text (bare ``/pattern/`` — case-sensitive unanchored find over
-  each string column), combined with ``and`` / ``or`` / ``not`` /
+  each string column; ``/pattern/i`` ignores case, and the ``i``/``m``/
+  ``s`` flags apply to field regexes too), combined with ``and`` / ``or`` / ``not`` /
   parentheses; adjacent terms are implicit AND (Humio rule).
   ``in(field, values=[...])`` accepts wildcard values (unquoted
   ``err*`` globs the whole value; quoted stays literal). ``#field`` /
@@ -102,12 +103,12 @@ _BASE_TOKens = r"""
 # selector and ``:=``-free arithmetic both depend on that).
 _TOKEN_RE = re.compile(_BASE_TOKens, re.VERBOSE)
 _TOKEN_RE_REGEX = re.compile(
-    r"(?P<REGEX>/(?:[^/\\]|\\.)+/)\s*"
+    r"(?P<REGEX>/(?:[^/\\]|\\.)+/[A-Za-z]*)\s*"
     r"|(?P<GLOB>[A-Za-z0-9_.\-]*\*[A-Za-z0-9_.\-*]*)|" + _BASE_TOKens,
     re.VERBOSE,
 )
 _TOKEN_RE_FILTER = re.compile(
-    r"(?P<REGEX>/(?:[^/\\]|\\.)+/)\s*"
+    r"(?P<REGEX>/(?:[^/\\]|\\.)+/[A-Za-z]*)\s*"
     r"|(?P<GLOB>[A-Za-z0-9_.\-]+\*[A-Za-z0-9_.\-*]*"
     r"|\*+[A-Za-z0-9_.\-][A-Za-z0-9_.\-*]*)|" + _BASE_TOKens,
     re.VERBOSE,
@@ -460,7 +461,7 @@ class _Parser:
                 if v.kind == "REGEX":
                     if op not in ("=", "!="):
                         raise HqlSyntaxError("regex match supports = / != only")
-                    return Cmp(fieldname, op, v.text[1:-1], is_regex=True)
+                    return Cmp(fieldname, op, _regex_pattern(v), is_regex=True)
                 if v.kind == "NUMBER":
                     num = float(v.text)
                     return Cmp(fieldname, op, num)
@@ -488,7 +489,7 @@ class _Parser:
             # bare ``/pattern/`` free-text: Humio's regex search over
             # @rawstring — an unanchored case-sensitive find over every
             # string column
-            return FreeText(self.next().text[1:-1], regex=True)
+            return FreeText(_regex_pattern(self.next()), regex=True)
         raise HqlSyntaxError(f"unexpected {t.kind} {t.text!r} at {t.pos}")
 
     # arithmetic for := --------------------------------------------------
@@ -561,6 +562,25 @@ def _strip_sigil(name: str) -> str:
 
 def _unquote(s: str) -> str:
     return re.sub(r"\\(.)", r"\1", s[1:-1])
+
+
+#: ``/pattern/flags`` flags -> the Java inline flag with the same meaning
+_REGEX_FLAGS = {"i": "i", "m": "m", "s": "s"}
+
+
+def _regex_pattern(tok: Tok) -> str:
+    """The pattern of a REGEX token ``/pattern/flags``, with the flags
+    folded in as an inline group (``/abc/i`` -> ``(?i)abc``)."""
+    end = tok.text.rindex("/")
+    flags = tok.text[end + 1 :]
+    bad = sorted(set(flags) - set(_REGEX_FLAGS))
+    if bad:
+        raise HqlSyntaxError(
+            f"unknown regex flag(s) {''.join(bad)!r} at {tok.pos} "
+            f"(supported: {''.join(_REGEX_FLAGS)})"
+        )
+    prefix = "".join(sorted({_REGEX_FLAGS[f] for f in flags}))
+    return (f"(?{prefix})" if prefix else "") + tok.text[1:end]
 
 
 def parse(src: str) -> list:

@@ -1,5 +1,5 @@
 """Aggregation operators: timechart (Humio's flagship visualization agg),
-top-k, grouped stats. All built on ``groupBy().agg()`` so Catalyst plans
+top-k, equi-depth buckets. All built on ``groupBy().agg()`` so Catalyst plans
 hash aggregation with map-side partial aggregation — each executor
 pre-aggregates before the shuffle, so shuffle volume is O(groups), not
 O(rows), which is what makes these viable at 100 TB.
@@ -42,24 +42,6 @@ def top_k(df: DataFrame, order: Sequence[Column], k: int) -> DataFrame:
     each partition keeps only its local top-k, the driver merges k*P rows —
     no full sort, no full shuffle. Safe at any scale for small k."""
     return df.orderBy(*order).limit(k)
-
-
-def grouped_stats(
-    df: DataFrame, dims: Sequence[str], value_col: str
-) -> DataFrame:
-    """count / sum / avg / min / max / stddev per group, deterministic
-    float handling (see queries/registry.py docstring). ``stddev_v`` is
-    sample stddev; being a second-moment statistic it is float-rounded —
-    round it before any cross-engine comparison."""
-    v = F.col(value_col)
-    return df.groupBy(*[F.col(d) for d in dims]).agg(
-        F.count(F.lit(1)).alias("cnt"),
-        F.sum(v.cast("decimal(18,4)")).cast("double").alias("sum_v"),
-        (F.sum(v.cast("decimal(18,4)")).cast("double") / F.count(v)).alias("avg_v"),
-        F.min(v).alias("min_v"),
-        F.max(v).alias("max_v"),
-        F.stddev(v).alias("stddev_v"),
-    )
 
 
 def approx_equi_depth_buckets(

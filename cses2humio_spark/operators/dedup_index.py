@@ -1,72 +1,353 @@
-"""Persisted MinHash LSH index: the build-once / probe-many split for
-TEXT near-duplicate detection — the dedup counterpart of
-``operators/ann_index.PQIndex``.
+"""Persisted near-duplicate signature indexes and the crawl-admission
+decision they serve: ``MinHashIndex`` for TEXT (banded MinHash) and
+``EmbeddingLshIndex`` for EMBEDDINGS (banded hyperplane LSH) — the dedup
+counterparts of ``operators/ann_index.PQIndex``.
 
 The fused query operators (``dedup.minhash_candidate_pairs`` /
 ``jaccard_near_dups``) re-shingle and re-hash the whole corpus inside
 every run — right for oracle-checkability, wrong for the production
 shape of a crawl pipeline: the standing corpus is signed ONCE, new
 batches arrive forever, and each batch must be checked against the
-standing corpus WITHOUT touching corpus text again. ``MinHashIndex``
-persists exactly the artifact the fused plan computes inline — the
-banded signature table ``(id, band, sig)``, ~bands rows of a few dozen
-bytes per document, typically 100-1000x smaller than the text — and
-probes it with a rowwise signature projection on the incoming batch
-(no aggregation, no key shuffle — only ``fan_out``'s round-robin
-rebalance when the local input is single-split, a no-op at scale)
-followed by ONE (band, sig) equi-join. Corpus text never rides a key
-shuffle; at 100 TB of documents the index is tens of GB.
+standing corpus WITHOUT touching corpus text again. An index persists
+exactly the artifact the fused plan computes inline — the banded
+signature table, a few dozen bytes per document, typically 100-1000x
+smaller than the payload — and probes it with a rowwise signature
+projection on the incoming batch (no aggregation, no key shuffle — only
+``fan_out``'s round-robin rebalance when the local input is
+single-split, a no-op at scale) followed by ONE band equi-join. The
+corpus payload never rides a key shuffle.
 
-Geometry (shingle n, bands, rows_per_band) is pinned in ``_TABLE.json``:
-signatures hashed under different banding are incomparable, so reopening
-with different parameters is a loud error.
-
-Reference parity note: the reference connector (app.py) has no dedup;
-this implements the LLM-pipeline surface's production dedup lifecycle.
+Both families share one admission skeleton (``AdmissionIndex``); its
+docstring states the decision contract. Geometry is pinned in
+``_TABLE.json``: signatures hashed under different banding are
+incomparable, so reopening with different parameters is a loud error.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import inspect
+
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from cses2humio_spark.operators.dedup import minhash_signatures_rowwise
+from cses2humio_spark.operators.dedup import (
+    alternating_star_components,
+    minhash_signatures_rowwise,
+)
 from cses2humio_spark.operators.index_store import VersionedSegmentStore
+from cses2humio_spark.operators.similarity import (
+    cap_buckets,
+    embedding_candidate_pairs,
+    first_matching_band,
+    lsh_band_entries,
+    lsh_signatures,
+)
 
 
 def _freeze(df: DataFrame) -> DataFrame:
     """Materialize a MICRO-BATCH-BOUNDED admission intermediate once and
-    truncate its lineage (eager ``localCheckpoint``) — the r15 fix for the
-    admission decision's driver-bound job floor (guide §3.3/§5).
+    truncate its lineage (eager ``localCheckpoint``).
 
     With ``persist()`` every downstream consumer still plans against the
     FULL admission logical tree (the cache only short-circuits execution,
-    not planning): the r14/r15 profiles showed 47-50 AQE stage-jobs per
-    decision with ~2 MiB task binaries ("Broadcasting large task binary"),
-    ~14 s of executor deserialize time and ~8-14 s of GC per pass over a
-    5 MB micro-batch — the plan TREE, not the data, was the cost. Freezing
-    each intermediate turns downstream plans into scans of a LogicalRDD:
-    task closures drop to KBs, AQE has nothing to re-optimize upstream,
-    and the per-decision job count drops with it.
+    not planning): profiles showed 47-50 AQE stage-jobs per decision with
+    ~2 MiB task binaries, ~14 s of executor deserialize time and ~8-14 s
+    of GC per pass over a 5 MB micro-batch — the plan TREE, not the data,
+    was the cost. Freezing each intermediate turns downstream plans into
+    scans of a LogicalRDD: task closures drop to KBs, AQE has nothing to
+    re-optimize upstream, and the per-decision job count drops with it.
 
-    Trade (same one the decision frame itself already accepts in
-    ``admit_and_ingest``, documented per ADVICE r14): checkpoint blocks
-    are executor-local and NOT fault-tolerant — on a real cluster an
-    executor loss makes the frozen frame unrecomputable, so a cluster
-    deployment that needs mid-decision fault tolerance should use
-    ``spark.sparkContext.setCheckpointDir`` + reliable ``checkpoint()``
-    or ``persist(StorageLevel.DISK_ONLY_2)`` instead. The exposure is one
-    micro-batch per executor loss: the streaming caller replays the batch
-    (foreachBatch at-least-once + the index's ``last_batch_id`` replay
-    guard), so durability is bounded by design. Block reclamation is via
-    ContextCleaner GC of the checkpoint RDD once the decision frame is
-    dropped — the same lifetime the old ``evict_on_gc`` unpersist gave,
-    minus the explicit hook."""
+    Trade: checkpoint blocks are executor-local and NOT fault-tolerant —
+    on a real cluster an executor loss makes the frozen frame
+    unrecomputable, so a deployment that needs mid-decision fault
+    tolerance should use ``spark.sparkContext.setCheckpointDir`` +
+    reliable ``checkpoint()`` or ``persist(StorageLevel.DISK_ONLY_2)``
+    instead. The exposure is one micro-batch per executor loss: the
+    streaming caller replays the batch (foreachBatch at-least-once + the
+    index's ``last_batch_id`` replay guard), so durability is bounded by
+    design. Blocks are reclaimed by ContextCleaner GC of the checkpoint
+    RDD once the decision frame is dropped."""
     return df.localCheckpoint(eager=True)
 
 
-class MinHashIndex(VersionedSegmentStore):
-    """Versioned on-disk banded-MinHash signature index over documents."""
+class AdmissionIndex(VersionedSegmentStore):
+    """A signature index that decides crawled micro-batches against its
+    standing corpus, then ingests what it admitted — the one admission
+    skeleton both index families run.
+
+    ``admit_batch`` returns ``(id, reason, partner)`` for every batch
+    row; the first listed reason that applies wins (deterministic):
+
+    - ``already_indexed``: the id is live in the index (partner = the id
+      itself). Its payload is excluded from every verify join, so a
+      re-crawl cannot pollute a standing document's verification row.
+    - ``contaminated`` (only with an eval suite): the family's eval gate
+      flags the row; partner NULL. Decontamination runs FIRST and dedup
+      on the survivors — contaminated rows are never signed, verified,
+      or eligible as a within-batch cluster representative.
+    - ``corpus_dup``: a verified near-dup of a live indexed row; partner
+      = the smallest verified index id.
+    - ``batch_dup``: not corpus-duplicated, but a non-representative
+      member of a verified near-dup cluster WITHIN the batch (connected
+      components over verified pairs, ``alternating_star_components``,
+      diameter-robust); partner = the min-id representative.
+    - ``admitted``: none of the above; partner NULL.
+
+    Admission is FIRST-SEEN-WINS across batches: feeding batches in id
+    order reproduces the one-shot min-id-per-cluster decisions whenever
+    verified clusters are transitively closed (every pair within a
+    cluster verifies — true for exact and boilerplate dups). Chain-shaped
+    similarity (A~B~C, A!~C) is decided by arrival, inherent to ANY
+    streaming dedup.
+
+    The corpus argument MUST cover the payload of every live indexed id
+    named as a candidate partner: a partner with no row in the
+    verification table (stale or partial corpus snapshot, rows deleted
+    after indexing) cannot be verified, so any decision row for its
+    probe raises at materialization instead of defaulting to
+    ``admitted`` (no silent failure).
+
+    ``max_bucket_size`` caps BOTH candidate stages per band bucket
+    (``similarity.cap_buckets``): the index probe truncates the index
+    side, the within-batch self-join truncates the id_b side — an
+    adversarially hot bucket is bounded to cap x batch_rows instead of
+    batch_rows^2. The trade is recall: a within-batch pair is lost only
+    if truncated in EVERY band it shares. Uncapped mode is exact.
+
+    Scale shape: index and batch signatures meet in ONE band equi-join;
+    the corpus payload is read only for candidate partner ids (semi-join
+    prune); the batch is signed once and every micro-batch-bounded
+    intermediate is frozen (``_freeze``) so each is computed once.
+
+    A family supplies ``_signatures`` (its segment rows), the index probe
+    ``query_candidates(..., probe_sigs=)``, and the hooks below: the eval
+    gate, within-batch candidate pairs, the per-id verification table
+    and predicate, the payload column, and the uncovered-partner
+    message."""
+
+    #: names the corpus argument and its payload in the uncovered-partner
+    #: error, e.g. ``"corpus_docs lacks text"``
+    _missing_payload: str
+
+    @property
+    def _payload_col(self) -> str:
+        raise NotImplementedError
+
+    def _signatures(self, df: DataFrame) -> DataFrame:
+        """Rowwise ``(id, ...signature)`` projection of ``df``."""
+        raise NotImplementedError
+
+    def _contaminated_ids(
+        self, fresh: DataFrame, **eval_args
+    ) -> DataFrame | None:
+        """Ids of ``fresh`` the eval gate rejects, or None without a suite."""
+        raise NotImplementedError
+
+    def _batch_pairs(
+        self, sigs: DataFrame, max_bucket_size: int | None
+    ) -> DataFrame:
+        """Within-batch candidate pairs ``(id_a, id_b)``, id_a < id_b, from
+        the batch signatures."""
+        raise NotImplementedError
+
+    def _verify_table(self, rows: DataFrame) -> DataFrame:
+        """``(id, __v)``: the per-id verification payload of ``rows``."""
+        raise NotImplementedError
+
+    def _verified(self, a: Column, b: Column, threshold: float) -> Column:
+        """True when two verification payloads are near-duplicates."""
+        raise NotImplementedError
+
+    def read_signatures(
+        self, spark: SparkSession, version: int | None = None
+    ) -> DataFrame:
+        """The live signature table as of ``version``."""
+        return self.read_segments(spark, version)
+
+    def _segment_rows(self, df: DataFrame, manifest: dict) -> DataFrame:
+        return self._signatures(df)
+
+    def _admit(
+        self,
+        batch_df: DataFrame,
+        corpus: DataFrame,
+        threshold: float,
+        version: int | None,
+        max_bucket_size: int | None,
+        **eval_args,
+    ) -> DataFrame:
+        """The decision plan of ``admit_batch`` (see the class docstring);
+        ``eval_args`` go to the family's eval gate."""
+        spark = batch_df.sparkSession
+        idc, pc = self.id_col, self._payload_col
+        index_ids = self.read_signatures(spark, version).select(idc).distinct()
+        batch = batch_df.select(F.col(idc), F.col(pc))
+        # fresh feeds every downstream stage. Repartition BEFORE the
+        # freeze: AQE coalesces the tiny anti-join output to ONE partition
+        # by bytes, which serializes the CPU-heavy signing onto a single
+        # task; the round-robin shuffle moves only the bounded micro-batch.
+        n_cpu = spark.sparkContext.defaultParallelism
+        fresh = _freeze(
+            batch.join(index_ids, on=idc, how="left_anti").repartition(n_cpu)
+        )
+        cont, clean = None, fresh
+        cont_ids = self._contaminated_ids(fresh, **eval_args)
+        if cont_ids is not None:
+            cont = _freeze(cont_ids.withColumn("__cont", F.lit(1)))
+            clean = _freeze(fresh.join(cont, on=idc, how="left_anti"))
+        # sign the batch ONCE: the same frozen signatures feed the index
+        # probe and the within-batch candidate self-join
+        sigs = _freeze(self._signatures(clean))
+        cand = _freeze(
+            self.query_candidates(
+                clean,
+                version=version,
+                exclude_self=True,
+                max_bucket_size=max_bucket_size,
+                probe_sigs=sigs,
+            )
+        )
+        pairs = cand.select(
+            F.col("probe_id").alias("id_a"), F.col("index_id").alias("id_b")
+        )
+        corpus_pruned = corpus.select(F.col(idc), F.col(pc)).join(
+            pairs.select(F.col("id_b").alias(idc)).distinct(),
+            on=idc,
+            how="left_semi",
+        )
+        vtab = _freeze(self._verify_table(clean.unionByName(corpus_pruned)))
+        uncovered = (
+            pairs.join(
+                vtab.select(F.col(idc).alias("id_b")), on="id_b", how="left_anti"
+            )
+            .select(F.col("id_a").alias(idc))
+            .distinct()
+            .withColumn("__uncov", F.lit(1))
+        )
+        # ONE verification pass for both pair families: cross partners
+        # live in the index and batch partners in clean, so the id_b
+        # domains are disjoint and the union splits back cleanly below
+        accepted = _freeze(
+            pairs.unionByName(self._batch_pairs(sigs, max_bucket_size))
+            .join(
+                vtab.select(F.col(idc).alias("id_a"), F.col("__v").alias("__va")),
+                on="id_a",
+            )
+            .join(
+                vtab.select(F.col(idc).alias("id_b"), F.col("__v").alias("__vb")),
+                on="id_b",
+            )
+            .filter(self._verified(F.col("__va"), F.col("__vb"), threshold))
+            .select("id_a", "id_b")
+        )
+        fresh_b = clean.select(F.col(idc).alias("id_b"))
+        corpus_rej = (
+            accepted.join(fresh_b, on="id_b", how="left_anti")
+            .groupBy("id_a")
+            .agg(F.min("id_b").alias("__cp"))
+            .select(F.col("id_a").alias(idc), "__cp")
+        )
+        bpairs = accepted.join(fresh_b, on="id_b", how="left_semi").select(
+            "id_a", "id_b"
+        )
+        reps = alternating_star_components(
+            clean.select(idc), bpairs, id_col=idc
+        ).withColumnRenamed("cluster_rep", "__rep")
+        assembled = (
+            batch.select(idc)
+            .join(index_ids.withColumn("__ai", F.lit(1)), on=idc, how="left")
+            .join(corpus_rej, on=idc, how="left")
+            .join(reps, on=idc, how="left")
+            .join(uncovered, on=idc, how="left")
+        )
+        if cont is not None:
+            assembled = assembled.join(cont, on=idc, how="left")
+        else:
+            assembled = assembled.withColumn("__cont", F.lit(None).cast("int"))
+        missing = F.raise_error(
+            F.concat(
+                F.lit(
+                    f"admit_batch: {self._missing_payload} for a live indexed "
+                    f"candidate partner of batch {idc}="
+                ),
+                F.col(idc).cast("string"),
+                F.lit(
+                    " — stale/partial corpus snapshot; the pair cannot be "
+                    "verified"
+                ),
+            )
+        )
+        # every intermediate is a frozen LogicalRDD; the ContextCleaner
+        # reclaims its blocks once the caller drops the decision frame
+        return assembled.select(
+            idc,
+            F.when(F.col("__uncov") == 1, missing)
+            .when(F.col("__ai") == 1, F.lit("already_indexed"))
+            .when(F.col("__cont") == 1, F.lit("contaminated"))
+            .when(F.col("__cp").isNotNull(), F.lit("corpus_dup"))
+            .when(F.col("__rep") != F.col(idc), F.lit("batch_dup"))
+            .otherwise(F.lit("admitted"))
+            .alias("reason"),
+            F.when(F.col("__ai") == 1, F.col(idc))
+            .when(F.col("__cont") == 1, F.lit(None))
+            .when(F.col("__cp").isNotNull(), F.col("__cp"))
+            .when(F.col("__rep") != F.col(idc), F.col("__rep"))
+            .otherwise(F.lit(None))
+            .cast(batch_df.schema[idc].dataType)
+            .alias("partner"),
+        )
+
+    def admit_and_ingest(
+        self, batch_df: DataFrame, batch_id: int, *args, **kwargs
+    ) -> DataFrame | None:
+        """The full incremental loop, foreachBatch-shaped: decide
+        (``admit_batch`` against the CURRENT index state), ingest ONLY the
+        admitted rows' signatures as the next segment, return the
+        decision frame. The arguments after ``batch_id`` are the family's
+        ``admit_batch`` arguments after ``batch_df``, in the same order
+        and under the same names, minus ``version``.
+
+        Refused before the first ``build()``. A replayed batch id returns
+        None without recomputing — decisions must not be re-derived
+        against a LATER index state than the one that originally
+        admitted the batch (the same ``last_batch_id`` guard as plain
+        ingest). Contaminated rows are never ingested, so eval-suite
+        payloads cannot enter the standing corpus through this loop.
+
+        The decision rows are frozen with an eager ``localCheckpoint``
+        before the ingest, so the ingest and every later read plan
+        against the micro-batch-bounded rows instead of the admission
+        DAG, and the returned frame still reports the decisions that
+        were acted on when read after the commit. Dropping the
+        pre-checkpoint frame lets the internal intermediates go at the
+        next GC. The durability trade is ``_freeze``'s: executor-local
+        blocks, a one-micro-batch replay exposure."""
+        _, manifest = self._next_version("admit")
+        if batch_id <= manifest["last_batch_id"]:
+            return None  # replayed micro-batch: already decided + ingested
+        sig = inspect.signature(self.admit_batch)
+        params = [
+            p for name, p in sig.parameters.items()
+            if name not in ("batch_df", "version")
+        ]
+        bound = sig.replace(parameters=params).bind(*args, **kwargs)
+        decisions = self.admit_batch(batch_df, **bound.arguments)
+        frozen = decisions.localCheckpoint(eager=True)
+        del decisions  # internal admission intermediates go on the next GC
+        admitted = batch_df.join(
+            frozen.filter(F.col("reason") == "admitted").select(self.id_col),
+            on=self.id_col,
+            how="left_semi",
+        )
+        self(admitted, batch_id)
+        return frozen
+
+
+class MinHashIndex(AdmissionIndex):
+    """Versioned on-disk banded-MinHash signature index over documents:
+    ``(id, band, sig)``, ~bands rows of a few dozen bytes per document."""
+
+    _missing_payload = "corpus_docs lacks text"
 
     def __init__(
         self,
@@ -91,16 +372,19 @@ class MinHashIndex(VersionedSegmentStore):
             keep_versions,
         )
 
+    @property
+    def _payload_col(self) -> str:
+        return self.text_col
+
     def _signatures(self, docs: DataFrame) -> DataFrame:
-        """Zero-shuffle rowwise banded signatures (the streaming-safe
-        projection; identical output to the groupBy formulation — pinned
-        where minhash_signatures_rowwise is), COMPRESSED for storage: the
-        band signature (rows_per_band concatenated 32-hex md5s) is folded
-        to one xxhash64 bigint. Both build and probe apply the same fold,
-        so the (band, sig) equi-join produces the identical candidate
-        pairs as the raw strings (a 64-bit collision could only ADD a
-        candidate — and candidates are verified downstream by exact
-        Jaccard anyway), while the per-row bytes drop ~8x and the join
+        """Zero-shuffle rowwise banded signatures (identical output to the
+        groupBy formulation — pinned where minhash_signatures_rowwise is),
+        COMPRESSED for storage: the band signature (rows_per_band
+        concatenated 32-hex md5s) is folded to one xxhash64 bigint. Build
+        and probe apply the same fold, so the (band, sig) equi-join
+        produces the same candidate pairs as the raw strings (a 64-bit
+        collision could only ADD a candidate, and candidates are verified
+        by exact Jaccard), while the per-row bytes drop ~8x and the join
         key becomes a fixed 8-byte integer."""
         raw = minhash_signatures_rowwise(
             docs, self.id_col, self.text_col,
@@ -110,21 +394,14 @@ class MinHashIndex(VersionedSegmentStore):
             self.id_col, "band", F.xxhash64("sig").alias("sig")
         )
 
-    def _segment_rows(self, docs: DataFrame, manifest: dict) -> DataFrame:
-        return self._signatures(docs)
-
-    def read_signatures(
-        self, spark: SparkSession, version: int | None = None
-    ) -> DataFrame:
-        """The live ``(id, band, sig)`` table as of ``version``."""
-        return self.read_segments(spark, version)
-
     def query_candidates(
         self,
         probe_docs: DataFrame,
         version: int | None = None,
         exclude_self: bool = True,
         max_bucket_size: int | None = None,
+        *,
+        probe_sigs: DataFrame | None = None,
     ) -> DataFrame:
         """Near-dup CANDIDATES for a batch of incoming documents against
         the standing index: sign the batch rowwise (pure projection — the
@@ -135,58 +412,26 @@ class MinHashIndex(VersionedSegmentStore):
         verification joins text back for the candidates only — the same
         verify-on-candidates shape as ``jaccard_near_dups``.
 
-        ``max_bucket_size`` is the probe-side mass-duplicate guard (the
-        analog of ``minhash_candidate_pairs``' star cap): a boilerplate
-        page indexed b times puts b rows in one (band, sig) bucket, and
-        every probe hitting it would fan out b candidates PER BAND. With
-        the cap set, each index bucket is truncated to its
-        ``max_bucket_size`` smallest ids (a partitioned rank — parallel
-        per bucket) — each probe still reaches the cluster through the
-        retained members (enough to verify this is a dup and find the
-        cluster representative), while the per-probe fan-out is bounded.
-        Default None = exact (the oracle-paired form)."""
-        return self._query_candidates(
-            probe_docs,
-            version=version,
-            exclude_self=exclude_self,
-            max_bucket_size=max_bucket_size,
-        )
-
-    def _query_candidates(
-        self,
-        probe_docs: DataFrame,
-        version: int | None = None,
-        exclude_self: bool = True,
-        max_bucket_size: int | None = None,
-        probe_sigs: DataFrame | None = None,
-    ) -> DataFrame:
-        """``query_candidates`` with an optional pre-signed probe table
-        (``probe_sigs`` = the (id, band, sig) frame ``_signatures``
-        emits) so a caller running several probe-side stages — the
-        admission loop — signs the batch ONCE instead of once per
-        stage."""
+        ``max_bucket_size`` truncates each index bucket to its smallest
+        ids (``cap_buckets``): each probe still reaches a mass-duplicate
+        cluster through the retained members, while its fan-out is
+        bounded. Default None = exact (the oracle-paired form).
+        ``probe_sigs`` (the ``(id, band, sig)`` frame ``_signatures``
+        emits) skips signing ``probe_docs`` again."""
         spark = probe_docs.sparkSession
         if probe_sigs is None:
             probe_sigs = self._signatures(probe_docs)
         probe_sigs = probe_sigs.select(
             F.col(self.id_col).alias("probe_id"), "band", "sig"
         )
-        index_sigs = self.read_signatures(spark, version).select(
-            F.col(self.id_col).alias("index_id"), "band", "sig"
+        index_sigs = cap_buckets(
+            self.read_signatures(spark, version).select(
+                F.col(self.id_col).alias("index_id"), "band", "sig"
+            ),
+            ["band", "sig"],
+            "index_id",
+            max_bucket_size,
         )
-        if max_bucket_size is not None:
-            if max_bucket_size < 1:
-                raise ValueError(
-                    f"max_bucket_size must be >= 1, got {max_bucket_size}"
-                )
-            from pyspark.sql.window import Window
-
-            wb = Window.partitionBy("band", "sig").orderBy("index_id")
-            index_sigs = (
-                index_sigs.withColumn("__r", F.row_number().over(wb))
-                .filter(F.col("__r") <= max_bucket_size)
-                .drop("__r")
-            )
         cand = (
             probe_sigs.join(index_sigs, on=["band", "sig"])
             .select("probe_id", "index_id")
@@ -196,7 +441,79 @@ class MinHashIndex(VersionedSegmentStore):
             cand = cand.filter(F.col("probe_id") != F.col("index_id"))
         return cand
 
-    # -- admission (the crawl decision loop) -----------------------------------
+    # -- admission hooks -------------------------------------------------------
+
+    def _contaminated_ids(
+        self,
+        fresh: DataFrame,
+        eval_docs: DataFrame | None = None,
+        contamination_threshold: float = 0.1,
+        eval_n: int = 8,
+        eval_fingerprints: DataFrame | None = None,
+    ) -> DataFrame | None:
+        if eval_docs is None and eval_fingerprints is None:
+            return None
+        from cses2humio_spark.operators.dedup import eval_contamination
+
+        idc, txt = self.id_col, self.text_col
+        return (
+            eval_contamination(
+                fresh,
+                (
+                    eval_docs.select(F.col(idc), F.col(txt))
+                    if eval_docs is not None
+                    else None
+                ),
+                idc,
+                txt,
+                n=eval_n,
+                eval_fingerprints=eval_fingerprints,
+            )
+            .filter(F.col("contamination") >= contamination_threshold)
+            .select(idc)
+        )
+
+    def _batch_pairs(
+        self, sigs: DataFrame, max_bucket_size: int | None
+    ) -> DataFrame:
+        # the same pairs as minhash_candidate_pairs: both sides carry the
+        # same fold, and a 64-bit collision could only ADD a candidate
+        idc = self.id_col
+        sa = sigs.select(F.col(idc).alias("id_a"), "band", "sig")
+        sb = cap_buckets(
+            sigs.select(F.col(idc).alias("id_b"), "band", "sig"),
+            ["band", "sig"],
+            "id_b",
+            max_bucket_size,
+        )
+        return (
+            sa.join(sb, on=["band", "sig"])
+            .filter(F.col("id_a") < F.col("id_b"))
+            .select("id_a", "id_b")
+            .distinct()
+        )
+
+    def _verify_table(self, rows: DataFrame) -> DataFrame:
+        # one distinct-shingle set per document: set sizes become a
+        # rowwise size() and pair verification a rowwise array_intersect,
+        # with no further shuffle of shingle data. Per-row state is one
+        # document's distinct shingle set (~n x the document's bytes).
+        from cses2humio_spark.operators.dedup import shingle_table
+
+        return (
+            shingle_table(rows, self.id_col, self.text_col, n=self.n)
+            .groupBy(self.id_col)
+            .agg(F.collect_set("__sh").alias("__v"))
+        )
+
+    def _verified(self, a: Column, b: Column, threshold: float) -> Column:
+        # exact shingle Jaccard. ``n_inter >= 1``: a pair sharing ZERO
+        # shingles (only reachable through a 64-bit fold collision) never
+        # verifies, even at threshold <= 0
+        n_inter = F.size(F.array_intersect(a, b))
+        return (n_inter >= 1) & (
+            n_inter / (F.size(a) + F.size(b) - n_inter) >= threshold
+        )
 
     def admit_batch(
         self,
@@ -210,418 +527,38 @@ class MinHashIndex(VersionedSegmentStore):
         eval_n: int = 8,
         eval_fingerprints: DataFrame | None = None,
     ) -> DataFrame:
-        """The composed crawl-admission DECISION (VERDICT r7 #4): until
-        now users had to hand-wire probe -> verify -> admit/reject ->
-        ingest; this is the one-call decision stage. For every batch
-        document it returns ``(id, reason, partner)``:
+        """The crawl-admission decision (``AdmissionIndex``) for text.
 
-        - ``already_indexed``: the id is live in the index (partner =
-          the id itself). Its text is excluded from every verify join so
-          a re-crawl can't pollute a standing document's shingle set.
-        - ``contaminated`` (only when ``eval_docs`` is given — VERDICT
-          r9 #6, the one-pass dedup + decontamination production
-          crawls run): the document's distinct word ``eval_n``-gram
-          overlap with the eval suite (``eval_contamination``; eval
-          side reduced to broadcast fingerprints) is at or above
-          ``contamination_threshold``; partner is NULL. Contaminated
-          documents are excluded from the dedup stages entirely — they
-          are never signed, never verified, and never eligible as a
-          within-batch cluster representative (decontamination runs
-          FIRST, dedup on the survivors, exactly as a production
-          pipeline orders the two filters).
-        - ``corpus_dup``: a verified near-dup (exact shingle Jaccard >=
-          ``threshold``, computed on candidate texts only) of a live
-          indexed document; partner = the smallest verified index id.
-        - ``batch_dup``: not corpus-duplicated, but a non-representative
-          member of a verified near-dup cluster WITHIN the batch
-          (connected components over verified pairs; representative =
-          min id — ``alternating_star_components``, diameter-robust);
-          partner = the cluster representative.
-        - ``admitted``: none of the above; partner is NULL. First
-          listed reason wins when several apply (deterministic).
-
-        Admission is FIRST-SEEN-WINS across batches: feeding batches in
-        id order reproduces the one-shot min-id-per-cluster decisions
-        whenever verified clusters are transitively closed (every pair
-        within a cluster verifies — true for exact and boilerplate
-        dups). Chain-shaped similarity (A~B~C, A!~C) is decided by
-        arrival, inherent to ANY streaming dedup; the closed case is
-        pinned by ``tests/test_dedup_index.py::
-        test_admit_batches_equal_one_shot_on_closed_clusters``.
-
-        ``corpus_docs`` MUST cover the text of every live indexed id: a
-        candidate partner whose text is absent (stale or partial corpus
-        snapshot, docs deleted after indexing) cannot be Jaccard-verified
-        and would otherwise admit a true near-dup silently. The guard is
-        free at plan level — a candidate partner with NO rows in the
-        verification shingle table is provably uncovered (a doc with an
-        indexed signature had shingles at index time), and any decision
-        row for a probe with an uncovered partner raises at
-        materialization instead of defaulting to ``admitted``
-        (no-silent-failure contract; VERDICT r8 ADVICE #2).
-
-        ``max_bucket_size`` (capped mode — documented r10 per ADVICE r9
-        #3) applies to BOTH candidate stages: the index probe truncates
-        each (band, sig) bucket on the index side, and the within-batch
-        self-join truncates the id_b side per bucket the same way — an
-        adversarially hot bucket (boilerplate flood inside one batch) is
-        bounded to cap x batch_rows instead of batch_rows^2. The trade
-        is recall: a within-batch pair is lost only if its id_b is
-        truncated in EVERY band the pair shares (pairs surviving any
-        band are kept; the vector twin matches this contract, pinned in
-        tests/test_dedup_index.py). Uncapped mode is exact.
-
-        Scale shape: index signatures and batch signatures meet in ONE
-        (band, sig) equi-join; corpus TEXT is read only for candidate
-        partner ids (semi-join prune); the batch text shuffles once (a
-        bounded round-robin spread of the micro-batch so the CPU-heavy
-        signing parallelizes) plus inside its own candidate
-        verification; the shingle table for verification is computed
-        once, persisted, and evicted when the caller drops the decision
-        frame."""
-        from cses2humio_spark.operators.dedup import (
-            alternating_star_components,
-            shingle_table,
-        )
-
-        spark = batch_df.sparkSession
-        idc, txt = self.id_col, self.text_col
-        index_ids = (
-            self.read_signatures(spark, version).select(idc).distinct()
-        )
-        batch = batch_df.select(F.col(idc), F.col(txt))
-        # fresh is consumed by every downstream stage (signing, shingles,
-        # verify bases, components, decision assembly) — freeze it so the
-        # scan + anti-join runs once, not once per consumer, and so every
-        # consumer plans against a LogicalRDD instead of the anti-join
-        # subtree (``_freeze``: the r15 job-floor fix). Repartition BEFORE
-        # the freeze (r10, measured): AQE coalesces the tiny anti-join
-        # output to ONE partition by bytes, which serialized the CPU-heavy
-        # MinHash signing onto a single task (6.8 s of the sf0.1 wall);
-        # the round-robin shuffle moves only the bounded micro-batch text
-        # and spreads every CPU-bound consumer across the executors.
-        n_cpu = spark.sparkContext.defaultParallelism
-        fresh = _freeze(
-            batch.join(index_ids, on=idc, how="left_anti").repartition(n_cpu)
-        )
-        # Decontamination gate FIRST (cheap: one broadcast-fingerprint
-        # join over fresh), dedup on the survivors — contaminated docs
-        # never reach the signing/verify machinery below. A streaming
-        # caller should precompute the static suite's fingerprints once
-        # (``eval_fingerprint_table``) and pass ``eval_fingerprints`` —
-        # re-shingling the eval suite per micro-batch is pure waste.
-        cont = None
-        clean = fresh
-        if eval_docs is not None or eval_fingerprints is not None:
-            from cses2humio_spark.operators.dedup import eval_contamination
-
-            cont = _freeze(
-                eval_contamination(
-                    fresh,
-                    (
-                        eval_docs.select(F.col(idc), F.col(txt))
-                        if eval_docs is not None
-                        else None
-                    ),
-                    idc,
-                    txt,
-                    n=eval_n,
-                    eval_fingerprints=eval_fingerprints,
-                )
-                .filter(F.col("contamination") >= contamination_threshold)
-                .select(idc)
-                .withColumn("__cont", F.lit(1))
-            )
-            clean = _freeze(fresh.join(cont, on=idc, how="left_anti"))
-        # Sign the batch ONCE (rowwise projection, frozen — a few
-        # dozen bytes per doc): the same folded signature table feeds
-        # BOTH the cross-corpus index probe and the within-batch
-        # candidate self-join below; before r9 each stage re-signed the
-        # batch from text (the single most expensive projection here).
-        psigs = _freeze(self._signatures(clean))
-        # cross-corpus: candidates from the standing index, then exact
-        # Jaccard on candidate texts only. The candidate pair table is
-        # consumed by THREE stages (corpus prune, coverage guard, the
-        # merged verify) — persist it so the probe join runs once.
-        cand = _freeze(
-            self._query_candidates(
-                clean,
-                version=version,
-                exclude_self=True,
-                max_bucket_size=max_bucket_size,
-                probe_sigs=psigs,
-            )
-        )
-        pairs = cand.select(
-            F.col("probe_id").alias("id_a"), F.col("index_id").alias("id_b")
-        )
-        corpus_pruned = corpus_docs.select(F.col(idc), F.col(txt)).join(
-            pairs.select(F.col("id_b").alias(idc)).distinct(),
-            on=idc,
-            how="left_semi",
-        )
-        both = clean.unionByName(corpus_pruned)
-        # ONE per-document shingle-SET table instead of the exploded
-        # distinct (id, shingle) table (r15, guide §2.4 — remove shuffles
-        # outright): the old verify chain shuffled the exploded set FIVE
-        # ways (distinct exchange, set-size groupBy, both intersection
-        # join sides, the intersection groupBy) — ~6 exchanges and their
-        # AQE stage-jobs per decision over micro-batch-bounded data. The
-        # collect_set aggregation dedups inside ONE exchange, set sizes
-        # become a rowwise ``size()``, and pair verification becomes two
-        # id-equi-joins (the pair side is candidate-bounded and
-        # broadcasts) + a rowwise ``array_intersect`` — zero further
-        # shuffles of shingle data. Per-row state is one document's
-        # distinct shingle set (~n x the document's own bytes), the same
-        # order as the text column the row already carried.
-        ssets = _freeze(
-            shingle_table(both, idc, txt, n=self.n)
-            .groupBy(idc)
-            .agg(F.collect_set("__sh").alias("__shs"))
-        )
-        # Coverage guard: a candidate's index partner must have text in
-        # corpus_docs (and hence a shingle set — it had shingles when its
-        # signature was indexed). Probes with an uncovered partner raise
-        # at materialization rather than silently verifying as non-dups.
-        uncovered = (
-            pairs.join(
-                ssets.select(F.col(idc).alias("id_b")),
-                on="id_b",
-                how="left_anti",
-            )
-            .select(F.col("id_a").alias(idc))
-            .distinct()
-            .withColumn("__uncov", F.lit(1))
-        )
-        # within-batch CANDIDATES from a self-join of the SAME persisted
-        # signature table (identical pairs to minhash_candidate_pairs —
-        # both sides carry the same fold; a 64-bit collision could only
-        # ADD a candidate, and every candidate is Jaccard-verified)
-        sa = psigs.select(F.col(idc).alias("id_a"), "band", "sig")
-        sb = psigs.select(F.col(idc).alias("id_b"), "band", "sig")
-        if max_bucket_size is not None:
-            from pyspark.sql.window import Window
-
-            wb = Window.partitionBy("band", "sig").orderBy("id_b")
-            sb = (
-                sb.withColumn("__r", F.row_number().over(wb))
-                .filter(F.col("__r") <= max_bucket_size)
-                .drop("__r")
-            )
-        bcand = (
-            sa.join(sb, on=["band", "sig"])
-            .filter(F.col("id_a") < F.col("id_b"))
-            .select("id_a", "id_b")
-            .distinct()
-        )
-        # ONE verification pass for BOTH pair families (their id_b
-        # domains are disjoint — cross partners live in the index, batch
-        # partners in fresh — so the union splits back cleanly): two
-        # id-equi-joins against the frozen set table, then a rowwise
-        # exact-Jaccard over the two arrays. ``n_inter >= 1`` preserves
-        # the old inner-intersection-join contract exactly — a pair with
-        # ZERO shared shingles (only reachable through a 64-bit fold
-        # collision) never verified before and must not verify now, even
-        # at threshold <= 0. Counts are identical integers to the
-        # exploded-join formulation, so the threshold comparison is
-        # bit-identical.
-        n_inter = F.size(F.array_intersect(F.col("__sa"), F.col("__sb")))
-        n_a, n_b = F.size(F.col("__sa")), F.size(F.col("__sb"))
-        unrounded = n_inter / (n_a + n_b - n_inter)
-        # two consumers (corpus_rej anti-join, bpairs semi-join) — the
-        # verify over the candidate set must run once, not twice (r14;
-        # accepted is id pairs only, micro-batch-bounded)
-        accepted = _freeze(
-            pairs.unionByName(bcand)
-            .join(
-                ssets.select(
-                    F.col(idc).alias("id_a"), F.col("__shs").alias("__sa")
-                ),
-                on="id_a",
-            )
-            .join(
-                ssets.select(
-                    F.col(idc).alias("id_b"), F.col("__shs").alias("__sb")
-                ),
-                on="id_b",
-            )
-            .filter((n_inter >= 1) & (unrounded >= threshold))
-            .select("id_a", "id_b")
-        )
-        fresh_b = clean.select(F.col(idc).alias("id_b"))
-        corpus_rej = (
-            accepted.join(fresh_b, on="id_b", how="left_anti")
-            .groupBy("id_a")
-            .agg(F.min("id_b").alias("__cp"))
-            .select(F.col("id_a").alias(idc), "__cp")
-        )
-        bpairs = accepted.join(fresh_b, on="id_b", how="left_semi").select(
-            "id_a", "id_b"
-        )
-        reps = alternating_star_components(
-            clean.select(idc), bpairs, id_col=idc
-        ).withColumnRenamed("cluster_rep", "__rep")
-        id_type = batch_df.schema[self.id_col].dataType
-        assembled = (
-            batch.select(idc)
-            .join(index_ids.withColumn("__ai", F.lit(1)), on=idc, how="left")
-            .join(corpus_rej, on=idc, how="left")
-            .join(reps, on=idc, how="left")
-            .join(uncovered, on=idc, how="left")
-        )
-        if cont is not None:
-            assembled = assembled.join(cont, on=idc, how="left")
-        else:
-            assembled = assembled.withColumn(
-                "__cont", F.lit(None).cast("int")
-            )
-        decisions = (
-            assembled
-            .select(
-                idc,
-                F.when(
-                    F.col("__uncov") == 1,
-                    F.raise_error(
-                        F.concat(
-                            F.lit(
-                                "admit_batch: corpus_docs lacks text for a "
-                                "live indexed candidate partner of batch "
-                                f"{idc}="
-                            ),
-                            F.col(idc).cast("string"),
-                            F.lit(
-                                " — stale/partial corpus snapshot; the pair "
-                                "cannot be Jaccard-verified"
-                            ),
-                        )
-                    ),
-                )
-                .when(F.col("__ai") == 1, F.lit("already_indexed"))
-                .when(F.col("__cont") == 1, F.lit("contaminated"))
-                .when(F.col("__cp").isNotNull(), F.lit("corpus_dup"))
-                .when(F.col("__rep") != F.col(idc), F.lit("batch_dup"))
-                .otherwise(F.lit("admitted"))
-                .alias("reason"),
-                F.when(F.col("__ai") == 1, F.col(idc))
-                .when(F.col("__cont") == 1, F.lit(None))
-                .when(F.col("__cp").isNotNull(), F.col("__cp"))
-                .when(F.col("__rep") != F.col(idc), F.col("__rep"))
-                .otherwise(F.lit(None))
-                .cast(id_type)
-                .alias("partner"),
-            )
-        )
-        # No persisted frames to tie to the result: every intermediate is
-        # a frozen (localCheckpoint) frame whose blocks the ContextCleaner
-        # reclaims once the decision frame — whose plan references them —
-        # is dropped by the caller.
-        return decisions
-
-    def admit_and_ingest(
-        self,
-        batch_df: DataFrame,
-        batch_id: int,
-        corpus_docs: DataFrame,
-        threshold: float = 0.5,
-        max_bucket_size: int | None = None,
-        eval_docs: DataFrame | None = None,
-        contamination_threshold: float = 0.1,
-        eval_n: int = 8,
-        eval_fingerprints: DataFrame | None = None,
-    ) -> DataFrame | None:
-        """The full incremental loop, foreachBatch-shaped: decide
-        (``admit_batch`` against the CURRENT index state), ingest ONLY
-        the admitted documents' signatures as the next segment, return
-        the decision frame. Replayed batch ids return None without
-        recomputing — decisions must not be re-derived against a LATER
-        index state than the one that originally admitted the batch
-        (the same ``last_batch_id`` guard as plain ingest). The
-        decision plan is pinned to the pre-ingest version at
-        construction, so reading the returned frame after the commit
-        still reports the decisions that were acted on.
-
-        With ``eval_docs`` the decision ALSO gates on eval-suite n-gram
-        contamination (VERDICT r9 #6 — dedup + decontamination in one
-        pass, the production crawl shape): contaminated documents take
-        reason ``contaminated`` and are never ingested, so benchmark
-        text cannot enter the standing corpus through this loop.
-
-        DURABILITY TRADE (VERDICT r14 #5a): the returned frame and the
-        decision's internal intermediates are eager ``localCheckpoint``
-        blocks — executor-local, NOT fault-tolerant. On a real cluster,
-        losing an executor mid-pipeline makes the frozen frames
-        unrecomputable; the exposure is bounded to ONE micro-batch
-        (foreachBatch replays it and the ``last_batch_id`` guard keeps
-        the replay exactly-once). A deployment that must survive
-        executor loss WITHOUT a batch replay should set a reliable
-        checkpoint dir (``sparkContext.setCheckpointDir`` + replace the
-        localCheckpoints with ``checkpoint()``) or persist with
-        ``StorageLevel.DISK_ONLY_2``; see ``_freeze`` for the measured
-        reason local checkpointing is the default."""
-        latest = self.latest_version()
-        if latest is None:
-            raise ValueError(
-                f"{self.index_dir}: admit before build() — the standing "
-                "corpus must be signed first"
-            )
-        if batch_id <= self._last_batch_id(
-            self._load_manifest(latest), latest
-        ):
-            return None  # replayed micro-batch: already decided + ingested
-        decisions = self.admit_batch(
+        Near-dup = exact shingle Jaccard >= ``threshold``, computed on
+        candidate texts only; ``corpus_docs`` supplies the text of index
+        partners. ``contaminated`` (with ``eval_docs`` or
+        ``eval_fingerprints``): the document's distinct word
+        ``eval_n``-gram overlap with the eval suite (``eval_contamination``,
+        eval side reduced to broadcast fingerprints) is at or above
+        ``contamination_threshold``. A streaming caller should compute the
+        static suite's fingerprints once (``eval_fingerprint_table``) and
+        pass ``eval_fingerprints`` instead of re-shingling the suite per
+        micro-batch."""
+        return self._admit(
             batch_df,
             corpus_docs,
-            threshold=threshold,
-            max_bucket_size=max_bucket_size,
+            threshold,
+            version,
+            max_bucket_size,
             eval_docs=eval_docs,
             contamination_threshold=contamination_threshold,
             eval_n=eval_n,
             eval_fingerprints=eval_fingerprints,
         )
-        # LINEAGE TRUNCATION (r14, guide §3.3): the admission DAG is by
-        # far the largest plan in the engine; before this, every
-        # downstream action of a micro-batch (the admitted semi-join,
-        # the signature-segment write, a caller's own index ingest)
-        # re-planned — and, under AQE's plan-update events, re-PRINTED —
-        # that whole tree per action; in a debris-laden default-heap
-        # session building the explain string alone could OOM the
-        # driver. The eager localCheckpoint materializes the
-        # micro-batch-bounded decision rows ONCE (the persist this
-        # replaces materialized the same rows at first use anyway);
-        # every consumer then plans against the frozen rows, and the
-        # version-pinning contract ("the returned frame reports the
-        # decisions that were acted on, even read after the commit")
-        # holds by construction. Dropping the pre-checkpoint frame lets
-        # its finalizer evict admit_batch's internal helper caches at
-        # once — they are dead weight once the rows are frozen — instead
-        # of leaking them until the caller drops the decision frame
-        # (pinned by test_admit_and_ingest_cache_evicted_on_gc); the
-        # checkpoint's own RDD storage is reclaimed by the
-        # ContextCleaner when the caller drops the frame.
-        frozen = decisions.localCheckpoint(eager=True)
-        del decisions  # internal admission caches evict on the next GC
-        admitted = batch_df.join(
-            frozen.filter(F.col("reason") == "admitted").select(
-                self.id_col
-            ),
-            on=self.id_col,
-            how="left_semi",
-        )
-        self(admitted, batch_id)
-        return frozen
 
 
-class EmbeddingLshIndex(VersionedSegmentStore):
+class EmbeddingLshIndex(AdmissionIndex):
     """Persisted banded hyperplane-LSH signature index over EMBEDDINGS —
     the vector-space twin of ``MinHashIndex`` (streaming semantic
-    dedup): the standing corpus's vectors are signed
-    ONCE into a versioned on-disk table of ``(id, lsh_sig)`` — one
-    bigint per vector, ~16 bytes, 100-1000x smaller than the float
-    vectors — and incoming batches are probed by a rowwise signature
-    projection plus ONE (band, band_sig) equi-join. Corpus vectors never
-    ride a shuffle; they are joined back only for candidate partner ids
-    at exact-cosine verification time (the ``corpus_vectors`` argument,
-    the analog of ``MinHashIndex``'s ``corpus_docs``).
+    dedup): one ``(id, lsh_sig)`` bigint row per vector, ~16 bytes,
+    exploded into band entries only at join time. Corpus vectors are
+    joined back only for candidate partner ids at exact-cosine
+    verification time (the ``corpus_vectors`` argument).
 
     Signatures use the SAME deterministic hyperplanes and the SAME
     banded layout as the fused ``embedding_near_dup_pairs`` operator
@@ -631,6 +568,8 @@ class EmbeddingLshIndex(VersionedSegmentStore):
     unchanged. Geometry (dim, n_planes, n_bands) is pinned in
     ``_TABLE.json``; n_planes * n_bands <= 62 (bigint signature).
     """
+
+    _missing_payload = "corpus_vectors lacks the vector"
 
     def __init__(
         self,
@@ -659,53 +598,25 @@ class EmbeddingLshIndex(VersionedSegmentStore):
             keep_versions,
         )
 
+    @property
+    def _payload_col(self) -> str:
+        return self.vec_col
+
     def _signatures(self, vecs: DataFrame) -> DataFrame:
         """One Arrow-batched rowwise projection per vector — no
         aggregation, so legal in streaming append mode and on any probe
         path (the bit-for-bit equality of the Arrow, JVM-fold and DuckDB
         signature paths is pinned in tests/test_approx.py)."""
-        from cses2humio_spark.operators.similarity import lsh_signatures
-
         sigs = lsh_signatures(
             vecs, self.dim, self.n_planes * self.n_bands, self.vec_col
         )
         return sigs.select(self.id_col, "lsh_sig")
 
     def _band_entries(self, sigs: DataFrame, id_alias: str) -> DataFrame:
-        """Explode one bigint signature into (id, lsh_sig, band,
-        band_sig) rows — a narrow projection done at JOIN time, so the
-        stored artifact stays one row per vector."""
-        mask = (1 << self.n_planes) - 1
-        bands = F.array(
-            *[
-                F.struct(
-                    F.lit(b).alias("band"),
-                    F.shiftright(F.col("lsh_sig"), b * self.n_planes)
-                    .bitwiseAND(F.lit(mask))
-                    .alias("band_sig"),
-                )
-                for b in range(self.n_bands)
-            ]
+        """``sigs`` exploded into (id_alias, lsh_sig, band, band_sig)."""
+        return lsh_band_entries(
+            sigs, self.n_planes, self.n_bands, self.id_col, id_alias
         )
-        return sigs.select(
-            F.col(self.id_col).alias(id_alias),
-            "lsh_sig",
-            F.explode(bands).alias("__b"),
-        ).select(
-            id_alias,
-            "lsh_sig",
-            F.col("__b.band").alias("band"),
-            F.col("__b.band_sig").alias("band_sig"),
-        )
-
-    def _segment_rows(self, vecs: DataFrame, manifest: dict) -> DataFrame:
-        return self._signatures(vecs)
-
-    def read_signatures(
-        self, spark: SparkSession, version: int | None = None
-    ) -> DataFrame:
-        """The live ``(id, lsh_sig)`` table as of ``version``."""
-        return self.read_segments(spark, version)
 
     def query_candidates(
         self,
@@ -713,6 +624,8 @@ class EmbeddingLshIndex(VersionedSegmentStore):
         version: int | None = None,
         exclude_self: bool = True,
         max_bucket_size: int | None = None,
+        *,
+        probe_sigs: DataFrame | None = None,
     ) -> DataFrame:
         """Near-dup CANDIDATES for a batch of incoming vectors against
         the standing index: sign the batch rowwise, explode both sides
@@ -721,49 +634,22 @@ class EmbeddingLshIndex(VersionedSegmentStore):
         matching band (``first_matching_band``'s SWAR zero-field trick,
         pure int64 codegen) — so no DISTINCT shuffle is needed.
         ``max_bucket_size`` is the mass-duplicate guard on index-side
-        bucket fan-out, same semantics as MinHashIndex's."""
-        return self._query_candidates(
-            probe_vecs,
-            version=version,
-            exclude_self=exclude_self,
-            max_bucket_size=max_bucket_size,
-        )
-
-    def _query_candidates(
-        self,
-        probe_vecs: DataFrame,
-        version: int | None = None,
-        exclude_self: bool = True,
-        max_bucket_size: int | None = None,
-        probe_sigs: DataFrame | None = None,
-    ) -> DataFrame:
-        """``query_candidates`` with an optional pre-signed probe table
-        (``probe_sigs`` = (id, lsh_sig)) so the admission loop signs the
-        batch once across its stages."""
-        from cses2humio_spark.operators.similarity import first_matching_band
-
+        bucket fan-out, same semantics as MinHashIndex's. ``probe_sigs``
+        (``(id, lsh_sig)``) skips signing ``probe_vecs`` again."""
         spark = probe_vecs.sparkSession
         if probe_sigs is None:
             probe_sigs = self._signatures(probe_vecs)
         probe_entries = self._band_entries(
             probe_sigs, "probe_id"
         ).withColumnRenamed("lsh_sig", "__psig")
-        index_entries = self._band_entries(
-            self.read_signatures(spark, version), "index_id"
-        ).withColumnRenamed("lsh_sig", "__isig")
-        if max_bucket_size is not None:
-            if max_bucket_size < 1:
-                raise ValueError(
-                    f"max_bucket_size must be >= 1, got {max_bucket_size}"
-                )
-            from pyspark.sql.window import Window
-
-            wb = Window.partitionBy("band", "band_sig").orderBy("index_id")
-            index_entries = (
-                index_entries.withColumn("__r", F.row_number().over(wb))
-                .filter(F.col("__r") <= max_bucket_size)
-                .drop("__r")
-            )
+        index_entries = cap_buckets(
+            self._band_entries(
+                self.read_signatures(spark, version), "index_id"
+            ).withColumnRenamed("lsh_sig", "__isig"),
+            ["band", "band_sig"],
+            "index_id",
+            max_bucket_size,
+        )
         cand = (
             probe_entries.join(index_entries, on=["band", "band_sig"])
             .filter(
@@ -779,15 +665,96 @@ class EmbeddingLshIndex(VersionedSegmentStore):
         )
         if exclude_self:
             cand = cand.filter(F.col("probe_id") != F.col("index_id"))
-        # the first-matching-band filter already emits each pair once per
-        # matching geometry; distinct() would only re-shuffle. With a
-        # bucket cap the truncation can break the lowest-band guarantee
-        # for dropped rows, so dedup explicitly in that mode only.
+        # the first-matching-band filter already emits each pair once;
+        # distinct() would only re-shuffle. A bucket cap can break the
+        # lowest-band guarantee for dropped rows, so dedup in that mode.
         if max_bucket_size is not None:
             cand = cand.distinct()
         return cand
 
-    # -- admission (semantic crawl decision) --------------------------------
+    # -- admission hooks -------------------------------------------------------
+
+    def _contaminated_ids(
+        self,
+        fresh: DataFrame,
+        eval_vectors: DataFrame | None = None,
+        eval_threshold: float = 0.8,
+    ) -> DataFrame | None:
+        # The CURATED eval suite is collected once (bounded by policy —
+        # eval suites are thousands of vectors) and shipped in a
+        # mapInPandas closure; each Arrow batch of fresh vectors computes
+        # its full cosine block against the suite matrix in one pass. A
+        # crossJoin would ship batch_rows x suite_rows PAIRS of full
+        # vectors through Arrow; this ships each side exactly once.
+        # Accumulation is dimension-by-dimension in float64 — the same
+        # left-to-right order as cosine_pairs and DuckDB's list_reduce,
+        # so borderline comparisons agree bit-for-bit.
+        if eval_vectors is None:
+            return None
+        idc, vc = self.id_col, self.vec_col
+        ev_rows = [
+            r[0]
+            for r in eval_vectors.select(vc).distinct().collect()
+            if r[0] is not None
+        ]
+        if not ev_rows:
+            return None
+        import numpy as np
+
+        E = np.asarray(ev_rows, dtype=np.float64)  # (suite, dim)
+        thr = float(eval_threshold)
+
+        def _eval_gate(batches):
+            import numpy as np  # noqa: PLC0415 — worker-side import
+
+            nb = np.zeros(E.shape[0], dtype=np.float64)
+            for j in range(E.shape[1]):
+                nb += E[:, j] * E[:, j]
+            for pdf in batches:
+                mask = pdf[vc].notna()
+                if not mask.any():
+                    continue
+                sub = pdf.loc[mask]
+                A = np.asarray(sub[vc].tolist(), dtype=np.float64)
+                d = np.zeros((A.shape[0], E.shape[0]), dtype=np.float64)
+                na = np.zeros(A.shape[0], dtype=np.float64)
+                for j in range(A.shape[1]):
+                    d += A[:, j : j + 1] * E[:, j][None, :]
+                    na += A[:, j] * A[:, j]
+                cos = d / (np.sqrt(na)[:, None] * np.sqrt(nb)[None, :])
+                hit = (cos >= thr).any(axis=1)
+                if hit.any():
+                    yield sub.loc[hit, [idc]]
+
+        id_sql_type = fresh.schema[idc].dataType.simpleString()
+        return fresh.mapInPandas(
+            _eval_gate, schema=f"{idc} {id_sql_type}"
+        ).distinct()
+
+    def _batch_pairs(
+        self, sigs: DataFrame, max_bucket_size: int | None
+    ) -> DataFrame:
+        return embedding_candidate_pairs(
+            sigs,
+            self.n_planes,
+            self.n_bands,
+            self.id_col,
+            max_bucket_size=max_bucket_size,
+        )
+
+    def _verify_table(self, rows: DataFrame) -> DataFrame:
+        # the join formulation: an id-indexed gather against one collected
+        # matrix (``cosine_pairs_lookup``) measured slower here — its
+        # per-decision construction actions (bound counts, the vector
+        # collect, broadcasts) run one after another before the decision
+        # and cost more than the pair-side Arrow traffic they save at
+        # micro-batch density
+        return rows.select(self.id_col, F.col(self.vec_col).alias("__v"))
+
+    def _verified(self, a: Column, b: Column, threshold: float) -> Column:
+        from cses2humio_spark.functions.vectors import cosine_pairs
+
+        return cosine_pairs(a, b) >= threshold
 
     def admit_batch(
         self,
@@ -799,308 +766,21 @@ class EmbeddingLshIndex(VersionedSegmentStore):
         eval_vectors: DataFrame | None = None,
         eval_threshold: float = 0.8,
     ) -> DataFrame:
-        """Semantic admission decision for a batch of embeddings — the
-        vector twin of ``MinHashIndex.admit_batch``, same contract:
-        ``(id, reason, partner)`` with reasons already_indexed /
-        contaminated (only with ``eval_vectors`` — exact cosine >=
-        ``eval_threshold`` against ANY eval-suite vector; the semantic
-        twin of the text side's n-gram decontamination gate, decided
-        FIRST so contaminated vectors are never signed, verified, or
-        eligible as cluster representatives; partner NULL) / corpus_dup
-        (exact cosine >= ``threshold`` against a live indexed
-        partner's vector, min partner id) / batch_dup
-        (non-representative member of a verified within-batch cluster;
-        alternating-star components, min-id representative) / admitted.
-        First listed reason wins; first-seen-wins across batches.
-        The eval gate ships the (small, curated) eval suite as a matrix
-        inside a mapInPandas closure over the bounded micro-batch —
-        batch_rows x suite_rows exact cosines computed blockwise, each
-        side read exactly once, never corpus-touching.
+        """The semantic admission decision (``AdmissionIndex``) for
+        embeddings.
 
-        ``corpus_vectors`` MUST cover every live indexed id named as a
-        candidate partner — an uncovered partner cannot be
-        cosine-verified, so its probe's decision row raises at
-        materialization (no-silent-failure; same guard as the text
-        twin). ``max_bucket_size`` caps BOTH candidate stages — the
-        index probe and the within-batch self-join — per (band,
-        band_sig) bucket, matching ``MinHashIndex.admit_batch``'s capped
-        contract (r10, ADVICE r9 #3): a within-batch pair is lost only
-        if truncated in every band it shares. Scale shape: index and
-        batch signatures meet in ONE (band, band_sig) equi-join; corpus
-        vectors are joined back for candidate partner ids only."""
-        from cses2humio_spark.operators.dedup import (
-            alternating_star_components,
-        )
-        from cses2humio_spark.operators.similarity import (
-            cosine_pairs,
-            embedding_candidate_pairs,
-            lsh_signatures,
-        )
-
-        spark = batch_df.sparkSession
-        idc, vc = self.id_col, self.vec_col
-        index_ids = (
-            self.read_signatures(spark, version).select(idc).distinct()
-        )
-        batch = batch_df.select(F.col(idc), F.col(vc))
-        # fresh feeds every downstream stage — freeze (``_freeze``: the
-        # r15 job-floor fix, same as the text twin) so the anti-join runs
-        # once AND every consumer plans against a LogicalRDD instead of
-        # the anti-join subtree; repartition before the freeze so AQE's
-        # bytes-based coalesce can't serialize the CPU-heavy Arrow
-        # signing onto one task (the shuffle moves only the bounded
-        # micro-batch)
-        fresh = _freeze(
-            batch.join(index_ids, on=idc, how="left_anti").repartition(
-                spark.sparkContext.defaultParallelism
-            )
-        )
-        # semantic decontamination FIRST (eval suite x bounded
-        # micro-batch, exact cosine), dedup on the survivors — mirrors
-        # the text twin's gate ordering. Shape: the CURATED eval suite is
-        # collected once (bounded by policy — eval suites are thousands
-        # of vectors) and shipped in a mapInPandas closure; each Arrow
-        # batch of fresh vectors computes its full cosine block against
-        # the suite matrix in one pass. A crossJoin formulation would
-        # ship batch_rows x suite_rows PAIRS of full vectors through
-        # Arrow (~100 GB at 10k x 10k); this ships each side exactly
-        # once. Accumulation is dimension-by-dimension in float64 — the
-        # same left-to-right order as cosine_pairs and DuckDB's
-        # list_reduce, so borderline comparisons agree bit-for-bit.
-        cont = None
-        clean = fresh
-        if eval_vectors is not None:
-            ev_rows = [
-                r[0]
-                for r in eval_vectors.select(vc).distinct().collect()
-                if r[0] is not None
-            ]
-        if eval_vectors is not None and ev_rows:
-            import numpy as np
-
-            E = np.asarray(ev_rows, dtype=np.float64)  # (suite, dim)
-            thr = float(eval_threshold)
-            id_name, vec_name = idc, vc
-            id_sql_type = batch_df.schema[idc].dataType.simpleString()
-
-            def _eval_gate(batches):
-                import numpy as np  # noqa: PLC0415 — worker-side import
-
-                nb = np.zeros(E.shape[0], dtype=np.float64)
-                for j in range(E.shape[1]):
-                    nb += E[:, j] * E[:, j]
-                for pdf in batches:
-                    mask = pdf[vec_name].notna()
-                    if not mask.any():
-                        continue
-                    sub = pdf.loc[mask]
-                    A = np.asarray(sub[vec_name].tolist(), dtype=np.float64)
-                    d = np.zeros((A.shape[0], E.shape[0]), dtype=np.float64)
-                    na = np.zeros(A.shape[0], dtype=np.float64)
-                    for j in range(A.shape[1]):
-                        d += A[:, j : j + 1] * E[:, j][None, :]
-                        na += A[:, j] * A[:, j]
-                    cos = d / (
-                        np.sqrt(na)[:, None] * np.sqrt(nb)[None, :]
-                    )
-                    hit = (cos >= thr).any(axis=1)
-                    if hit.any():
-                        yield sub.loc[hit, [id_name]]
-
-            cont = _freeze(
-                fresh.mapInPandas(_eval_gate, schema=f"{idc} {id_sql_type}")
-                .distinct()
-                .withColumn("__cont", F.lit(1))
-            )
-            clean = _freeze(fresh.join(cont, on=idc, how="left_anti"))
-        # sign the batch ONCE (Arrow projection, frozen): the same
-        # signature frame feeds the index probe AND the within-batch
-        # candidate stage (before r9 each stage re-signed the batch)
-        full_sigs = _freeze(
-            lsh_signatures(clean, self.dim, self.n_planes * self.n_bands, vc)
-        )
-        cand = _freeze(
-            self._query_candidates(
-                clean,
-                version=version,
-                exclude_self=True,
-                max_bucket_size=max_bucket_size,
-                probe_sigs=full_sigs.select(idc, "lsh_sig"),
-            )
-        )  # three consumers (guard, prune, verify) — probe once
-        # coverage guard: candidate partners must have vectors in
-        # corpus_vectors, else the pair cannot be verified
-        corpus_ids = corpus_vectors.select(F.col(idc)).distinct()
-        uncovered = (
-            cand.join(
-                corpus_ids.withColumnRenamed(idc, "index_id"),
-                on="index_id",
-                how="left_anti",
-            )
-            .select(F.col("probe_id").alias(idc))
-            .distinct()
-            .withColumn("__uncov", F.lit(1))
-        )
-        # ONE cosine verification pass for BOTH pair families (cross
-        # partners live in the index, batch partners in fresh — disjoint
-        # id_b domains, so the union splits back cleanly); the corpus
-        # vector table is semi-join-pruned to candidate partner ids
-        # before it meets any pair, so corpus vectors never fan out
-        bcand = embedding_candidate_pairs(
-            full_sigs,
-            self.n_planes,
-            self.n_bands,
-            idc,
-            max_bucket_size=max_bucket_size,
-        )
-        pairs_all = cand.select(
-            F.col("probe_id").alias("id_a"), F.col("index_id").alias("id_b")
-        ).unionByName(bcand)
-        partner_ids = cand.select(
-            F.col("index_id").alias(idc)
-        ).distinct()
-        corpus_pruned = corpus_vectors.select(F.col(idc), F.col(vc)).join(
-            partner_ids,
-            on=idc,
-            how="left_semi",
-        )
-        vb_src = clean.unionByName(corpus_pruned)
-        # Verify formulation note (r14, A/B-measured): an id-indexed
-        # gather against one collected matrix (``cosine_pairs_lookup``,
-        # the embedding_near_dups shape) was tried here and REJECTED —
-        # interleaved same-session A/B at sf0.1 read min 8.4 s (join)
-        # vs 10.7 s (lookup): the per-decision construction actions the
-        # lookup needs (bound counts + the vector collect + four
-        # broadcasts) serialize on the driver and cost more than the
-        # pair-side Arrow traffic they save at micro-batch candidate
-        # density. The join formulation keeps zero construction-time
-        # actions and pipelines inside the decision's own jobs.
-        va = clean.select(F.col(idc).alias("id_a"), F.col(vc).alias("__va"))
-        vb = vb_src.select(F.col(idc).alias("id_b"), F.col(vc).alias("__vb"))
-        cos = cosine_pairs(F.col("__va"), F.col("__vb"))
-        accepted = _freeze(
-            pairs_all.join(va, on="id_a")
-            .join(vb, on="id_b")
-            .filter(cos >= threshold)
-            .select("id_a", "id_b")
-            # two consumers (corpus_rej anti-join, bpairs semi-join) —
-            # the cosine verify over the dense candidate set must run
-            # once, not twice (r14; the accepted table is id pairs only)
-        )
-        fresh_b = clean.select(F.col(idc).alias("id_b"))
-        corpus_rej = (
-            accepted.join(fresh_b, on="id_b", how="left_anti")
-            .groupBy("id_a")
-            .agg(F.min("id_b").alias("__cp"))
-            .select(F.col("id_a").alias(idc), "__cp")
-        )
-        bpairs = accepted.join(fresh_b, on="id_b", how="left_semi").select(
-            "id_a", "id_b"
-        )
-        reps = alternating_star_components(
-            clean.select(idc), bpairs, id_col=idc
-        ).withColumnRenamed("cluster_rep", "__rep")
-        id_type = batch_df.schema[self.id_col].dataType
-        assembled = (
-            batch.select(idc)
-            .join(index_ids.withColumn("__ai", F.lit(1)), on=idc, how="left")
-            .join(corpus_rej, on=idc, how="left")
-            .join(reps, on=idc, how="left")
-            .join(uncovered, on=idc, how="left")
-        )
-        if cont is not None:
-            assembled = assembled.join(cont, on=idc, how="left")
-        else:
-            assembled = assembled.withColumn(
-                "__cont", F.lit(None).cast("int")
-            )
-        # No persisted frames to tie to the result (every intermediate is
-        # a frozen LogicalRDD; the ContextCleaner reclaims its blocks when
-        # the caller drops the decision frame).
-        return (
-            assembled
-            .select(
-                idc,
-                F.when(
-                    F.col("__uncov") == 1,
-                    F.raise_error(
-                        F.concat(
-                            F.lit(
-                                "admit_batch: corpus_vectors lacks the "
-                                "vector for a live indexed candidate "
-                                f"partner of batch {idc}="
-                            ),
-                            F.col(idc).cast("string"),
-                            F.lit(
-                                " — stale/partial corpus snapshot; the "
-                                "pair cannot be cosine-verified"
-                            ),
-                        )
-                    ),
-                )
-                .when(F.col("__ai") == 1, F.lit("already_indexed"))
-                .when(F.col("__cont") == 1, F.lit("contaminated"))
-                .when(F.col("__cp").isNotNull(), F.lit("corpus_dup"))
-                .when(F.col("__rep") != F.col(idc), F.lit("batch_dup"))
-                .otherwise(F.lit("admitted"))
-                .alias("reason"),
-                F.when(F.col("__ai") == 1, F.col(idc))
-                .when(F.col("__cont") == 1, F.lit(None))
-                .when(F.col("__cp").isNotNull(), F.col("__cp"))
-                .when(F.col("__rep") != F.col(idc), F.col("__rep"))
-                .otherwise(F.lit(None))
-                .cast(id_type)
-                .alias("partner"),
-            )
-        )
-
-    def admit_and_ingest(
-        self,
-        batch_df: DataFrame,
-        batch_id: int,
-        corpus_vectors: DataFrame,
-        threshold: float = 0.3,
-        max_bucket_size: int | None = None,
-        eval_vectors: DataFrame | None = None,
-        eval_threshold: float = 0.8,
-    ) -> DataFrame | None:
-        """The full incremental semantic-dedup loop, foreachBatch-shaped
-        (same contract as ``MinHashIndex.admit_and_ingest``): decide
-        against the CURRENT index state, ingest only the admitted
-        vectors' signatures, return the decision frame; replayed batch
-        ids return None. The decision frame is lineage-truncated with an
-        eager localCheckpoint (r14, guide §3.3 — see
-        ``MinHashIndex.admit_and_ingest`` for the full rationale AND the
-        r14-#5a durability trade: executor-local blocks, one-micro-batch
-        replay exposure, cluster-mode alternatives): every downstream
-        action plans against the frozen micro-batch-bounded rows instead
-        of re-planning the admission DAG."""
-        latest = self.latest_version()
-        if latest is None:
-            raise ValueError(
-                f"{self.index_dir}: admit before build() — the standing "
-                "corpus must be signed first"
-            )
-        if batch_id <= self._last_batch_id(
-            self._load_manifest(latest), latest
-        ):
-            return None
-        decisions = self.admit_batch(
+        Near-dup = exact cosine >= ``threshold``; ``corpus_vectors``
+        supplies the vectors of index partners. ``contaminated`` (with
+        ``eval_vectors``): exact cosine >= ``eval_threshold`` against ANY
+        eval-suite vector — batch_rows x suite_rows cosines computed
+        blockwise over the bounded micro-batch, never touching the
+        corpus."""
+        return self._admit(
             batch_df,
             corpus_vectors,
-            threshold=threshold,
-            max_bucket_size=max_bucket_size,
+            threshold,
+            version,
+            max_bucket_size,
             eval_vectors=eval_vectors,
             eval_threshold=eval_threshold,
         )
-        frozen = decisions.localCheckpoint(eager=True)
-        del decisions  # internal admission caches evict on the next GC
-        admitted = batch_df.join(
-            frozen.filter(F.col("reason") == "admitted").select(
-                self.id_col
-            ),
-            on=self.id_col,
-            how="left_semi",
-        )
-        self(admitted, batch_id)
-        return frozen

@@ -172,10 +172,6 @@ WAV_FEATURES_SCHEMA = (
 )
 
 
-def _ppm_dims(doc_id: int) -> tuple[int, int]:
-    return 8 + doc_id % 8, 6 + doc_id % 5
-
-
 def synthesize_ppm_media(docs: DataFrame) -> DataFrame:
     """(doc_id, payload binary): a valid P6 PPM per document — ASCII
     header (with a comment line, exercising the parser) + w*h*3 pixel

@@ -414,6 +414,64 @@ def embedding_near_dup_pairs(
     )
 
 
+def cap_buckets(
+    df: DataFrame,
+    bucket_cols: list[str],
+    order_col: str,
+    max_bucket_size: int | None,
+) -> DataFrame:
+    """Truncate every ``bucket_cols`` bucket to its ``max_bucket_size``
+    smallest ``order_col`` rows — the mass-duplicate guard of the banded
+    candidate joins (a boilerplate page b times in one bucket fans every
+    probe out to b candidates per band). A partitioned rank, parallel per
+    bucket. ``max_bucket_size=None`` leaves ``df`` unchanged (exact
+    mode); values below 1 are refused."""
+    if max_bucket_size is None:
+        return df
+    if max_bucket_size < 1:
+        raise ValueError(f"max_bucket_size must be >= 1, got {max_bucket_size}")
+    wb = Window.partitionBy(*bucket_cols).orderBy(order_col)
+    return (
+        df.withColumn("__r", F.row_number().over(wb))
+        .filter(F.col("__r") <= max_bucket_size)
+        .drop("__r")
+    )
+
+
+def lsh_band_entries(
+    sigs: DataFrame,
+    n_planes: int,
+    n_bands: int,
+    id_col: str = "vec_id",
+    id_alias: str | None = None,
+) -> DataFrame:
+    """Explode each bigint ``lsh_sig`` into ``(id, lsh_sig, band,
+    band_sig)`` rows, one per band — a narrow projection done at join
+    time, so a stored signature table stays one row per vector. The id
+    column is renamed to ``id_alias`` when given."""
+    mask = (1 << n_planes) - 1
+    bands = F.array(
+        *[
+            F.struct(
+                F.lit(b).alias("band"),
+                F.shiftright(F.col("lsh_sig"), b * n_planes)
+                .bitwiseAND(F.lit(mask))
+                .alias("band_sig"),
+            )
+            for b in range(n_bands)
+        ]
+    )
+    out = id_alias or id_col
+    return sigs.select(
+        F.col(id_col).alias(out), "lsh_sig", F.explode(bands).alias("__b")
+    ).select(
+        out,
+        "lsh_sig",
+        F.col("__b.band").alias("band"),
+        F.col("__b.band_sig").alias("band_sig"),
+    )
+
+
 def embedding_candidate_pairs(
     sigs: DataFrame,
     n_planes: int,
@@ -431,45 +489,19 @@ def embedding_candidate_pairs(
     only from the LOWEST matching band. Band b matches iff field b of
     x = sig_a XOR sig_b is all-zero, so the lowest matching band is the
     lowest zero field of x — found with pure int64 arithmetic (SWAR
-    zero-field detection), which stays inside whole-stage codegen; the
-    old formulation sliced+zipped per-band arrays per joined pair,
-    allocating interpreted HOFs in the join's hottest loop, and shuffled
-    a 15-element array per entry where one bigint now rides along.
+    zero-field detection), which stays inside whole-stage codegen.
 
-    ``max_bucket_size`` (capped mode, ADVICE r9 #3 — mirrors
-    ``MinHashIndex._query_candidates``): the id_b side is truncated to
-    the ``max_bucket_size`` smallest ids per (band, band_sig) bucket, a
-    recall-for-boundedness trade for adversarially hot buckets (a
-    constant-vector flood makes one bucket quadratic). Truncation breaks
-    the lowest-band guarantee for dropped rows, so capped mode emits
-    from EVERY surviving band and dedups explicitly — a pair is lost
-    only if it is truncated in ALL of its matching bands."""
-    mask = (1 << n_planes) - 1
-    band_sig = lambda b: (  # noqa: E731
-        F.shiftright(F.col("lsh_sig"), b * n_planes).bitwiseAND(F.lit(mask))
+    ``max_bucket_size`` (capped mode, ``cap_buckets``): the id_b side is
+    truncated per (band, band_sig) bucket, a recall-for-boundedness trade
+    for adversarially hot buckets (a constant-vector flood makes one
+    bucket quadratic). Truncation breaks the lowest-band guarantee for
+    dropped rows, so capped mode emits from EVERY surviving band and
+    dedups explicitly — a pair is lost only if it is truncated in ALL of
+    its matching bands."""
+    entries = lsh_band_entries(sigs, n_planes, n_bands, id_col)
+    eb_entries = cap_buckets(
+        entries, ["band", "band_sig"], id_col, max_bucket_size
     )
-    bands = F.array(
-        *[
-            F.struct(F.lit(b).alias("band"), band_sig(b).alias("band_sig"))
-            for b in range(n_bands)
-        ]
-    )
-    entries = sigs.select(
-        F.col(id_col), F.col("lsh_sig"), F.explode(bands).alias("__b")
-    ).select(
-        id_col,
-        "lsh_sig",
-        F.col("__b.band").alias("band"),
-        F.col("__b.band_sig").alias("band_sig"),
-    )
-    eb_entries = entries
-    if max_bucket_size is not None:
-        wb = Window.partitionBy("band", "band_sig").orderBy(id_col)
-        eb_entries = (
-            entries.withColumn("__r", F.row_number().over(wb))
-            .filter(F.col("__r") <= max_bucket_size)
-            .drop("__r")
-        )
     joined = entries.alias("ea").join(
         eb_entries.alias("eb"),
         (F.col("ea.band") == F.col("eb.band"))

@@ -682,6 +682,102 @@ def falcon_feed_pipeline_timechart(spark: SparkSession, sf_dir: str) -> DataFram
             pass
 
 
+def _drain_feed_admission(
+    spark: SparkSession,
+    stage_walls: dict[str, float],
+    batch: DataFrame,
+    id_col: str,
+    payload_col: str,
+    parse,
+    admit,
+    ingest,
+    ckpt: str,
+) -> None:
+    """The feed pipelines' one admission loop. ``batch`` (bounded: at
+    most 300 rows at every scale factor) is served by a two-partition
+    fake feed (partition = id % 2, id order) and drained under
+    availableNow, its raw rows parsed by ``parse``; each micro-batch is
+    decided by ``admit(bdf, bid)`` (an index's replay-guarded
+    ``admit_and_ingest``) and its admitted rows go to ``ingest(df,
+    bid)``. Records the feed_fixture, admission, index_ingest and
+    feed_drain walls in ``stage_walls``."""
+    from cses2humio_spark.sources import http_feed
+    from cses2humio_spark.sources.fake_feed import FakeFeedServer
+
+    t0 = time.perf_counter()
+    rows = batch.select(id_col, payload_col).collect()
+    feed: dict[int, list[str]] = {0: [], 1: []}
+    for r in sorted(rows, key=lambda r: r[id_col]):
+        p = int(r[id_col] % 2)
+        feed[p].append(
+            json.dumps(
+                {
+                    "metadata": {"offset": len(feed[p])},
+                    "event": {
+                        id_col: int(r[id_col]),
+                        payload_col: r[payload_col],
+                    },
+                }
+            )
+        )
+    srv = FakeFeedServer(feed, token="feed-token").start()
+    stage_walls["feed_fixture"] = round(time.perf_counter() - t0, 3)
+    try:
+        http_feed.register(spark)
+        parsed = parse(
+            spark.readStream.format("falcon_feed")
+            .option("urls", srv.urls)
+            .option("token", "feed-token")
+            .option("quiet_ms", "800")
+            .load()
+        )
+
+        def process(bdf, bid):
+            ta = time.perf_counter()
+            d = admit(bdf, bid)
+            if d is None:
+                return  # replayed micro-batch
+            admitted = bdf.join(
+                d.filter(F.col("reason") == "admitted").select(id_col),
+                on=id_col,
+                how="left_semi",
+            )
+            ti = time.perf_counter()
+            stage_walls["admission"] = stage_walls.get("admission", 0.0) + (
+                ti - ta
+            )
+            ingest(admitted, bid)
+            stage_walls["index_ingest"] = stage_walls.get(
+                "index_ingest", 0.0
+            ) + (time.perf_counter() - ti)
+            # d is an eager localCheckpoint: its RDD storage is reclaimed
+            # by the ContextCleaner once this scope drops the reference
+
+        t0 = time.perf_counter()
+        q = (
+            parsed.writeStream.foreachBatch(process)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        if not q.awaitTermination(240):
+            q.stop()
+            raise TimeoutError("feed admission stream did not finish in 240s")
+        drain = time.perf_counter() - t0
+    finally:
+        srv.stop()
+    # feed_drain = stream wall MINUS the in-batch processing stages
+    stage_walls["feed_drain"] = round(
+        drain
+        - stage_walls.get("admission", 0.0)
+        - stage_walls.get("index_ingest", 0.0),
+        3,
+    )
+    for k in ("admission", "index_ingest"):
+        if k in stage_walls:
+            stage_walls[k] = round(stage_walls[k], 3)
+
+
 _FEED_ADM_TERMS = ("spark", "join", "window")
 _FEED_TOKS = "string_split_regex(trim(text), '\\s+')"
 
@@ -800,8 +896,8 @@ _FEED_TOKS = "string_split_regex(trim(text), '\\s+')"
     """,
 )
 def feed_admission_index_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """THE composed production pipeline in one streaming job (VERDICT
-    r10 #4): chunked-HTTP feed -> parse -> decontaminating crawl
+    """THE composed production pipeline in one streaming job:
+    chunked-HTTP feed -> parse -> decontaminating crawl
     admission (MinHash dedup + eval-suite 8-gram gate, ONE decision
     pass) -> inverted-text-index ingest of the admitted documents ->
     BM25 search of the final index state. Every piece is the standing
@@ -832,8 +928,6 @@ def feed_admission_index_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame
 
     from cses2humio_spark.operators.dedup_index import MinHashIndex
     from cses2humio_spark.operators.text_index import InvertedTextIndex
-    from cses2humio_spark.sources import http_feed
-    from cses2humio_spark.sources.fake_feed import FakeFeedServer
 
     docs = load_table(spark, sf_dir, "documents").filter(
         F.col("doc_id") < 1000
@@ -856,43 +950,20 @@ def feed_admission_index_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame
     tidx.build(corpus)
     stage_walls["index_build"] = round(time.perf_counter() - t0, 3)
 
-    # feed fixture: bounded collect (<= 300 rows at every scale factor)
-    t0 = time.perf_counter()
-    rows = batch.select("doc_id", "text").collect()
-    feed: dict[int, list[str]] = {0: [], 1: []}
-    for r in sorted(rows, key=lambda r: r.doc_id):
-        p = int(r.doc_id % 2)
-        feed[p].append(
-            json.dumps(
-                {
-                    "metadata": {"offset": len(feed[p])},
-                    "event": {"doc_id": int(r.doc_id), "text": r.text},
-                }
-            )
-        )
-    srv = FakeFeedServer(feed, token="adm-token").start()
-    stage_walls["feed_fixture"] = round(time.perf_counter() - t0, 3)
     try:
-        http_feed.register(spark)
-        parsed = (
-            spark.readStream.format("falcon_feed")
-            .option("urls", srv.urls)
-            .option("token", "adm-token")
-            .option("quiet_ms", "800")
-            .load()
-            .select(
+        _drain_feed_admission(
+            spark,
+            stage_walls,
+            batch,
+            "doc_id",
+            "text",
+            lambda raw: raw.select(
                 F.get_json_object(F.col("value"), "$.event.doc_id")
                 .cast("bigint")
                 .alias("doc_id"),
-                F.get_json_object(F.col("value"), "$.event.text").alias(
-                    "text"
-                ),
-            )
-        )
-
-        def process(bdf, bid):
-            ta = time.perf_counter()
-            d = midx.admit_and_ingest(
+                F.get_json_object(F.col("value"), "$.event.text").alias("text"),
+            ),
+            lambda bdf, bid: midx.admit_and_ingest(
                 bdf,
                 bid,
                 corpus_docs=docs,
@@ -900,58 +971,16 @@ def feed_admission_index_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame
                 eval_docs=eval_docs,
                 contamination_threshold=0.5,
                 eval_n=8,
-            )
-            if d is None:
-                return  # replayed micro-batch
-            admitted = bdf.join(
-                d.filter(F.col("reason") == "admitted").select("doc_id"),
-                on="doc_id",
-                how="left_semi",
-            )
-            ti = time.perf_counter()
-            stage_walls["admission"] = stage_walls.get("admission", 0.0) + (
-                ti - ta
-            )
-            tidx(admitted, bid)
-            stage_walls["index_ingest"] = stage_walls.get(
-                "index_ingest", 0.0
-            ) + (time.perf_counter() - ti)
-            # d is an eager localCheckpoint (r14): its RDD storage is
-            # reclaimed by the ContextCleaner once this scope drops the
-            # reference — Dataset-level unpersist would be a no-op
-
-        t0 = time.perf_counter()
-        q = (
-            parsed.writeStream.foreachBatch(process)
-            .option(
-                "checkpointLocation", os.path.join(tmpdir, "ckpt")
-            )
-            .trigger(availableNow=True)
-            .start()
+            ),
+            tidx,
+            os.path.join(tmpdir, "ckpt"),
         )
-        if not q.awaitTermination(240):
-            q.stop()
-            raise TimeoutError(
-                "feed admission pipeline did not finish in 240s"
-            )
-        drain = time.perf_counter() - t0
-        # feed_drain = stream wall MINUS the in-batch processing stages
-        stage_walls["feed_drain"] = round(
-            drain
-            - stage_walls.get("admission", 0.0)
-            - stage_walls.get("index_ingest", 0.0),
-            3,
-        )
-        for k in ("admission", "index_ingest"):
-            if k in stage_walls:
-                stage_walls[k] = round(stage_walls[k], 3)
         t0 = time.perf_counter()
         out = tidx.search(spark, list(_FEED_ADM_TERMS), k=20)
         final = out.collect()  # materialize before tmpdir vanishes
         stage_walls["search"] = round(time.perf_counter() - t0, 3)
         return spark.createDataFrame(final, out.schema)
     finally:
-        srv.stop()
         shutil.rmtree(tmpdir, ignore_errors=True)
 
 
@@ -1102,8 +1131,6 @@ def feed_vector_admission_ann_pipeline(
     from cses2humio_spark.operators.ann_index import PQIndex
     from cses2humio_spark.operators.dedup_index import EmbeddingLshIndex
     from cses2humio_spark.operators.similarity import auto_band_params
-    from cses2humio_spark.sources import http_feed
-    from cses2humio_spark.sources.fake_feed import FakeFeedServer
 
     emb = load_table(spark, sf_dir, "embeddings").filter(
         F.col("vec_id") < 1000
@@ -1127,94 +1154,31 @@ def feed_vector_admission_ann_pipeline(
     pidx.build(corpus)
     stage_walls["index_build"] = round(time.perf_counter() - t0, 3)
 
-    # feed fixture: bounded collect (<= 300 rows at every scale factor)
-    t0 = time.perf_counter()
-    rows = batch.select("vec_id", "embedding").collect()
-    feed: dict[int, list[str]] = {0: [], 1: []}
-    for r in sorted(rows, key=lambda r: r.vec_id):
-        p = int(r.vec_id % 2)
-        feed[p].append(
-            json.dumps(
-                {
-                    "metadata": {"offset": len(feed[p])},
-                    "event": {
-                        "vec_id": int(r.vec_id),
-                        "embedding": [float(x) for x in r.embedding],
-                    },
-                }
-            )
-        )
-    srv = FakeFeedServer(feed, token="vec-token").start()
-    stage_walls["feed_fixture"] = round(time.perf_counter() - t0, 3)
     try:
-        http_feed.register(spark)
-        parsed = (
-            spark.readStream.format("falcon_feed")
-            .option("urls", srv.urls)
-            .option("token", "vec-token")
-            .option("quiet_ms", "800")
-            .load()
-            .select(
+        _drain_feed_admission(
+            spark,
+            stage_walls,
+            batch,
+            "vec_id",
+            "embedding",
+            lambda raw: raw.select(
                 F.from_json(
                     F.col("value"),
                     "struct<event: struct<vec_id: bigint, "
                     "embedding: array<float>>>",
                 ).alias("j")
-            )
-            .select("j.event.vec_id", "j.event.embedding")
-        )
-
-        def process(bdf, bid):
-            ta = time.perf_counter()
-            d = eidx.admit_and_ingest(
+            ).select("j.event.vec_id", "j.event.embedding"),
+            lambda bdf, bid: eidx.admit_and_ingest(
                 bdf,
                 bid,
                 corpus_vectors=emb,
                 threshold=0.3,
                 eval_vectors=eval_vecs,
                 eval_threshold=0.8,
-            )
-            if d is None:
-                return  # replayed micro-batch
-            admitted = bdf.join(
-                d.filter(F.col("reason") == "admitted").select("vec_id"),
-                on="vec_id",
-                how="left_semi",
-            )
-            ti = time.perf_counter()
-            stage_walls["admission"] = stage_walls.get("admission", 0.0) + (
-                ti - ta
-            )
-            pidx(admitted, bid)
-            stage_walls["index_ingest"] = stage_walls.get(
-                "index_ingest", 0.0
-            ) + (time.perf_counter() - ti)
-            # d is an eager localCheckpoint (r14): its RDD storage is
-            # reclaimed by the ContextCleaner once this scope drops the
-            # reference — Dataset-level unpersist would be a no-op
-
-        t0 = time.perf_counter()
-        q = (
-            parsed.writeStream.foreachBatch(process)
-            .option("checkpointLocation", os.path.join(tmpdir, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
+            ),
+            pidx,
+            os.path.join(tmpdir, "ckpt"),
         )
-        if not q.awaitTermination(240):
-            q.stop()
-            raise TimeoutError(
-                "feed vector admission pipeline did not finish in 240s"
-            )
-        drain = time.perf_counter() - t0
-        stage_walls["feed_drain"] = round(
-            drain
-            - stage_walls.get("admission", 0.0)
-            - stage_walls.get("index_ingest", 0.0),
-            3,
-        )
-        for k in ("admission", "index_ingest"):
-            if k in stage_walls:
-                stage_walls[k] = round(stage_walls[k], 3)
         t0 = time.perf_counter()
         probe = emb.filter(F.col("vec_id") == 0).select(
             F.col("vec_id").alias("probe_id"), "embedding"
@@ -1224,5 +1188,4 @@ def feed_vector_admission_ann_pipeline(
         stage_walls["search"] = round(time.perf_counter() - t0, 3)
         return spark.createDataFrame(final, out.schema)
     finally:
-        srv.stop()
         shutil.rmtree(tmpdir, ignore_errors=True)

@@ -66,12 +66,6 @@ def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {name: load_table(spark, sf_dir, name) for name in TABLES}
 
 
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every table as a temp view for the SQL surface."""
-    for name, df in load_tables(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)
-
-
 def load_lookup_csv(spark: SparkSession, path: str) -> DataFrame:
     """Humio-style lookup file: a header-rowed CSV read as ALL-STRING
     columns (lookup files carry no types — exactly how Humio treats

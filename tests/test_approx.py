@@ -937,3 +937,33 @@ def test_cosine_pairs_lookup_dim_aware_byte_bound(spark):
     # to NULL — the lookup surfaces both as NULL, failing thresholds
     # the same way
     assert looked[(1, 4)] is None and looked[(1, 99)] is None
+
+
+def test_bucket_cap_keeps_smallest_ids_and_refuses_non_positive(spark):
+    """One bucket cap serves every banded candidate join: it keeps each
+    bucket's ``max_bucket_size`` smallest ids, None is exact, and a cap
+    below 1 is refused — including through ``embedding_candidate_pairs``
+    (a zero cap used to return no pairs at all)."""
+    import pytest
+
+    from cses2humio_spark.operators.similarity import (
+        cap_buckets,
+        embedding_candidate_pairs,
+    )
+
+    rows = spark.createDataFrame(
+        [(b, i) for b in range(2) for i in range(5)], "band int, vec_id long"
+    )
+    kept = cap_buckets(rows, ["band"], "vec_id", 2).collect()
+    assert sorted((r.band, r.vec_id) for r in kept) == [
+        (0, 0), (0, 1), (1, 0), (1, 1)
+    ]
+    assert cap_buckets(rows, ["band"], "vec_id", None) is rows
+    sigs = spark.createDataFrame(
+        [(i, 7) for i in range(4)], "vec_id long, lsh_sig long"
+    )
+    assert embedding_candidate_pairs(sigs, 4, 2).count() == 6
+    assert embedding_candidate_pairs(sigs, 4, 2, max_bucket_size=2).count() == 1
+    for bad in (0, -1):
+        with pytest.raises(ValueError, match="max_bucket_size must be >= 1"):
+            embedding_candidate_pairs(sigs, 4, 2, max_bucket_size=bad)

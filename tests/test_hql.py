@@ -756,6 +756,53 @@ class TestRegexFreeText:
         )
 
 
+class TestRegexFlags:
+    """``/pattern/flags``: the flags tail belongs to the regex literal and
+    folds into an inline group (``i`` -> ``(?i)``), in field position and
+    in free-text position alike."""
+
+    def test_parse(self):
+        [f] = parse("msg = /abc/i")
+        assert f == Cmp("msg", "=", "(?i)abc", is_regex=True)
+        [f] = parse("/abc/i")
+        assert f == FreeText("(?i)abc", regex=True)
+        [f] = parse("msg != /a.c/ms and x = 1")
+        assert f.parts[0] == Cmp("msg", "!=", "(?ms)a.c", is_regex=True)
+        # a space ends the literal: the next word is its own term
+        [f] = parse("/abc/ i")
+        assert f == And([FreeText("abc", regex=True), FreeText("i")])
+        with pytest.raises(HqlSyntaxError, match="regex flag"):
+            parse("msg = /abc/q")
+
+    def test_case_insensitive_scan(self, spark):
+        df = spark.createDataFrame(
+            [(1, "an Error occurred"), (2, "ERROR"), (3, "clean"), (4, None)],
+            "id int, msg string",
+        )
+        assert {r.id for r in hql(df, "/error/i").collect()} == {1, 2}
+        assert {r.id for r in hql(df, "msg = /^error/i").collect()} == {2}
+        assert {r.id for r in hql(df, "msg != /error/i").collect()} == {3}
+        assert {r.id for r in hql(df, "/error/").collect()} == set()
+
+    def test_scan_vs_index_parity(self, spark, tmp_path):
+        from cses2humio_spark.operators.text_index import InvertedTextIndex
+
+        docs = load_table(spark, SF_SMALL, "documents").select(
+            "doc_id", "text", "lang"
+        )
+        ix = InvertedTextIndex(str(tmp_path / "flags"), n_buckets=4)
+        ix.build(docs)
+        want = docs.filter(F.lower("text").rlike("spark")).count()
+        assert want > 0
+        for q in ["/SPARK/i", "text = /SPARK/i", "/SPARK/i or join"]:
+            routed = hql(docs, q, text_index=ix)
+            scanned = hql(docs, q)
+            assert sorted(map(tuple, routed.collect())) == sorted(
+                map(tuple, scanned.collect())
+            ), q
+        assert hql(docs, "/SPARK/i", text_index=ix).count() == want
+
+
 class TestInGlobValues:
     def test_glob_value_vs_quoted_literal(self, spark):
         df = spark.createDataFrame(

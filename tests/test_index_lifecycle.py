@@ -2,8 +2,10 @@
 pinned once for every persisted index family at tiny sizes: geometry
 pin, refusal before build, the stream replay guard across interleaved
 deletes and compactions, empty batches, tombstones, rebuilds, pruning,
-and each family's empty-build behaviour. Family-specific search and
-probe contracts live in the per-family test modules.
+and each family's empty-build behaviour — plus, for the two admission
+families, the shared ``admit_and_ingest`` contract (refusal before
+build, replay guard, argument order). Family-specific search, probe and
+decision contracts live in the per-family test modules.
 """
 
 from __future__ import annotations
@@ -223,3 +225,60 @@ def test_empty_build(spark, fam, rows, tmp_path):
             fam.read(idx, spark)
     idx(rows(0, 20), 0)  # the committed geometry accepts ingest
     assert idx.latest_version() == v + 1
+
+
+# -- the admission skeleton (MinHashIndex, EmbeddingLshIndex) ---------------
+
+
+#: overrides the ``fam`` fixture for the two families that admit
+admission_families = pytest.mark.parametrize(
+    "fam", [FAMILIES["lsh"], FAMILIES["minhash"]], ids=["lsh", "minhash"]
+)
+
+
+@admission_families
+def test_admit_refused_before_build(fam, rows, tmp_path):
+    idx = fam.open(str(tmp_path / "ab"))
+    with pytest.raises(ValueError, match="admit before build"):
+        idx.admit_and_ingest(rows(10, 20), 0, rows(0, 10))
+    assert idx.latest_version() is None
+    assert idx.versions() == []
+
+
+@admission_families
+def test_admit_replay_returns_none_and_commits_nothing(
+    spark, fam, rows, tmp_path, monkeypatch
+):
+    """A replayed batch id returns None before any decision is derived,
+    and leaves the committed version and its manifest as they were."""
+    idx = fam.open(str(tmp_path / "ar"))
+    idx.build(rows(0, 20))
+    first = idx.admit_and_ingest(rows(20, 30), 0, rows(0, 30))
+    assert first.count() == 10
+    v = idx.latest_version()
+    man = idx._load_manifest(v)
+    assert man["last_batch_id"] == 0
+
+    def boom(*_a, **_k):
+        raise AssertionError("a replayed batch must not be decided again")
+
+    monkeypatch.setattr(idx, "admit_batch", boom)
+    assert idx.admit_and_ingest(rows(20, 30), 0, rows(0, 30)) is None
+    assert idx.latest_version() == v
+    assert idx._load_manifest(v) == man
+
+
+@admission_families
+def test_admit_and_ingest_takes_admit_batch_arguments(
+    fam, rows, tmp_path
+):
+    """After ``batch_id`` come ``admit_batch``'s arguments minus
+    ``version``: the fifth positional is ``max_bucket_size`` (a zero cap
+    is refused), and ``version=`` is not accepted."""
+    idx = fam.open(str(tmp_path / "aa"))
+    idx.build(rows(0, 20))
+    with pytest.raises(TypeError, match="version"):
+        idx.admit_and_ingest(rows(20, 30), 0, rows(0, 30), version=0)
+    with pytest.raises(ValueError, match="max_bucket_size must be >= 1"):
+        idx.admit_and_ingest(rows(20, 30), 0, rows(0, 30), 0.5, 0)
+    assert idx._load_manifest(idx.latest_version())["last_batch_id"] == -1
