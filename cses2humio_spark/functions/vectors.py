@@ -113,26 +113,34 @@ def cosine_pairs_lookup(
     ``max_matrix_bytes`` bounds the collected matrix's DRIVER/EXECUTOR
     memory dimension-aware (rows x dim x 8 bytes of float64 — VERDICT
     r14 #6: a row-count bound alone scales linearly with dim, so
-    4M x dim-512 rows would be 16 GB). Both are checked row-by-row
-    during the bounded collect, so a violating table fails before the
-    matrix is built; callers whose vector side can exceed either bound
-    must keep the join formulation."""
+    4M x dim-512 rows would be 16 GB). Both are checked by one
+    aggregate (row count, total vector length) BEFORE the collect, so a
+    violating table is never collected; callers whose vector side
+    can exceed either bound must keep the join formulation."""
     import numpy as np
 
     from pyspark.sql.functions import pandas_udf
 
-    rows = (
-        vectors.select(id_col, vec_col).limit(max_vectors + 1).collect()
-    )
-    if len(rows) > max_vectors:
+    n_rows, n_floats = vectors.agg(
+        F.count(F.lit(1)),
+        F.sum(F.when(F.col(vec_col).isNotNull(), F.size(vec_col))),
+    ).collect()[0]
+    if n_rows > max_vectors:
         raise ValueError(
             f"cosine_pairs_lookup: vector side exceeds max_vectors="
             f"{max_vectors} rows — it no longer fits the broadcast "
             "contract; use the join + cosine_pairs formulation"
         )
+    if (n_floats or 0) * 8 > max_matrix_bytes:
+        raise ValueError(
+            "cosine_pairs_lookup: vector matrix exceeds "
+            f"max_matrix_bytes={max_matrix_bytes} ({n_rows} rows, "
+            f"{n_floats} floats x 8 B float64) — it no longer fits the "
+            "broadcast contract; use the join + cosine_pairs formulation"
+        )
+    rows = vectors.select(id_col, vec_col).collect()
     by_id: dict = {}
     vecs: list = []
-    total_floats = 0
     for r in rows:
         rid = r[0]
         if rid in by_id:
@@ -145,15 +153,6 @@ def cosine_pairs_lookup(
         if v is None:
             by_id[rid] = -1  # NULL vector: cosine is NULL
         else:
-            total_floats += len(v)
-            if total_floats * 8 > max_matrix_bytes:
-                raise ValueError(
-                    "cosine_pairs_lookup: collected vector matrix "
-                    f"exceeds max_matrix_bytes={max_matrix_bytes} "
-                    f"({len(rows)} rows x observed dims x 8 B float64) "
-                    "— it no longer fits the broadcast contract; use "
-                    "the join + cosine_pairs formulation"
-                )
             by_id[rid] = len(vecs)
             vecs.append([float(x) for x in v])
     # group by length so ragged tables still gather correctly; the

@@ -151,6 +151,7 @@ class PQIndex(VersionedSegmentStore):
                     _dvec(F.col(self.vec_col)).alias("cvec"),
                 ),
                 self._centroids_dir(version),
+                manifest,
             )
             manifest["centroids"] = version
             src, vec_col = self._residuals(corpus, manifest), "__rvec"
@@ -172,13 +173,13 @@ class PQIndex(VersionedSegmentStore):
             cb = pq_codebook(
                 src, self.m, self.k_codes, self.dim, self.id_col, vec_col
             )
-        self._write_dir(cb, self._codebook_dir(version))
+        self._write_dir(cb, self._codebook_dir(version), manifest)
         manifest["codebook"] = version
 
     def _residuals(self, vecs: DataFrame, manifest: dict) -> DataFrame:
         """``(id, cid, __rvec)``: each vector minus its nearest coarse
         centroid from the manifest's stored (double) centroids."""
-        cents = self._read_centroids_at(vecs.sparkSession, manifest["centroids"])
+        cents = self._read_centroids_at(vecs.sparkSession, manifest)
         assign = ivf_assign(
             vecs,
             cents.select("cid", F.col("cvec").alias(self.vec_col)),
@@ -206,7 +207,7 @@ class PQIndex(VersionedSegmentStore):
     def _segment_rows(self, vecs: DataFrame, manifest: dict) -> DataFrame:
         """Codes under the manifest's codebook; ivfpq encodes the
         residuals and keeps each code's cell id."""
-        cb = self._read_codebook_at(vecs.sparkSession, manifest["codebook"])
+        cb = self._read_codebook_at(vecs.sparkSession, manifest)
         if self.mode == "pq":
             return pq_encode(
                 vecs, cb, self.m, self.dim, self.id_col, self.vec_col
@@ -218,19 +219,23 @@ class PQIndex(VersionedSegmentStore):
 
     # -- read --------------------------------------------------------------
 
-    def _read_codebook_at(self, spark: SparkSession, version: int) -> DataFrame:
-        return spark.read.parquet(self._codebook_dir(version)).select(
-            "sub_id", "code", "cvec"
-        )
+    def _read_codebook_at(self, spark: SparkSession, manifest: dict) -> DataFrame:
+        """The codebook ``manifest`` names."""
+        return self._read_dirs(
+            spark, manifest, [f"codebook_v={manifest['codebook']}"]
+        ).select("sub_id", "code", "cvec")
 
-    def _read_centroids_at(self, spark: SparkSession, version: int) -> DataFrame:
-        return spark.read.parquet(self._centroids_dir(version))
+    def _read_centroids_at(self, spark: SparkSession, manifest: dict) -> DataFrame:
+        """The coarse centroids ``manifest`` names (ivfpq)."""
+        return self._read_dirs(
+            spark, manifest, [f"centroids_v={manifest['centroids']}"]
+        )
 
     def read_codebook(
         self, spark: SparkSession, version: int | None = None
     ) -> DataFrame:
         man = self._load_manifest(self._resolve_version(version))
-        return self._read_codebook_at(spark, man["codebook"])
+        return self._read_codebook_at(spark, man)
 
     def read_codes(
         self, spark: SparkSession, version: int | None = None
@@ -285,7 +290,7 @@ class PQIndex(VersionedSegmentStore):
                 )
         at = self._resolve_version(version)
         man = self._load_manifest(at)
-        cb = self._read_codebook_at(spark, man["codebook"])
+        cb = self._read_codebook_at(spark, man)
         codes = self.read_codes(spark, at)
         k_adc = refine if refine else k
         if self.mode == "pq":
@@ -296,7 +301,7 @@ class PQIndex(VersionedSegmentStore):
                 codes, tables, self.m, k_adc, self.id_col, probe_id_col
             )
         else:
-            cents = self._read_centroids_at(spark, man["centroids"]).select(
+            cents = self._read_centroids_at(spark, man).select(
                 "cid", F.col("cvec").alias(self.vec_col)
             )
             probe_cells, tables = ivfpq_probe_tables(

@@ -21,6 +21,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -782,7 +783,15 @@ def alternating_star_components(
                 T.StructField("cluster_rep", id_type),
             ]
         )
-        reps_df = F.broadcast(spark.createDataFrame(mapping, rep_schema))
+        # from an Arrow table, not a list: a list goes through
+        # parallelize and costs a Python-worker job when consumed
+        ids_, reps_ = zip(*mapping)
+        reps_df = F.broadcast(
+            spark.createDataFrame(
+                pa.table({id_col: list(ids_), "cluster_rep": list(reps_)}),
+                rep_schema,
+            )
+        )
         return (
             ids.select(F.col(id_col))
             .join(reps_df, id_col, "left")

@@ -9,8 +9,10 @@ On-disk layout under the index root:
 - family artifacts named by ``_live_artifacts`` (text ``dl=<v>``, PQ
   ``codebook_v=<v>`` / ``centroids_v=<v>``);
 - ``manifest_v=<v>.json`` per committed version: the live ``segments``
-  and ``tombstones``, the stream replay guard ``last_batch_id``, and any
-  family keys;
+  and ``tombstones``, the stream replay guard ``last_batch_id``,
+  ``schemas`` (live artifact dir name -> the schema a read of that dir
+  sees, recorded at write time so reads skip parquet footer inference),
+  and any family keys (text: ``ws1`` and ``stats`` per live segment);
 - ``_LATEST``: the committed version, switched with ``os.replace`` —
   readers see a fully-written version or the previous one, never a torn
   state;
@@ -70,6 +72,42 @@ import shutil
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+
+def _nullable(dt: T.DataType) -> T.DataType:
+    """``dt`` with every field and element nullable, as a parquet read
+    reports it."""
+    if isinstance(dt, T.StructType):
+        return T.StructType(
+            [
+                T.StructField(f.name, _nullable(f.dataType), True, f.metadata)
+                for f in dt.fields
+            ]
+        )
+    if isinstance(dt, T.ArrayType):
+        return T.ArrayType(_nullable(dt.elementType), True)
+    if isinstance(dt, T.MapType):
+        return T.MapType(_nullable(dt.keyType), _nullable(dt.valueType), True)
+    return dt
+
+
+def _read_schema(
+    schema: T.StructType, partition_by: list[str]
+) -> T.StructType | None:
+    """The schema a parquet read of a frame with ``schema``, written
+    partitioned by ``partition_by``, infers — derived without a job: the
+    data columns made nullable, then the partition columns as partition
+    inference types small integer dir values (int). None when a partition
+    column is not integral (its inferred type depends on the values)."""
+    parts = [schema[c] for c in partition_by]
+    if not all(isinstance(f.dataType, T.IntegralType) for f in parts):
+        return None
+    data = [f for f in schema.fields if f.name not in partition_by]
+    return T.StructType(
+        _nullable(T.StructType(data)).fields
+        + [T.StructField(f.name, T.IntegerType(), True) for f in parts]
+    )
 
 
 class VersionedSegmentStore:
@@ -182,7 +220,17 @@ class VersionedSegmentStore:
         return latest + 1, manifest
 
     def _commit(self, version: int, manifest: dict) -> None:
-        """Write ``manifest``, switch ``_LATEST`` to ``version``, prune."""
+        """Write ``manifest`` (its ``schemas`` cut to its live artifacts),
+        switch ``_LATEST`` to ``version``, prune."""
+        live = self._live_artifacts(manifest)
+        manifest["schemas"] = {
+            name: schema
+            for name, schema in manifest.get("schemas", {}).items()
+            if any(
+                (m := re.fullmatch(pat, name)) and int(m.group(1)) in ids
+                for pat, ids in live.items()
+            )
+        }
         self._write_manifest(version, manifest)
         tmp = self._pointer + ".tmp"
         with open(tmp, "w", encoding="ascii") as fh:
@@ -198,10 +246,18 @@ class VersionedSegmentStore:
     def _tomb_dir(self, version: int) -> str:
         return os.path.join(self.index_dir, f"tomb={version}")
 
-    def _write_dir(self, df: DataFrame, dst: str, partition_by=None) -> None:
+    def _write_dir(
+        self, df: DataFrame, dst: str, manifest: dict, partition_by=None
+    ) -> None:
         """Write to a staging dir, then atomically rename into place (a
         crashed earlier attempt at the same dst is discarded first — its
-        version was never committed, so it is garbage by definition)."""
+        version was never committed, so it is garbage by definition), and
+        record in ``manifest`` the schema a read of ``dst`` sees."""
+        schema = _read_schema(df.schema, list(partition_by or []))
+        if schema is not None:
+            manifest.setdefault("schemas", {})[
+                os.path.basename(dst)
+            ] = schema.jsonValue()
         staging = dst + ".staging"
         shutil.rmtree(staging, ignore_errors=True)
         w = df.write.mode("overwrite")
@@ -223,6 +279,7 @@ class VersionedSegmentStore:
         self._write_dir(
             rows.observe(obs, F.count(F.lit(1)).alias("n")),
             self._seg_dir(version),
+            manifest,
             partition_by=[self.partition_col] if self.partition_col else None,
         )
         n_rows = int(obs.get["n"] or 0)
@@ -305,6 +362,7 @@ class VersionedSegmentStore:
         self._write_dir(
             ids.select(F.col(self.id_col).alias(self._key_col)).distinct(),
             self._tomb_dir(version),
+            manifest,
         )
         manifest["tombstones"] = list(manifest.get("tombstones", [])) + [
             version
@@ -334,6 +392,29 @@ class VersionedSegmentStore:
 
     # -- reads -----------------------------------------------------------------
 
+    def _read_dirs(
+        self,
+        spark: SparkSession,
+        manifest: dict,
+        names: list[str],
+        *,
+        anchored: bool = False,
+    ) -> DataFrame:
+        """One parquet read of the artifact dirs ``names``. When
+        ``manifest`` records one schema for all of them it is passed to
+        the reader, so the read runs no footer-inference job; a missing
+        or differing entry (e.g. a manifest written before schemas were
+        recorded) falls back to inference. ``anchored`` reads with the
+        index root as ``basePath``, which surfaces each dir's key
+        (``seg``, ``tomb``) as a partition column."""
+        reader = spark.read
+        if anchored:
+            reader = reader.option("basePath", self.index_dir)
+        recorded = [manifest.get("schemas", {}).get(n) for n in names]
+        if recorded[0] is not None and all(r == recorded[0] for r in recorded):
+            reader = reader.schema(T.StructType.fromJson(recorded[0]))
+        return reader.parquet(*[os.path.join(self.index_dir, n) for n in names])
+
     def read_tombstones(
         self, spark: SparkSession, version: int | None = None
     ) -> DataFrame | None:
@@ -345,8 +426,9 @@ class VersionedSegmentStore:
         if not tombs:
             return None
         return (
-            spark.read.option("basePath", self.index_dir)
-            .parquet(*[self._tomb_dir(t) for t in tombs])
+            self._read_dirs(
+                spark, man, [f"tomb={t}" for t in tombs], anchored=True
+            )
             .select(self._key_col)
             .distinct()
         )
@@ -362,28 +444,25 @@ class VersionedSegmentStore:
         by a broadcast anti-join — a delete is visible the moment it
         commits, long before compact rewrites anything."""
         at = self._resolve_version(version)
-        segments = self._load_manifest(at)["segments"]
+        man = self._load_manifest(at)
+        segments = man["segments"]
         if not segments:
             raise ValueError(
                 f"{self.index_dir}: index is empty at version {at} — "
                 "no live segments to read"
             )
-        paths = [os.path.join(self.index_dir, f"{artifact}={s}") for s in segments]
+        names = [f"{artifact}={s}" for s in segments]
         if artifact == "seg":
             # seg=<v> dirs are key=value-shaped: anchor partition discovery
             # at the root, or a multi-segment read of partitioned segments
             # reports conflicting directory structures; the partition_col
             # survives, the synthetic seg column is dropped
-            rows = (
-                spark.read.option("basePath", self.index_dir)
-                .parquet(*paths)
-                .drop("seg")
-            )
+            rows = self._read_dirs(spark, man, names, anchored=True).drop("seg")
         else:
             # each leaf dir is its own root: a root anchor would surface
             # the dir key as a partition column that can collide with a
             # data column (text's dl)
-            rows = spark.read.parquet(*paths)
+            rows = self._read_dirs(spark, man, names)
         tombs = self.read_tombstones(spark, at)
         if tombs is not None:
             rows = rows.join(F.broadcast(tombs), on=self._key_col, how="left_anti")

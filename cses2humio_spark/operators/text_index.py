@@ -20,12 +20,14 @@ artifact the fused plan computes inline:
   of ``n_buckets`` partitions no matter how large the corpus. The
   document length ``dl`` is DENORMALIZED into the posting row (8 bytes)
   so scoring needs no join against a corpus-sized doc-length table.
-- ``dl=<v>``: doc lengths ``(doc_id, dl)`` — the narrow table the
-  collection statistics (N, avgdl) are computed from at search time.
-  Computing them from this table rather than pinning them in the
-  manifest keeps them exact under tombstoned deletes for free; the scan
-  is two scalar aggregates over a (bigint, bigint) table, embarrassingly
-  parallel and tiny next to the corpus.
+- ``dl=<v>``: doc lengths ``(doc_id, dl, ws1)``, one row per document.
+  Its write records the segment's doc count and doc-length sum in the
+  manifest (``stats``), so a search sums the collection statistics (N,
+  avgdl) from metadata. Those sums still count tombstoned documents, so
+  under deletes (or for segments written before the entries existed) the
+  statistics are the exact aggregate over this tombstone-filtered table
+  instead — two scalar aggregates over a narrow table, tiny next to the
+  corpus.
 
 At 100 TB of documents the postings are a few TB (they carry token
 hashes' worth of text once, not per query), the doc-length table is
@@ -72,11 +74,13 @@ class InvertedTextIndex(VersionedSegmentStore):
     corpus-sized id table per micro-batch — it is off by default
     because the admission pipeline already guarantees uniqueness.
 
-    Collection statistics need no maintenance: they are computed from
-    the tombstone-filtered doc-length artifacts at search time, so an
-    appended segment or a delete is consistent at once. An empty build
-    commits ``segments: []`` (a zero-row partitioned write leaves no
-    files) and every read then raises "index is empty"."""
+    Collection statistics need no maintenance: each segment write
+    records its own doc count and doc-length sum, and a delete switches
+    search to the exact aggregate over the tombstone-filtered doc
+    lengths, so an appended segment or a delete is consistent at once.
+    An empty build commits ``segments: []`` (a zero-row partitioned
+    write leaves no files) and every read then raises "index is
+    empty"."""
 
     _key_col = "doc_id"
     partition_col = "tb"
@@ -187,8 +191,10 @@ class InvertedTextIndex(VersionedSegmentStore):
         """The postings of ``docs``, after the ``guard_duplicates``
         anti-join against the ids of the manifest's live segments."""
         if self.guard_duplicates and manifest["segments"]:
-            existing = docs.sparkSession.read.parquet(
-                *[self._dl_dir(s) for s in manifest["segments"]]
+            existing = self._read_dirs(
+                docs.sparkSession,
+                manifest,
+                [f"dl={s}" for s in manifest["segments"]],
             ).select("doc_id")
             docs = docs.join(
                 existing, docs[self.id_col] == existing["doc_id"], "left_anti"
@@ -201,22 +207,27 @@ class InvertedTextIndex(VersionedSegmentStore):
         """Derive segment ``version``'s doc-length artifact FROM its
         written postings (one (doc_id, dl, ws1) row per doc via max/min —
         both are constant within a doc), so corpus text is tokenized once
-        per segment, and commit the segment's corpus-wide ``ws1`` AND
-        into the manifest: ``ws_single_all`` then answers from metadata
-        instead of re-aggregating a corpus-sized table per routed phrase
-        query. The AND rides the dl write as an Observation (no extra
-        job). A zero-row segment is unlisted and gets no artifact:
-        reading back an empty partitioned dir would fail schema
-        inference. Postings from writers that predate the flag carry no
-        ``ws1`` column; their docs record NULL, which reads as False."""
-        ws1 = {
-            k: w
-            for k, w in manifest.get("ws1", {}).items()
-            if int(k) in manifest["segments"]
-        }
+        per segment, and commit two per-segment entries into the
+        manifest, both observed on the dl write (no extra job):
+
+        - ``ws1``: the segment's corpus-wide ``ws1`` AND, so
+          ``ws_single_all`` answers from metadata instead of
+          re-aggregating a corpus-sized table per routed phrase query;
+        - ``stats``: its doc count ``n`` and doc-length sum ``sum_dl``,
+          from which ``search`` sums the collection statistics.
+
+        A zero-row segment is unlisted and gets no artifact: reading back
+        an empty partitioned dir would fail schema inference. Postings
+        from writers that predate the flag carry no ``ws1`` column; their
+        docs record NULL, which reads as False."""
+        live = {str(s) for s in manifest["segments"]}
+        ws1, stats = (
+            {k: v for k, v in manifest.get(key, {}).items() if k in live}
+            for key in ("ws1", "stats")
+        )
         if n_rows:
-            written = spark.read.option("basePath", self.index_dir).parquet(
-                self._seg_dir(version)
+            written = self._read_dirs(
+                spark, manifest, [f"seg={version}"], anchored=True
             )
             doc_ws1 = (
                 F.col("ws1")
@@ -231,11 +242,19 @@ class InvertedTextIndex(VersionedSegmentStore):
                 dl.observe(
                     obs,
                     F.min(F.coalesce(F.col("ws1"), F.lit(False))).alias("w"),
+                    F.count(F.lit(1)).alias("n"),
+                    F.sum("dl").alias("sum_dl"),
                 ),
                 self._dl_dir(version),
+                manifest,
             )
-            ws1[str(version)] = bool(obs.get["w"])
-        manifest["ws1"] = ws1
+            seen = obs.get
+            ws1[str(version)] = bool(seen["w"])
+            stats[str(version)] = {
+                "n": int(seen["n"]),
+                "sum_dl": int(seen["sum_dl"]),
+            }
+        manifest["ws1"], manifest["stats"] = ws1, stats
 
     def read_postings(
         self, spark: SparkSession, version: int | None = None
@@ -303,6 +322,30 @@ class InvertedTextIndex(VersionedSegmentStore):
         ).collect()[0]
         return bool(row["w"]) if row["w"] is not None else False
 
+    def _collection_stats(self, spark: SparkSession, at: int) -> tuple:
+        """(N, sum of dl) over the live documents at version ``at``.
+
+        With no tombstones and a ``stats`` entry for every live segment
+        the sums come from the manifest — a metadata read, no job.
+        Otherwise (deletes, whose docs the per-segment sums still count,
+        or segments written before the entries existed) they are the
+        exact aggregate over the tombstone-filtered doc-length table. An
+        index with no live segment raises "index is empty"."""
+        man = self._load_manifest(at)
+        segs, stats = man["segments"], man.get("stats", {})
+        if segs and not man.get("tombstones") and all(
+            str(s) in stats for s in segs
+        ):
+            return (
+                sum(stats[str(s)]["n"] for s in segs),
+                sum(stats[str(s)]["sum_dl"] for s in segs),
+            )
+        return tuple(
+            self.read_doclens(spark, at)
+            .agg(F.count(F.lit(1)), F.sum("dl"))
+            .collect()[0]
+        )
+
     def search(
         self,
         spark: SparkSession,
@@ -314,30 +357,25 @@ class InvertedTextIndex(VersionedSegmentStore):
     ) -> DataFrame:
         """Okapi BM25 top-k over the standing index (k1/b and the Lucene
         +1 IDF exactly as the fused ``bm25_search_top20``): filter the
-        postings to the query terms — the ``tb`` equality rides the
-        partition column, so only |terms| of ``n_buckets`` directories
-        are scanned — compute per-term document frequencies from the
-        filtered postings (a |terms|-row broadcast), score with the
-        denormalized ``dl``, sum per document, TakeOrdered k with doc-id
-        tie-break. Collection statistics (N, avgdl) are two scalar
-        aggregates over the tombstone-filtered doc-length table — the
-        only action at construction, and the only part of the plan that
-        touches anything corpus-sized (a narrow 16 B/doc scan)."""
+        postings to the query terms — the ``tb`` predicate folds to
+        constants on the partition column, so only |terms| of
+        ``n_buckets`` directories are scanned — compute per-term document
+        frequencies from the filtered postings (a |terms|-row broadcast),
+        score with the denormalized ``dl``, sum per document, TakeOrdered
+        k with doc-id tie-break. Collection statistics (N, avgdl) come
+        from ``_collection_stats``: on an index with no tombstones,
+        building this frame runs no Spark job."""
         if not terms:
             raise ValueError("search needs at least one term")
         at = self._resolve_version(version)
-        dl = self.read_doclens(spark, at)  # tombstone-filtered
-        n_docs, total_dl = dl.agg(
-            F.count(F.lit(1)), F.sum("dl")
-        ).collect()[0]
+        n_docs, total_dl = self._collection_stats(spark, at)
         if not n_docs:
             raise ValueError(
                 f"{self.index_dir}: index is empty at version {at}"
             )
         avgdl = float(total_dl) / float(n_docs)
-        buckets = self._buckets_of(spark, terms)
         post = self.read_postings(spark, at).filter(
-            F.col("tb").isin(buckets) & F.col("tok").isin(list(terms))
+            self._bucket_filter(terms) & F.col("tok").isin(list(terms))
         )
         df_ = post.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
         idf = F.log(
@@ -430,10 +468,7 @@ class InvertedTextIndex(VersionedSegmentStore):
                 "pinned; a flat index stores no positions)"
             )
         at = self._resolve_version(version)
-        buckets = self._buckets_of(spark, terms)
-        post = self.read_postings(spark, at).filter(
-            F.col("tb").isin(buckets)
-        )
+        post = self.read_postings(spark, at).filter(self._bucket_filter(terms))
         joined = None
         for i, t in enumerate(terms):
             side = post.filter(F.col("tok") == t).select(
@@ -464,17 +499,12 @@ class InvertedTextIndex(VersionedSegmentStore):
         )
         return f"filter(pos_0, p -> {conds})"
 
-    def _buckets_of(self, spark: SparkSession, terms: list[str]) -> list[int]:
-        """The token buckets the query terms live in, computed with the
+    def _bucket_filter(self, terms: list[str]) -> F.Column:
+        """The ``tb`` predicate for the query terms' token buckets: the
         SAME JVM xxhash64 the build used (a reimplementation drifting by
-        one bit would silently prune the wrong directories). The collect
-        is bounded by |query terms| — a handful of rows, never
-        corpus-sized."""
-        rows = (
-            spark.createDataFrame(
-                [(t,) for t in terms], schema="tok string"
-            )
-            .select(self._token_bucket(F.col("tok")).alias("tb"))
-            .collect()
+        one bit would silently prune the wrong directories) over literal
+        terms, which the optimizer folds to constants — a partition
+        filter with no job to compute it."""
+        return F.col("tb").isin(
+            [self._token_bucket(F.lit(t)) for t in terms]
         )
-        return sorted({r["tb"] for r in rows})

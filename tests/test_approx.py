@@ -939,6 +939,38 @@ def test_cosine_pairs_lookup_dim_aware_byte_bound(spark):
     assert looked[(1, 4)] is None and looked[(1, 99)] is None
 
 
+def test_cosine_pairs_lookup_bounds_fire_before_any_vector_is_collected(
+    spark, monkeypatch
+):
+    """Both bounds are checked by an aggregate before any vector row is
+    collected: with the vector collect made to raise, the byte bound
+    and the row bound still refuse with their own errors."""
+    import pytest
+
+    from cses2humio_spark.functions.vectors import cosine_pairs_lookup
+
+    vecs = spark.createDataFrame(
+        [(1, [1.0, 2.0, 3.0]), (2, [1.0, 2.0, 3.0]), (3, None)],
+        "vid long, v array<double>",
+    )
+    pairs = spark.createDataFrame([(1, 2)], "id_a long, id_b long")
+    real_collect = type(vecs).collect
+
+    def no_vector_collect(self):
+        if "v" in self.columns:
+            raise AssertionError("vector rows were collected before the bounds")
+        return real_collect(self)
+
+    monkeypatch.setattr(type(vecs), "collect", no_vector_collect)
+    # 2 non-NULL rows x 3 dims x 8 B = 48 B
+    with pytest.raises(ValueError, match="max_matrix_bytes=40"):
+        cosine_pairs_lookup(pairs, vecs, "vid", "v", max_matrix_bytes=40)
+    with pytest.raises(ValueError, match="max_vectors=2"):
+        cosine_pairs_lookup(pairs, vecs, "vid", "v", max_vectors=2)
+    with pytest.raises(AssertionError, match="before the bounds"):
+        cosine_pairs_lookup(pairs, vecs, "vid", "v", max_matrix_bytes=48)
+
+
 def test_bucket_cap_keeps_smallest_ids_and_refuses_non_positive(spark):
     """One bucket cap serves every banded candidate join: it keeps each
     bucket's ``max_bucket_size`` smallest ids, None is exact, and a cap

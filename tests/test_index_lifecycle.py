@@ -227,6 +227,77 @@ def test_empty_build(spark, fam, rows, tmp_path):
     assert idx.latest_version() == v + 1
 
 
+# -- schema-pinned reads -------------------------------------------------------
+
+
+def _edit_schemas(index_dir, edit):
+    """Apply ``edit`` to the ``schemas`` entry of every retained
+    manifest."""
+    import glob
+    import json
+
+    for mp in glob.glob(os.path.join(index_dir, "manifest_v=*.json")):
+        with open(mp) as fh:
+            man = json.load(fh)
+        edit(man.setdefault("schemas", {}))
+        with open(mp, "w") as fh:
+            json.dump(man, fh)
+
+
+def _shape(df):
+    return [(f.name, f.dataType) for f in df.schema.fields]
+
+
+def test_pinned_read_equals_inferred_read(spark, fam, rows, tmp_path):
+    """Every live segment and tombstone dir has a recorded schema, and
+    the pinned read equals the footer-inferred one in column names,
+    order and types, and in rows."""
+    d = str(tmp_path / "pin")
+    idx = fam.open(d)
+    idx.build(rows(0, 20))
+    idx(rows(20, 30), 0)
+    idx.delete(rows(2, 5))
+    man = idx._load_manifest(idx.latest_version())
+    assert {f"seg={s}" for s in man["segments"]} | {
+        f"tomb={t}" for t in man["tombstones"]
+    } <= set(man["schemas"])
+    pinned = fam.read(idx, spark)
+    pinned_shape, pinned_rows = _shape(pinned), _sorted(pinned)
+    _edit_schemas(d, lambda schemas: schemas.clear())
+    inferred = fam.read(idx, spark)
+    assert _shape(inferred) == pinned_shape
+    assert _sorted(inferred) == pinned_rows
+
+
+def test_differing_recorded_schemas_fall_back_to_inference(
+    spark, fam, rows, tmp_path
+):
+    """Segments whose recorded schemas differ (or one of which has none)
+    are read with schema inference, never with either entry."""
+    d = str(tmp_path / "mix")
+    idx = fam.open(d)
+    idx.build(rows(0, 20))
+    idx(rows(20, 30), 0)
+    want = fam.read(idx, spark)
+    want_shape, want_rows = _shape(want), _sorted(want)
+    seg = f"seg={idx._load_manifest(idx.latest_version())['segments'][0]}"
+
+    def rename_first_field(schemas):
+        # a recorded entry no writer produces: pinned, it would read an
+        # all-NULL column in place of the first one
+        if seg in schemas:
+            schemas[seg]["fields"][0]["name"] = "__never_written"
+
+    _edit_schemas(d, rename_first_field)
+    got = fam.read(idx, spark)
+    assert _shape(got) == want_shape
+    assert _sorted(got) == want_rows
+    _edit_schemas(d, lambda schemas: schemas.pop(seg, None))
+    got = fam.read(idx, spark)
+    assert _shape(got) == want_shape
+    assert _sorted(got) == want_rows
+
+
 # -- the admission skeleton (MinHashIndex, EmbeddingLshIndex) ---------------
 
 

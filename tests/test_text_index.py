@@ -180,8 +180,8 @@ def test_build_on_empty_corpus_commits_searchable_state(
 def test_tombstone_delete_matches_never_indexed(spark, docs, tmp_path):
     """Deleting docs must leave search IDENTICAL to an index that never
     saw them — including the collection statistics N/avgdl, which shift
-    every surviving score (this is what a manifest-pinned stats design
-    would get wrong)."""
+    every surviving score (the manifest's per-segment sums still count
+    the deleted docs, so search must take the exact path here)."""
     top = _fused_bm25(docs, TERMS, k=3).select("doc_id")
     victims = [r["doc_id"] for r in top.collect()]
 
@@ -708,3 +708,155 @@ def test_ws_single_all_answers_from_manifest_without_scanning(
     _shutil.rmtree(d2 + "/dl=-1")
     # recorded False + zero tombstones: the superset IS the live set
     assert idx2.ws_single_all(spark) is False
+
+
+# --- collection statistics and pinned schemas from the manifest ------------
+
+
+def _strip_manifest_keys(index_dir: str, seg: int | None = None):
+    """Doctor an index to look like a writer that recorded neither the
+    per-segment collection statistics nor the artifact schemas — for
+    every segment, or only for segment ``seg``."""
+    import glob as _glob
+    import json as _json
+
+    for mp in _glob.glob(index_dir + "/manifest_v=*.json"):
+        with open(mp) as fh:
+            man = _json.load(fh)
+        if seg is None:
+            man.pop("stats", None)
+            man.pop("schemas", None)
+        else:
+            man["stats"].pop(str(seg), None)
+            for name in (f"seg={seg}", f"dl={seg}"):
+                man["schemas"].pop(name, None)
+        with open(mp, "w") as fh:
+            _json.dump(man, fh)
+
+
+def _three_segment_index(docs, index_dir):
+    idx = InvertedTextIndex(index_dir, n_buckets=8, positional=True)
+    idx.build(docs.filter(F.col("doc_id") < 300))
+    idx(docs.filter((F.col("doc_id") >= 300) & (F.col("doc_id") < 400)), 0)
+    idx(docs.filter(F.col("doc_id") >= 400), 1)
+    return idx
+
+
+def _jobs_while(spark, group, fn):
+    """(fn(), number of Spark jobs launched while it ran)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_search_builds_without_jobs_on_tombstone_free_index(
+    spark, docs, tmp_path
+):
+    """On a multi-segment index with no tombstones, building a BM25 or a
+    phrase search runs no Spark job: bucket pruning is a folded
+    predicate, N and avgdl come from the manifest and every segment read
+    is schema-pinned. The one action is the caller's."""
+    idx = _three_segment_index(docs, str(tmp_path / "nojobs"))
+    bm25, n_bm25 = _jobs_while(
+        spark, "ti-build-bm25", lambda: idx.search(spark, TERMS, k=20)
+    )
+    phrase, n_phrase = _jobs_while(
+        spark,
+        "ti-build-phrase",
+        lambda: idx.search_phrase(spark, ["spark", "join"]),
+    )
+    assert (n_bm25, n_phrase) == (0, 0)
+    assert _rows(bm25) == _rows(_fused_bm25(docs, TERMS, k=20))
+    assert _rows(phrase) == _rows(
+        _first_principles_phrase(docs, ["spark", "join"])
+    )
+
+
+def test_manifest_stats_equal_exact_aggregate(spark, docs, tmp_path):
+    """The per-segment (n, sum_dl) the writes record sum to the exact
+    aggregate over the live doc-length table after a build, each ingest
+    and a compact (which folds a delete away)."""
+    idx = InvertedTextIndex(str(tmp_path / "stats"), n_buckets=8)
+
+    def check():
+        man = idx._load_manifest(idx.latest_version())
+        assert not man["tombstones"]
+        stats = man["stats"]
+        assert sorted(stats) == sorted(str(s) for s in man["segments"])
+        n, sum_dl = idx.read_doclens(spark).agg(
+            F.count(F.lit(1)), F.sum("dl")
+        ).collect()[0]
+        assert sum(s["n"] for s in stats.values()) == n
+        assert sum(s["sum_dl"] for s in stats.values()) == sum_dl
+        assert idx._collection_stats(spark, idx.latest_version()) == (
+            n,
+            sum_dl,
+        )
+
+    idx.build(docs.filter(F.col("doc_id") < 300))
+    check()
+    idx(docs.filter((F.col("doc_id") >= 300) & (F.col("doc_id") < 400)), 0)
+    check()
+    idx(docs.filter(F.col("doc_id") >= 400), 1)
+    check()
+    idx.delete(docs.filter(F.col("doc_id") < 50).select("doc_id"))
+    idx.compact(spark)
+    check()
+    assert idx._collection_stats(spark, idx.latest_version())[0] == (
+        docs.filter(F.col("doc_id") >= 50).count()
+    )
+
+
+def test_search_after_delete_takes_exact_stats_path(
+    spark, docs, tmp_path, monkeypatch
+):
+    """Tombstoned docs are still counted in the per-segment sums, so a
+    search under tombstones must aggregate the live doc lengths — and
+    its scores then equal the fused BM25 over the surviving docs."""
+    idx = _three_segment_index(docs, str(tmp_path / "exact"))
+    victims = [r["doc_id"] for r in _fused_bm25(docs, TERMS, k=5).collect()]
+    victims.append(350)  # one from an ingested segment too
+    idx.delete(docs.filter(F.col("doc_id").isin(victims)).select("doc_id"))
+
+    calls = []
+    real = InvertedTextIndex.read_doclens
+
+    def spy(self, *args, **kwargs):
+        calls.append(args)
+        return real(self, *args, **kwargs)
+
+    monkeypatch.setattr(InvertedTextIndex, "read_doclens", spy)
+    got = idx.search(spark, TERMS, k=20)
+    assert calls, "search under tombstones must read the live doc lengths"
+    survivors = docs.filter(~F.col("doc_id").isin(victims))
+    assert _rows(got) == _rows(_fused_bm25(survivors, TERMS, k=20))
+
+
+def test_manifest_without_stats_or_schemas_gives_identical_results(
+    spark, docs, tmp_path
+):
+    """An index whose manifests carry no ``stats`` or ``schemas`` keys
+    (written before they existed) answers every search identically via
+    the exact aggregate and schema inference."""
+    idx = _three_segment_index(docs, str(tmp_path / "legacy_keys"))
+
+    def answers():
+        return (
+            _rows(idx.search(spark, TERMS, k=20)),
+            _rows(idx.search_phrase(spark, ["spark", "join"])),
+            _rows(idx.search_prefix(spark, "spa", k=10)),
+            idx.read_postings(spark).dtypes,
+        )
+
+    recorded = answers()
+    # one segment without entries: the others' entries are not enough
+    _strip_manifest_keys(str(tmp_path / "legacy_keys"), seg=0)
+    assert answers() == recorded
+    _strip_manifest_keys(str(tmp_path / "legacy_keys"))
+    man = idx._load_manifest(idx.latest_version())
+    assert "stats" not in man and "schemas" not in man
+    assert answers() == recorded
