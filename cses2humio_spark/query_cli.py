@@ -65,6 +65,7 @@ def main(argv: list[str] | None = None) -> int:
     from pyspark.sql import SparkSession
 
     from cses2humio_spark.hql import HqlSyntaxError, hql
+    from cses2humio_spark.session import session_conf
     from cses2humio_spark.sources.catalog import (
         DEFAULT_SF_DIR,
         TABLES,
@@ -81,6 +82,7 @@ def main(argv: list[str] | None = None) -> int:
     spark = (
         SparkSession.builder.master(args.master)
         .appName("spark-graft-query")
+        .config(map=session_conf(local=args.master.startswith("local")))
         .getOrCreate()
     )
     tables = {name: load_table(spark, sf_dir, name) for name in TABLES}

@@ -13,6 +13,12 @@ but every conf below is chosen for the 1000-executor / 100 TB posture:
 - Shuffle partitions sized for the local harness; on a real cluster this is
   overridden (and AQE coalescing makes the initial number far less
   critical than static Spark).
+- Python workers start from ``pydaemon/spark_graft_daemon.py``, which is
+  ``pyspark.daemon`` except that a zip archive on the worker path has its
+  directory re-read only when the archive changed on disk (stock workers
+  re-read ``pyspark.zip`` before every task, ~0.28 s of CPU each). Only
+  that directory joins the worker path, so UDF closures must still be
+  self-contained.
 """
 
 from __future__ import annotations
@@ -24,25 +30,48 @@ from pyspark.sql import SparkSession
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
 
 
+# holds only spark_graft_daemon.py, so putting it on the worker path
+# exposes nothing else to Python workers
+PYDAEMON_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "pydaemon")
+
+
+def session_conf(local: bool = True) -> dict[str, str]:
+    """Every conf ``get_spark`` sets, as one mapping; scripts that need a
+    variant session (event log, UI) extend it instead of copying it.
+
+    ``local=False`` leaves out the worker daemon: its directory is a path
+    on this machine, which a cluster's executors do not have."""
+    conf = {
+        "spark.sql.shuffle.partitions": str(DEFAULT_SHUFFLE_PARTITIONS),
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+        "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+        "spark.sql.parquet.filterPushdown": "true",
+        "spark.sql.parquet.aggregatePushdown": "true",
+        "spark.sql.files.maxPartitionBytes": str(128 * 1024 * 1024),
+        "spark.sql.session.timeZone": "UTC",
+        "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
+        "spark.ui.enabled": "false",
+    }
+    if local:
+        conf["spark.python.daemon.module"] = "spark_graft_daemon"
+        conf["spark.executorEnv.PYTHONPATH"] = PYDAEMON_DIR
+    return conf
+
+
+def local_master() -> str:
+    return f"local[{os.environ.get('SPARK_GRAFT_CPUS', '*')}]"
+
+
 def get_spark(app_name: str = "cses2humio_spark") -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
-    builder = (
+    return (
         SparkSession.builder.appName(app_name)
-        .master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", str(DEFAULT_SHUFFLE_PARTITIONS))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.parquet.filterPushdown", "true")
-        .config("spark.sql.parquet.aggregatePushdown", "true")
-        .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-        .config("spark.ui.enabled", "false")
+        .master(local_master())
+        .config(map=session_conf())
+        .getOrCreate()
     )
-    return builder.getOrCreate()
 
 
 def evict_on_gc(result_df, *cached_dfs):

@@ -28,25 +28,18 @@ def main() -> None:
     from cses2humio_spark.queries import QUERIES
     from cses2humio_spark import session as sess
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     spark = (
         SparkSession.builder.appName("profile")
-        .master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.parquet.filterPushdown", "true")
-        .config("spark.sql.parquet.aggregatePushdown", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", "8g")
-        .config("spark.ui.enabled", "false")
-        .config("spark.eventLog.enabled", "true")
-        .config("spark.eventLog.dir", evdir)
-        .config("spark.eventLog.compress", "false")
-        .config("spark.eventLog.rolling.enabled", "false")
+        .master(sess.local_master())
+        .config(
+            map={
+                **sess.session_conf(),
+                "spark.eventLog.enabled": "true",
+                "spark.eventLog.dir": evdir,
+                "spark.eventLog.compress": "false",
+                "spark.eventLog.rolling.enabled": "false",
+            }
+        )
         .getOrCreate()
     )
     spark.range(1).collect()

@@ -34,21 +34,16 @@ def main() -> None:
 
     from bench import HEADLINE
     from cses2humio_spark.queries import QUERIES
+    from cses2humio_spark.session import local_master, session_conf
 
     # the engine session factory disables the UI (tests don't need the
     # port); the REST metrics this probe reads live behind it — build the
-    # same session shape with the UI forced on (spark.ui.enabled is a
-    # static conf, so this must be the process's FIRST session)
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
+    # same session with the UI forced on (spark.ui.enabled is a static
+    # conf, so this must be the process's FIRST session)
     spark = (
         SparkSession.builder.appName("shuffle_probe")
-        .master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "true")
+        .master(local_master())
+        .config(map={**session_conf(), "spark.ui.enabled": "true"})
         .getOrCreate()
     )
     sc = spark.sparkContext
