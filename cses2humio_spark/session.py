@@ -19,6 +19,14 @@ but every conf below is chosen for the 1000-executor / 100 TB posture:
   re-read ``pyspark.zip`` before every task, ~0.28 s of CPU each). Only
   that directory joins the worker path, so UDF closures must still be
   self-contained.
+- Streaming checkpoint logs (file-source log, offsets WAL, commits,
+  metadata, state-store deltas) are written through Hadoop ``FileSystem``,
+  not the default ``FileContext`` manager. On the local filesystem without
+  ``libhadoop``, FileContext's rename stats each path with
+  ``getFileLinkStatus``, which forks a ``readlink`` process four times per
+  log write; ``FileSystem.rename`` is one ``rename(2)``, and the manager
+  still checks for an existing batch file first, so a log entry is never
+  overwritten. Cluster sessions keep FileContext's atomic rename on HDFS.
 """
 
 from __future__ import annotations
@@ -39,8 +47,10 @@ def session_conf(local: bool = True) -> dict[str, str]:
     """Every conf ``get_spark`` sets, as one mapping; scripts that need a
     variant session (event log, UI) extend it instead of copying it.
 
-    ``local=False`` leaves out the worker daemon: its directory is a path
-    on this machine, which a cluster's executors do not have."""
+    ``local=False`` leaves out the worker daemon, whose directory is a path
+    on this machine that a cluster's executors do not have, and the
+    ``FileSystem`` checkpoint manager, so HDFS checkpoints keep
+    FileContext's atomic rename."""
     conf = {
         "spark.sql.shuffle.partitions": str(DEFAULT_SHUFFLE_PARTITIONS),
         "spark.sql.adaptive.enabled": "true",
@@ -58,6 +68,9 @@ def session_conf(local: bool = True) -> dict[str, str]:
     if local:
         conf["spark.python.daemon.module"] = "spark_graft_daemon"
         conf["spark.executorEnv.PYTHONPATH"] = PYDAEMON_DIR
+        conf["spark.sql.streaming.checkpointFileManagerClass"] = (
+            "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager"
+        )
     return conf
 
 

@@ -1,6 +1,7 @@
 """Profile one query with the Spark event log: run N passes, then parse
-the event log for per-job wall, task time, GC time, shuffle bytes, and
-Python-worker time. Usage:
+the event log for per-job wall, task count, task time, GC time,
+deserialize time and shuffle bytes. The event log is written to a
+temporary directory, which is removed once parsed. Usage:
 
     SPARK_GRAFT_CPUS=32 python scripts/profile_query.py <query> [n]
 """
@@ -9,7 +10,9 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import sys
+import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -19,8 +22,7 @@ def main() -> None:
     name = sys.argv[1]
     n = int(sys.argv[2]) if len(sys.argv) > 2 else 4
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    evdir = "/tmp/spark-events"
-    os.makedirs(evdir, exist_ok=True)
+    evdir = tempfile.mkdtemp(prefix="spark-events-")
     os.environ.setdefault("SPARK_GRAFT_SHUFFLE", "32")
 
     from pyspark.sql import SparkSession
@@ -64,7 +66,6 @@ def main() -> None:
     path = os.path.join(evdir, app_id)
     jobs = {}  # job_id -> dict
     stage_to_job = {}
-    cur = {}
     with open(path) as f:
         for line in f:
             e = json.loads(line)
@@ -80,11 +81,9 @@ def main() -> None:
                     "stages": set(e.get("Stage IDs", [])),
                     "task_ms": 0,
                     "gc_ms": 0,
-                    "py_ms": 0,
                     "sh_read": 0,
                     "sh_write": 0,
                     "n_tasks": 0,
-                    "sched_delay_ms": 0,
                     "deser_ms": 0,
                 }
                 for s in e.get("Stage IDs", []):
@@ -106,13 +105,13 @@ def main() -> None:
                 j["task_ms"] += dur
                 j["gc_ms"] += tm.get("JVM GC Time", 0)
                 j["deser_ms"] += tm.get("Executor Deserialize Time", 0)
-                j["py_ms"] += 0
                 srm = tm.get("Shuffle Read Metrics") or {}
                 swm = tm.get("Shuffle Write Metrics") or {}
                 j["sh_read"] += srm.get("Remote Bytes Read", 0) + srm.get(
                     "Local Bytes Read", 0
                 )
                 j["sh_write"] += swm.get("Shuffle Bytes Written", 0)
+    shutil.rmtree(evdir)
 
     # aggregate per pass
     per_pass: dict[str, dict] = {}

@@ -1746,3 +1746,116 @@ def test_materialized_search_with_parser_stage_prefix(spark, tmp_path):
         for r in search.read(spark).collect()
     }
     assert got == {"error": (2, 10.0), "view": (1, 5.0)}
+
+
+def _process_starts(spark, jfr_path: str, run) -> list[str]:
+    """Commands of every process the driver JVM forked while ``run()``
+    ran, as recorded by a JFR ``jdk.ProcessStart`` recording."""
+    jvm = spark._jvm
+    rec = jvm.jdk.jfr.Recording()
+    rec.enable("jdk.ProcessStart")
+    rec.start()
+    try:
+        run()
+    finally:
+        rec.stop()
+    dump = jvm.java.io.File(jfr_path).toPath()
+    rec.dump(dump)
+    rec.close()
+    return [str(e.getString("command")) for e in jvm.jdk.jfr.consumer.RecordingFile.readAllEvents(dump)]
+
+
+def _checkpoint_file_manager(spark, path: str):
+    jvm = spark._jvm
+    return jvm.org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager.create(
+        jvm.org.apache.hadoop.fs.Path("file://" + path),
+        spark._jsparkSession.sessionState().newHadoopConf(),
+    )
+
+
+def test_checkpoint_logs_spawn_no_readlink(spark, tmp_path):
+    """Writing a micro-batch's source log, offsets WAL, commit and state
+    deltas forks no ``readlink``: local sessions write checkpoint logs
+    through Hadoop FileSystem, whose local rename is one rename(2)."""
+    from cses2humio_spark.session import session_conf
+
+    # three files, drained one per micro-batch in mtime order; offsets
+    # overlap across files, so the replay dedup has work
+    src = tmp_path / "src"
+    src.mkdir()
+    for i in range(3):
+        path = str(src / f"{i}.ndjson")
+        _write_lines(path, _mk_lines(range(3 * i, 3 * i + 4)))
+        os.utime(path, (1_700_000_000 + i, 1_700_000_000 + i))
+    spool = str(tmp_path / "spool")
+
+    def stateless_drain():
+        q = run_pipeline(
+            ndjson_stream(spark, str(src), max_files_per_trigger=1),
+            sink=chunked_sink(spool),
+            checkpoint_dir=str(tmp_path / "ckpt_pipeline"),
+            available_now=True,
+        )
+        q.awaitTermination(120)
+
+    def dedup_drain():
+        lines = ndjson_stream(spark, str(src), max_files_per_trigger=1)
+        enveloped = enrich_events(parse_events(lines.withColumn("partition", F.lit(0))))
+        q = (
+            with_replay_dedup(enveloped)
+            .writeStream.format("memory")
+            .queryName("readlink_dedup")
+            .outputMode("append")
+            .option("checkpointLocation", str(tmp_path / "ckpt_dedup"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(120)
+
+    for name, drain in (("pipeline", stateless_drain), ("dedup", dedup_drain)):
+        spawned = _process_starts(spark, str(tmp_path / f"{name}.jfr"), drain)
+        commits = os.listdir(tmp_path / f"ckpt_{name}" / "commits")
+        assert {"0", "1", "2"} <= set(commits), (name, commits)
+        readlinks = [c for c in spawned if c.startswith("readlink")]
+        assert readlinks == [], (name, len(readlinks), readlinks[:3])
+
+    offs = sorted(e["attributes"]["metadata"]["offset"] for p in _spooled(spool) for e in p["body"][0]["events"])
+    assert offs == sorted([o for i in range(3) for o in range(3 * i, 3 * i + 4)])
+    rows = spark.sql("select attributes.metadata.offset as o from readlink_dedup").collect()
+    assert sorted(r.o for r in rows) == list(range(10))
+
+    mgr = _checkpoint_file_manager(spark, str(tmp_path / "ckpt_pipeline"))
+    assert mgr.getClass().getName() == (
+        "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager"
+    )
+    assert "spark.sql.streaming.checkpointFileManagerClass" not in session_conf(local=False)
+
+
+def test_checkpoint_log_refuses_to_overwrite_a_batch(spark, tmp_path):
+    """The FileSystem checkpoint manager keeps the log's write-once
+    contract: an atomic create without overwrite on a committed batch
+    file fails at close and leaves the committed bytes as they were."""
+    from py4j.protocol import Py4JJavaError
+
+    src = tmp_path / "src"
+    src.mkdir()
+    _write_lines(str(src / "a.ndjson"), _mk_lines(range(5)))
+    ckpt = str(tmp_path / "ckpt")
+    q = run_pipeline(
+        ndjson_stream(spark, str(src)),
+        sink=chunked_sink(str(tmp_path / "spool")),
+        checkpoint_dir=ckpt,
+        available_now=True,
+    )
+    q.awaitTermination(120)
+    batch0 = os.path.join(ckpt, "offsets", "0")
+    with open(batch0, "rb") as f:
+        committed = f.read()
+
+    mgr = _checkpoint_file_manager(spark, ckpt)
+    out = mgr.createAtomic(spark._jvm.org.apache.hadoop.fs.Path("file://" + batch0), False)
+    out.write(bytearray(b"v1\n{}\n"))
+    with pytest.raises(Py4JJavaError, match="already exists"):
+        out.close()
+    with open(batch0, "rb") as f:
+        assert f.read() == committed
