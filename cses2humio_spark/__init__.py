@@ -27,12 +27,12 @@ from cses2humio_spark.operators.joins import (  # noqa: F401
     salted_join,
 )
 from cses2humio_spark.operators.dedup import (  # noqa: F401
+    alternating_star_components,
     dedup_exact_by_key,
     dedup_exact_content,
     jaccard_pairs,
     minhash_candidate_pairs,
-    minhash_signatures_rowwise,
-    near_dup_clusters,
+    minhash_signatures,
     simhash,
     streaming_near_dup_candidates,
 )

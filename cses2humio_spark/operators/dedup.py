@@ -7,10 +7,13 @@ Scale design:
   (or content hash — hashing first keeps the shuffle narrow when the
   content column is wide: shuffle moves a 16-byte digest + id, not the
   document body).
-- ``minhash_near_dups``: shingle → per-band min-hash signature →
-  self-join on (band, signature). The self-join is an equi-join on the
-  band bucket, so candidate generation is O(pairs-in-bucket), never the
-  O(n^2) cross join. Verification (exact Jaccard) runs only on candidates.
+- MinHash near-dup: one formulation per step. ``minhash_signatures``
+  signs a per-document shingle array as a pure projection;
+  ``minhash_candidate_pairs`` self-joins on the (band, signature) bucket,
+  so candidate generation is O(pairs-in-bucket), never the O(n^2) cross
+  join; ``jaccard_pairs`` verifies candidates against one per-document
+  shingle-set table (``shingle_set_table``); ``alternating_star_components``
+  turns verified pairs into one representative per cluster.
 - ``simhash``: up-to-32-bit simhash fingerprints; near-dup candidates
   share a band of the fingerprint.
 All hashing uses md5 (available and bit-identical in Spark and DuckDB, so
@@ -57,13 +60,20 @@ def dedup_exact_content(
     return df.join(keep.select(id_col), on=id_col, how="left_semi")
 
 
-def shingles(col: Column, n: int = 3) -> Column:
-    """Word n-gram shingles of a whitespace-tokenized text column
-    (array<string>), via higher-order functions — stays in codegen."""
-    return _shingles_expr(F.split(F.trim(col), r"\s+"), n)
+def _token_table(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """``(id, __toks)``: each row's text split on whitespace ONCE, after
+    ``fan_out`` (the shingling downstream is the CPU-heavy phase)."""
+    from cses2humio_spark.sources.catalog import fan_out
+
+    return fan_out(df).select(
+        F.col(id_col), F.split(F.trim(F.col(text_col)), r"\s+").alias("__toks")
+    )
 
 
-def _shingles_expr(toks: Column, n: int) -> Column:
+def _ngrams(toks: Column, n: int) -> Column:
+    """Word n-gram shingles (array<string>) of a token array. ``toks`` is
+    read three times, so pass a projected column (``_token_table``), not
+    an expression — otherwise each read re-splits the text."""
     size = F.size(toks)
     idx = F.sequence(F.lit(1), size - F.lit(n - 1))
     return F.when(
@@ -75,19 +85,11 @@ def _shingles_expr(toks: Column, n: int) -> Column:
 def shingle_table(
     df: DataFrame, id_col: str, text_col: str, n: int = 3
 ) -> DataFrame:
-    """Exploded (id, shingle) table — the shared input of the whole near-dup
-    pipeline (signatures, set sizes, intersections). Callers running more
-    than one downstream op should ``.persist()`` it: at 100 TB the shingle
-    explosion (~tokens x 1 row each) is the dominant cost and must not be
-    recomputed per consumer."""
-    from cses2humio_spark.sources.catalog import fan_out
-
-    df = fan_out(df)
-    return df.select(
-        F.col(id_col),
-        F.explode(
-            _shingles_expr(F.split(F.trim(F.col(text_col)), r"\s+"), n)
-        ).alias("__sh"),
+    """Exploded (id, shingle) table ``(id, __sh)``: one row per shingle
+    occurrence. The input of ``shingle_set_table`` and of the fingerprint
+    passes (``eval_contamination``, ``source_ngram_overlap``)."""
+    return _token_table(df, id_col, text_col).select(
+        F.col(id_col), F.explode(_ngrams(F.col("__toks"), n)).alias("__sh")
     )
 
 
@@ -95,19 +97,18 @@ def shingle_set_table(
     df: DataFrame, id_col: str, text_col: str, n: int = 3
 ) -> DataFrame:
     """One row per document: its DISTINCT shingle set as an array column
-    ``__shs`` (r15, guide §2.4). This is the fused near-dup pipeline's
-    shared corpus-scale artifact in SET form: the dedup happens INSIDE
-    one ``collect_set`` aggregation (partial-aggregated map-side), where
-    the exploded formulation paid a distinct exchange and then re-shuffled
-    the exploded rows once per consumer (set sizes, both intersection
-    join sides). Signatures derive from the array rowwise
-    (``minhash_signatures(shingle_sets_df=...)``) and pair verification
-    becomes two id-equi-joins + a rowwise ``array_intersect``
-    (``jaccard_pairs(shingle_sets_df=...)``) — ONE shuffle of shingle
-    data total. Per-row state is one document's distinct shingle set
-    (~n x the document's own bytes, the same order as the text column
-    the row already carries). Callers feeding several consumers should
-    ``.persist()`` the result, exactly like ``shingle_table``."""
+    ``__shs``. The set is built inside one ``collect_set`` aggregation
+    (partial-aggregated map-side), the single shuffle of shingle data in
+    the near-dup pipeline; signatures (``minhash_signatures``) and pair
+    verification (``jaccard_pairs``) are rowwise projections and id-joins
+    over it. Documents with fewer than ``n`` tokens have no shingle and
+    no row.
+
+    Bound: one document's whole distinct shingle set sits in one
+    aggregation buffer and one row (~n x the document's own bytes). A
+    single pathologically large document concentrates that set in one
+    task. Callers feeding several consumers should ``.persist()`` the
+    result."""
     return (
         shingle_table(df, id_col, text_col, n=n)
         .groupBy(id_col)
@@ -122,7 +123,6 @@ def minhash_signatures(
     n: int = 3,
     bands: int = 4,
     rows_per_band: int = 2,
-    shingles_df: DataFrame | None = None,
     shingle_sets_df: DataFrame | None = None,
 ) -> DataFrame:
     """Per-document banded MinHash signature. A band's signature is the
@@ -136,57 +136,43 @@ def minhash_signatures(
     strings — identical lexicographic order in any engine, so the oracle
     reproduces it exactly).
 
-    ``shingle_sets_df`` (r15): a per-document shingle-SET table
-    (``shingle_set_table`` output, typically persisted) — the signatures
-    become a PURE PROJECTION (``array_min`` over per-band hashed copies
-    of the set array, the ``minhash_signatures_rowwise`` formulation),
-    no aggregation at all: MIN over the distinct set equals MIN over the
-    multiset, so the output is bit-identical to the groupBy path (which
-    the rowwise-parity test already pins).
-    """
-    if shingle_sets_df is not None:
-        def _hash_fn(prefix: str):
-            return lambda s: F.md5(F.concat(F.lit(prefix), s))
-
-        band_sigs = F.array(
-            *[
-                F.concat(
-                    *[
-                        F.array_min(
-                            F.transform(F.col("__shs"), _hash_fn(f"b{b}h{j}:"))
-                        )
-                        for j in range(rows_per_band)
-                    ]
-                )
-                for b in range(bands)
-            ]
+    A pure projection: each min-hash is ``array_min`` over the row's
+    md5-hashed shingle array, and the ``bands``-element array of band
+    signatures is ``posexplode``d — no aggregation, no key shuffle, so it
+    is legal in streaming append mode. The shingle array is
+    ``shingle_sets_df.__shs`` when a ``shingle_set_table`` is given (``df``
+    and ``text_col`` are then unused); otherwise each row's text is
+    tokenized and shingled ONCE into its own array column (after
+    ``fan_out``) and every hash reads that column. MIN over a set equals
+    MIN over the multiset, so both inputs give identical signatures.
+    Documents with fewer than ``n`` tokens have an empty array and
+    produce no rows."""
+    if shingle_sets_df is None:
+        shingle_sets_df = _token_table(df, id_col, text_col).select(
+            F.col(id_col), _ngrams(F.col("__toks"), n).alias("__shs")
         )
-        return shingle_sets_df.select(
-            F.col(id_col), F.posexplode(band_sigs).alias("band", "sig")
-        ).filter(F.col("sig").isNotNull())
-    sh = shingles_df if shingles_df is not None else shingle_table(df, id_col, text_col, n)
-    # One pass, no band explode: all bands*rows_per_band min-hashes are
-    # independent aggregates over the SAME shingle rows, so compute them as
-    # bands*r columns in a single groupBy(id) (partial-aggregated map-side,
-    # one shuffle row per doc instead of `bands`), then unpivot to
-    # (id, band, sig) with stack — a free narrow projection.
-    mins = [
-        F.min(
-            F.md5(F.concat(F.lit(f"b{b}h{j}:"), F.col("__sh")))
-        ).alias(f"__m_{b}_{j}")
-        for b in range(bands)
-        for j in range(rows_per_band)
-    ]
-    agged = sh.groupBy(id_col).agg(*mins)
-    stack_args = ", ".join(
-        f"{b}, concat("
-        + ", ".join(f"__m_{b}_{j}" for j in range(rows_per_band))
-        + ")"
-        for b in range(bands)
+
+    def _hash_fn(prefix: str):
+        # closure factory: PySpark derives HOF lambda arity from the
+        # Python signature, so default-arg capture would read as 3 args
+        return lambda s: F.md5(F.concat(F.lit(prefix), s))
+
+    band_sigs = F.array(
+        *[
+            F.concat(
+                *[
+                    F.array_min(
+                        F.transform(F.col("__shs"), _hash_fn(f"b{b}h{j}:"))
+                    )
+                    for j in range(rows_per_band)
+                ]
+            )
+            for b in range(bands)
+        ]
     )
-    return agged.selectExpr(
-        id_col, f"stack({bands}, {stack_args}) AS (band, sig)"
-    )
+    return shingle_sets_df.select(
+        F.col(id_col), F.posexplode(band_sigs).alias("band", "sig")
+    ).filter(F.col("sig").isNotNull())
 
 
 def minhash_candidate_pairs(
@@ -196,12 +182,12 @@ def minhash_candidate_pairs(
     n: int = 3,
     bands: int = 4,
     rows_per_band: int = 2,
-    shingles_df: DataFrame | None = None,
     max_bucket_size: int | None = 2_000,
     shingle_sets_df: DataFrame | None = None,
 ) -> DataFrame:
     """Candidate near-dup pairs: documents sharing any (band, sig) bucket.
     Equi self-join on the bucket — linear shuffle, no cross join.
+    ``shingle_sets_df`` is passed through to ``minhash_signatures``.
 
     ``max_bucket_size`` bounds the quadratic pair blowup of mass-duplicate
     buckets: a boilerplate page duplicated 10^6 times would otherwise put
@@ -209,14 +195,13 @@ def minhash_candidate_pairs(
     self-join. Buckets larger than the cap are collapsed to a STAR instead
     of a clique — every member pairs with the bucket's minimum id only, so
     the bucket emits O(size) pairs, and connected-component clustering
-    (``near_dup_clusters``) still reaches every member through the hub.
-    Exact per-pair Jaccard is unchanged for the emitted pairs; only
-    redundant within-cluster edges are dropped, and the drop is LOGGED
-    (no-silent-caps rule) — via an ``Observation`` metric that fires
-    inside the CONSUMER's action, so the guard launches ZERO extra Spark
-    jobs and persists nothing (the eager bounded probe of earlier rounds
-    cost one job + a leaked cache entry per call even when every bucket
-    was healthy). Pass ``None`` to disable (full clique output)."""
+    (``alternating_star_components``) still reaches every member through
+    the hub. Exact per-pair Jaccard is unchanged for the emitted pairs;
+    only redundant within-cluster edges are dropped, and the drop is
+    LOGGED (no-silent-caps rule) — via an ``Observation`` metric that
+    fires inside the CONSUMER's action, so the guard launches ZERO extra
+    Spark jobs and persists nothing. Pass ``None`` to disable (full
+    clique output)."""
     sigs = minhash_signatures(
         df,
         id_col,
@@ -224,7 +209,6 @@ def minhash_candidate_pairs(
         n=n,
         bands=bands,
         rows_per_band=rows_per_band,
-        shingles_df=shingles_df,
         shingle_sets_df=shingle_sets_df,
     )
     a = sigs.select(F.col(id_col).alias("id_a"), "band", "sig")
@@ -233,9 +217,8 @@ def minhash_candidate_pairs(
         # One extra pre-aggregation on the SAME (band, sig) shuffle key the
         # join already needs: per-bucket size + min id. Normal buckets take
         # the clique path unchanged; oversized ones emit hub→member edges.
-        # All three consumers of `sigs` live in ONE query, so Catalyst's
-        # ReuseExchange shares the signature aggregation — no persist, no
-        # second computation, no cache to leak.
+        # All three consumers of `sigs` live in ONE query — no persist,
+        # no cache to leak.
         stats = sigs.groupBy("band", "sig").agg(
             F.count(F.lit(1)).alias("__bn"),
             F.min(id_col).alias("__hub"),
@@ -312,149 +295,50 @@ def _observe_star_cap(
 
 
 def jaccard_pairs(
-    df: DataFrame,
-    pairs: DataFrame,
-    id_col: str,
-    text_col: str,
-    n: int = 3,
-    shingles_df: DataFrame | None = None,
-    assume_overlap: bool = False,
-    distinct_shingles: bool = False,
-    shingle_sets_df: DataFrame | None = None,
+    pairs: DataFrame, shingle_sets_df: DataFrame, id_col: str
 ) -> DataFrame:
     """Exact shingle-set Jaccard for candidate pairs (verification stage).
-    Joins each side's distinct-shingle set sizes + intersection counts —
-    all equi-joins on document id / shingle.
+    ``shingle_sets_df`` is a ``shingle_set_table``; each side of a pair
+    gets its set by an id equi-join, and the intersection is a rowwise
+    ``array_intersect`` — no shuffle of shingle data.
 
-    ``assume_overlap=True`` is the fast path for pairs that PROVABLY share
-    at least one shingle (e.g. MinHash band candidates): inner joins, two
-    fewer join stages. Leave False for arbitrary pairs so zero-overlap
-    pairs surface with jaccard=0 instead of vanishing.
+    Contract: the input ``(id_a, id_b)`` pairs must be distinct — a
+    duplicate pair yields a duplicate output row. Pairs sharing no
+    shingle (``n_inter = 0``), and pairs with an id absent from the set
+    table (fewer than ``n`` tokens), are dropped: absence is the zero.
+    MinHash band candidates always share a shingle.
 
-    ``distinct_shingles=True`` declares that ``shingles_df`` is ALREADY
-    one row per (id, shingle) — the caller persisted the de-duplicated
-    table — so the internal ``.distinct()`` (a full shuffle of the
-    shingle set PER CONSUMER: sizes, both intersection sides — the r14
-    profiles showed the same ~MB exchange recomputed 4-7x per admission
-    decision) is skipped. Passing a non-distinct frame with this flag
-    set silently inflates sizes and intersections — it is a contract,
-    not a hint.
-
-    ``shingle_sets_df`` (r15, guide §2.4, requires ``assume_overlap``):
-    a per-document shingle-SET table (``shingle_set_table`` output) —
-    verification becomes two id-equi-joins against it plus a rowwise
-    ``array_intersect``, ZERO shuffles of shingle data (the exploded
-    path re-exchanged the shingle table for each intersection side and
-    the sizes aggregate). An explicit ``n_inter >= 1`` filter preserves
-    the exploded path's inner-intersection-join contract — a pair with
-    no shared shingle never surfaced there and does not surface here.
-    Counts are identical integers, so jaccard values are bit-identical."""
-    if shingle_sets_df is not None:
-        if not assume_overlap:
-            raise ValueError(
-                "jaccard_pairs: shingle_sets_df requires assume_overlap="
-                "True (the zero-overlap-surfacing path is exploded-only)"
-            )
-        n_inter_c = F.size(
-            F.array_intersect(F.col("__sa"), F.col("__sb"))
-        )
-        out = (
-            pairs.select("id_a", "id_b")
-            .join(
-                shingle_sets_df.select(
-                    F.col(id_col).alias("id_a"), F.col("__shs").alias("__sa")
-                ),
-                on="id_a",
-            )
-            .join(
-                shingle_sets_df.select(
-                    F.col(id_col).alias("id_b"), F.col("__shs").alias("__sb")
-                ),
-                on="id_b",
-            )
-            .select(
-                "id_a",
-                "id_b",
-                n_inter_c.cast("bigint").alias("n_inter"),
-                F.size(F.col("__sa")).cast("bigint").alias("n_a"),
-                F.size(F.col("__sb")).cast("bigint").alias("n_b"),
-            )
-            .filter(F.col("n_inter") >= 1)
-            .withColumn(
-                "jaccard",
-                F.round(
-                    F.col("n_inter")
-                    / (F.col("n_a") + F.col("n_b") - F.col("n_inter")),
-                    6,
-                ),
-            )
-        )
-        return out.select("id_a", "id_b", "n_inter", "n_a", "n_b", "jaccard")
-    base = (
-        shingles_df
-        if shingles_df is not None
-        else shingle_table(df, id_col, text_col, n)
-    )
-    sh = base.select(F.col(id_col), F.col("__sh").alias("sh"))
-    if not (distinct_shingles and shingles_df is not None):
-        sh = sh.distinct()
-    sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
-    a_sh = sh.select(F.col(id_col).alias("id_a"), F.col("sh"))
-    b_sh = sh.select(F.col(id_col).alias("id_b"), F.col("sh"))
-    inter = (
-        pairs.join(a_sh, on="id_a")
-        .join(b_sh, on=["id_b", "sh"])
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
-    if assume_overlap:
-        out = (
-            inter.join(
-                sizes.select(F.col(id_col).alias("id_a"), F.col("n_sh").alias("n_a")),
-                on="id_a",
-            )
-            .join(
-                sizes.select(F.col(id_col).alias("id_b"), F.col("n_sh").alias("n_b")),
-                on="id_b",
-            )
-            .withColumn(
-                "jaccard",
-                F.round(
-                    F.col("n_inter")
-                    / (F.col("n_a") + F.col("n_b") - F.col("n_inter")),
-                    6,
-                ),
-            )
-        )
-        return out.select("id_a", "id_b", "n_inter", "n_a", "n_b", "jaccard")
-    # LEFT joins from the caller's pairs: a candidate pair with zero shared
-    # shingles (or an empty shingle set) must surface with jaccard=0, not
-    # silently vanish — callers can't distinguish "dissimilar" from
-    # "not computed" otherwise. (MinHash-generated pairs always share a
-    # shingle, so this only matters for externally supplied pairs.)
+    Returns (id_a, id_b, n_inter, n_a, n_b, jaccard), jaccard rounded to
+    6 places."""
+    n_inter_c = F.size(F.array_intersect(F.col("__sa"), F.col("__sb")))
     out = (
         pairs.select("id_a", "id_b")
-        .join(inter, on=["id_a", "id_b"], how="left")
         .join(
-            sizes.select(F.col(id_col).alias("id_a"), F.col("n_sh").alias("n_a")),
+            shingle_sets_df.select(
+                F.col(id_col).alias("id_a"), F.col("__shs").alias("__sa")
+            ),
             on="id_a",
-            how="left",
         )
         .join(
-            sizes.select(F.col(id_col).alias("id_b"), F.col("n_sh").alias("n_b")),
+            shingle_sets_df.select(
+                F.col(id_col).alias("id_b"), F.col("__shs").alias("__sb")
+            ),
             on="id_b",
-            how="left",
         )
-        .withColumn("n_inter", F.coalesce(F.col("n_inter"), F.lit(0)))
-        .withColumn("n_a", F.coalesce(F.col("n_a"), F.lit(0)))
-        .withColumn("n_b", F.coalesce(F.col("n_b"), F.lit(0)))
-        .withColumn(
-            "__denom", F.col("n_a") + F.col("n_b") - F.col("n_inter")
+        .select(
+            "id_a",
+            "id_b",
+            n_inter_c.cast("bigint").alias("n_inter"),
+            F.size(F.col("__sa")).cast("bigint").alias("n_a"),
+            F.size(F.col("__sb")).cast("bigint").alias("n_b"),
         )
+        .filter(F.col("n_inter") >= 1)
         .withColumn(
             "jaccard",
-            F.when(F.col("__denom") <= 0, F.lit(0.0)).otherwise(
-                F.round(F.col("n_inter") / F.col("__denom"), 6)
+            F.round(
+                F.col("n_inter")
+                / (F.col("n_a") + F.col("n_b") - F.col("n_inter")),
+                6,
             ),
         )
     )
@@ -576,83 +460,10 @@ def simhash_near_dup_pairs(
     )
 
 
-def near_dup_clusters(
-    ids: DataFrame,
-    pairs: DataFrame,
-    id_col: str = "doc_id",
-    max_iter: int = 20,
-) -> DataFrame:
-    """Connected components over near-dup pairs — the step that turns
-    pairwise detection into dedup decisions (every member of a component is
-    a duplicate of the component's representative = its minimum id).
-
-    Min-label propagation: each round, every node adopts the minimum label
-    among itself and its neighbors; converges in O(component diameter)
-    rounds. Near-dup components are overwhelmingly tiny (pairs/triples), so
-    the loop exits after 2-3 rounds via the distributed convergence check
-    (a count, not a collect of labels). Each round is one equi-join + one
-    partial-aggregated groupBy — all shuffle-bounded; nothing driver-sized.
-
-    Returns (id_col, cluster_rep): every input id, singletons mapping to
-    themselves."""
-    # Pin the iteration partitioning explicitly: persisted iteration state
-    # bypasses AQE coalescing, so an inherited 200+-partition default would
-    # cost (partitions x rounds) empty tasks. defaultParallelism is the
-    # right granularity on any cluster size.
-    n_part = ids.sparkSession.sparkContext.defaultParallelism
-    edges = (
-        pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-        .union(pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst")))
-        .repartition(n_part, "dst")
-        .persist()
-    )
-    labels = ids.select(F.col(id_col).alias("id"), F.col(id_col).alias("label")).repartition(
-        n_part, "id"
-    )
-    for _ in range(max_iter):
-        neigh = (
-            edges.join(labels, edges["dst"] == labels["id"])
-            .groupBy("src")
-            .agg(F.min("label").alias("nlabel"))
-        )
-        new_labels = (
-            labels.join(neigh, labels["id"] == neigh["src"], "left")
-            .select(
-                F.col("id"),
-                F.least(
-                    F.col("label"), F.coalesce(F.col("nlabel"), F.col("label"))
-                ).alias("label"),
-            )
-            .persist()
-        )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "id")
-            .filter(F.col("n.label") != F.col("o.label"))
-            .count()
-        )
-        labels.unpersist() if hasattr(labels, "unpersist") else None
-        labels = new_labels
-        if changed == 0:
-            break
-    else:
-        edges.unpersist()
-        raise RuntimeError(
-            f"near_dup_clusters did not converge within max_iter={max_iter} "
-            "rounds (a component's diameter exceeds the budget); raise "
-            "max_iter — returning partial labels would silently violate the "
-            "one-representative-per-component contract"
-        )
-    edges.unpersist()
-    return labels.select(F.col("id").alias(id_col), F.col("label").alias("cluster_rep"))
-
-
 #: below this MEASURED edge count the component graph is resolved with a
 #: driver-side union-find instead of the distributed star alternation:
 #: 100k (u, v) id pairs collect to a few MB, while each star round costs
-#: ~1 s of eager localCheckpoint + convergence action regardless of size
-#: (VERDICT r9 #2 — the admission decisions' sf-scale wall was N rounds
-#: of cluster-grade machinery over kilobytes of within-batch edges).
+#: ~1 s of eager localCheckpoint + convergence action regardless of size.
 DRIVER_UNION_FIND_MAX_EDGES = 100_000
 
 
@@ -693,17 +504,24 @@ def alternating_star_components(
     max_rounds: int = 30,
     driver_max_edges: int = DRIVER_UNION_FIND_MAX_EDGES,
 ) -> DataFrame:
-    """Connected components via alternating LARGE-STAR / SMALL-STAR
-    (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    SOCC 2014) — the diameter-robust twin of ``near_dup_clusters``.
+    """Connected components over near-dup pairs — the step that turns
+    pairwise detection into dedup decisions: every id in ``ids`` maps to
+    its component's minimum id (singletons to themselves).
 
-    Min-label propagation converges in O(component diameter) rounds,
-    which is right for the dense pair/triple components fuzzy dedup
-    usually produces — but a CHAIN-shaped component (templated web text
-    where A~B~C~... with no shortcut edges) makes diameter = component
-    size, and ``near_dup_clusters`` refuses past its round budget. The
-    star alternation contracts every component to a star in O(log^2 n)
-    rounds REGARDLESS of diameter:
+    Size-adaptive. ONE ``limit(driver_max_edges + 1).collect()`` over the
+    distinct edge set both measures boundedness and, in the common
+    bounded case, already delivers the edges: the components resolve in
+    a driver union-find and broadcast back, one driver action in all.
+    Above ``driver_max_edges`` the distributed alternating LARGE-STAR /
+    SMALL-STAR contraction runs (Kiveris et al., "Connected Components in
+    MapReduce and Beyond", SOCC 2014), re-deriving its edge set from
+    ``pairs`` — one extra pass only in the large-graph case. Both routes
+    return identical output (pinned in tests/test_approx.py).
+
+    The star alternation contracts every component to a star in
+    O(log^2 n) rounds REGARDLESS of diameter, so a CHAIN-shaped component
+    (templated web text where A~B~C~... with no shortcut edges) costs no
+    more rounds than a dense one:
 
     - large-star(u): over the symmetric neighborhood N(u), connect every
       strictly-larger neighbor v > u to m = min(N(u) + {u});
@@ -719,21 +537,7 @@ def alternating_star_components(
     4-field distributed signature (count + id sums + order-insensitive
     hash sum), one tiny action per round — never a label collect.
 
-    Size-adaptive (VERDICT r9 #2; single-action probe r14): ONE
-    ``limit(driver_max_edges + 1).collect()`` over the distinct edge set
-    both measures boundedness and, in the common bounded case, already
-    delivers the edges — the components resolve in a driver union-find
-    and broadcast back, so a streaming admission micro-batch pays ONE
-    driver action instead of the previous three (eager checkpoint +
-    convergence signature + collect) to cluster a few hundred
-    within-batch edges. Above the threshold the distributed star
-    alternation runs unchanged (re-deriving its checkpointed edge set —
-    one extra pass over ``pairs`` only in that rare large-graph case).
-    Both paths return identical output (pinned in tests/test_approx.py).
-
-    Returns (id_col, cluster_rep): every id in ``ids``, mapped to its
-    component's minimum id (singletons to themselves) — bit-identical to
-    ``near_dup_clusters`` on any input both accept (pinned in tests)."""
+    Returns (id_col, cluster_rep)."""
     n_part = ids.sparkSession.sparkContext.defaultParallelism
 
     def _parts(n_edges: int) -> int:
@@ -747,17 +551,6 @@ def alternating_star_components(
         F.col("id_a").alias("u"), F.col("id_b").alias("v")
     ).filter(F.col("u") != F.col("v")).distinct()
 
-    # Bounded-graph probe in ONE action (r14, guide §2.4/§5): collect up
-    # to driver_max_edges+1 distinct edges directly — a CollectLimit over
-    # the distinct exchange. The previous shape paid THREE driver actions
-    # before any small graph could resolve (eager localCheckpoint of the
-    # edge set, the 4-field convergence signature, then the edge collect),
-    # i.e. three scheduled jobs per admission micro-batch whose graph is
-    # a few hundred edges. If the limit row count comes back above the
-    # threshold the graph is genuinely large: fall back to the distributed
-    # star alternation below, which re-derives its checkpointed edge set
-    # from the caller's (typically persisted) pair table — one extra pass
-    # over `pairs` only in the rare large-graph case.
     probe = edges_df.limit(driver_max_edges + 1).collect()
     if not probe:
         # no edges at all: every id is its own component — skip the
@@ -770,10 +563,8 @@ def alternating_star_components(
     if len(probe) <= driver_max_edges:
         # Small MEASURED edge set: resolve components in ONE pass with a
         # driver union-find instead of N checkpointed star rounds. The
-        # collect is bounded by driver_max_edges id pairs. Output is
-        # bit-identical to the star fixpoint (pinned in tests/
-        # test_dedup.py) — same min-id representative per component;
-        # singletons fall out of the left join below.
+        # collect is bounded by driver_max_edges id pairs; singletons
+        # fall out of the left join below.
         spark = ids.sparkSession
         mapping = _driver_union_find_reps([(r[0], r[1]) for r in probe])
         id_type = ids.schema[id_col].dataType
@@ -853,7 +644,7 @@ def alternating_star_components(
             # collide only if two DIFFERENT edge sets agree on all four
             # aggregates — ~2^-64 per round. Because a signature match is
             # rare (once per run) and the fixpoint edge set is small, we
-            # can afford to make the claim EXACT (ADVICE r7): counts are
+            # can afford to make the claim EXACT: counts are
             # already equal, so one-sided set difference decides equality.
             if e.exceptAll(prev).limit(1).count() == 0:
                 break
@@ -884,10 +675,9 @@ def _dup_span_islands(win: DataFrame, dup_fps: DataFrame, id_col: str, width: in
     ``trim_duplicate_spans``. With stride-1 equal-width windows, the
     union of covered positions is exactly the union of [p, p+width-1]
     over duplicated starts, so instead of exploding every covered
-    position (O(dup_tokens) rows — the mass-dup blowup flagged by
-    ADVICE r7) we sort the starts per doc, break an island whenever a
-    start exceeds its predecessor + width, and emit one (lo, hi) row
-    per maximal run. Output size is #islands, which on a fully-
+    position (O(dup_tokens) rows — a mass-dup blowup) we sort the starts
+    per doc, break an island whenever a start exceeds its predecessor +
+    width, and emit one (lo, hi) row per maximal run. Output size is #islands, which on a fully-
     duplicated document is ONE row instead of len(doc) positions."""
     from pyspark.sql.window import Window
 
@@ -949,8 +739,7 @@ def duplicate_span_coverage(
     # per-window md5 is the CPU-heavy phase and ``win`` is consumed
     # twice (duplicate detection + island compression) — on a
     # single-split local scan both passes otherwise serialize onto one
-    # task (two ~1.2 s single-task jobs at sf0.1, r14 profile; a no-op
-    # on multi-split production inputs)
+    # task (fan_out is a no-op on multi-split production inputs)
     base = fan_out(df).select(
         F.col(id_col), toks.alias("toks"), F.size(toks).alias("n")
     )
@@ -1013,8 +802,7 @@ def trim_duplicate_spans(
     The covered positions are carried per document as maximal INTERVALS
     (``_dup_span_islands``), not as a position set: a long fully-
     duplicated document contributes one (lo, hi) struct, never a
-    len(doc)-element array (the per-row blowup flagged by ADVICE r7 —
-    the bound is #maximal-covered-runs, which only a pathological
+    len(doc)-element array (the bound is #maximal-covered-runs, which only a pathological
     alternating-coverage corpus can grow, and then only to n/width).
     The trim is a pure-codegen ``filter`` over the token array with an
     interval-membership ``exists`` — no Python, no second text shuffle:
@@ -1031,8 +819,7 @@ def trim_duplicate_spans(
     # per-window md5 is the CPU-heavy phase and ``win`` is consumed
     # twice (duplicate detection + island compression) — on a
     # single-split local scan both passes otherwise serialize onto one
-    # task (two ~1.2 s single-task jobs at sf0.1, r14 profile; a no-op
-    # on multi-split production inputs)
+    # task (fan_out is a no-op on multi-split production inputs)
     base = fan_out(df).select(
         F.col(id_col), toks.alias("toks"), F.size(toks).alias("n")
     )
@@ -1086,63 +873,6 @@ def trim_duplicate_spans(
     )
 
 
-def minhash_signatures_rowwise(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    n: int = 3,
-    bands: int = 4,
-    rows_per_band: int = 2,
-) -> DataFrame:
-    """Banded MinHash signatures as a PURE PROJECTION — zero shuffle.
-
-    Identical output to ``minhash_signatures`` (pinned by test): each
-    band's min-hash is ``array_min`` over the row's own shingle array
-    instead of a groupBy over an exploded shingle table. The explode
-    formulation wins when several consumers share one persisted shingle
-    table (the batch near-dup pipeline); this one wins when signatures
-    are needed per row with no aggregation allowed — STREAMING append
-    mode (a groupBy would be a stateful agg), or any map-only context.
-    The band unpivot is posexplode of a ``bands``-element array — narrow.
-
-    Docs whose shingle set is empty (< n tokens) produce NULL band
-    signatures in both formulations' contract: here they are dropped,
-    matching the groupBy path (no shingle rows -> no group).
-
-    The projection is CPU-heavy (bands x rows_per_band md5s per shingle
-    per row), so single-split local inputs go through ``fan_out`` first —
-    a round-robin rebalance of the raw input rows, NOT a key shuffle
-    (no-op at scale where scans arrive as thousands of splits; without
-    it the whole signing serialized onto one task and dominated the
-    index-probe wall at sf0.1).
-    """
-    from cses2humio_spark.sources.catalog import fan_out
-
-    df = fan_out(df)
-    sh = _shingles_expr(F.split(F.trim(F.col(text_col)), r"\s+"), n)
-
-    def _hash_fn(prefix: str):
-        # closure factory: PySpark derives HOF lambda arity from the
-        # Python signature, so default-arg capture would read as 3 args
-        return lambda s: F.md5(F.concat(F.lit(prefix), s))
-
-    band_sigs = F.array(
-        *[
-            F.concat(
-                *[
-                    F.array_min(F.transform(sh, _hash_fn(f"b{b}h{j}:")))
-                    for j in range(rows_per_band)
-                ]
-            ).alias(f"__b{b}")
-            for b in range(bands)
-        ]
-    )
-    return (
-        df.select(F.col(id_col), F.posexplode(band_sigs).alias("band", "sig"))
-        .filter(F.col("sig").isNotNull())
-    )
-
-
 def streaming_near_dup_candidates(
     stream_docs: DataFrame,
     corpus_sigs: DataFrame,
@@ -1157,21 +887,21 @@ def streaming_near_dup_candidates(
     the "dedup the incoming crawl against the existing corpus" shape of
     a training-data pipeline.
 
-    Per-row signatures (``minhash_signatures_rowwise`` — no aggregation,
-    so the stream stays in APPEND mode with zero state) stream-static
+    Per-row signatures (``minhash_signatures`` — a projection, no
+    aggregation, so the stream stays in APPEND mode with zero state) stream-static
     equi-join the corpus band table on (band, sig). Stateless and
     append-safe: every emitted row is a (new doc, corpus doc, band)
     candidate hit; a pair matching in several bands emits once per band
     (cross-band dedup is an aggregation — do it downstream or in
     foreachBatch where the micro-batch is a plain batch frame).
 
-    ``corpus_sigs`` is the (id, band, sig) output of either signature
-    formulation over the corpus — at 100 TB it lives as a bucketed table
+    ``corpus_sigs`` is the (id, band, sig) ``minhash_signatures`` output
+    over the corpus — at 100 TB it lives as a bucketed table
     on (band, sig) so the stream side joins without shuffling the corpus.
 
     Returns (``id_col`` of the new doc, corpus_id, band).
     """
-    new_sigs = minhash_signatures_rowwise(
+    new_sigs = minhash_signatures(
         stream_docs.select(id_col, text_col),
         id_col,
         text_col,
@@ -1223,7 +953,7 @@ def eval_contamination(
     training document, how many of its DISTINCT word n-grams also occur
     anywhere in the evaluation set.
 
-    ``eval_fingerprints`` (r10): the eval side precomputed ONCE with
+    ``eval_fingerprints``: the eval side precomputed ONCE with
     :func:`eval_fingerprint_table` and passed in — the shape a
     STREAMING caller needs, where the eval suite is static and
     recomputing its shingle/md5/distinct pass inside every micro-batch
@@ -1246,11 +976,13 @@ def eval_contamination(
     and BROADCASTS; the train side explodes to (id, fingerprint) rows
     once (``shingle_table`` — fan_out-parallelized), takes the broadcast
     hit flag per raw row, and dedups + counts inside ONE per-document
-    ``collect_set`` aggregation (partial-aggregated map-side — the old
-    distinct-then-groupBy shape shuffled the fingerprint stream twice).
-    Train text never rides a shuffle; the only shuffled bytes are
-    per-document partial fingerprint sets (the same distinct (id,
-    digest) pairs the old distinct exchange carried)."""
+    ``collect_set`` aggregation (partial-aggregated map-side, one
+    exchange). Train text never rides a shuffle; the only shuffled bytes
+    are per-document partial fingerprint sets.
+
+    Bound: one document's whole distinct fingerprint set (32-byte hex
+    digests) sits in one aggregation buffer, so a single pathologically
+    large document concentrates that set in one task."""
     if (eval_docs is None) == (eval_fingerprints is None):
         raise ValueError(
             "eval_contamination: pass exactly one of eval_docs / "
@@ -1281,15 +1013,10 @@ def eval_contamination(
         eval_fps = eval_fingerprint_table(
             eval_docs, id_col, text_col, n=n
         ).withColumn("__hit", F.lit(1))
-    # ONE exchange on the train side (r15, guide §2.4): the old shape
-    # paid a (id, fp) DISTINCT exchange and then a groupBy(id) exchange
-    # over the same rows — two full shuffles of the fingerprint stream
-    # per call (and two AQE stage-jobs each, which the admission loops
-    # pay per micro-batch). The collect_set aggregation dedups inside
-    # the one groupBy; the broadcast hit-flag join moves BELOW the
-    # dedup, which is sound because fp -> hit is functional (duplicate
-    # grams get identical flags and the sets dedup them). Counts are
-    # identical integers to the distinct+sum formulation.
+    # ONE exchange on the train side: the collect_set aggregation dedups
+    # inside the one groupBy(id); the broadcast hit-flag join sits BELOW
+    # the dedup, which is sound because fp -> hit is functional
+    # (duplicate grams get identical flags and the sets dedup them).
     raw_fps = shingle_table(train, id_col, text_col, n=n).select(
         F.col(id_col), F.md5("__sh").alias("__fp")
     )
@@ -1340,11 +1067,10 @@ def source_ngram_overlap(
     of dozens-to-hundreds, not a data-scale axis), and set sizes
     broadcast.
 
-    The distinct fingerprint table is PERSISTED (r14, guide §5): it has
-    three consumers (set sizes + both join sides) and exchange reuse
-    does not collapse them — the r14 profile showed the explode+md5 map
-    stage (the expensive pass over every token) materialized twice, ~80%
-    of the query's task time. One compute, evicted when the caller drops
+    The distinct fingerprint table is PERSISTED: it has three consumers
+    (set sizes + both join sides) and exchange reuse does not collapse
+    them, so without it the explode+md5 map stage (the expensive pass
+    over every token) is materialized twice. One compute, evicted when the caller drops
     the result (the bigram_lm ``c2`` pattern); storage is the narrow
     (source, 16-byte digest) distinct set, MEMORY_AND_DISK so a
     100 TB-corpus audit spills instead of evicting mid-plan."""

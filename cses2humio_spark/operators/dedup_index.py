@@ -32,7 +32,8 @@ from pyspark.sql import functions as F
 
 from cses2humio_spark.operators.dedup import (
     alternating_star_components,
-    minhash_signatures_rowwise,
+    minhash_signatures,
+    shingle_set_table,
 )
 from cses2humio_spark.operators.index_store import VersionedSegmentStore
 from cses2humio_spark.operators.similarity import (
@@ -377,8 +378,7 @@ class MinHashIndex(AdmissionIndex):
         return self.text_col
 
     def _signatures(self, docs: DataFrame) -> DataFrame:
-        """Zero-shuffle rowwise banded signatures (identical output to the
-        groupBy formulation — pinned where minhash_signatures_rowwise is),
+        """Zero-shuffle rowwise banded signatures (``minhash_signatures``),
         COMPRESSED for storage: the band signature (rows_per_band
         concatenated 32-hex md5s) is folded to one xxhash64 bigint. Build
         and probe apply the same fold, so the (band, sig) equi-join
@@ -386,7 +386,7 @@ class MinHashIndex(AdmissionIndex):
         collision could only ADD a candidate, and candidates are verified
         by exact Jaccard), while the per-row bytes drop ~8x and the join
         key becomes a fixed 8-byte integer."""
-        raw = minhash_signatures_rowwise(
+        raw = minhash_signatures(
             docs, self.id_col, self.text_col,
             n=self.n, bands=self.bands, rows_per_band=self.rows_per_band,
         )
@@ -494,17 +494,11 @@ class MinHashIndex(AdmissionIndex):
         )
 
     def _verify_table(self, rows: DataFrame) -> DataFrame:
-        # one distinct-shingle set per document: set sizes become a
-        # rowwise size() and pair verification a rowwise array_intersect,
-        # with no further shuffle of shingle data. Per-row state is one
-        # document's distinct shingle set (~n x the document's bytes).
-        from cses2humio_spark.operators.dedup import shingle_table
-
-        return (
-            shingle_table(rows, self.id_col, self.text_col, n=self.n)
-            .groupBy(self.id_col)
-            .agg(F.collect_set("__sh").alias("__v"))
-        )
+        # one distinct-shingle set per document: pair verification is a
+        # rowwise array_intersect, with no further shuffle of shingle data
+        return shingle_set_table(
+            rows, self.id_col, self.text_col, n=self.n
+        ).select(self.id_col, F.col("__shs").alias("__v"))
 
     def _verified(self, a: Column, b: Column, threshold: float) -> Column:
         # exact shingle Jaccard. ``n_inter >= 1``: a pair sharing ZERO

@@ -32,8 +32,8 @@ from cses2humio_spark.operators.dedup import (
     dedup_exact_content,
     jaccard_pairs,
     minhash_candidate_pairs,
-    minhash_signatures_rowwise,
     minhash_signatures,
+    shingle_set_table,
     simhash,
 )
 from cses2humio_spark.operators.similarity import cosine_topk_bruteforce, lsh_topk
@@ -234,11 +234,15 @@ def exact_dedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"WITH {_SIG_CTE} SELECT doc_id, band, sig FROM sig WHERE doc_id < 50",
 )
 def minhash_band_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash signature matrix (4 bands x 2 rows, 3-gram shingles)."""
+    """MinHash signature matrix (4 bands x 2 rows, 3-gram shingles),
+    signed from a ``shingle_set_table`` — the input form of the batch
+    near-dup pipeline."""
     docs = load_table(spark, sf_dir, "documents")
-    return minhash_signatures(docs, "doc_id", "text", n=3, bands=4, rows_per_band=2).filter(
-        F.col("doc_id") < 50
-    )
+    sets = shingle_set_table(docs, "doc_id", "text", n=3)
+    return minhash_signatures(
+        docs, "doc_id", "text", n=3, bands=4, rows_per_band=2,
+        shingle_sets_df=sets,
+    ).filter(F.col("doc_id") < 50)
 
 
 @query(
@@ -246,13 +250,14 @@ def minhash_band_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"WITH {_SIG_CTE} SELECT doc_id, band, sig FROM sig WHERE doc_id < 50",
 )
 def minhash_band_signatures_rowwise(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The ZERO-SHUFFLE signature formulation (array_min over each row's
-    own shingle array — no explode, no groupBy): same oracle as the
-    aggregation path, proving both produce identical signatures. This is
-    the streaming-safe variant (no stateful agg) used by
-    ``streaming_near_dup_candidates``."""
+    """The same signatures signed from text directly: each row's
+    shingle array is projected once and hashed in place — no explode, no
+    groupBy, no key shuffle. Same oracle as ``minhash_band_signatures``,
+    so the two input forms are pinned identical. This is the
+    streaming-safe input form (no stateful agg) used by
+    ``streaming_near_dup_candidates`` and the MinHash index."""
     docs = load_table(spark, sf_dir, "documents")
-    return minhash_signatures_rowwise(docs, "doc_id", "text").filter(
+    return minhash_signatures(docs, "doc_id", "text").filter(
         F.col("doc_id") < 50
     )
 
@@ -266,6 +271,25 @@ def minhash_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket — equi self-join, no O(n^2) cross product."""
     docs = load_table(spark, sf_dir, "documents")
     return minhash_candidate_pairs(docs, "doc_id", "text", n=3, bands=4, rows_per_band=2)
+
+
+def _verified_near_dup_pairs(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """The batch near-dup chain shared by the text dedup queries:
+    ONE persisted per-document ``shingle_set_table`` feeds both MinHash
+    candidates (4 bands x 2 rows, 3-gram shingles) and the exact Jaccard
+    verify, so shingle data is shuffled once. Returns ``(pairs, sets)``:
+    the ``(id_a, id_b, jaccard)`` pairs at Jaccard >= 0.5, and the
+    persisted set table, which the caller ties to its result with
+    ``evict_on_gc``."""
+    sets = shingle_set_table(docs, "doc_id", "text", n=3).persist()
+    cands = minhash_candidate_pairs(
+        docs, "doc_id", "text", n=3, bands=4, rows_per_band=2,
+        shingle_sets_df=sets,
+    )
+    pairs = jaccard_pairs(cands, sets, "doc_id").filter(
+        F.col("n_inter") / (F.col("n_a") + F.col("n_b") - F.col("n_inter")) >= 0.5
+    ).select("id_a", "id_b", "jaccard")
+    return pairs, sets
 
 
 @query(
@@ -290,33 +314,14 @@ def minhash_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
 def jaccard_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full near-dup pipeline: MinHash candidates -> exact shingle Jaccard
     verification -> threshold. Verification cost is O(candidates), not
-    O(n^2). The corpus-scale artifact is ONE persisted per-document
-    shingle-SET table (r15, guide §2.4): the set build is the single
-    shuffle of shingle data (dedup inside the collect_set aggregation),
-    signatures derive from the set arrays as a pure projection (no
-    groupBy exchange), and verification is two id-joins + a rowwise
-    array_intersect — where the exploded formulation re-exchanged the
-    distinct shingle table for the signature aggregate, the set sizes
-    and both intersection join sides (r15 profile: the verify chain was
-    ~60% of the query's task time and its 8->32-core scaling ratio sat
-    at 1.04)."""
-    from cses2humio_spark.operators.dedup import shingle_set_table
+    O(n^2): two id-joins against the persisted shingle-set table plus a
+    rowwise array_intersect."""
     from cses2humio_spark.session import evict_on_gc
 
-    docs = load_table(spark, sf_dir, "documents")
-    sets = shingle_set_table(docs, "doc_id", "text", n=3).persist()
-    cands = minhash_candidate_pairs(
-        docs, "doc_id", "text", n=3, bands=4, rows_per_band=2,
-        shingle_sets_df=sets,
+    pairs, sets = _verified_near_dup_pairs(
+        load_table(spark, sf_dir, "documents")
     )
-    j = jaccard_pairs(
-        docs, cands, "doc_id", "text", n=3,
-        assume_overlap=True, shingle_sets_df=sets,
-    )
-    out = j.filter(
-        F.col("n_inter") / (F.col("n_a") + F.col("n_b") - F.col("n_inter")) >= 0.5
-    ).select("id_a", "id_b", "jaccard")
-    return evict_on_gc(out, sets)
+    return evict_on_gc(pairs, sets)
 
 
 @query(
@@ -1262,82 +1267,37 @@ def near_dup_cluster_reps(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full dedup decision pipeline: MinHash candidates -> exact Jaccard
     verify (>= 0.5) -> connected components -> every document mapped to its
     cluster representative (min doc_id; singletons map to themselves).
-    The Spark side is iterative min-label propagation (converges in
-    O(component diameter) joins); the oracle computes the same components
-    with a recursive CTE."""
-    from cses2humio_spark.operators.dedup import (
-        jaccard_pairs,
-        minhash_candidate_pairs,
-        near_dup_clusters,
-        shingle_set_table,
-    )
-
-    docs = load_table(spark, sf_dir, "documents")
-    # ONE persisted per-document shingle-SET table (r15, guide §2.4):
-    # dedup happens inside the collect_set aggregation, signatures
-    # derive from the set arrays as a pure projection, verification is
-    # two id-joins + rowwise array_intersect — a single shuffle of
-    # shingle data instead of one per consumer
-    sets = shingle_set_table(docs, "doc_id", "text", n=3).persist()
-    cands = minhash_candidate_pairs(
-        docs, "doc_id", "text", n=3, bands=4, rows_per_band=2,
-        shingle_sets_df=sets,
-    )
-    j = jaccard_pairs(
-        docs, cands, "doc_id", "text", n=3,
-        assume_overlap=True, shingle_sets_df=sets,
-    )
-    pairs = j.filter(
-        F.col("n_inter") / (F.col("n_a") + F.col("n_b") - F.col("n_inter")) >= 0.5
-    ).select("id_a", "id_b")
+    Components come from ``alternating_star_components`` on its
+    size-adaptive route (a driver union-find for a bounded pair set); the
+    oracle computes the same components with a recursive CTE."""
+    from cses2humio_spark.operators.dedup import alternating_star_components
     from cses2humio_spark.session import evict_on_gc
 
-    return evict_on_gc(near_dup_clusters(docs.select("doc_id"), pairs), sets)
+    docs = load_table(spark, sf_dir, "documents")
+    pairs, sets = _verified_near_dup_pairs(docs)
+    return evict_on_gc(
+        alternating_star_components(docs.select("doc_id"), pairs), sets
+    )
 
 
 @query("near_dup_cluster_reps_star", oracle=_CLUSTER_REPS_ORACLE)
 def near_dup_cluster_reps_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Diameter-robust twin of ``near_dup_cluster_reps`` — the SAME dedup
-    decision (same oracle SQL, bit-identical output), but the connected-
-    components step is the alternating large-star/small-star contraction
-    (Kiveris et al., SOCC'14; ``operators/dedup.py::
-    alternating_star_components``), which converges in O(log^2 n) rounds
-    regardless of component DIAMETER. Min-label propagation needs
-    O(diameter) rounds and refuses chain-shaped components past its
-    budget — exactly what templated web text produces (A~B~C~... with no
-    shortcut edges); at 100 TB this twin is the safe default when the
-    duplicate-graph shape is unknown. The chain-stress equivalence (a
-    200-node path where the propagation twin's budget is exceeded) is
-    pinned in tests/test_approx.py."""
-    from cses2humio_spark.operators.dedup import (
-        alternating_star_components,
-        jaccard_pairs,
-        minhash_candidate_pairs,
-        shingle_set_table,
-    )
-
-    docs = load_table(spark, sf_dir, "documents")
-    # ONE persisted per-document shingle-SET table (r15, guide §2.4):
-    # dedup happens inside the collect_set aggregation, signatures
-    # derive from the set arrays as a pure projection, verification is
-    # two id-joins + rowwise array_intersect — a single shuffle of
-    # shingle data instead of one per consumer
-    sets = shingle_set_table(docs, "doc_id", "text", n=3).persist()
-    cands = minhash_candidate_pairs(
-        docs, "doc_id", "text", n=3, bands=4, rows_per_band=2,
-        shingle_sets_df=sets,
-    )
-    j = jaccard_pairs(
-        docs, cands, "doc_id", "text", n=3,
-        assume_overlap=True, shingle_sets_df=sets,
-    )
-    pairs = j.filter(
-        F.col("n_inter") / (F.col("n_a") + F.col("n_b") - F.col("n_inter")) >= 0.5
-    ).select("id_a", "id_b")
+    """``near_dup_cluster_reps`` with the connected components forced onto
+    the distributed alternating large-star/small-star contraction
+    (Kiveris et al., SOCC'14; ``driver_max_edges=0``), which converges in
+    O(log^2 n) rounds regardless of component DIAMETER — the route a
+    corpus-scale pair set takes. Same recursive-CTE oracle, so the oracle
+    checks both sides of the size-adaptive selection."""
+    from cses2humio_spark.operators.dedup import alternating_star_components
     from cses2humio_spark.session import evict_on_gc
 
+    docs = load_table(spark, sf_dir, "documents")
+    pairs, sets = _verified_near_dup_pairs(docs)
     return evict_on_gc(
-        alternating_star_components(docs.select("doc_id"), pairs), sets
+        alternating_star_components(
+            docs.select("doc_id"), pairs, driver_max_edges=0
+        ),
+        sets,
     )
 
 
@@ -1362,34 +1322,12 @@ def fuzzy_dedup_survivor_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     (MinHash candidates → exact Jaccard ≥ 0.5 → connected components →
     survivor filter → per-language agg); the only per-document bytes in
     the final join are (doc_id, cluster_rep, lang)."""
-    from cses2humio_spark.operators.dedup import (
-        jaccard_pairs,
-        minhash_candidate_pairs,
-        near_dup_clusters,
-        shingle_set_table,
-    )
-
-    docs = load_table(spark, sf_dir, "documents")
-    # ONE persisted per-document shingle-SET table (r15, guide §2.4):
-    # dedup happens inside the collect_set aggregation, signatures
-    # derive from the set arrays as a pure projection, verification is
-    # two id-joins + rowwise array_intersect — a single shuffle of
-    # shingle data instead of one per consumer
-    sets = shingle_set_table(docs, "doc_id", "text", n=3).persist()
-    cands = minhash_candidate_pairs(
-        docs, "doc_id", "text", n=3, bands=4, rows_per_band=2,
-        shingle_sets_df=sets,
-    )
-    j = jaccard_pairs(
-        docs, cands, "doc_id", "text", n=3,
-        assume_overlap=True, shingle_sets_df=sets,
-    )
-    pairs = j.filter(
-        F.col("n_inter") / (F.col("n_a") + F.col("n_b") - F.col("n_inter")) >= 0.5
-    ).select("id_a", "id_b")
-    reps = near_dup_clusters(docs.select("doc_id"), pairs)
+    from cses2humio_spark.operators.dedup import alternating_star_components
     from cses2humio_spark.session import evict_on_gc
 
+    docs = load_table(spark, sf_dir, "documents")
+    pairs, sets = _verified_near_dup_pairs(docs)
+    reps = alternating_star_components(docs.select("doc_id"), pairs)
     return evict_on_gc(
         docs.select("doc_id", "lang")
         .join(reps, "doc_id")

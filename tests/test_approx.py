@@ -405,8 +405,8 @@ def test_minhash_mass_duplicate_bucket_cap(spark, caplog):
     import logging
 
     from cses2humio_spark.operators.dedup import (
+        alternating_star_components,
         minhash_candidate_pairs,
-        near_dup_clusters,
     )
 
     n = 300
@@ -441,7 +441,7 @@ def test_minhash_mass_duplicate_bucket_cap(spark, caplog):
     # own action
     assert "178204" in drop_msg and "largest: 300" in drop_msg, drop_msg
     # clustering still reaches every member through the hub
-    clusters = near_dup_clusters(
+    clusters = alternating_star_components(
         docs.select("doc_id"), pairs, id_col="doc_id"
     ).collect()
     reps = {r.doc_id: r.cluster_rep for r in clusters}
@@ -512,49 +512,138 @@ def test_minhash_cap_inactive_on_normal_corpus(spark):
     assert capped == uncapped
 
 
-def test_rowwise_signatures_identical_to_groupby_formulation(spark):
-    """The zero-shuffle rowwise MinHash signature (array_min over the
-    row's shingle array) must be ROW-IDENTICAL to the explode+groupBy
-    formulation — both orderings of the same min."""
+def _py_shingle_sets(text, n):
+    toks = text.strip().split()
+    return {" ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)}
+
+
+def _py_minhash(shs, bands, rows_per_band):
+    import hashlib
+
+    return {
+        b: "".join(
+            min(
+                hashlib.md5(f"b{b}h{j}:{s}".encode()).hexdigest()
+                for s in shs
+            )
+            for j in range(rows_per_band)
+        )
+        for b in range(bands)
+    }
+
+
+def test_minhash_signatures_and_jaccard_match_python_reference(spark):
+    """Operator-level parity of the near-dup chain against a pure-Python
+    reference (md5 of ``b{band}h{row}:`` + shingle, min, concat per
+    band; Jaccard |A∩B|/|A∪B| rounded half-up to 6 places; sets are
+    whitespace-token n-grams). Signing from text and signing a
+    ``shingle_set_table`` must both equal the reference, on unicode text,
+    repeated shingles, messy whitespace and docs shorter than n."""
+    from decimal import ROUND_HALF_UP, Decimal
+    from itertools import combinations
+
     from cses2humio_spark.operators.dedup import (
+        jaccard_pairs,
         minhash_signatures,
-        minhash_signatures_rowwise,
+        shingle_set_table,
     )
-    from cses2humio_spark.sources.catalog import load_table
 
-    docs = load_table(spark, "/root/testdata/sf0.01", "documents")
-    a = {
-        (r["doc_id"], r["band"], r["sig"])
-        for r in minhash_signatures(docs, "doc_id", "text").collect()
+    rows = [
+        (1, "Café crème brûlée est délicieux ce matin"),
+        (2, "Café crème brûlée est délicieux ce soir"),
+        (3, "東京 タワー は 高い です ね"),
+        (4, "東京 タワー は 高い です よ 🎉"),
+        (5, "🎉 🎉 🎉 party 🎉 🎉 🎉"),
+        (6, "the same shingle the same shingle the same shingle"),
+        (7, "   leading  and\ttrailing   whitespace \n  everywhere  "),
+        (8, "leading and trailing whitespace everywhere"),
+        (9, "two words"),
+        (10, "one"),
+        (11, "   "),
+    ]
+    n, bands, rpb = 3, 4, 2
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    sets = {i: _py_shingle_sets(t, n) for i, t in rows}
+    assert sets[5] == {"🎉 🎉 🎉", "🎉 🎉 party", "🎉 party 🎉", "party 🎉 🎉"}
+    assert sets[7] == sets[8]
+    short = {i for i, s in sets.items() if not s}
+    assert short == {9, 10, 11}
+
+    want_sigs = {
+        (i, b, sig)
+        for i, shs in sets.items()
+        if shs
+        for b, sig in _py_minhash(shs, bands, rpb).items()
     }
-    b = {
-        (r["doc_id"], r["band"], r["sig"])
-        for r in minhash_signatures_rowwise(docs, "doc_id", "text").collect()
+    set_table = shingle_set_table(docs, "doc_id", "text", n=n)
+    from_text = {
+        tuple(r)
+        for r in minhash_signatures(
+            docs, "doc_id", "text", n=n, bands=bands, rows_per_band=rpb
+        ).collect()
     }
-    assert a == b and len(a) > 0
-    # short doc (< n tokens): no signature rows in either formulation
-    tiny = spark.createDataFrame([(1, "just two")], "doc_id long, text string")
-    assert minhash_signatures_rowwise(tiny, "doc_id", "text").count() == 0
+    from_sets = {
+        tuple(r)
+        for r in minhash_signatures(
+            docs, "doc_id", "text", n=n, bands=bands, rows_per_band=rpb,
+            shingle_sets_df=set_table,
+        ).collect()
+    }
+    assert from_text == want_sigs
+    assert from_sets == want_sigs
+
+    def _j(a, b):
+        x = len(a & b) / len(a | b)
+        return float(
+            Decimal(repr(x)).quantize(Decimal("1e-6"), rounding=ROUND_HALF_UP)
+        )
+
+    ids = [i for i, _ in rows]
+    pairs = spark.createDataFrame(
+        list(combinations(ids, 2)), "id_a long, id_b long"
+    )
+    got = {
+        (r.id_a, r.id_b): (r.n_inter, r.n_a, r.n_b, r.jaccard)
+        for r in jaccard_pairs(pairs, set_table, "doc_id").collect()
+    }
+    want = {
+        (a, b): (
+            len(sets[a] & sets[b]), len(sets[a]), len(sets[b]),
+            _j(sets[a], sets[b]),
+        )
+        for a, b in combinations(ids, 2)
+        if sets[a] & sets[b]
+    }
+    assert got == want
+    assert got[(7, 8)][3] == 1.0
+    assert not {i for pair in got for i in pair} & short
 
 
-def test_rowwise_signatures_plan_has_no_shuffle(spark):
-    """The rowwise formulation's whole point: signatures as a projection —
-    no aggregation, no KEY shuffle (the groupBy formulation plans both).
-    Since r9 the projection goes through fan_out, so a single-split local
-    input legitimately shows ONE round-robin rebalance (load balancing
-    for the md5-heavy map phase; a no-op at scale) — what stays forbidden
-    is hash/range partitioning and any aggregate."""
-    from cses2humio_spark.operators.dedup import minhash_signatures_rowwise
+def test_rowwise_signatures_plan_has_no_shuffle(spark, tmp_path):
+    """Signing text is a projection — no aggregation, no KEY shuffle. The
+    projection goes through fan_out, so a single-split local input
+    legitimately shows ONE round-robin rebalance (load balancing for the
+    md5-heavy map phase; a no-op at scale) — what stays forbidden is
+    hash/range partitioning and any aggregate. Each row's text is split
+    into tokens ONCE: every one of the bands x rows_per_band hashes reads
+    the same projected shingle array."""
+    from cses2humio_spark.operators.dedup import minhash_signatures
+    from cses2humio_spark.operators.dedup_index import MinHashIndex
     from cses2humio_spark.sources.catalog import load_table
 
     docs = load_table(spark, "/root/testdata/sf0.001", "documents")
     plan = (
-        minhash_signatures_rowwise(docs, "doc_id", "text")
+        minhash_signatures(docs, "doc_id", "text")
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert "hashpartitioning" not in plan
     assert "rangepartitioning" not in plan
     assert "Aggregate" not in plan
+    idx = MinHashIndex(str(tmp_path / "mh"))
+    optimized = (
+        idx._signatures(docs)._jdf.queryExecution().optimizedPlan().toString()
+    )
+    assert optimized.count("split(") == 1, optimized
 
 
 def test_pq_adc_recall_floor_vs_exact_l2(spark):
@@ -691,17 +780,13 @@ def test_sq8_topk_recall_vs_exact_float(spark):
 
 
 def test_star_components_equal_propagation_and_survive_long_chains(spark):
-    """alternating_star_components is the diameter-robust CC twin: on a
-    graph min-label propagation handles, the two must agree EXACTLY; on
-    a 200-node chain (diameter 199), the propagation twin's default
-    round budget refuses while the star contraction converges in
-    O(log^2 n) rounds and labels every node with the chain's minimum."""
-    import pytest
-
-    from cses2humio_spark.operators.dedup import (
-        alternating_star_components,
-        near_dup_clusters,
-    )
+    """alternating_star_components labels every id with its component's
+    minimum id (the min-label-propagation fixpoint), on both routes of its
+    size-adaptive selection: the driver union-find and the distributed
+    star contraction (driver_max_edges=0) must agree EXACTLY, also on a
+    200-node chain (diameter 199), where the star contraction converges
+    in O(log^2 n) rounds and labels every node with the chain's minimum."""
+    from cses2humio_spark.operators.dedup import alternating_star_components
 
     # mixed shapes: a triangle {0,1,2}, a pair {10,11}, a 4-star around
     # 20, singletons 30/31, and ids listed but absent from any pair
@@ -713,10 +798,9 @@ def test_star_components_equal_propagation_and_survive_long_chains(spark):
         [(i,) for i in [0, 1, 2, 10, 11, 20, 21, 22, 23, 30, 31]],
         "doc_id long",
     )
-    # r10: the small-graph fast path resolves components with a driver
-    # union-find (driver_max_edges default); driver_max_edges=0 forces
-    # the distributed star alternation — the two must be bit-identical
-    # (the VERDICT r9 #2 equal-output pin).
+    # the small-graph route resolves components with a driver union-find
+    # (driver_max_edges default); driver_max_edges=0 forces the
+    # distributed star alternation — the two must be bit-identical
     star = {
         (r.doc_id, r.cluster_rep)
         for r in alternating_star_components(
@@ -727,27 +811,19 @@ def test_star_components_equal_propagation_and_survive_long_chains(spark):
         (r.doc_id, r.cluster_rep)
         for r in alternating_star_components(ids, pairs).collect()
     }
-    prop = {
-        (r.doc_id, r.cluster_rep)
-        for r in near_dup_clusters(ids, pairs).collect()
-    }
-    assert star == prop
     assert star == uf
     assert star == {
         (0, 0), (1, 0), (2, 0), (10, 10), (11, 10),
         (20, 20), (21, 20), (22, 20), (23, 20), (30, 30), (31, 31),
     }
 
-    # chain stress: 0-1-2-...-199 (diameter 199 >> any sane propagation
-    # budget; the budget is capped at 6 here so the refusal is cheap —
-    # each refused propagation round persists another lineage layer)
+    # chain stress: 0-1-2-...-199 (diameter 199 — label propagation
+    # would need 199 rounds)
     n = 200
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(n - 1)], "id_a long, id_b long"
     )
     chain_ids = spark.createDataFrame([(i,) for i in range(n)], "doc_id long")
-    with pytest.raises(RuntimeError, match="did not converge"):
-        near_dup_clusters(chain_ids, chain, max_iter=6).collect()
     labels = alternating_star_components(
         chain_ids, chain, driver_max_edges=0
     ).collect()

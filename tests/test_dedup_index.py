@@ -15,7 +15,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from cses2humio_spark.operators.dedup import minhash_signatures_rowwise
+from cses2humio_spark.operators.dedup import minhash_signatures
 from cses2humio_spark.operators.dedup_index import MinHashIndex
 from cses2humio_spark.sources.catalog import load_table
 from tests.conftest import SF_SMALL
@@ -37,10 +37,10 @@ def probes(docs):
 
 def _fused_candidates(docs, probes):
     """The fused two-sided computation the index must reproduce."""
-    corpus_sigs = minhash_signatures_rowwise(docs, "doc_id", "text").select(
+    corpus_sigs = minhash_signatures(docs, "doc_id", "text").select(
         F.col("doc_id").alias("index_id"), "band", "sig"
     )
-    probe_sigs = minhash_signatures_rowwise(probes, "doc_id", "text").select(
+    probe_sigs = minhash_signatures(probes, "doc_id", "text").select(
         F.col("doc_id").alias("probe_id"), "band", "sig"
     )
     return (

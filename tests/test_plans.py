@@ -246,15 +246,15 @@ def test_query_construction_never_touches_rdd(spark, monkeypatch):
 
 
 def test_shingle_table_persisted_once_for_multi_consumer_pipeline(spark):
-    """VERDICT r1 stretch: composite near-dup pipelines (candidates +
-    Jaccard verify) share ONE shingle explode. With the table persisted,
-    every consumer's plan must read the InMemoryRelation — the explode
-    (Generate) lives only inside the cached plan, never recomputed
+    """Composite near-dup pipelines (candidates + Jaccard verify) share
+    ONE shingle-set build. With the ``shingle_set_table`` persisted, every
+    consumer's plan must read the InMemoryRelation — the collect_set
+    aggregate lives only inside the cached plan, never recomputed
     upstream of a consumer."""
     from cses2humio_spark.operators.dedup import (
         jaccard_pairs,
         minhash_candidate_pairs,
-        shingle_table,
+        shingle_set_table,
     )
     from cses2humio_spark.sources.catalog import load_table
 
@@ -264,35 +264,35 @@ def test_shingle_table_persisted_once_for_multi_consumer_pipeline(spark):
     # Start from a clean cache so the only InMemoryRelation is ours.
     spark.catalog.clearCache()
     docs = load_table(spark, SF_SMALL, "documents")
-    sh = shingle_table(docs, "doc_id", "text", n=3).persist()
+    sets = shingle_set_table(docs, "doc_id", "text", n=3).persist()
     try:
-        # audit the UNCAPPED plan: the round-4 bucket cap's probe action
-        # materializes the cache mid-build, which makes every
-        # InMemoryRelation print its cached child twice and skews the
-        # explode-per-cached-print accounting below; the capped path's
-        # star-collapse shape is pinned by its own tests in test_approx.py
+        # audit the UNCAPPED plan: the capped path's star-collapse shape
+        # is pinned by its own tests in test_approx.py
         cands = minhash_candidate_pairs(
-            docs, "doc_id", "text", shingles_df=sh, max_bucket_size=None
+            docs, "doc_id", "text", max_bucket_size=None,
+            shingle_sets_df=sets,
         )
-        verified = jaccard_pairs(
-            docs, cands, "doc_id", "text", shingles_df=sh, assume_overlap=True
-        )
+        verified = jaccard_pairs(cands, sets, "doc_id")
         plan = verified._jdf.queryExecution().optimizedPlan().toString()
         n_cached = plan.count("InMemoryRelation")
-        assert n_cached > 0, "consumers bypass the persisted shingles"
-        # Each InMemoryRelation prints its CACHED child plan (one shingle
-        # explode) inline; a consumer recomputing the explode would add a
-        # Generate explode NOT paired with a cached-plan print. (Generate
-        # stack — the band unpivot — is a cheap projection, not a
-        # recompute, and is excluded by matching on explode.)
-        n_explode = plan.count("Generate explode")
-        assert n_explode == n_cached, (
-            f"{n_explode} shingle explodes vs {n_cached} cached-plan prints "
-            "— a consumer recomputes the explode instead of reading the "
-            "persisted table"
+        assert n_cached >= 4, "consumers bypass the persisted shingle sets"
+        # Each InMemoryRelation prints its CACHED child plan (the
+        # collect_set aggregate, partial + final) inline; a consumer
+        # recomputing the sets would add a collect_set NOT paired with a
+        # cached-plan print.
+        cached = sets._jdf.queryExecution().optimizedPlan().toString()
+        per_print = cached.count("collect_set") // cached.count(
+            "InMemoryRelation"
+        )
+        assert per_print > 0
+        n_agg = plan.count("collect_set")
+        assert n_agg == n_cached * per_print, (
+            f"{n_agg} collect_set prints vs {n_cached} cached-plan prints "
+            f"x {per_print} — a consumer recomputes the shingle sets "
+            "instead of reading the persisted table"
         )
     finally:
-        sh.unpersist()
+        sets.unpersist()
 
 
 def test_auto_band_params_tracks_corpus_size():
