@@ -215,7 +215,7 @@ def hashed_linear_score(col: Column, salt: str = "qw:") -> Column:
     float contract; DuckDB mirrors it with list_reduce over
     list_prepend(0.0, ...)), so the raw score is bit-identical across
     engines and the kept/rejected decision (score >= 0) is exact."""
-    toks = F.split(F.trim(col), r"\s+")
+    toks = tokens(col)
     w = lambda t: (  # noqa: E731 — inline weight expression
         F.conv(
             F.substring(F.md5(F.concat(F.lit(salt), t)), 1, 8), 16, 10
@@ -265,7 +265,7 @@ def vocab_linear_score(
         F.array(*[F.lit(t) for t in vocab_tokens]),
         F.array(*[F.lit(float(w)) for w in vocab_weights]),
     )
-    toks = F.split(F.trim(col), r"\s+")
+    toks = tokens(col)
     return F.aggregate(
         toks,
         F.lit(0.0),

@@ -38,6 +38,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from cses2humio_spark.functions.text import tokens
+
 #: symbol separator in the encoded word string — 0x1F (unit separator),
 #: stripped from input text before encoding so it can never be a symbol
 SEP = "\x1f"
@@ -166,7 +168,7 @@ def bpe_encode(
         ]
     )
     toks = F.filter(
-        F.split(F.trim(F.replace(col, F.lit(SEP), F.lit(""))), r"\s+"),
+        tokens(F.replace(col, F.lit(SEP), F.lit(""))),
         lambda x: x != "",
     )
     bound = SEP + SEP  # symbol boundary: two separators

@@ -14,6 +14,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from cses2humio_spark.functions.text import tokens
+
 
 def token_chunks(
     text: Column, chunk_size: int = 40, stride: int = 30
@@ -32,7 +34,7 @@ def token_chunks(
             f"need 0 < stride <= chunk_size, got stride={stride}, "
             f"chunk_size={chunk_size}"
         )
-    toks = F.split(F.trim(text), r"\s+")
+    toks = tokens(text)
     n = F.size(toks)
     n_chunks = F.when(n <= chunk_size, F.lit(1)).otherwise(
         F.lit(1)

@@ -30,6 +30,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
+from cses2humio_spark.functions.text import tokens
+
 
 def dedup_exact_by_key(
     df: DataFrame, keys: Sequence[str], order: Sequence[Column]
@@ -66,7 +68,7 @@ def _token_table(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     from cses2humio_spark.sources.catalog import fan_out
 
     return fan_out(df).select(
-        F.col(id_col), F.split(F.trim(F.col(text_col)), r"\s+").alias("__toks")
+        F.col(id_col), tokens(F.col(text_col)).alias("__toks")
     )
 
 
@@ -214,28 +216,49 @@ def minhash_candidate_pairs(
     a = sigs.select(F.col(id_col).alias("id_a"), "band", "sig")
     b = sigs.select(F.col(id_col).alias("id_b"), "band", "sig")
     if max_bucket_size is not None:
-        # One extra pre-aggregation on the SAME (band, sig) shuffle key the
-        # join already needs: per-bucket size + min id. Normal buckets take
-        # the clique path unchanged; oversized ones emit hub→member edges.
-        # All three consumers of `sigs` live in ONE query — no persist,
-        # no cache to leak.
-        stats = sigs.groupBy("band", "sig").agg(
-            F.count(F.lit(1)).alias("__bn"),
-            F.min(id_col).alias("__hub"),
-        )
+        # Per-bucket size + min id on the SAME (band, sig) shuffle key the
+        # join already needs. Normal buckets take the clique path
+        # unchanged; oversized ones emit hub→member edges. Prune the LEFT
+        # side of the self-join before the pairs exist: in an oversized
+        # bucket only the hub row survives as id_a, so that bucket
+        # contributes O(size) hub→member rows to the join output instead
+        # of O(size^2) clique rows — the cap acts on join CPU, not just on
+        # the result. No persist, no cache to leak.
         over = F.col("__bn") > F.lit(max_bucket_size)
-        stats = _observe_star_cap(stats, over, max_bucket_size)
-        # Prune the LEFT side of the self-join before the pairs exist: in
-        # an oversized bucket only the hub row survives as id_a, so that
-        # bucket contributes O(size) hub→member rows to the join output
-        # instead of O(size^2) clique rows — the cap acts on join CPU,
-        # not just on the result. For healthy buckets the filter keeps
-        # every row, so this branch is a co-partitioned no-op join.
-        a = (
-            a.join(stats, on=["band", "sig"])
-            .filter(~over | (F.col("id_a") == F.col("__hub")))
-            .select("id_a", "band", "sig")
-        )
+        if shingle_sets_df is None:
+            # Signing text is the costly phase: a window over the one
+            # signature frame feeds both join sides (kept to buckets that
+            # can pair), so its shuffle is reused and each document is
+            # signed once — a groupBy joined back would sign it again.
+            bucket = Window.partitionBy("band", "sig")
+            pairable = sigs.select(
+                id_col,
+                "band",
+                "sig",
+                F.count(F.lit(1)).over(bucket).alias("__bn"),
+                F.min(id_col).over(bucket).alias("__hub"),
+            ).filter(F.col("__bn") > 1)
+            hub = F.col(id_col) == F.col("__hub")
+            a = (
+                _observe_star_cap(pairable, over & hub, max_bucket_size)
+                .filter(~over | hub)
+                .select(F.col(id_col).alias("id_a"), "band", "sig")
+            )
+            b = pairable.select(F.col(id_col).alias("id_b"), "band", "sig")
+        else:
+            # Set-table signatures re-read a persisted cache, so the second
+            # read is cheap; the window form sorts every signature row and
+            # showed no steady gain for these callers.
+            stats = sigs.groupBy("band", "sig").agg(
+                F.count(F.lit(1)).alias("__bn"),
+                F.min(id_col).alias("__hub"),
+            )
+            stats = _observe_star_cap(stats, over, max_bucket_size)
+            a = (
+                a.join(stats, on=["band", "sig"])
+                .filter(~over | (F.col("id_a") == F.col("__hub")))
+                .select("id_a", "band", "sig")
+            )
     return (
         a.join(b, on=["band", "sig"])
         .filter(F.col("id_a") < F.col("id_b"))
@@ -245,10 +268,11 @@ def minhash_candidate_pairs(
 
 
 def _observe_star_cap(
-    stats: DataFrame, over: Column, max_bucket_size: int
+    rows: DataFrame, over: Column, max_bucket_size: int
 ) -> DataFrame:
     """Attach the star-cap's logged-drop contract as ``Observation``
-    metrics on the bucket-stats frame: the numbers are computed DURING the
+    metrics on ``rows`` (bucket size ``__bn`` on every row; ``over`` holds
+    on ONE row per oversized bucket): the numbers are computed DURING the
     consumer's action (zero extra jobs) and a daemon thread logs one
     warning if any bucket collapsed. The thread blocks on ``obs.get``; if
     the caller never runs an action it idles harmlessly (daemon)."""
@@ -258,7 +282,7 @@ def _observe_star_cap(
     from pyspark.sql import Observation
 
     obs = Observation()
-    stats = stats.observe(
+    rows = rows.observe(
         obs,
         F.sum(over.cast("long")).alias("n_oversized"),
         F.max(F.when(over, F.col("__bn"))).alias("max_bucket"),
@@ -291,7 +315,7 @@ def _observe_star_cap(
     threading.Thread(
         target=_log, name="minhash-star-cap-log", daemon=True
     ).start()
-    return stats
+    return rows
 
 
 def jaccard_pairs(
@@ -357,7 +381,7 @@ def simhash(df: DataFrame, id_col: str, text_col: str, bits: int = 16) -> DataFr
     from cses2humio_spark.sources.catalog import fan_out
 
     toks = fan_out(df).select(
-        F.col(id_col), F.explode(F.split(F.trim(F.col(text_col)), r"\s+")).alias("tok")
+        F.col(id_col), F.explode(tokens(F.col(text_col))).alias("tok")
     )
     hashed = toks.withColumn("hx", F.md5(F.col("tok")))
     bit_idx = F.explode(F.sequence(F.lit(0), F.lit(bits - 1))).alias("bit")
@@ -734,7 +758,7 @@ def duplicate_span_coverage(
 
     if width < 2:
         raise ValueError(f"width must be >= 2, got {width}")
-    toks = F.split(F.trim(F.col(text_col)), r"\s+")
+    toks = tokens(F.col(text_col))
     # fan_out before the stride-1 window-fingerprint expansion: the
     # per-window md5 is the CPU-heavy phase and ``win`` is consumed
     # twice (duplicate detection + island compression) — on a
@@ -814,7 +838,7 @@ def trim_duplicate_spans(
 
     if width < 2:
         raise ValueError(f"width must be >= 2, got {width}")
-    toks = F.split(F.trim(F.col(text_col)), r"\s+")
+    toks = tokens(F.col(text_col))
     # fan_out before the stride-1 window-fingerprint expansion: the
     # per-window md5 is the CPU-heavy phase and ``win`` is consumed
     # twice (duplicate detection + island compression) — on a

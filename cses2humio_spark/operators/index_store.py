@@ -1,5 +1,13 @@
-"""The one lifecycle every persisted index family runs (``PQIndex``,
-``MinHashIndex``, ``EmbeddingLshIndex``, ``InvertedTextIndex``).
+"""The one versioned-table core, and the one lifecycle every persisted
+index family runs on it (``PQIndex``, ``MinHashIndex``,
+``EmbeddingLshIndex``, ``InvertedTextIndex``).
+
+``VersionedTable`` is the transaction core: geometry pin, manifests,
+the ``_LATEST`` pointer, version resolution and manifest eviction. The
+index lifecycle (``VersionedSegmentStore``) and the maintained
+aggregates (``streaming/materialized.IncrementalRollup``) both commit
+through it; each keeps its own data layout, write path and artifact
+sweep.
 
 On-disk layout under the index root:
 
@@ -110,46 +118,48 @@ def _read_schema(
     )
 
 
-class VersionedSegmentStore:
-    """Base class: version pointer, manifests, atomic writes, prune, and
-    the build / ingest / delete / compact / read lifecycle."""
+class VersionedTable:
+    """The transaction core under a table root: the geometry pin
+    (``_TABLE.json``), one ``manifest_v=<v>.json`` per committed version,
+    the ``_LATEST`` pointer, version resolution, and manifest eviction.
+    Every file is written to a ``.tmp`` sibling and moved into place
+    with ``os.replace``, so a reader sees the old file or the new one.
+    ``_commit`` writes the manifest, switches the pointer and calls the
+    subclass's ``_prune``; a crash between the manifest write and the
+    switch leaves the prior version committed, and replaying the same
+    version overwrites the orphaned manifest."""
 
-    id_col: str
-    partition_col: str | None = None
-    empty_segment_readable = True
-
-    def __init__(self, index_dir: str, geometry: dict, keep_versions: int = 2):
+    def __init__(self, root: str, geometry: dict, keep_versions: int):
         if keep_versions < 1:
             raise ValueError(f"keep_versions must be >= 1, got {keep_versions}")
-        self.index_dir = index_dir
+        self.root = root
         self.keep_versions = keep_versions
-        os.makedirs(index_dir, exist_ok=True)
-        cfg_path = os.path.join(index_dir, "_TABLE.json")
+        os.makedirs(root, exist_ok=True)
+        cfg_path = os.path.join(root, "_TABLE.json")
         if os.path.exists(cfg_path):
             with open(cfg_path, encoding="ascii") as fh:
                 cfg = json.load(fh)
             if cfg != geometry:
                 raise ValueError(
-                    f"{index_dir}: index was created with {cfg}, reopened "
-                    f"with {geometry} — artifacts are meaningless under "
+                    f"{root}: created with geometry {cfg}, reopened with "
+                    f"{geometry} — stored data is meaningless under "
                     "different geometry"
                 )
         else:
-            tmp = cfg_path + ".tmp"
-            with open(tmp, "w", encoding="ascii") as fh:
-                json.dump(geometry, fh)
-            os.replace(tmp, cfg_path)
+            self._write_atomic(cfg_path, json.dumps(geometry))
 
-    @property
-    def _key_col(self) -> str:
-        """The id column of stored segment and tombstone rows."""
-        return self.id_col
+    @staticmethod
+    def _write_atomic(path: str, text: str) -> None:
+        tmp = path + ".tmp"
+        with open(tmp, "w", encoding="ascii") as fh:
+            fh.write(text)
+        os.replace(tmp, path)
 
     # -- version pointer + manifests ---------------------------------------
 
     @property
     def _pointer(self) -> str:
-        return os.path.join(self.index_dir, "_LATEST")
+        return os.path.join(self.root, "_LATEST")
 
     def latest_version(self) -> int | None:
         try:
@@ -158,41 +168,97 @@ class VersionedSegmentStore:
         except FileNotFoundError:
             return None
 
+    def _switch_pointer(self, version: int) -> None:
+        self._write_atomic(self._pointer, str(version))
+
     def _manifest_path(self, version: int) -> str:
-        return os.path.join(self.index_dir, f"manifest_v={version}.json")
+        return os.path.join(self.root, f"manifest_v={version}.json")
 
     def _load_manifest(self, version: int) -> dict:
         with open(self._manifest_path(version), encoding="ascii") as fh:
             return json.load(fh)
 
     def _write_manifest(self, version: int, manifest: dict) -> None:
-        tmp = self._manifest_path(version) + ".tmp"
-        with open(tmp, "w", encoding="ascii") as fh:
-            json.dump(manifest, fh)
-        os.replace(tmp, self._manifest_path(version))
+        self._write_atomic(self._manifest_path(version), json.dumps(manifest))
 
     def versions(self) -> list[int]:
+        """Versions whose manifest is on disk, oldest first — the
+        retained time-travel window."""
         return sorted(
             int(m.group(1))
-            for name in os.listdir(self.index_dir)
+            for name in os.listdir(self.root)
             if (m := re.fullmatch(r"manifest_v=(-?\d+)\.json", name))
         )
 
     def _resolve_version(self, version: int | None) -> int:
+        """``version``, or the latest when None, checked readable."""
         latest = self.latest_version()
         if latest is None:
             raise ValueError(
-                f"{self.index_dir}: index has no committed version — run "
-                "build() first"
+                f"{self.root}: no committed version — nothing has been "
+                "built or ingested yet"
             )
         if version is None:
             return latest
-        if version > latest or not os.path.exists(self._manifest_path(version)):
+        if version > latest:
             raise ValueError(
-                f"{self.index_dir}: version {version} not available "
-                f"(retained: {self.versions()})"
+                f"{self.root}: version {version} not available: not "
+                f"committed (latest is {latest})"
+            )
+        if not os.path.exists(self._manifest_path(version)):
+            raise ValueError(
+                f"{self.root}: version {version} not available: pruned "
+                f"(retained: {self.versions()}) — raise keep_versions for "
+                "a longer time-travel window"
             )
         return version
+
+    def _commit(self, version: int, manifest: dict) -> None:
+        """Write ``manifest``, switch ``_LATEST`` to ``version``, prune."""
+        self._write_manifest(version, manifest)
+        self._switch_pointer(version)
+        self._prune(version)
+
+    def _evict(self, committed: int, grace: int) -> list[dict]:
+        """Remove the manifests at or below ``committed`` beyond the
+        newest ``keep_versions``. Returns the manifests whose data must
+        stay on disk: the retained ones plus the ``grace`` newest
+        evicted ones."""
+        older = [v for v in reversed(self.versions()) if v <= committed]
+        live = []
+        for v in older[: self.keep_versions + grace]:
+            try:
+                live.append(self._load_manifest(v))
+            except FileNotFoundError:
+                continue  # removed by a concurrent prune
+        for v in older[self.keep_versions :]:
+            try:
+                os.remove(self._manifest_path(v))
+            except FileNotFoundError:
+                pass
+        return live
+
+    def _prune(self, committed: int) -> None:
+        """Drop what no retained version references (after a commit)."""
+        raise NotImplementedError
+
+
+class VersionedSegmentStore(VersionedTable):
+    """The build / ingest / delete / compact / read lifecycle of an
+    index, on the transaction core."""
+
+    id_col: str
+    partition_col: str | None = None
+    empty_segment_readable = True
+
+    @property
+    def index_dir(self) -> str:
+        return self.root
+
+    @property
+    def _key_col(self) -> str:
+        """The id column of stored segment and tombstone rows."""
+        return self.id_col
 
     @staticmethod
     def _last_batch_id(manifest: dict, version: int) -> int:
@@ -220,8 +286,8 @@ class VersionedSegmentStore:
         return latest + 1, manifest
 
     def _commit(self, version: int, manifest: dict) -> None:
-        """Write ``manifest`` (its ``schemas`` cut to its live artifacts),
-        switch ``_LATEST`` to ``version``, prune."""
+        """Cut ``manifest``'s ``schemas`` to its live artifacts, then
+        commit it."""
         live = self._live_artifacts(manifest)
         manifest["schemas"] = {
             name: schema
@@ -231,12 +297,7 @@ class VersionedSegmentStore:
                 for pat, ids in live.items()
             )
         }
-        self._write_manifest(version, manifest)
-        tmp = self._pointer + ".tmp"
-        with open(tmp, "w", encoding="ascii") as fh:
-            fh.write(str(version))
-        os.replace(tmp, self._pointer)
-        self._prune(version)
+        super()._commit(version, manifest)
 
     # -- atomic artifact writes ---------------------------------------------
 
@@ -476,20 +537,10 @@ class VersionedSegmentStore:
         just evicted (the one-commit read grace) — references. Readers
         slower than one full commit interval still race deletion; pin a
         version and materialize promptly, or raise keep_versions."""
-        older = [v for v in reversed(self.versions()) if v <= committed]
         live: dict[str, set[int]] = {}
-        for v in older[: self.keep_versions + 1]:
-            try:
-                man = self._load_manifest(v)
-            except FileNotFoundError:
-                continue  # evicted manifest already removed at a prior prune
+        for man in self._evict(committed, grace=1):
             for pat, ids in self._live_artifacts(man).items():
                 live.setdefault(pat, set()).update(ids)
-        for v in older[self.keep_versions :]:
-            try:
-                os.remove(self._manifest_path(v))
-            except FileNotFoundError:
-                pass
         for name in os.listdir(self.index_dir):
             for pat, keep in live.items():
                 m = re.fullmatch(pat, name)

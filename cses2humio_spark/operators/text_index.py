@@ -49,6 +49,7 @@ import os
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from cses2humio_spark.functions.text import tokens
 from cses2humio_spark.operators.index_store import VersionedSegmentStore
 
 #: Tokenizer contract pinned in the geometry: whitespace split of the
@@ -157,9 +158,7 @@ class InvertedTextIndex(VersionedSegmentStore):
         toks = docs.select(
             F.col(self.id_col).alias("doc_id"),
             ws1.alias("ws1"),
-            F.posexplode(
-                F.split(F.trim(F.col(self.text_col)), r"\s+")
-            ).alias("pos", "tok"),
+            F.posexplode(tokens(F.col(self.text_col))).alias("pos", "tok"),
         )
         if self.positional:
             # positional mode: the posting row also carries the sorted

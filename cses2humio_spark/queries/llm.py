@@ -504,7 +504,7 @@ def tfidf_top50(spark: SparkSession, sf_dir: str) -> DataFrame:
     document-frequency table; global top-50 is TakeOrdered."""
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
-        "doc_id", F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("tok")
+        "doc_id", F.explode(ws_tokens(F.col("text"))).alias("tok")
     )
     tf = toks.groupBy("doc_id", "tok").agg(F.count(F.lit(1)).alias("tf"))
     df_ = toks.groupBy("tok").agg(F.countDistinct("doc_id").alias("df"))
@@ -569,7 +569,7 @@ def bm25_search_top20(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id",
-        F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("tok"),
+        F.explode(ws_tokens(F.col("text"))).alias("tok"),
     )
     dl = toks.groupBy("doc_id").agg(F.count(F.lit(1)).alias("dl"))
     n_docs, avgdl = dl.agg(
@@ -705,7 +705,7 @@ def rrf_hybrid_top10(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     toks = docs.select(
         "doc_id",
-        F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("tok"),
+        F.explode(ws_tokens(F.col("text"))).alias("tok"),
     )
     dl = toks.groupBy("doc_id").agg(F.count(F.lit(1)).alias("dl"))
     n_docs, avgdl = dl.agg(F.count(F.lit(1)), F.avg("dl")).collect()[0]

@@ -14,6 +14,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from cses2humio_spark.functions.text import tokens
 from cses2humio_spark.operators.aggregates import timechart, top_k
 from cses2humio_spark.operators.windows import sessionize
 from cses2humio_spark.queries.registry import query
@@ -548,7 +549,7 @@ def token_explode_top20(spark: SparkSession, sf_dir: str) -> DataFrame:
     """explode + agg + deterministic global top-k (TakeOrdered)."""
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
-        F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("tok")
+        F.explode(tokens(F.col("text"))).alias("tok")
     )
     agg = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("n"))
     return top_k(agg, [F.col("n").desc(), F.col("tok").asc()], 20)
@@ -569,7 +570,7 @@ def array_funcs_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Array ops: size / distinct / slice / join / contains over token
     arrays, all higher-order-function built-ins."""
     docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 100)
-    toks = F.split(F.trim(F.col("text")), r"\s+")
+    toks = tokens(F.col("text"))
     return docs.select(
         "doc_id",
         F.size(toks).alias("n_toks"),

@@ -20,6 +20,7 @@ from cses2humio_spark.functions.text import (
     pii_count,
     pii_scrub,
     token_count,
+    tokens,
     top_token_fraction,
 )
 from cses2humio_spark.functions.vectors import dequantize_error, quantize_int8
@@ -799,7 +800,7 @@ def span_corruption_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     beyond the hash itself). At 100 TB this is a narrow map stage
     feeding a 10-row aggregation."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = F.split(F.trim(F.col("text")), r"\s+")
+    toks = tokens(F.col("text"))
     did = F.col("doc_id").cast("string")
     mask = F.transform(
         F.sequence(F.lit(1), F.size(toks)),
@@ -1017,7 +1018,7 @@ def bigram_lm_doc_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cses2humio_spark.session import evict_on_gc
     from cses2humio_spark.sources.catalog import fan_out
 
-    toks = F.split(F.trim(F.col("text")), r"\s+")
+    toks = tokens(F.col("text"))
     # fan_out before the bigram expansion: ``bg`` is consumed twice
     # (model counts + the scoring join) and the vocabulary pass is a
     # third token explode — on a single-split local scan each pass
@@ -1198,7 +1199,7 @@ def model_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     raw = hashed_linear_score(F.col("text"))
-    toks = F.split(F.trim(F.col("text")), r"\s+")
+    toks = tokens(F.col("text"))
     return docs.select(
         "doc_id",
         F.size(toks).cast("bigint").alias("n_toks"),
@@ -1259,7 +1260,7 @@ def model_quality_filter_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     tok_counts = (
         docs.select(
-            F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("tok")
+            F.explode(tokens(F.col("text"))).alias("tok")
         )
         .groupBy("tok")
         .agg(F.count(F.lit(1)).alias("n"))
@@ -1273,7 +1274,7 @@ def model_quality_filter_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     raw = vocab_linear_score(
         F.col("text"), vocab_tokens, vocab_weights, oov_weight=-1.0
     )
-    toks = F.split(F.trim(F.col("text")), r"\s+")
+    toks = tokens(F.col("text"))
     return docs.select(
         "doc_id",
         F.size(toks).cast("bigint").alias("n_toks"),

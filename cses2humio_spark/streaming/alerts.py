@@ -231,7 +231,23 @@ def run_alert_rules(
     firing alerts are handed to ``on_alerts`` executor-free (driver-side
     callback — alert volume is rule-bounded, not data-bounded). Returns
     the started StreamingQuery."""
+    return _start_alert_stream(
+        stream_df, lambda: rules, on_alerts, checkpoint_dir, tables,
+        trigger_available_now,
+    )
 
+
+def _start_alert_stream(
+    stream_df: DataFrame,
+    rule_source: Callable[[], list[AlertRule]],
+    on_alerts: Callable[[list[dict]], None],
+    checkpoint_dir: str,
+    tables: dict[str, DataFrame] | None,
+    trigger_available_now: bool,
+):
+    """The one alert stream body: at each micro-batch, ask ``rule_source``
+    for the rule set, drop throttled rules, evaluate the rest on the
+    persisted batch, deliver, and record what fired."""
     throttle = ThrottleState(checkpoint_dir)
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
@@ -240,7 +256,7 @@ def run_alert_rules(
         # fused plan entirely — suppression saves its aggregate branch,
         # not just the delivery
         active = [
-            r for r in rules if not throttle.suppressed(r, batch_id)
+            r for r in rule_source() if not throttle.suppressed(r, batch_id)
         ]
         if not active:
             return
@@ -288,7 +304,6 @@ def run_alert_rules_from_file(
     import os
     import shutil
 
-    throttle = ThrottleState(checkpoint_dir)
     os.makedirs(checkpoint_dir, exist_ok=True)
     last_good = os.path.join(checkpoint_dir, "_alert_rules_last_good.json")
     state = {
@@ -349,29 +364,11 @@ def run_alert_rules_from_file(
                 "alert stream with zero rules"
             )
 
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
+    def _rules() -> list[AlertRule]:
         _load()
-        active = [
-            r for r in state["rules"] if not throttle.suppressed(r, batch_id)
-        ]
-        if not active:
-            return
-        batch_df.persist()
-        try:
-            alerts = evaluate_rules_on_batch(
-                batch_df, active, batch_id, tables=tables
-            )
-            if alerts:
-                on_alerts(alerts)
-                throttle.record([a["rule"] for a in alerts], batch_id)
-        finally:
-            batch_df.unpersist()
+        return state["rules"]
 
-    writer = (
-        stream_df.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
+    return _start_alert_stream(
+        stream_df, _rules, on_alerts, checkpoint_dir, tables,
+        trigger_available_now,
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

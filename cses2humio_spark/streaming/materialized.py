@@ -6,9 +6,11 @@ under micro-batch replay.
 Structured Streaming's own parquet sink is append-only; a maintained
 aggregate needs merge-on-write. The standard production answer is a
 transactional table format (Delta/Iceberg ``MERGE INTO``); this module
-implements the same contract on plain parquet with the minimal
-transaction machinery — SHARDED by hash bucket so a micro-batch rewrites
-only the buckets its delta touches, never the whole key space:
+implements the same contract on plain parquet — SHARDED by hash bucket
+so a micro-batch rewrites only the buckets its delta touches, never the
+whole key space. Geometry pin, manifests, the ``_LATEST`` pointer and
+version resolution are the index store's transaction core
+(``operators/index_store.VersionedTable``); versions are batch ids.
 
 - keys are hash-partitioned into ``n_buckets`` fixed buckets
   (``pmod(hash(keys), n_buckets)``, pinned in ``_TABLE.json`` for the
@@ -23,28 +25,33 @@ only the buckets its delta touches, never the whole key space:
   bucket to the batch that last rewrote it; untouched buckets carry
   their old version forward BY REFERENCE — their files are not read,
   not rewritten, not even stat-ed;
-- a one-line ``_LATEST`` pointer file is switched via ``os.replace``
-  (atomic on POSIX), so readers always see one complete, consistent
-  manifest;
+- the ``_LATEST`` pointer is switched atomically after the manifest is
+  written, so readers always see one complete, consistent manifest;
 - replayed batches (crash after merge, before checkpoint commit — the
   at-least-once window) are detected by ``batch_id <= latest`` and
   skipped, upgrading foreachBatch's at-least-once to exactly-once;
 - superseded bucket versions and manifests are pruned after each commit
-  (``keep_versions`` manifests retained; a bucket version survives while
-  ANY retained manifest references it), so disk stays bounded for
-  unbounded streams instead of growing per batch.
+  (exactly ``keep_versions`` manifests retained; a bucket version
+  survives while ANY retained manifest references it — unlike the index
+  store, no evicted version gets a read grace), so disk stays bounded
+  for unbounded streams instead of growing per batch.
 """
 
 from __future__ import annotations
 
-import json
 import os
+import re
+import shutil
+from functools import partial
+from typing import Callable, NamedTuple
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from cses2humio_spark.operators.index_store import VersionedTable
 
-class IncrementalRollup:
+
+class IncrementalRollup(VersionedTable):
     """foreachBatch callable maintaining ``(key, n_rows, total)`` per key.
 
     ``read(spark)`` returns the current rollup (empty DataFrame before the
@@ -60,131 +67,62 @@ class IncrementalRollup:
         keep_versions: int = 2,
         n_buckets: int = 16,
     ):
-        if keep_versions < 1:
-            raise ValueError(f"keep_versions must be >= 1, got {keep_versions}")
         self.key_col = key_col
         self.value_col = value_col
         # the empty pre-first-commit frame must carry the REAL key type:
         # unionByName would otherwise widen a typed key against string and
         # silently store string keys forever
         self.key_type = key_type
-        # superseded immutable versions are pruned after each commit,
-        # keeping the pointer target plus keep_versions-1 predecessors
-        # (readers of an in-flight older version finish before it ages out)
-        self.keep_versions = keep_versions
-        self._init_table(table_dir, n_buckets)
+        self._open(table_dir, keep_versions, n_buckets)
 
-    # -- table config ------------------------------------------------------
-
-    def _init_table(self, table_dir: str, n_buckets: int) -> None:
-        """Pin ``n_buckets`` for the table's lifetime: bucket membership is
-        a function of the bucket count, so reopening with a different one
-        would split every key's history across two bucketings."""
+    def _open(self, table_dir: str, keep_versions: int, n_buckets: int) -> None:
+        """Open the table with ``n_buckets`` as its pinned geometry: bucket
+        membership is a function of the bucket count, so reopening with a
+        different one would split every key's history across two
+        bucketings."""
         if n_buckets < 1:
             raise ValueError(f"n_buckets must be >= 1, got {n_buckets}")
-        self.table_dir = table_dir
-        os.makedirs(table_dir, exist_ok=True)
-        cfg_path = os.path.join(table_dir, "_TABLE.json")
-        if os.path.exists(cfg_path):
-            with open(cfg_path, encoding="ascii") as fh:
-                cfg = json.load(fh)
-            if cfg.get("n_buckets") != n_buckets:
-                raise ValueError(
-                    f"{table_dir}: table was created with "
-                    f"n_buckets={cfg.get('n_buckets')}, reopened with "
-                    f"{n_buckets} — bucket membership would change"
-                )
-        else:
-            tmp = cfg_path + ".tmp"
-            with open(tmp, "w", encoding="ascii") as fh:
-                json.dump({"n_buckets": n_buckets}, fh)
-            os.replace(tmp, cfg_path)
         self.n_buckets = n_buckets
-
-    # -- version pointer + manifests ---------------------------------------
-
-    @property
-    def _pointer(self) -> str:
-        return os.path.join(self.table_dir, "_LATEST")
+        super().__init__(table_dir, {"n_buckets": n_buckets}, keep_versions)
 
     def latest_batch_id(self) -> int | None:
-        try:
-            with open(self._pointer, encoding="ascii") as fh:
-                return int(fh.read().strip())
-        except FileNotFoundError:
-            return None
-
-    def _manifest_path(self, batch_id: int) -> str:
-        return os.path.join(self.table_dir, f"manifest_v={batch_id}.json")
+        """The last committed batch id (versions are batch ids)."""
+        return self.latest_version()
 
     def _load_manifest(self, batch_id: int) -> dict[int, int]:
         """bucket id -> batch id of the version holding that bucket."""
-        with open(self._manifest_path(batch_id), encoding="ascii") as fh:
-            return {int(k): int(v) for k, v in json.load(fh).items()}
-
-    def _write_manifest(self, batch_id: int, manifest: dict[int, int]) -> None:
-        tmp = self._manifest_path(batch_id) + ".tmp"
-        with open(tmp, "w", encoding="ascii") as fh:
-            json.dump({str(k): v for k, v in manifest.items()}, fh)
-        os.replace(tmp, self._manifest_path(batch_id))
-
-    def _commit(self, batch_id: int) -> None:
-        tmp = self._pointer + ".tmp"
-        with open(tmp, "w", encoding="ascii") as fh:
-            fh.write(str(batch_id))
-        os.replace(tmp, self._pointer)  # atomic pointer switch
+        return {
+            int(k): int(v) for k, v in super()._load_manifest(batch_id).items()
+        }
 
     def _bucket_dir(self, bucket: int, version: int) -> str:
-        return os.path.join(self.table_dir, f"bucket={bucket}", f"v={version}")
+        return os.path.join(self.root, f"bucket={bucket}", f"v={version}")
 
     # -- read --------------------------------------------------------------
-
-    def _empty(self, spark: SparkSession) -> DataFrame:
-        return spark.createDataFrame(
-            [], f"{self.key_col} {self.key_type}, n_rows bigint, total double"
-        )
-
-    def versions(self) -> list[int]:
-        """Committed batch ids still on disk, oldest first — the
-        time-travel window (``keep_versions`` manifests are retained)."""
-        import re
-
-        return sorted(
-            int(m.group(1))
-            for name in os.listdir(self.table_dir)
-            if (m := re.fullmatch(r"manifest_v=(\d+)\.json", name))
-        )
-
-    def _resolve_version(self, version: int | None) -> int | None:
-        latest = self.latest_batch_id()
-        if version is None or latest is None:
-            return latest
-        if version > latest:
-            raise ValueError(
-                f"{self.table_dir}: version {version} not committed "
-                f"(latest is {latest})"
-            )
-        if not os.path.exists(self._manifest_path(version)):
-            raise ValueError(
-                f"{self.table_dir}: version {version} pruned (retained: "
-                f"{self.versions()}) — raise keep_versions for a longer "
-                "time-travel window"
-            )
-        return version
 
     def read(self, spark: SparkSession, version: int | None = None) -> DataFrame:
         """Current table state — or, with ``version=``, the exact state
         as of that committed batch (time travel: manifests are immutable
         and bucket versions survive while any retained manifest
         references them)."""
-        at = self._resolve_version(version)
-        if at is None:
-            return self._empty(spark)
-        manifest = self._load_manifest(at)
+        if self.latest_version() is None:
+            return self._no_rows(spark, committed=False)
+        manifest = self._load_manifest(self._resolve_version(version))
         if not manifest:
-            return self._empty(spark)
+            return self._no_rows(spark, committed=True)
         paths = [self._bucket_dir(b, v) for b, v in sorted(manifest.items())]
-        return spark.read.parquet(*paths)
+        return self._finish(spark.read.parquet(*paths))
+
+    def _finish(self, stored: DataFrame) -> DataFrame:
+        """Stored rows -> the rows a read returns."""
+        return stored
+
+    def _no_rows(self, spark: SparkSession, committed: bool) -> DataFrame:
+        """The read of a table holding no rows: before its first commit,
+        or (``committed``) after only empty batches."""
+        return spark.createDataFrame(
+            [], f"{self.key_col} {self.key_type}, n_rows bigint, total double"
+        )
 
     def _read_buckets(
         self, spark: SparkSession, manifest: dict[int, int], buckets: list[int]
@@ -198,45 +136,26 @@ class IncrementalRollup:
 
     # -- pruning -----------------------------------------------------------
 
-    def _prune_versions(self, committed: int) -> None:
+    def _prune(self, committed: int) -> None:
         """Retain the ``keep_versions`` newest manifests; a bucket version
-        dir survives while ANY retained manifest references it."""
-        import re
-        import shutil
-
-        manifest_ids = sorted(
-            (
-                int(m.group(1))
-                for name in os.listdir(self.table_dir)
-                if (m := re.fullmatch(r"manifest_v=(\d+)\.json", name))
-            ),
-            reverse=True,
-        )
-        retained = [i for i in manifest_ids if i <= committed][
-            : self.keep_versions
-        ]
+        dir survives while ANY retained manifest references it. Staging
+        dirs of other batches are leftovers of crashed attempts."""
         live: dict[int, set[int]] = {}
-        for mid in retained:
-            for b, v in self._load_manifest(mid).items():
+        for man in self._evict(committed, grace=0):
+            for b, v in man.items():
                 live.setdefault(b, set()).add(v)
-        for mid in manifest_ids:
-            if mid < committed and mid not in retained:
-                try:
-                    os.remove(self._manifest_path(mid))
-                except FileNotFoundError:
-                    pass
-        for name in os.listdir(self.table_dir):
+        for name in os.listdir(self.root):
             m = re.fullmatch(r"bucket=(\d+)", name)
             if not m:
-                if name.startswith("_staging_v=") and not name.endswith(
-                    f"={committed}"
+                if name.startswith("_staging_v=") and name != (
+                    f"_staging_v={committed}"
                 ):
                     shutil.rmtree(
-                        os.path.join(self.table_dir, name), ignore_errors=True
+                        os.path.join(self.root, name), ignore_errors=True
                     )
                 continue
             b = int(m.group(1))
-            bdir = os.path.join(self.table_dir, name)
+            bdir = os.path.join(self.root, name)
             for vname in os.listdir(bdir):
                 vm = re.fullmatch(r"v=(\d+)", vname)
                 if vm:
@@ -268,7 +187,7 @@ class IncrementalRollup:
         )
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        latest = self.latest_batch_id()
+        latest = self.latest_version()
         if latest is not None and batch_id <= latest:
             # replayed micro-batch: its effect is already in the table
             return
@@ -283,70 +202,167 @@ class IncrementalRollup:
             touched = sorted(
                 r["__b"] for r in delta.select("__b").distinct().collect()
             )
-            prev = self._load_manifest(latest) if latest is not None else {}
-            if not touched:
-                # empty batch: commit a manifest carrying every bucket
-                # forward so batch-id monotonicity (the replay guard)
-                # still advances — no data is read or written
-                self._write_manifest(batch_id, prev)
-                self._commit(batch_id)
-                self._prune_versions(batch_id)
-                return
-            current = self._read_buckets(spark, prev, touched)
-            if current is None:
-                merged = delta.drop("__b")
-            else:
-                merged = self._merge(current, delta.drop("__b"))
-            staging = os.path.join(
-                self.table_dir, f"_staging_v={batch_id}"
-            )
-            # one partitioned write: only touched buckets exist in the
-            # delta, so only touched buckets appear under the staging dir
-            merged.withColumn("__b", bucket_of).write.mode(
-                "overwrite"
-            ).partitionBy("__b").parquet(staging)
-            import shutil
-
-            for b in touched:
-                src = os.path.join(staging, f"__b={b}")
-                dst = self._bucket_dir(b, batch_id)
-                if os.path.exists(dst):  # crashed earlier attempt
-                    shutil.rmtree(dst)
-                os.makedirs(os.path.dirname(dst), exist_ok=True)
-                os.replace(src, dst)
-            shutil.rmtree(staging, ignore_errors=True)
-            manifest = dict(prev)
-            for b in touched:
-                manifest[b] = batch_id
-            self._write_manifest(batch_id, manifest)
-            self._commit(batch_id)
-            self._prune_versions(batch_id)
+            manifest = self._load_manifest(latest) if latest is not None else {}
+            # an empty batch touches nothing: its manifest carries every
+            # bucket forward, so the replay guard still advances and no
+            # data is read or written
+            if touched:
+                current = self._read_buckets(spark, manifest, touched)
+                if current is None:
+                    merged = delta.drop("__b")
+                else:
+                    merged = self._merge(current, delta.drop("__b"))
+                staging = os.path.join(self.root, f"_staging_v={batch_id}")
+                # one partitioned write: only touched buckets exist in the
+                # delta, so only touched buckets appear under the staging dir
+                merged.withColumn("__b", bucket_of).write.mode(
+                    "overwrite"
+                ).partitionBy("__b").parquet(staging)
+                for b in touched:
+                    src = os.path.join(staging, f"__b={b}")
+                    dst = self._bucket_dir(b, batch_id)
+                    if os.path.exists(dst):  # crashed earlier attempt
+                        shutil.rmtree(dst)
+                    os.makedirs(os.path.dirname(dst), exist_ok=True)
+                    os.replace(src, dst)
+                    manifest[b] = batch_id
+                shutil.rmtree(staging, ignore_errors=True)
+            self._commit(batch_id, manifest)
         finally:
             delta.unpersist()
+
+
+def _no_rows_error(root: str, noun: str, committed: bool) -> ValueError:
+    """The refusal of a maintained table that holds no rows yet: its
+    schema is unknowable without data."""
+    if not committed:
+        return ValueError(
+            f"{root}: no committed version yet — the {noun} has not "
+            "processed a batch"
+        )
+    return ValueError(
+        f"{root}: committed only empty batches — the {noun} holds no rows "
+        "yet (schema unknowable without data)"
+    )
+
+
+def _count(field: Column) -> Column:
+    return F.count(field).cast("bigint")
+
+
+def _sum_as(dtype: str) -> Callable[[Column], Column]:
+    return lambda c: F.sum(c).cast(dtype)
+
+
+def _exact(field: Column) -> Column:
+    return field.cast("decimal(18,6)")
+
+
+def _stddev(col: Callable[[str], Column], _p) -> Column:
+    # identical formula + rounding to batch hql stddev: the merged decimal
+    # sums ARE the one-shot sums, so the read reproduces the batch answer
+    sv = col("sum").cast("double")
+    svv = col("sumsq").cast("double")
+    cnt = col("cnt")
+    return F.round(F.sqrt((svv - sv * sv / cnt) / (cnt - F.lit(1))), 4)
+
+
+class _Agg(NamedTuple):
+    """One mergeable aggregate kind. ``parts``: its stored columns, each
+    ``(suffix, partial over the input field, merge over the stored
+    column)`` — suffix None stores under the alias itself, any other as
+    the hidden ``__<alias>_<suffix>``. ``read(col, p)``: the visible
+    column from the stored ones (``col(suffix)``) and the percentile."""
+
+    parts: tuple
+    read: Callable
+
+
+def _plain(col: Callable, _p) -> Column:
+    return col(None)
+
+
+_AGGS: dict[str, _Agg] = {
+    "count": _Agg(((None, _count, _sum_as("bigint")),), _plain),
+    "sum": _Agg(((None, lambda f: F.sum(f.cast("double")), F.sum),), _plain),
+    "min": _Agg(((None, F.min, F.min),), _plain),
+    "max": _Agg(((None, F.max, F.max),), _plain),
+    # exact mergeable sufficient statistics, divided at read
+    "avg": _Agg(
+        (
+            ("sum", lambda f: F.sum(f.cast("double")), F.sum),
+            ("cnt", _count, _sum_as("bigint")),
+        ),
+        lambda col, _p: col("sum") / col("cnt").cast("double"),
+    ),
+    # the SAME exact-decimal sufficient statistics batch hql stddev uses
+    # (count, sum, sum-of-squares over DECIMAL(18,6)): integer-exact under
+    # any partitioning AND any batch boundary, combined at read
+    "stddev": _Agg(
+        (
+            ("cnt", _count, _sum_as("bigint")),
+            (
+                "sum",
+                lambda f: F.sum(_exact(f)).cast("decimal(38,6)"),
+                _sum_as("decimal(38,6)"),
+            ),
+            (
+                "sumsq",
+                lambda f: F.sum(_exact(f) * _exact(f)).cast("decimal(38,12)"),
+                _sum_as("decimal(38,12)"),
+            ),
+        ),
+        _stddev,
+    ),
+    # DataSketches HLL: the sketch union IS the merge
+    "approxDistinct": _Agg(
+        (("hll", lambda f: F.hll_sketch_agg(f.cast("string")), F.hll_union_agg),),
+        lambda col, _p: F.hll_sketch_estimate(col("hll")).cast("bigint"),
+    ),
+    # DataSketches KLL: the sketch merge IS the merge
+    "approxPercentile": _Agg(
+        (
+            (
+                "kll",
+                lambda f: F.kll_sketch_agg_double(f.cast("double")),
+                F.kll_merge_agg_double,
+            ),
+        ),
+        lambda col, p: F.round(
+            F.kll_sketch_get_quantile_double(col("kll"), F.lit(p / 100.0)), 4
+        ),
+    ),
+}
+
+
+def _stored_name(alias: str, suffix: str | None) -> str:
+    return alias if suffix is None else f"__{alias}_{suffix}"
+
+
+def _stored_col(alias: str, suffix: str | None) -> Column:
+    return F.col(_stored_name(alias, suffix))
 
 
 class MaterializedHqlSearch(IncrementalRollup):
     """A saved HQL search maintained as a LIVE TABLE — the dashboard half
     of the reference's delegated workflow (alerts fire, dashboards read a
     current aggregate). The pipe must end in a ``groupBy`` whose
-    aggregates are MERGEABLE (count without distinct, sum, min, max):
-    each micro-batch contributes a pre-aggregated delta (map-side
-    partials; raw events never reach the merge), merged into the current
-    version with the aggregate's own merge function (sum-of-counts,
-    sum-of-sums, min-of-mins, max-of-maxes). Sharded bucket versions,
-    manifest commits and replay skipping are inherited — exactly-once
-    under micro-batch replay, rewrite cost O(touched buckets), same as
-    IncrementalRollup.
+    aggregates are MERGEABLE (one ``_AGGS`` entry each): each micro-batch
+    contributes a pre-aggregated delta (map-side partials; raw events
+    never reach the merge), merged into the current version with the
+    aggregate's own merge function (sum-of-counts, sum-of-sums,
+    min-of-mins, max-of-maxes). Sharded bucket versions, manifest commits
+    and replay skipping are inherited — exactly-once under micro-batch
+    replay, rewrite cost O(touched buckets), same as IncrementalRollup.
 
     ``avg`` is maintained EXACTLY via its mergeable sufficient
     statistics — hidden ``__<alias>_sum`` / ``__<alias>_cnt`` columns in
     the stored table, divided (and hidden) at read time.
-    ``stddev`` is maintained the same way (VERDICT r6 #6): hidden
-    count / sum / sum-of-squares columns in EXACT DECIMAL — the same
-    statistics the batch ``stddev`` aggregate computes (hql.py), so the
-    decimal partials merge associatively across versions and the read
-    formula reproduces the one-shot batch answer EXACTLY, independent
-    of batch boundaries.
+    ``stddev`` is maintained the same way: hidden count / sum /
+    sum-of-squares columns in EXACT DECIMAL — the same statistics the
+    batch ``stddev`` aggregate computes (hql.py), so the decimal partials
+    merge associatively across versions and the read formula reproduces
+    the one-shot batch answer EXACTLY, independent of batch boundaries.
     ``approxDistinct`` is maintained via a mergeable HLL sketch (Spark's
     DataSketches ``hll_sketch_agg`` / ``hll_union_agg``; the stored
     column is the binary sketch, estimated at read) — the EXPLICIT
@@ -355,10 +371,10 @@ class MaterializedHqlSearch(IncrementalRollup):
     ``approxPercentile(field, p=95)`` is maintained via a mergeable
     DataSketches KLL quantile sketch (``kll_sketch_agg_double`` per
     delta, ``kll_merge_agg_double`` across versions, quantile extracted
-    at read) — the p95-latency-dashboard path (VERDICT r5 #4): exact
-    while the sketch holds all values (n <= k = 200 per group), ~1.65%
-    rank error beyond, and identical to the batch ``approxPercentile``
-    spelling which uses the same sketch.
+    at read) — the p95-latency-dashboard path: exact while the sketch
+    holds all values (n <= k = 200 per group), ~1.65% rank error beyond,
+    and identical to the batch ``approxPercentile`` spelling which uses
+    the same sketch.
 
     Genuinely non-mergeable aggregates (EXACT percentile, EXACT
     count distinct) are REFUSED loudly at construction: silently
@@ -381,10 +397,8 @@ class MaterializedHqlSearch(IncrementalRollup):
         keep_versions: int = 2,
         n_buckets: int = 16,
     ):
-        from cses2humio_spark.hql import Call, parse
+        from cses2humio_spark.hql import Call, _approx_percentile_p, parse
 
-        if keep_versions < 1:
-            raise ValueError(f"keep_versions must be >= 1, got {keep_versions}")
         stages = parse(query)
         if not stages or not (
             isinstance(stages[-1], Call) and stages[-1].name == "groupBy"
@@ -399,44 +413,12 @@ class MaterializedHqlSearch(IncrementalRollup):
             raise ValueError("MaterializedHqlSearch: groupBy needs key fields")
         funcs = gb.kwargs.get("function", Call("count"))
         funcs = funcs if isinstance(funcs, list) else [funcs]
-        specs: list[tuple[str, str | None, str]] = []
-        self._pcts: dict[str, float] = {}  # alias -> percentile (0..100)
+        # (kind, field or None, alias, percentile or None)
+        specs: list[tuple[str, str | None, str, float | None]] = []
         for c in funcs:
             if not isinstance(c, Call):
                 raise ValueError("groupBy function= entries must be aggs")
-            if c.name == "count":
-                if str(c.kwargs.get("distinct", "false")).lower() == "true":
-                    raise ValueError(
-                        "EXACT count(distinct=true) is not mergeable "
-                        "across batches — use approxDistinct(field) to "
-                        "opt into the mergeable HLL-sketch estimate"
-                    )
-                specs.append(("count", c.args[0] if c.args else None,
-                              c.kwargs.get("as") or "_count"))
-            elif c.name in (
-                "sum", "min", "max", "avg", "stddev", "approxDistinct"
-            ):
-                if not c.args:
-                    raise ValueError(f"{c.name}() needs a field")
-                default_alias = (
-                    "_approxdistinct" if c.name == "approxDistinct"
-                    else f"_{c.name}"
-                )
-                specs.append(
-                    (c.name, c.args[0], c.kwargs.get("as") or default_alias)
-                )
-            elif c.name == "approxPercentile":
-                from cses2humio_spark.hql import _approx_percentile_p
-
-                if not c.args:
-                    raise ValueError("approxPercentile() needs a field")
-                p = _approx_percentile_p(c)
-                alias = c.kwargs.get("as") or (
-                    "_ap" + format(p, "g").replace(".", "_")
-                )
-                specs.append(("approxPercentile", c.args[0], alias))
-                self._pcts[alias] = p
-            else:
+            if c.name not in _AGGS:
                 raise ValueError(
                     f"aggregate {c.name!r} is not mergeable across "
                     "micro-batches (mergeable: count/sum/min/max/avg/"
@@ -444,18 +426,38 @@ class MaterializedHqlSearch(IncrementalRollup):
                     "approx spellings are the explicit opt-in to a "
                     "mergeable sketch estimate)"
                 )
-        aliases = [a for _, _, a in specs]
+            if c.name == "count":
+                if str(c.kwargs.get("distinct", "false")).lower() == "true":
+                    raise ValueError(
+                        "EXACT count(distinct=true) is not mergeable "
+                        "across batches — use approxDistinct(field) to "
+                        "opt into the mergeable HLL-sketch estimate"
+                    )
+            elif not c.args:
+                raise ValueError(f"{c.name}() needs a field")
+            p, default_alias = None, f"_{c.name.lower()}"
+            if c.name == "approxPercentile":
+                p = _approx_percentile_p(c)
+                default_alias = "_ap" + format(p, "g").replace(".", "_")
+            specs.append(
+                (
+                    c.name,
+                    c.args[0] if c.args else None,
+                    c.kwargs.get("as") or default_alias,
+                    p,
+                )
+            )
+        aliases = [a for _, _, a, _ in specs]
         if len(set(aliases)) != len(aliases):
             raise ValueError(
                 f"duplicate aggregate aliases {aliases} — use as= to "
                 "disambiguate"
             )
-        self.keep_versions = keep_versions
         self._prefix = stages[:-1]
         self._keys = [str(k) for k in keys]
         self._specs = specs
         self._tables = tables or {}
-        self._init_table(table_dir, n_buckets)
+        self._open(table_dir, keep_versions, n_buckets)
 
     def _key_cols(self) -> list[str]:
         return self._keys
@@ -466,170 +468,42 @@ class MaterializedHqlSearch(IncrementalRollup):
         df = batch_df
         for st in self._prefix:
             df = _compile_stage(df, st, self._tables, root=batch_df)
-        aggs = []
-        for kind, field, alias in self._specs:
-            if kind == "count":
-                aggs.append(
-                    (F.count(F.col(field)) if field else F.count(F.lit(1)))
-                    .cast("bigint")
-                    .alias(alias)
+        return df.groupBy(*[F.col(k) for k in self._keys]).agg(
+            *[
+                part(F.col(field) if field else F.lit(1)).alias(
+                    _stored_name(alias, suffix)
                 )
-            elif kind == "sum":
-                aggs.append(F.sum(F.col(field).cast("double")).alias(alias))
-            elif kind in ("min", "max"):
-                aggs.append(getattr(F, kind)(F.col(field)).alias(alias))
-            elif kind == "avg":
-                # exact mergeable sufficient statistics, divided at read
-                aggs.append(
-                    F.sum(F.col(field).cast("double")).alias(
-                        f"__{alias}_sum"
-                    )
-                )
-                aggs.append(
-                    F.count(F.col(field)).cast("bigint").alias(
-                        f"__{alias}_cnt"
-                    )
-                )
-            elif kind == "stddev":
-                # the SAME exact-decimal sufficient statistics batch hql
-                # stddev uses (count, sum, sum-of-squares over
-                # DECIMAL(18,6)): integer-exact under any partitioning
-                # AND any batch boundary, combined at read
-                v = F.col(field).cast("decimal(18,6)")
-                aggs.append(
-                    F.count(F.col(field)).cast("bigint").alias(
-                        f"__{alias}_cnt"
-                    )
-                )
-                aggs.append(
-                    F.sum(v).cast("decimal(38,6)").alias(f"__{alias}_sum")
-                )
-                aggs.append(
-                    F.sum(v * v).cast("decimal(38,12)").alias(
-                        f"__{alias}_sumsq"
-                    )
-                )
-            elif kind == "approxDistinct":  # mergeable DataSketches HLL
-                aggs.append(
-                    F.hll_sketch_agg(F.col(field).cast("string")).alias(
-                        f"__{alias}_hll"
-                    )
-                )
-            else:  # approxPercentile: mergeable DataSketches KLL
-                aggs.append(
-                    F.kll_sketch_agg_double(
-                        F.col(field).cast("double")
-                    ).alias(f"__{alias}_kll")
-                )
-        return df.groupBy(*[F.col(k) for k in self._keys]).agg(*aggs)
+                for kind, field, alias, _p in self._specs
+                for suffix, part, _merge in _AGGS[kind].parts
+            ]
+        )
 
     def _merge(self, current: DataFrame, delta: DataFrame) -> DataFrame:
-        aggs = []
-        for kind, _f, alias in self._specs:
-            if kind == "count":
-                aggs.append(F.sum(alias).cast("bigint").alias(alias))
-            elif kind == "sum":
-                aggs.append(F.sum(alias).alias(alias))
-            elif kind in ("min", "max"):
-                aggs.append(getattr(F, kind)(alias).alias(alias))
-            elif kind == "avg":
-                aggs.append(
-                    F.sum(f"__{alias}_sum").alias(f"__{alias}_sum")
-                )
-                aggs.append(
-                    F.sum(f"__{alias}_cnt").cast("bigint").alias(
-                        f"__{alias}_cnt"
-                    )
-                )
-            elif kind == "stddev":  # decimal partial sums add exactly
-                aggs.append(
-                    F.sum(f"__{alias}_cnt").cast("bigint").alias(
-                        f"__{alias}_cnt"
-                    )
-                )
-                aggs.append(
-                    F.sum(f"__{alias}_sum")
-                    .cast("decimal(38,6)")
-                    .alias(f"__{alias}_sum")
-                )
-                aggs.append(
-                    F.sum(f"__{alias}_sumsq")
-                    .cast("decimal(38,12)")
-                    .alias(f"__{alias}_sumsq")
-                )
-            elif kind == "approxDistinct":  # sketch union IS the merge
-                aggs.append(
-                    F.hll_union_agg(f"__{alias}_hll").alias(
-                        f"__{alias}_hll"
-                    )
-                )
-            else:  # approxPercentile: KLL merge IS the merge function
-                aggs.append(
-                    F.kll_merge_agg_double(f"__{alias}_kll").alias(
-                        f"__{alias}_kll"
-                    )
-                )
         return current.unionByName(delta).groupBy(
             *[F.col(k) for k in self._keys]
-        ).agg(*aggs)
+        ).agg(
+            *[
+                merge(_stored_col(alias, suffix)).alias(
+                    _stored_name(alias, suffix)
+                )
+                for kind, _f, alias, _p in self._specs
+                for suffix, _part, merge in _AGGS[kind].parts
+            ]
+        )
 
-    def read(self, spark: SparkSession, version: int | None = None) -> DataFrame:
-        """Current search results — or the state as of ``version=``
-        (time travel over the retained manifest window)."""
-        at = self._resolve_version(version)
-        if at is None:
-            raise ValueError(
-                f"{self.table_dir}: no committed version yet — the search "
-                "has not processed a batch"
-            )
-        manifest = self._load_manifest(at)
-        if not manifest:
-            raise ValueError(
-                f"{self.table_dir}: committed only empty batches — the "
-                "search holds no rows yet (schema unknowable without data)"
-            )
-        paths = [self._bucket_dir(b, v) for b, v in sorted(manifest.items())]
-        stored = spark.read.parquet(*paths)
-        cols = [F.col(k) for k in self._keys]
-        for kind, _f, alias in self._specs:
-            if kind == "avg":
-                cols.append(
-                    (
-                        F.col(f"__{alias}_sum")
-                        / F.col(f"__{alias}_cnt").cast("double")
-                    ).alias(alias)
-                )
-            elif kind == "stddev":
-                # identical formula + rounding to batch hql stddev: the
-                # merged decimal sums ARE the one-shot sums, so the read
-                # reproduces the batch answer exactly
-                sv = F.col(f"__{alias}_sum").cast("double")
-                svv = F.col(f"__{alias}_sumsq").cast("double")
-                cnt = F.col(f"__{alias}_cnt")
-                cols.append(
-                    F.round(
-                        F.sqrt((svv - sv * sv / cnt) / (cnt - F.lit(1))), 4
-                    ).alias(alias)
-                )
-            elif kind == "approxDistinct":
-                cols.append(
-                    F.hll_sketch_estimate(F.col(f"__{alias}_hll"))
-                    .cast("bigint")
-                    .alias(alias)
-                )
-            elif kind == "approxPercentile":
-                cols.append(
-                    F.round(
-                        F.kll_sketch_get_quantile_double(
-                            F.col(f"__{alias}_kll"),
-                            F.lit(self._pcts[alias] / 100.0),
-                        ),
-                        4,
-                    ).alias(alias)
-                )
-            else:
-                cols.append(F.col(alias))
-        return stored.select(*cols)
+    def _finish(self, stored: DataFrame) -> DataFrame:
+        """The visible columns: keys, then each aggregate read from its
+        stored partials (the hidden columns stay hidden)."""
+        return stored.select(
+            *[F.col(k) for k in self._keys],
+            *[
+                _AGGS[kind].read(partial(_stored_col, alias), p).alias(alias)
+                for kind, _f, alias, p in self._specs
+            ],
+        )
+
+    def _no_rows(self, spark: SparkSession, committed: bool) -> DataFrame:
+        raise _no_rows_error(self.root, "search", committed)
 
 
 class KeyedUpsertTable(IncrementalRollup):
@@ -663,8 +537,6 @@ class KeyedUpsertTable(IncrementalRollup):
         keep_versions: int = 2,
         n_buckets: int = 16,
     ):
-        if keep_versions < 1:
-            raise ValueError(f"keep_versions must be >= 1, got {keep_versions}")
         self.key_cols = [key_cols] if isinstance(key_cols, str) else list(key_cols)
         if not self.key_cols:
             raise ValueError("KeyedUpsertTable needs at least one key column")
@@ -676,8 +548,7 @@ class KeyedUpsertTable(IncrementalRollup):
         )
         if overlap:
             raise ValueError(f"columns listed twice: {sorted(overlap)}")
-        self.keep_versions = keep_versions
-        self._init_table(table_dir, n_buckets)
+        self._open(table_dir, keep_versions, n_buckets)
 
     def _key_cols(self) -> list[str]:
         return self.key_cols
@@ -707,27 +578,15 @@ class KeyedUpsertTable(IncrementalRollup):
     def _merge(self, current: DataFrame, delta: DataFrame) -> DataFrame:
         return self._latest(current.unionByName(delta))
 
-    def read(self, spark: SparkSession, version: int | None = None) -> DataFrame:
-        """Current table state (or ``version=`` time travel): one row
-        per live key — keys whose latest version is a tombstone are
-        hidden (their history is still merged, so a later resurrect
+    def _finish(self, stored: DataFrame) -> DataFrame:
+        """One row per live key: keys whose latest version is a tombstone
+        are hidden (their history is still merged, so a later resurrect
         wins correctly)."""
-        at = self._resolve_version(version)
-        if at is None:
-            raise ValueError(
-                f"{self.table_dir}: no committed version yet — the table "
-                "has not processed a batch"
-            )
-        manifest = self._load_manifest(at)
-        if not manifest:
-            raise ValueError(
-                f"{self.table_dir}: committed only empty batches — the "
-                "table holds no rows yet (schema unknowable without data)"
-            )
-        paths = [self._bucket_dir(b, v) for b, v in sorted(manifest.items())]
-        stored = spark.read.parquet(*paths)
         if self.tombstone_col:
             stored = stored.filter(
                 ~F.coalesce(F.col(self.tombstone_col), F.lit(False))
             ).drop(self.tombstone_col)
         return stored
+
+    def _no_rows(self, spark: SparkSession, committed: bool) -> DataFrame:
+        raise _no_rows_error(self.root, "table", committed)

@@ -353,3 +353,66 @@ def test_admit_and_ingest_takes_admit_batch_arguments(
     with pytest.raises(ValueError, match="max_bucket_size must be >= 1"):
         idx.admit_and_ingest(rows(20, 30), 0, rows(0, 30), 0.5, 0)
     assert idx._load_manifest(idx.latest_version())["last_batch_id"] == -1
+
+
+# -- the shared transaction core ------------------------------------------------
+
+
+def _rollup_case(spark, d):
+    from cses2humio_spark.streaming.materialized import IncrementalRollup
+
+    table = IncrementalRollup(
+        d, key_col="uid", value_col="v", key_type="bigint", n_buckets=4
+    )
+    batch = spark.createDataFrame(
+        [(1, 2.0), (2, 3.0), (1, 4.0)], "uid bigint, v double"
+    )
+    return table, batch, lambda t: _sorted(t.read(spark))
+
+
+def _minhash_case(spark, d):
+    docs = load_table(spark, SF_SMALL, "documents")
+    table = MinHashIndex(d)
+    table.build(docs.filter(F.col("doc_id") < 20))
+    batch = docs.filter((F.col("doc_id") >= 20) & (F.col("doc_id") < 30))
+    return table, batch, lambda t: _sorted(t.read_signatures(spark))
+
+
+@pytest.mark.parametrize("case", [_rollup_case, _minhash_case], ids=["rollup", "minhash"])
+def test_crash_at_pointer_switch_then_replay_applies_once(
+    spark, case, tmp_path, monkeypatch
+):
+    """A commit that dies at the pointer switch — data and manifest
+    already written, ``_LATEST`` not moved — leaves the prior version
+    committed. Replaying the same batch id applies it exactly once,
+    lists each version once, and leaves no staging dir behind."""
+    table, batch, read = case(spark, str(tmp_path / "t"))
+    ref, _, _ = case(spark, str(tmp_path / "ref"))
+    ref(batch, 0)
+    prior = table.latest_version()
+
+    switch = table._switch_pointer
+
+    def crash(version):
+        monkeypatch.setattr(table, "_switch_pointer", switch)  # once only
+        raise RuntimeError("injected crash at pointer switch")
+
+    monkeypatch.setattr(table, "_switch_pointer", crash)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        table(batch, 0)
+    assert table.latest_version() == prior
+    orphan = ref.latest_version()
+    assert os.path.exists(table._manifest_path(orphan))
+
+    table(batch, 0)  # the replay after restart
+    assert table.latest_version() == orphan
+    assert read(table) == read(ref)
+    assert table.versions() == ref.versions()
+    assert len(set(table.versions())) == len(table.versions())
+    left = [
+        name
+        for _root, dirs, _files in os.walk(table.root)
+        for name in dirs
+        if name.endswith(".staging") or name.startswith("_staging_v=")
+    ]
+    assert left == []

@@ -56,6 +56,20 @@ def test_minhash_join_is_equi_not_cross(spark):
     assert_no_cartesian(df)
 
 
+def test_minhash_candidates_signs_each_document_once(spark):
+    """The bucket-cap stats and both sides of the bucket self-join read
+    one signature shuffle, so the executed plan (AQE off: exchange reuse
+    is decided statically) holds exactly one signature posexplode."""
+    prev = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        df = QUERIES["minhash_candidates"](spark, SF_SMALL)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", prev)
+    assert plan.count("Generate posexplode") == 1, plan
+
+
 def test_range_join_keeps_equi_anchor(spark):
     df = QUERIES["events_range_self_join"](spark, SF_SMALL)
     assert_no_cartesian(df)
