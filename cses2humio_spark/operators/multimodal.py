@@ -2,11 +2,32 @@
 ``binary`` payloads with typed metadata, processed via Arrow-batched
 ``mapInPandas``.
 
-The container has no image/audio libraries, so the *decode* step is stubbed
-(``decode_media`` raises NotImplementedError for real codecs; a
-deterministic byte-level "decode" stands in for tests/oracles). Everything
-Spark-side — schema, partitioning, UDF signature, Arrow batch shape — is
-real and is exactly what a production decode would plug into.
+Every format below is decoded for real from its bytes, with numpy and the
+standard library only: PPM/PGM, BMP, TGA, PNG (zlib), GIF (LZW), PCX
+(RLE), TIFF, QOI, JPEG (baseline, color, 4:2:0/4:2:2, progressive,
+successive approximation), PCM16 WAV, and RIFF/AVI Motion-JPEG with an
+interleaved PCM audio track. Each synthesizer writes valid files from a
+closed-form formula, so the DuckDB oracles restate the decoded statistics
+from the formula without touching bytes. ``decode_media``/``resize_media``
+are generic byte-level plumbing over ``synthesize_media``'s UTF-8 payloads.
+Inter-frame video codecs (H.264, VP9) are not implemented.
+
+One harness per direction holds the only two ``mapInPandas`` bodies:
+``_synthesize(docs, encode)`` calls a per-document ``encode(doc_id) ->
+bytes`` and ``_decode(media, decode, schema)`` a per-payload ``decode(
+doc_id, buf)``. A format supplies only its byte parsing or encoding and
+its validation; malformed payloads raise (a corrupt blob is a data bug,
+not a row to drop silently).
+
+Shipping rule: Python workers cannot import ``cses2humio_spark`` (a
+Spark application may start from any directory), so everything a worker
+runs must be pickled BY VALUE — a nested def, or a closure returned by a
+``_make_*`` factory. A plain module-level def called from a worker
+closure is pickled by reference and fails on the worker with
+``ModuleNotFoundError``.
+Modules (numpy, struct, zlib) are re-imported on the worker and are safe
+to reference. ``tests/test_multimodal.py`` loads every worker closure with
+the package made unimportable.
 
 Scale notes:
 - Payloads are the widest column by far; ``repartition_for_media`` spreads
@@ -20,11 +41,16 @@ Scale notes:
 
 from __future__ import annotations
 
+import struct
+import zlib
+from collections import namedtuple
 from collections.abc import Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, StructType
 
 MEDIA_SCHEMA = (
     "doc_id bigint, media_type string, payload binary, "
@@ -35,6 +61,73 @@ FEATURE_SCHEMA = (
     "doc_id bigint, media_type string, n_bytes bigint, n_chars bigint, "
     "first_code bigint, char_checksum bigint"
 )
+
+
+def _synthesize(docs: DataFrame, encode) -> DataFrame:
+    """(doc_id, payload binary): ``encode(doc_id) -> bytes`` for every
+    document of ``docs`` — the one synthesizer ``mapInPandas`` body."""
+
+    def _gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            payloads = [encode(int(d)) for d in pdf["doc_id"]]
+            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
+
+    return docs.select("doc_id").mapInPandas(_gen, "doc_id bigint, payload binary")
+
+
+def _decode(media: DataFrame, decode, schema: str) -> DataFrame:
+    """``schema``'s columns from ``decode(doc_id, buf)`` over every
+    (doc_id, payload) of ``media`` — the one decoder ``mapInPandas`` body.
+
+    ``decode`` returns one row dict, or a list of them (one per frame). A
+    row's ``pixels`` entry, an (h, w) or (h, w, 3) integer array in image
+    order (top row first, RGB), becomes the standard image statistics the
+    schema names: ``mean_r``/``mean_g``/``mean_b`` (one-channel images:
+    ``mean_px`` or ``mean_gray``), ``top_row_sum`` (the top row's byte sum,
+    which catches a forgotten row flip — means alone are flip-invariant)
+    and ``byte_checksum`` (all pixel bytes, mod 1e9). Schema columns a row
+    does not set pass through from ``media`` (``doc_id``, ``media_type``).
+
+    Every ``double`` column is rounded to 6 places here, in SQL: ``ROUND``
+    rounds half-up like DuckDB's, which every oracle pins, while Python's
+    ``round()`` rounds half-to-even."""
+    fields = StructType.fromDDL(schema).fields
+    names = [f.name for f in fields]
+    carried = [c for c in names if c in media.columns and c != "payload"]
+
+    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        def image_stats(pixels) -> dict:
+            img = np.asarray(pixels, dtype=np.int64)
+            stats = {
+                "top_row_sum": int(img[0].sum()),
+                "byte_checksum": int(img.sum()) % 10**9,
+            }
+            if img.ndim == 3:
+                for c, name in enumerate(("mean_r", "mean_g", "mean_b")):
+                    stats[name] = float(img[:, :, c].mean())
+            else:
+                stats["mean_px"] = stats["mean_gray"] = float(img.mean())
+            return stats
+
+        for pdf in batches:
+            rows = []
+            for i, (d, b) in enumerate(zip(pdf["doc_id"], pdf["payload"])):
+                got = decode(int(d), bytes(b))
+                for row in [got] if isinstance(got, dict) else got:
+                    if "pixels" in row:
+                        row.update(image_stats(row.pop("pixels")))
+                    for c in carried:
+                        if c not in row:
+                            row[c] = pdf[c].iat[i]
+                    rows.append(row)
+            yield pd.DataFrame(rows, columns=names)
+
+    out = media.mapInPandas(_run, schema)
+    return out.select(*[
+        F.round(f.name, 6).alias(f.name)
+        if isinstance(f.dataType, DoubleType) else f.name
+        for f in fields
+    ])
 
 
 def synthesize_media(docs: DataFrame) -> DataFrame:
@@ -63,37 +156,21 @@ def repartition_for_media(df: DataFrame, n: int | None = None) -> DataFrame:
     return df.repartition(n, "doc_id") if n else df.repartition("doc_id")
 
 
-def decode_media(df: DataFrame, codec: str = "fake/v1") -> DataFrame:
-    """Decode/feature-extract via mapInPandas. Real codecs are not
-    available in this environment -> NotImplementedError, exactly where a
-    PIL/ffmpeg call would slot in. The 'fake/v1' codec byte-decodes
-    deterministically so the full Spark plumbing is testable."""
-    if codec != "fake/v1":
-        raise NotImplementedError(
-            f"codec {codec!r} requires image/audio libs not present in this "
-            "container; plug a real decoder into _decode_batches"
-        )
+def decode_media(df: DataFrame) -> DataFrame:
+    """Byte-level features of ``synthesize_media`` payloads (UTF-8 text
+    standing in for an opaque blob): byte and character counts, first
+    code point, code-point checksum mod 997."""
 
-    # Self-contained executor closure (no module globals — see sinks.py).
-    def _decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pandas as _pd
+    def decode(_d, buf):
+        text = buf.decode("utf-8")
+        return {
+            "n_bytes": len(buf),
+            "n_chars": len(text),
+            "first_code": ord(text[0]) if text else -1,
+            "char_checksum": sum(ord(c) for c in text) % 997,
+        }
 
-        for pdf in batches:
-            payloads = pdf["payload"]
-            texts = [bytes(b).decode("utf-8") for b in payloads]
-            out = _pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "media_type": pdf["media_type"],
-                    "n_bytes": [len(bytes(b)) for b in payloads],
-                    "n_chars": [len(t) for t in texts],
-                    "first_code": [ord(t[0]) if t else -1 for t in texts],
-                    "char_checksum": [sum(ord(c) for c in t) % 997 for t in texts],
-                }
-            )
-            yield out
-
-    return df.mapInPandas(_decode_batches, schema=FEATURE_SCHEMA)
+    return _decode(df, decode, FEATURE_SCHEMA)
 
 
 def frame_sample(df: DataFrame, every_n_bytes: int = 64) -> DataFrame:
@@ -128,39 +205,72 @@ def resize_media(df: DataFrame, factor: int = 4) -> DataFrame:
     if factor < 1:
         raise ValueError(f"factor must be >= 1, got {factor}")
 
-    def _resize_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pandas as _pd
+    def decode(_d, buf):
+        resized = buf[::factor]
+        meta = {"n_bytes": len(resized), "codec": "fake/v1", "scale": factor}
+        return {"payload": resized, "meta": meta}
 
-        for pdf in batches:
-            resized = [bytes(bytes(b)[::factor]) for b in pdf["payload"]]
-            yield _pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "media_type": pdf["media_type"],
-                    "payload": resized,
-                    "meta": [
-                        {"n_bytes": len(r), "codec": "fake/v1", "scale": factor}
-                        for r in resized
-                    ],
-                }
-            )
-
-    return df.mapInPandas(_resize_batches, schema=RESIZED_SCHEMA)
+    return _decode(df, decode, RESIZED_SCHEMA)
 
 
-# ---- real binary decoders (no codec libs needed) -------------------------
+# ---- closed-form test content shared by the synthesizers ------------------
+
+
+def _make_test_patterns():
+    """Factory for the synthesizers' closed-form content (shipped by value,
+    see the module docstring)."""
+
+    def test_image(d, w, h):
+        """(h, w, 3) uint8 test image of document ``d``: channel 0 at
+        (x, y), y = 0 the top row, is (3*d + 5*x + 7*y) % 256; channels 1
+        and 2 add 11 and 22 (mod 256)."""
+        x = np.arange(w, dtype=np.int64)[None, :]
+        y = np.arange(h, dtype=np.int64)[:, None]
+        base = 3 * d + 5 * x + 7 * y
+        return np.stack(
+            [base % 256, (base + 11) % 256, (base + 22) % 256], axis=2
+        ).astype(np.uint8)
+
+    def dc_block(v):
+        """Quantized 8x8 JPEG block whose IDCT is the constant ``v``: a
+        constant block is DC-only (DC = 8*(v-128), integral), which keeps
+        the lossy codec exact under all-ones quant tables."""
+        blk = [[0] * 8 for _ in range(8)]
+        blk[0][0] = 8 * (v - 128)
+        return blk
+
+    def gray_blocks(d, f=0):
+        """(blocks, w, h) of gray JPEG frame ``f`` of document ``d``: block
+        (bx, by) is constant (3*d + 17*bx + 29*by + 41*f) % 256, w =
+        8*(1 + d mod 3), h = 8*(1 + d mod 2)."""
+        bw, bh = 1 + d % 3, 1 + d % 2
+        blocks = [
+            dc_block((3 * d + 17 * bx + 29 * by + 41 * f) % 256)
+            for by in range(bh)
+            for bx in range(bw)
+        ]
+        return blocks, bw * 8, bh * 8
+
+    def pcm16(d, start, n):
+        """PCM16-LE bytes of samples j in [start, start + n) of document
+        ``d``: ((31*d + 17*j) mod 65536) - 32768."""
+        j = np.arange(start, start + n, dtype=np.int64)
+        return (((31 * d + 17 * j) % 65536) - 32768).astype("<i2").tobytes()
+
+    return test_image, dc_block, gray_blocks, pcm16
+
+
+_test_image, _dc_block, _gray_blocks, _pcm16 = _make_test_patterns()
+
+# palette[i] = (i, i+11, i+22) mod 256: indexing it with channel 0 of
+# _test_image reproduces the whole test image
+_TEST_PALETTE = b"".join(bytes((i, (i + 11) % 256, (i + 22) % 256)) for i in range(256))
+
+
+# ---- PNM, WAV and the VID0 container --------------------------------------
 #
-# PPM (P6) images and PCM WAV audio are pure-bytes formats: header + raw
-# sample array. Decoding them needs only numpy, so for these two the decode
-# step is REAL — header parsing, payload validation, array reshape, feature
-# math — not the 'fake/v1' byte stand-in above. Payloads are synthesized
-# from a closed-form generative formula (byte j of doc d is a linear
-# congruence), which is what makes the decoded statistics independently
-# checkable: the DuckDB oracle recomputes the expected means/RMS from the
-# formula with generate_series, never touching the binary. Baseline
-# grayscale JPEG is now decoded for real (see _make_jpeg_codec below);
-# the remaining NotImplementedError seam is color/progressive JPEG and
-# inter-frame video (H.264/...), which genuinely need external codecs.
+# PPM (P6), PGM (P5) and PCM WAV are header + raw sample array; VID0 is a
+# toy container of concatenated P6 frames.
 
 PPM_FEATURES_SCHEMA = (
     "doc_id bigint, width bigint, height bigint, "
@@ -177,22 +287,13 @@ def synthesize_ppm_media(docs: DataFrame) -> DataFrame:
     header (with a comment line, exercising the parser) + w*h*3 pixel
     bytes, byte j = (7*doc_id + 13*j) mod 256."""
 
-    def _gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as _np
-        import pandas as _pd
+    def encode(d):
+        w, h = 8 + d % 8, 6 + d % 5
+        j = np.arange(w * h * 3, dtype=np.int64)
+        px = ((7 * d + 13 * j) % 256).astype(np.uint8)
+        return f"P6\n# synth doc {d}\n{w} {h}\n255\n".encode() + px.tobytes()
 
-        for pdf in batches:
-            payloads = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                w, h = 8 + d % 8, 6 + d % 5
-                header = f"P6\n# synth doc {d}\n{w} {h}\n255\n".encode()
-                j = _np.arange(w * h * 3, dtype=_np.int64)
-                px = ((7 * d + 13 * j) % 256).astype(_np.uint8)
-                payloads.append(header + px.tobytes())
-            yield _pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    return docs.select("doc_id").mapInPandas(_gen, "doc_id bigint, payload binary")
+    return _synthesize(docs, encode)
 
 
 def _make_ppm_header_parser():
@@ -237,55 +338,18 @@ parse_ppm_header = _make_ppm_header_parser()
 def decode_ppm(media: DataFrame) -> DataFrame:
     """REAL P6 decode via mapInPandas: parse the ASCII header (magic,
     comment lines, dims, maxval), validate payload length, reshape to
-    (h, w, 3), emit per-channel means + a byte checksum. Malformed
-    payloads raise — a corrupt blob is a data bug, not a row to drop
-    silently."""
+    (h, w, 3), emit per-channel means + a byte checksum."""
 
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as _np
-        import pandas as _pd
+    def decode(_d, buf):
+        w, h, maxval, data_at = parse_ppm_header(buf)
+        if maxval != 255:
+            raise ValueError(f"unsupported maxval {maxval}")
+        px = np.frombuffer(buf, dtype=np.uint8, offset=data_at)
+        if px.size != w * h * 3:
+            raise ValueError(f"payload holds {px.size} bytes, header says {w*h*3}")
+        return {"width": w, "height": h, "pixels": px.reshape(h, w, 3)}
 
-        parse_header = parse_ppm_header
-
-        for pdf in batches:
-            rows = {k: [] for k in
-                    ("doc_id", "width", "height", "mean_r", "mean_g", "mean_b",
-                     "byte_checksum")}
-            for d, b in zip(pdf["doc_id"], pdf["payload"]):
-                buf = bytes(b)
-                w, h, maxval, data_at = parse_header(buf)
-                if maxval != 255:
-                    raise ValueError(f"unsupported maxval {maxval}")
-                px = _np.frombuffer(buf, dtype=_np.uint8, offset=data_at)
-                if px.size != w * h * 3:
-                    raise ValueError(
-                        f"payload holds {px.size} bytes, header says {w*h*3}"
-                    )
-                img = px.reshape(h, w, 3).astype(_np.float64)
-                rows["doc_id"].append(int(d))
-                rows["width"].append(w)
-                rows["height"].append(h)
-                rows["mean_r"].append(float(img[:, :, 0].mean()))
-                rows["mean_g"].append(float(img[:, :, 1].mean()))
-                rows["mean_b"].append(float(img[:, :, 2].mean()))
-                rows["byte_checksum"].append(int(px.astype(_np.int64).sum()) % 10**9)
-            yield _pd.DataFrame(rows)
-
-    # rounding happens in the DataFrame layer (SQL ROUND), not Python
-    # round(): Python rounds half-to-even while SQL rounds half-up, and
-    # every oracle-paired query in this repo pins the F.round <-> DuckDB
-    # ROUND equivalence — keep the decode paths on the same rule instead
-    # of a third, coincidentally-agreeing one.
-    out = media.mapInPandas(_decode, PPM_FEATURES_SCHEMA)
-    return out.select(
-        "doc_id",
-        "width",
-        "height",
-        F.round("mean_r", 6).alias("mean_r"),
-        F.round("mean_g", 6).alias("mean_g"),
-        F.round("mean_b", 6).alias("mean_b"),
-        "byte_checksum",
-    )
+    return _decode(media, decode, PPM_FEATURES_SCHEMA)
 
 
 def resize_ppm(media: DataFrame, factor: int = 2) -> DataFrame:
@@ -295,22 +359,14 @@ def resize_ppm(media: DataFrame, factor: int = 2) -> DataFrame:
     if factor < 1:
         raise ValueError(f"factor must be >= 1, got {factor}")
 
-    def _resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as _np
-        import pandas as _pd
+    def decode(_d, buf):
+        w, h, _maxval, data_at = parse_ppm_header(buf)
+        px = np.frombuffer(buf, dtype=np.uint8, offset=data_at)
+        img = px.reshape(h, w, 3)[::factor, ::factor, :]
+        nh, nw = img.shape[0], img.shape[1]
+        return {"payload": f"P6\n{nw} {nh}\n255\n".encode() + img.tobytes()}
 
-        for pdf in batches:
-            out = []
-            for b in pdf["payload"]:
-                buf = bytes(b)
-                w, h, _maxval, data_at = parse_ppm_header(buf)
-                px = _np.frombuffer(buf, dtype=_np.uint8, offset=data_at)
-                img = px.reshape(h, w, 3)[::factor, ::factor, :]
-                nh, nw = img.shape[0], img.shape[1]
-                out.append(f"P6\n{nw} {nh}\n255\n".encode() + img.tobytes())
-            yield _pd.DataFrame({"doc_id": pdf["doc_id"], "payload": out})
-
-    return media.mapInPandas(_resize, "doc_id bigint, payload binary")
+    return _decode(media, decode, "doc_id bigint, payload binary")
 
 
 PGM_FEATURES_SCHEMA = (
@@ -325,182 +381,30 @@ def synthesize_pgm_media(docs: DataFrame) -> DataFrame:
     byte j = (11*doc_id + 23*j) mod 256, w = 12 + doc_id mod 7,
     h = 5 + doc_id mod 6."""
 
-    def _gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as _np
-        import pandas as _pd
+    def encode(d):
+        w, h = 12 + d % 7, 5 + d % 6
+        j = np.arange(w * h, dtype=np.int64)
+        px = ((11 * d + 23 * j) % 256).astype(np.uint8)
+        return f"P5\n# synth gray doc {d}\n{w} {h}\n255\n".encode() + px.tobytes()
 
-        for pdf in batches:
-            payloads = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                w, h = 12 + d % 7, 5 + d % 6
-                header = f"P5\n# synth gray doc {d}\n{w} {h}\n255\n".encode()
-                j = _np.arange(w * h, dtype=_np.int64)
-                px = ((11 * d + 23 * j) % 256).astype(_np.uint8)
-                payloads.append(header + px.tobytes())
-            yield _pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    return docs.select("doc_id").mapInPandas(_gen, "doc_id bigint, payload binary")
+    return _synthesize(docs, encode)
 
 
 def decode_pgm(media: DataFrame) -> DataFrame:
     """REAL P5 PGM decode via mapInPandas — the single-channel sibling of
     ``decode_ppm``, sharing the bounded PNM header parser (magic=P5).
-    Emits gray mean + byte checksum; malformed payloads raise."""
+    Emits gray mean + byte checksum."""
 
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as _np
-        import pandas as _pd
+    def decode(_d, buf):
+        w, h, maxval, data_at = parse_ppm_header(buf, magic=b"P5")
+        if maxval != 255:
+            raise ValueError(f"unsupported maxval {maxval}")
+        px = np.frombuffer(buf, dtype=np.uint8, offset=data_at)
+        if px.size != w * h:
+            raise ValueError(f"payload holds {px.size} bytes, header says {w*h}")
+        return {"width": w, "height": h, "pixels": px.reshape(h, w)}
 
-        parse_header = parse_ppm_header
-
-        for pdf in batches:
-            rows = {k: [] for k in
-                    ("doc_id", "width", "height", "mean_gray", "byte_checksum")}
-            for d, b in zip(pdf["doc_id"], pdf["payload"]):
-                buf = bytes(b)
-                w, h, maxval, data_at = parse_header(buf, magic=b"P5")
-                if maxval != 255:
-                    raise ValueError(f"unsupported maxval {maxval}")
-                px = _np.frombuffer(buf, dtype=_np.uint8, offset=data_at)
-                if px.size != w * h:
-                    raise ValueError(
-                        f"payload holds {px.size} bytes, header says {w*h}"
-                    )
-                rows["doc_id"].append(int(d))
-                rows["width"].append(w)
-                rows["height"].append(h)
-                rows["mean_gray"].append(float(px.astype(_np.float64).mean()))
-                rows["byte_checksum"].append(int(px.astype(_np.int64).sum()) % 10**9)
-            yield _pd.DataFrame(rows)
-
-    # SQL-ROUND in the DataFrame layer, matching the repo-wide
-    # F.round <-> DuckDB ROUND convention (see decode_ppm)
-    out = media.mapInPandas(_decode, PGM_FEATURES_SCHEMA)
-    return out.select(
-        "doc_id", "width", "height",
-        F.round("mean_gray", 6).alias("mean_gray"),
-        "byte_checksum",
-    )
-
-
-BMP_FEATURES_SCHEMA = (
-    "doc_id bigint, width int, height int, "
-    "mean_r double, mean_g double, mean_b double, "
-    "top_row_sum bigint, byte_checksum bigint"
-)
-
-
-def synthesize_bmp_media(docs: DataFrame) -> DataFrame:
-    """(doc_id, payload binary): a valid uncompressed 24-bpp Windows BMP
-    per document (BITMAPFILEHEADER + BITMAPINFOHEADER, little-endian,
-    rows stored BOTTOM-UP and padded to 4-byte boundaries, pixels BGR).
-    Image-space pixel (x, y) with y=0 at the TOP has
-    B = (3*doc_id + 5*x + 7*y) mod 256, G = B-formula + 11, R = + 22 —
-    three structurally different quirks (row flip, stride padding,
-    channel order) a decoder must get right vs the PNM family.
-    w = 5 + doc_id mod 9 (w*3 usually not 4-aligned), h = 4 + doc_id mod 5.
-    """
-
-    def _gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct as _struct
-
-        import numpy as _np
-        import pandas as _pd
-
-        for pdf in batches:
-            payloads = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                w, h = 5 + d % 9, 4 + d % 5
-                x = _np.arange(w, dtype=_np.int64)[None, :]
-                y = _np.arange(h, dtype=_np.int64)[:, None]
-                base = 3 * d + 5 * x + 7 * y
-                img = _np.stack(  # image-space rows, BGR channel order
-                    [base % 256, (base + 11) % 256, (base + 22) % 256], axis=2
-                ).astype(_np.uint8)
-                stride = (w * 3 + 3) // 4 * 4
-                body = bytearray()
-                for r in range(h):  # file rows run bottom-up
-                    row = img[h - 1 - r].tobytes()
-                    body += row + b"\x00" * (stride - len(row))
-                info = _struct.pack(
-                    "<IiiHHIIiiII", 40, w, h, 1, 24, 0, stride * h,
-                    2835, 2835, 0, 0,
-                )
-                file_hdr = _struct.pack(
-                    "<2sIHHI", b"BM", 14 + 40 + stride * h, 0, 0, 54
-                )
-                payloads.append(file_hdr + info + bytes(body))
-            yield _pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    return docs.select("doc_id").mapInPandas(_gen, "doc_id bigint, payload binary")
-
-
-def decode_bmp(media: DataFrame) -> DataFrame:
-    """REAL BMP decode via mapInPandas: little-endian header fields, data
-    offset, 24-bpp uncompressed check, then per-row un-flip (bottom-up →
-    image order), stride-padding strip, and BGR→RGB swap. Emits channel
-    means, the TOP image row's byte sum (catches a forgotten row flip —
-    channel means alone are flip-invariant), and a pixel-byte checksum
-    (padding excluded). Malformed payloads raise."""
-
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct as _struct
-
-        import numpy as _np
-        import pandas as _pd
-
-        for pdf in batches:
-            rows = {k: [] for k in
-                    ("doc_id", "width", "height", "mean_r", "mean_g",
-                     "mean_b", "top_row_sum", "byte_checksum")}
-            for d, b in zip(pdf["doc_id"], pdf["payload"]):
-                buf = bytes(b)
-                if buf[:2] != b"BM" or len(buf) < 54:
-                    raise ValueError("not a BMP")
-                (data_at,) = _struct.unpack_from("<I", buf, 10)
-                hdr_size, w, h, planes, bpp, compression = _struct.unpack_from(
-                    "<IiiHHI", buf, 14
-                )
-                if hdr_size != 40 or bpp != 24 or compression != 0:
-                    raise ValueError(
-                        f"unsupported BMP (hdr={hdr_size}, bpp={bpp}, "
-                        f"compression={compression})"
-                    )
-                if h <= 0 or w <= 0:
-                    raise ValueError("top-down/degenerate BMP unsupported")
-                stride = (w * 3 + 3) // 4 * 4
-                if len(buf) < data_at + stride * h:
-                    raise ValueError("truncated BMP pixel array")
-                img = _np.zeros((h, w, 3), dtype=_np.uint8)
-                for r in range(h):
-                    raw = _np.frombuffer(
-                        buf, dtype=_np.uint8, count=w * 3,
-                        offset=data_at + r * stride,
-                    ).reshape(w, 3)
-                    img[h - 1 - r] = raw[:, ::-1]  # BGR -> RGB, un-flip rows
-                f = img.astype(_np.float64)
-                rows["doc_id"].append(int(d))
-                rows["width"].append(w)
-                rows["height"].append(h)
-                rows["mean_r"].append(float(f[:, :, 0].mean()))
-                rows["mean_g"].append(float(f[:, :, 1].mean()))
-                rows["mean_b"].append(float(f[:, :, 2].mean()))
-                rows["top_row_sum"].append(int(img[0].astype(_np.int64).sum()))
-                rows["byte_checksum"].append(
-                    int(img.astype(_np.int64).sum()) % 10**9
-                )
-            yield _pd.DataFrame(rows)
-
-    out = media.mapInPandas(_decode, BMP_FEATURES_SCHEMA)
-    return out.select(
-        "doc_id", "width", "height",
-        F.round("mean_r", 6).alias("mean_r"),
-        F.round("mean_g", 6).alias("mean_g"),
-        F.round("mean_b", 6).alias("mean_b"),
-        "top_row_sum", "byte_checksum",
-    )
+    return _decode(media, decode, PGM_FEATURES_SCHEMA)
 
 
 def synthesize_wav_media(docs: DataFrame, sample_rate: int = 16000) -> DataFrame:
@@ -508,77 +412,43 @@ def synthesize_wav_media(docs: DataFrame, sample_rate: int = 16000) -> DataFrame
     header + n samples, n = 400 + doc_id mod 100, sample i =
     ((31*doc_id + 17*i) mod 65536) - 32768."""
 
-    def _gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct as _struct
+    def encode(d):
+        n = 400 + d % 100
+        data_len = n * 2
+        return (
+            b"RIFF" + struct.pack("<I", 36 + data_len) + b"WAVE"
+            + b"fmt " + struct.pack("<IHHIIHH", 16, 1, 1, sample_rate,
+                                    sample_rate * 2, 2, 16)
+            + b"data" + struct.pack("<I", data_len)
+            + _pcm16(d, 0, n)
+        )
 
-        import numpy as _np
-        import pandas as _pd
-
-        def header(n_samples: int) -> bytes:
-            data_len = n_samples * 2
-            return (
-                b"RIFF" + _struct.pack("<I", 36 + data_len) + b"WAVE"
-                + b"fmt " + _struct.pack("<IHHIIHH", 16, 1, 1, sample_rate,
-                                         sample_rate * 2, 2, 16)
-                + b"data" + _struct.pack("<I", data_len)
-            )
-
-        for pdf in batches:
-            payloads = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                n = 400 + d % 100
-                i = _np.arange(n, dtype=_np.int64)
-                s = (((31 * d + 17 * i) % 65536) - 32768).astype("<i2")
-                payloads.append(header(n) + s.tobytes())
-            yield _pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    return docs.select("doc_id").mapInPandas(_gen, "doc_id bigint, payload binary")
+    return _synthesize(docs, encode)
 
 
 def decode_wav(media: DataFrame) -> DataFrame:
     """REAL RIFF/WAV decode: validate chunk magics, read fmt (PCM16 mono
     only), frombuffer the sample array, emit rate + count + RMS."""
 
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct as _struct
+    def decode(_d, buf):
+        if buf[:4] != b"RIFF" or buf[8:12] != b"WAVE" or buf[12:16] != b"fmt ":
+            raise ValueError("not a RIFF/WAVE PCM file")
+        fmt_len, audio_fmt, channels, rate = struct.unpack("<IHHI", buf[16:28])
+        bits = struct.unpack("<H", buf[34:36])[0]
+        if (fmt_len, audio_fmt, channels, bits) != (16, 1, 1, 16):
+            raise ValueError("only canonical PCM16 mono supported")
+        if buf[36:40] != b"data":
+            raise ValueError("missing data chunk")
+        data_len = struct.unpack("<I", buf[40:44])[0]
+        s = np.frombuffer(buf, dtype="<i2", offset=44, count=data_len // 2)
+        return {
+            "sample_rate": int(rate),
+            "n_samples": int(s.size),
+            "rms": float(np.sqrt((s.astype(np.float64) ** 2).mean())),
+        }
 
-        import numpy as _np
-        import pandas as _pd
+    return _decode(media, decode, WAV_FEATURES_SCHEMA)
 
-        for pdf in batches:
-            rows = {k: [] for k in ("doc_id", "sample_rate", "n_samples", "rms")}
-            for d, b in zip(pdf["doc_id"], pdf["payload"]):
-                buf = bytes(b)
-                if buf[:4] != b"RIFF" or buf[8:12] != b"WAVE" or buf[12:16] != b"fmt ":
-                    raise ValueError("not a RIFF/WAVE PCM file")
-                fmt_len, audio_fmt, channels, rate = _struct.unpack(
-                    "<IHHI", buf[16:28]
-                )
-                bits = _struct.unpack("<H", buf[34:36])[0]
-                if (fmt_len, audio_fmt, channels, bits) != (16, 1, 1, 16):
-                    raise ValueError("only canonical PCM16 mono supported")
-                if buf[36:40] != b"data":
-                    raise ValueError("missing data chunk")
-                data_len = _struct.unpack("<I", buf[40:44])[0]
-                s = _np.frombuffer(buf, dtype="<i2", offset=44, count=data_len // 2)
-                rows["doc_id"].append(int(d))
-                rows["sample_rate"].append(int(rate))
-                rows["n_samples"].append(int(s.size))
-                rows["rms"].append(
-                    float(_np.sqrt((s.astype(_np.float64) ** 2).mean()))
-                )
-            yield _pd.DataFrame(rows)
-
-    # SQL-ROUND in the DataFrame layer, matching the repo-wide
-    # F.round <-> DuckDB ROUND convention (see decode_ppm)
-    out = media.mapInPandas(_decode, WAV_FEATURES_SCHEMA)
-    return out.select(
-        "doc_id", "sample_rate", "n_samples", F.round("rms", 6).alias("rms")
-    )
-
-
-# ---- video: multi-frame container with real frame extraction -------------
 
 VIDEO_MAGIC = b"VID0"
 
@@ -594,29 +464,18 @@ def synthesize_video_media(docs: DataFrame) -> DataFrame:
     dims (from doc_id). Frame f, byte j = (7*doc_id + 13*j + 101*f) % 256,
     n_frames = 4 + doc_id % 5."""
 
-    def _gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct as _struct
+    def encode(d):
+        w, h = 8 + d % 8, 6 + d % 5
+        n_frames = 4 + d % 5
+        header = f"P6\n{w} {h}\n255\n".encode()
+        j = np.arange(w * h * 3, dtype=np.int64)
+        frames = b"".join(
+            header + ((7 * d + 13 * j + 101 * f) % 256).astype(np.uint8).tobytes()
+            for f in range(n_frames)
+        )
+        return VIDEO_MAGIC + struct.pack("<I", n_frames) + frames
 
-        import numpy as _np
-        import pandas as _pd
-
-        for pdf in batches:
-            payloads = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                w, h = 8 + d % 8, 6 + d % 5
-                n_frames = 4 + d % 5
-                header = f"P6\n{w} {h}\n255\n".encode()
-                j = _np.arange(w * h * 3, dtype=_np.int64)
-                frames = b"".join(
-                    header + ((7 * d + 13 * j + 101 * f) % 256)
-                    .astype(_np.uint8).tobytes()
-                    for f in range(n_frames)
-                )
-                payloads.append(VIDEO_MAGIC + _struct.pack("<I", n_frames) + frames)
-            yield _pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    return docs.select("doc_id").mapInPandas(_gen, "doc_id bigint, payload binary")
+    return _synthesize(docs, encode)
 
 
 def sample_video_frames(media: DataFrame, every_k: int = 2) -> DataFrame:
@@ -628,48 +487,96 @@ def sample_video_frames(media: DataFrame, every_k: int = 2) -> DataFrame:
     if every_k < 1:
         raise ValueError(f"every_k must be >= 1, got {every_k}")
 
-    def _sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct as _struct
+    def decode(_d, buf):
+        if buf[:4] != VIDEO_MAGIC:
+            raise ValueError("not a VID0 container")
+        n_frames = struct.unpack("<I", buf[4:8])[0]
+        # first frame header: P6\n{w} {h}\n255\n (fixed per doc)
+        hdr_end = buf.index(b"255\n", 8) + 4
+        w, h = (int(x) for x in buf[11 : buf.index(b"\n", 11)].split())
+        frame_size = (hdr_end - 8) + w * h * 3
+        if len(buf) != 8 + n_frames * frame_size:
+            raise ValueError("container length mismatch")
+        frames = []
+        for f in range(0, n_frames, every_k):
+            off = 8 + f * frame_size + (hdr_end - 8)
+            px = np.frombuffer(buf, dtype=np.uint8, offset=off, count=w * h * 3)
+            frames.append({
+                "frame_idx": f, "width": w, "height": h,
+                "pixels": px.reshape(h, w, 3),
+            })
+        return frames
 
-        import numpy as _np
-        import pandas as _pd
+    return _decode(media, decode, FRAME_STATS_SCHEMA)
 
-        for pdf in batches:
-            rows = {k: [] for k in
-                    ("doc_id", "frame_idx", "width", "height", "mean_r")}
-            for d, b in zip(pdf["doc_id"], pdf["payload"]):
-                buf = bytes(b)
-                if buf[:4] != VIDEO_MAGIC:
-                    raise ValueError("not a VID0 container")
-                n_frames = _struct.unpack("<I", buf[4:8])[0]
-                # first frame header: P6\n{w} {h}\n255\n (fixed per doc)
-                hdr_end = buf.index(b"255\n", 8) + 4
-                w, h = (int(x) for x in buf[11 : buf.index(b"\n", 11)].split())
-                frame_size = (hdr_end - 8) + w * h * 3
-                if len(buf) != 8 + n_frames * frame_size:
-                    raise ValueError("container length mismatch")
-                for f in range(0, n_frames, every_k):
-                    off = 8 + f * frame_size + (hdr_end - 8)
-                    px = _np.frombuffer(
-                        buf, dtype=_np.uint8, offset=off, count=w * h * 3
-                    )
-                    rows["doc_id"].append(int(d))
-                    rows["frame_idx"].append(f)
-                    rows["width"].append(w)
-                    rows["height"].append(h)
-                    rows["mean_r"].append(
-                        float(px.reshape(h, w, 3)[:, :, 0]
-                              .astype(_np.float64).mean())
-                    )
-            yield _pd.DataFrame(rows)
 
-    # SQL-ROUND in the DataFrame layer, matching the repo-wide
-    # F.round <-> DuckDB ROUND convention (see decode_ppm)
-    out = media.mapInPandas(_sample, FRAME_STATS_SCHEMA)
-    return out.select(
-        "doc_id", "frame_idx", "width", "height",
-        F.round("mean_r", 6).alias("mean_r"),
-    )
+# ---- uncompressed raster containers: BMP, TGA, TIFF -----------------------
+
+BMP_FEATURES_SCHEMA = (
+    "doc_id bigint, width int, height int, "
+    "mean_r double, mean_g double, mean_b double, "
+    "top_row_sum bigint, byte_checksum bigint"
+)
+
+
+def synthesize_bmp_media(docs: DataFrame) -> DataFrame:
+    """(doc_id, payload binary): a valid uncompressed 24-bpp Windows BMP
+    per document (BITMAPFILEHEADER + BITMAPINFOHEADER, little-endian,
+    rows stored BOTTOM-UP and padded to 4-byte boundaries, pixels BGR).
+    The pixels are ``_test_image`` in B, G, R order (B = (3*doc_id + 5*x
+    + 7*y) mod 256, G = +11, R = +22) — three structurally different
+    quirks (row flip, stride padding, channel order) a decoder must get
+    right vs the PNM family.
+    w = 5 + doc_id mod 9 (w*3 usually not 4-aligned), h = 4 + doc_id mod 5.
+    """
+
+    def encode(d):
+        w, h = 5 + d % 9, 4 + d % 5
+        img = _test_image(d, w, h)  # image-space rows, BGR channel order
+        stride = (w * 3 + 3) // 4 * 4
+        pad = b"\x00" * (stride - w * 3)
+        body = b"".join(img[r].tobytes() + pad for r in range(h - 1, -1, -1))
+        info = struct.pack(
+            "<IiiHHIIiiII", 40, w, h, 1, 24, 0, stride * h, 2835, 2835, 0, 0
+        )
+        file_hdr = struct.pack("<2sIHHI", b"BM", 14 + 40 + stride * h, 0, 0, 54)
+        return file_hdr + info + body
+
+    return _synthesize(docs, encode)
+
+
+def decode_bmp(media: DataFrame) -> DataFrame:
+    """REAL BMP decode via mapInPandas: little-endian header fields, data
+    offset, 24-bpp uncompressed check, then per-row un-flip (bottom-up →
+    image order), stride-padding strip, and BGR→RGB swap. Emits the
+    standard image stats (the pixel checksum excludes padding)."""
+
+    def decode(_d, buf):
+        if buf[:2] != b"BM" or len(buf) < 54:
+            raise ValueError("not a BMP")
+        (data_at,) = struct.unpack_from("<I", buf, 10)
+        hdr_size, w, h, _planes, bpp, compression = struct.unpack_from(
+            "<IiiHHI", buf, 14
+        )
+        if hdr_size != 40 or bpp != 24 or compression != 0:
+            raise ValueError(
+                f"unsupported BMP (hdr={hdr_size}, bpp={bpp}, "
+                f"compression={compression})"
+            )
+        if h <= 0 or w <= 0:
+            raise ValueError("top-down/degenerate BMP unsupported")
+        stride = (w * 3 + 3) // 4 * 4
+        if len(buf) < data_at + stride * h:
+            raise ValueError("truncated BMP pixel array")
+        img = np.zeros((h, w, 3), dtype=np.uint8)
+        for r in range(h):
+            raw = np.frombuffer(
+                buf, dtype=np.uint8, count=w * 3, offset=data_at + r * stride
+            ).reshape(w, 3)
+            img[h - 1 - r] = raw[:, ::-1]  # BGR -> RGB, un-flip rows
+        return {"width": w, "height": h, "pixels": img}
+
+    return _decode(media, decode, BMP_FEATURES_SCHEMA)
 
 
 TGA_FEATURES_SCHEMA = (
@@ -687,41 +594,24 @@ def synthesize_tga_media(docs: DataFrame) -> DataFrame:
     absent otherwise), the row origin is CONDITIONAL (descriptor bit 5:
     top-down when doc_id is even, bottom-up otherwise — a per-file flip,
     not BMP's constant one), pixels are BGR with NO stride padding.
-    Pixel (x, y), y=0 at the top: B = (3*doc_id + 5*x + 7*y) % 256,
-    G = +11, R = +22. w = 4 + doc_id % 7, h = 3 + doc_id % 6.
+    The pixels are ``_test_image`` in B, G, R order, as in BMP.
+    w = 4 + doc_id % 7, h = 3 + doc_id % 6.
     """
 
-    def _gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct as _struct
+    def encode(d):
+        w, h = 4 + d % 7, 3 + d % 6
+        img = _test_image(d, w, h)  # image-space rows, BGR channel order
+        ident = f"sgraft-{d}".encode() if d % 3 == 0 else b""
+        top_down = d % 2 == 0
+        hdr = struct.pack(
+            "<BBBHHBHHHHBB",
+            len(ident), 0, 2,  # idlength, no colormap, type 2
+            0, 0, 0,           # colormap spec
+            0, 0, w, h, 24, 0x20 if top_down else 0x00,
+        )
+        return hdr + ident + (img if top_down else img[::-1]).tobytes()
 
-        import numpy as _np
-        import pandas as _pd
-
-        for pdf in batches:
-            payloads = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                w, h = 4 + d % 7, 3 + d % 6
-                x = _np.arange(w, dtype=_np.int64)[None, :]
-                y = _np.arange(h, dtype=_np.int64)[:, None]
-                base = 3 * d + 5 * x + 7 * y
-                img = _np.stack(  # image-space rows, BGR channel order
-                    [base % 256, (base + 11) % 256, (base + 22) % 256], axis=2
-                ).astype(_np.uint8)
-                ident = f"sgraft-{d}".encode() if d % 3 == 0 else b""
-                top_down = d % 2 == 0
-                descriptor = 0x20 if top_down else 0x00
-                hdr = _struct.pack(
-                    "<BBBHHBHHHHBB",
-                    len(ident), 0, 2,  # idlength, no colormap, type 2
-                    0, 0, 0,           # colormap spec
-                    0, 0, w, h, 24, descriptor,
-                )
-                rows = img if top_down else img[::-1]
-                payloads.append(hdr + ident + rows.tobytes())
-            yield _pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    return docs.select("doc_id").mapInPandas(_gen, "doc_id bigint, payload binary")
+    return _synthesize(docs, encode)
 
 
 def decode_tga(media: DataFrame) -> DataFrame:
@@ -732,68 +622,171 @@ def decode_tga(media: DataFrame) -> DataFrame:
     and swap BGR→RGB. Only uncompressed true-color (type 2, 24 bpp) is
     supported; anything else raises."""
 
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct as _struct
+    def decode(_d, buf):
+        if len(buf) < 18:
+            raise ValueError("not a TGA (short header)")
+        (
+            id_len, cmap_type, img_type,
+            _cm_first, _cm_len, _cm_bpp,
+            _x0, _y0, w, h, bpp, desc,
+        ) = struct.unpack_from("<BBBHHBHHHHBB", buf, 0)
+        if img_type != 2 or cmap_type != 0 or bpp != 24:
+            raise ValueError(f"unsupported TGA (type={img_type}, bpp={bpp})")
+        data_at = 18 + id_len
+        if len(buf) < data_at + w * h * 3:
+            raise ValueError("truncated TGA pixel data")
+        raw = np.frombuffer(
+            buf, dtype=np.uint8, count=w * h * 3, offset=data_at
+        ).reshape(h, w, 3)
+        top_down = bool(desc & 0x20)
+        return {
+            "width": int(w), "height": int(h),
+            "top_down": int(top_down), "id_len": int(id_len),
+            "pixels": (raw if top_down else raw[::-1])[:, :, ::-1],  # ->RGB
+        }
 
-        import numpy as _np
-        import pandas as _pd
-
-        for pdf in batches:
-            rows: dict[str, list] = {
-                k: []
-                for k in (
-                    "doc_id", "width", "height", "top_down", "id_len",
-                    "mean_r", "mean_g", "mean_b", "top_row_sum",
-                    "byte_checksum",
-                )
-            }
-            for d, b in zip(pdf["doc_id"], pdf["payload"]):
-                buf = bytes(b)
-                if len(buf) < 18:
-                    raise ValueError("not a TGA (short header)")
-                (
-                    id_len, cmap_type, img_type,
-                    _cm_first, _cm_len, _cm_bpp,
-                    _x0, _y0, w, h, bpp, desc,
-                ) = _struct.unpack_from("<BBBHHBHHHHBB", buf, 0)
-                if img_type != 2 or cmap_type != 0 or bpp != 24:
-                    raise ValueError(
-                        f"unsupported TGA (type={img_type}, bpp={bpp})"
-                    )
-                data_at = 18 + id_len
-                if len(buf) < data_at + w * h * 3:
-                    raise ValueError("truncated TGA pixel data")
-                raw = _np.frombuffer(
-                    buf, dtype=_np.uint8, count=w * h * 3, offset=data_at
-                ).reshape(h, w, 3)
-                top_down = bool(desc & 0x20)
-                img = (raw if top_down else raw[::-1])[:, :, ::-1]  # ->RGB
-                f = img.astype(_np.float64)
-                rows["doc_id"].append(int(d))
-                rows["width"].append(int(w))
-                rows["height"].append(int(h))
-                rows["top_down"].append(int(top_down))
-                rows["id_len"].append(int(id_len))
-                rows["mean_r"].append(float(f[:, :, 0].mean()))
-                rows["mean_g"].append(float(f[:, :, 1].mean()))
-                rows["mean_b"].append(float(f[:, :, 2].mean()))
-                rows["top_row_sum"].append(int(img[0].astype(_np.int64).sum()))
-                rows["byte_checksum"].append(
-                    int(img.astype(_np.int64).sum()) % 10**9
-                )
-            yield _pd.DataFrame(rows)
-
-    out = media.mapInPandas(_decode, TGA_FEATURES_SCHEMA)
-    return out.select(
-        "doc_id", "width", "height", "top_down", "id_len",
-        F.round("mean_r", 6).alias("mean_r"),
-        F.round("mean_g", 6).alias("mean_g"),
-        F.round("mean_b", 6).alias("mean_b"),
-        "top_row_sum", "byte_checksum",
-    )
+    return _decode(media, decode, TGA_FEATURES_SCHEMA)
 
 
-# -- PNG (REAL decode: zlib inflate + all five scanline filters) -----------
+TIFF_FEATURES_SCHEMA = (
+    "doc_id bigint, width int, height int, n_strips int, mean_r double, "
+    "mean_g double, mean_b double, top_row_sum bigint, byte_checksum bigint"
+)
+
+
+def synthesize_tiff_media(docs: DataFrame) -> DataFrame:
+    """(doc_id, payload binary): a VALID little-endian baseline TIFF per
+    document — 'II*\\0' header, one IFD with the required baseline tags
+    (width/length, BitsPerSample 8,8,8 stored BY OFFSET, Compression=1,
+    Photometric=RGB, SamplesPerPixel=3, RowsPerStrip=2 so images split
+    into MULTIPLE strips with per-strip offsets/bytecounts arrays), and
+    uncompressed RGB strip data: ``_test_image`` in R, G, B order (R =
+    (3*doc_id + 5*x + 7*y) % 256, G = +11, B = +22).
+    Short-count tag values that fit 4 bytes are stored INLINE — the
+    TIFF subtlety a decoder must honor both ways."""
+
+    def entry(tag, typ, count, value):
+        return struct.pack("<HHI4s", tag, typ, count, value)
+
+    def inline_short(v):
+        return struct.pack("<HH", v, 0)
+
+    def inline_long(v):
+        return struct.pack("<I", v)
+
+    def encode(d):
+        w, h = 5 + d % 9, 4 + d % 5
+        img = _test_image(d, w, h)
+        rows_per_strip = 2
+        strips = [
+            img[r : r + rows_per_strip].tobytes()
+            for r in range(0, h, rows_per_strip)
+        ]
+        n_strips = len(strips)
+        # layout: header(8) | IFD | bits-array | offsets | counts | strips
+        n_tags = 9
+        ifd_at = 8
+        ifd_size = 2 + n_tags * 12 + 4
+        bits_at = ifd_at + ifd_size
+        soff_at = bits_at + 6
+        scnt_at = soff_at + 4 * n_strips
+        data_at = scnt_at + 4 * n_strips
+        strip_offsets = []
+        pos = data_at
+        for s in strips:
+            strip_offsets.append(pos)
+            pos += len(s)
+        entries = [
+            entry(256, 3, 1, inline_short(w)),       # ImageWidth
+            entry(257, 3, 1, inline_short(h)),       # ImageLength
+            entry(258, 3, 3, inline_long(bits_at)),  # BitsPerSample -> offset
+            entry(259, 3, 1, inline_short(1)),       # Compression: none
+            entry(262, 3, 1, inline_short(2)),       # Photometric: RGB
+            entry(
+                273, 4, n_strips,
+                inline_long(strip_offsets[0]) if n_strips == 1
+                else inline_long(soff_at),
+            ),                                       # StripOffsets
+            entry(277, 3, 1, inline_short(3)),       # SamplesPerPixel
+            entry(278, 3, 1, inline_short(rows_per_strip)),
+            entry(
+                279, 4, n_strips,
+                inline_long(len(strips[0])) if n_strips == 1
+                else inline_long(scnt_at),
+            ),                                       # StripByteCounts
+        ]
+        out = b"II*\x00" + struct.pack("<I", ifd_at)
+        out += struct.pack("<H", n_tags) + b"".join(entries)
+        out += struct.pack("<I", 0)  # no next IFD
+        out += struct.pack("<HHH", 8, 8, 8)
+        out += b"".join(struct.pack("<I", o) for o in strip_offsets)
+        out += b"".join(struct.pack("<I", len(s)) for s in strips)
+        return out + b"".join(strips)
+
+    return _synthesize(docs, encode)
+
+
+def decode_tiff(media: DataFrame) -> DataFrame:
+    """REAL TIFF decode via mapInPandas — no imaging library: byte-order
+    check, IFD tag walk with the inline-vs-offset value rule (SHORT and
+    LONG types; values whose byte size fits 4 bytes live inside the
+    entry, larger ones behind an offset), multi-strip reassembly via the
+    StripOffsets/StripByteCounts arrays. Baseline uncompressed 8-bit RGB
+    little-endian only; anything else raises loudly."""
+
+    type_size = {3: 2, 4: 4}
+
+    def read_values(buf, typ, count, raw):
+        size = type_size.get(typ)
+        if size is None:
+            raise ValueError(f"unsupported TIFF tag type {typ}")
+        fmt = "<" + ("H" if typ == 3 else "I") * count
+        if size * count <= 4:
+            return list(struct.unpack_from(fmt, raw, 0))
+        (off,) = struct.unpack_from("<I", raw, 0)
+        return list(struct.unpack_from(fmt, buf, off))
+
+    def decode(_d, buf):
+        if buf[:4] != b"II*\x00":
+            raise ValueError(
+                "not a little-endian TIFF (big-endian 'MM' and "
+                "BigTIFF unsupported)"
+            )
+        (ifd_at,) = struct.unpack_from("<I", buf, 4)
+        (n_tags,) = struct.unpack_from("<H", buf, ifd_at)
+        tags = {}
+        for i in range(n_tags):
+            at = ifd_at + 2 + i * 12
+            tag, typ, count = struct.unpack_from("<HHI", buf, at)
+            tags[tag] = read_values(buf, typ, count, buf[at + 8 : at + 12])
+        for req in (256, 257, 273, 279):
+            if req not in tags:
+                raise ValueError(f"missing required TIFF tag {req}")
+        w, h = tags[256][0], tags[257][0]
+        if tags.get(259, [1])[0] != 1:
+            raise ValueError("compressed TIFF unsupported")
+        if tags.get(277, [1])[0] != 3 or tags.get(258, [8, 8, 8]) != [8, 8, 8]:
+            raise ValueError("need 8-bit RGB samples")
+        offs, cnts = tags[273], tags[279]
+        if len(offs) != len(cnts):
+            raise ValueError("strip offset/count arity mismatch")
+        data = bytearray()
+        for o, c in zip(offs, cnts):
+            if o + c > len(buf):
+                raise ValueError("truncated TIFF strip")
+            data += buf[o : o + c]
+        if len(data) != w * h * 3:
+            raise ValueError(f"strip bytes {len(data)} != {w}x{h}x3")
+        img = np.frombuffer(bytes(data), dtype=np.uint8).reshape(h, w, 3)
+        return {
+            "width": int(w), "height": int(h), "n_strips": len(offs),
+            "pixels": img,
+        }
+
+    return _decode(media, decode, TIFF_FEATURES_SCHEMA)
+
+
+# ---- compressed images: PNG (zlib), GIF (LZW), PCX (RLE), QOI -------------
 
 PNG_FEATURES_SCHEMA = (
     "doc_id bigint, width int, height int, n_idat int, mean_r double, "
@@ -805,15 +798,15 @@ def synthesize_png_media(docs: DataFrame) -> DataFrame:
     """(doc_id, payload binary): a VALID 8-bit RGB PNG per document —
     signature, IHDR, IDAT (zlib-deflated filtered scanlines, split into
     TWO IDAT chunks when the stream is long enough to prove chunk
-    reassembly), IEND, each chunk CRC32-stamped. Pixel (x, y):
-    R = (3*doc_id + 5*x + 7*y) % 256, G = +11, B = +22 (the BMP family's
-    formula in RGB order). Every scanline is filtered with type
+    reassembly), IEND, each chunk CRC32-stamped. The pixels are
+    ``_test_image`` in R, G, B order (R = (3*doc_id + 5*x + 7*y) % 256,
+    G = +11, B = +22). Every scanline is filtered with type
     (doc_id + row) % 5, so a decoder must implement ALL FIVE reverse
     filters (None/Sub/Up/Average/Paeth) — a decoder that fakes any one
     of them cannot reproduce the closed-form means.
     w = 5 + doc_id mod 9, h = 4 + doc_id mod 5."""
 
-    def _paeth(a: int, b: int, c: int) -> int:
+    def paeth(a: int, b: int, c: int) -> int:
         p = a + b - c
         pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
         if pa <= pb and pa <= pc:
@@ -822,95 +815,49 @@ def synthesize_png_media(docs: DataFrame) -> DataFrame:
             return b
         return c
 
-    def _gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct as _struct
-        import zlib as _zlib
+    def chunk(tag: bytes, body: bytes) -> bytes:
+        return (
+            struct.pack(">I", len(body)) + tag + body
+            + struct.pack(">I", zlib.crc32(tag + body) & 0xFFFFFFFF)
+        )
 
-        import numpy as _np
-        import pandas as _pd
+    def encode(d):
+        w, h = 5 + d % 9, 4 + d % 5
+        img = _test_image(d, w, h)
+        bpp = 3  # bytes per pixel
+        raw = bytearray()
+        prev = bytes(w * bpp)
+        for r in range(h):
+            line = img[r].tobytes()
+            left = bytes(bpp) + line[:-bpp]
+            up_left = bytes(bpp) + prev[:-bpp]
+            ft = (d + r) % 5
+            if ft == 0:  # None
+                pred = bytes(len(line))
+            elif ft == 1:  # Sub
+                pred = left
+            elif ft == 2:  # Up
+                pred = prev
+            elif ft == 3:  # Average
+                pred = [(a + b) // 2 for a, b in zip(left, prev)]
+            else:  # Paeth
+                pred = [paeth(a, b, c) for a, b, c in zip(left, prev, up_left)]
+            raw.append(ft)
+            raw += bytes((x - p) % 256 for x, p in zip(line, pred))
+            prev = line
+        z = zlib.compress(bytes(raw), 6)
+        ihdr = struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0)
+        out = b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr)
+        # split the zlib stream across two IDATs when possible: chunk
+        # boundaries are arbitrary in PNG and a decoder must concatenate
+        # before inflating
+        if len(z) > 16:
+            out += chunk(b"IDAT", z[:16]) + chunk(b"IDAT", z[16:])
+        else:
+            out += chunk(b"IDAT", z)
+        return out + chunk(b"IEND", b"")
 
-        def chunk(tag: bytes, body: bytes) -> bytes:
-            return (
-                _struct.pack(">I", len(body))
-                + tag
-                + body
-                + _struct.pack(">I", _zlib.crc32(tag + body) & 0xFFFFFFFF)
-            )
-
-        for pdf in batches:
-            payloads = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                w, h = 5 + d % 9, 4 + d % 5
-                x = _np.arange(w, dtype=_np.int64)[None, :]
-                y = _np.arange(h, dtype=_np.int64)[:, None]
-                base = 3 * d + 5 * x + 7 * y
-                img = _np.stack(
-                    [base % 256, (base + 11) % 256, (base + 22) % 256],
-                    axis=2,
-                ).astype(_np.uint8)
-                bpp = 3  # bytes per pixel
-                raw = bytearray()
-                prev = bytes(w * bpp)
-                for r in range(h):
-                    line = img[r].tobytes()
-                    ft = (d + r) % 5
-                    raw.append(ft)
-                    if ft == 0:  # None
-                        raw += line
-                    elif ft == 1:  # Sub
-                        raw += bytes(
-                            (line[i] - (line[i - bpp] if i >= bpp else 0))
-                            % 256
-                            for i in range(len(line))
-                        )
-                    elif ft == 2:  # Up
-                        raw += bytes(
-                            (line[i] - prev[i]) % 256
-                            for i in range(len(line))
-                        )
-                    elif ft == 3:  # Average
-                        raw += bytes(
-                            (
-                                line[i]
-                                - (
-                                    (line[i - bpp] if i >= bpp else 0)
-                                    + prev[i]
-                                )
-                                // 2
-                            )
-                            % 256
-                            for i in range(len(line))
-                        )
-                    else:  # Paeth
-                        raw += bytes(
-                            (
-                                line[i]
-                                - _paeth(
-                                    line[i - bpp] if i >= bpp else 0,
-                                    prev[i],
-                                    prev[i - bpp] if i >= bpp else 0,
-                                )
-                            )
-                            % 256
-                            for i in range(len(line))
-                        )
-                    prev = line
-                z = _zlib.compress(bytes(raw), 6)
-                ihdr = _struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0)
-                out = b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr)
-                # split the zlib stream across two IDATs when possible:
-                # chunk boundaries are arbitrary in PNG and a decoder
-                # must concatenate before inflating
-                if len(z) > 16:
-                    out += chunk(b"IDAT", z[:16]) + chunk(b"IDAT", z[16:])
-                else:
-                    out += chunk(b"IDAT", z)
-                out += chunk(b"IEND", b"")
-                payloads.append(out)
-            yield _pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    return docs.select("doc_id").mapInPandas(_gen, "doc_id bigint, payload binary")
+    return _synthesize(docs, encode)
 
 
 def decode_png(media: DataFrame) -> DataFrame:
@@ -919,126 +866,90 @@ def decode_png(media: DataFrame) -> DataFrame:
     the full reverse filter pass (None/Sub/Up/Average/Paeth with the
     spec's predictor; Average divides the SUM before adding, Paeth
     compares in the spec's tie order). 8-bit RGB non-interlaced only —
-    anything else raises loudly. Emits the multimodal family's standard
-    stats; top_row_sum is filter-order sensitive (an Up/Paeth bug
-    corrupts later rows more than earlier ones)."""
+    anything else raises loudly. Emits the standard image stats;
+    top_row_sum is filter-order sensitive (an Up/Paeth bug corrupts later
+    rows more than earlier ones)."""
 
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct as _struct
-        import zlib as _zlib
+    def paeth(a, b, c):
+        p = a + b - c
+        pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
+        if pa <= pb and pa <= pc:
+            return a
+        if pb <= pc:
+            return b
+        return c
 
-        import numpy as _np
-        import pandas as _pd
-
-        def paeth(a, b, c):
-            p = a + b - c
-            pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-            if pa <= pb and pa <= pc:
-                return a
-            if pb <= pc:
-                return b
-            return c
-
-        for pdf in batches:
-            rows = {k: [] for k in (
-                "doc_id", "width", "height", "n_idat", "mean_r", "mean_g",
-                "mean_b", "top_row_sum", "byte_checksum",
-            )}
-            for d, b in zip(pdf["doc_id"], pdf["payload"]):
-                buf = bytes(b)
-                if buf[:8] != b"\x89PNG\r\n\x1a\n":
-                    raise ValueError("not a PNG")
-                pos, w = 8, None
-                idat = bytearray()
-                n_idat = 0
-                while pos < len(buf):
-                    (ln,) = _struct.unpack_from(">I", buf, pos)
-                    tag = buf[pos + 4 : pos + 8]
-                    body = buf[pos + 8 : pos + 8 + ln]
-                    (crc,) = _struct.unpack_from(">I", buf, pos + 8 + ln)
-                    if _zlib.crc32(tag + body) & 0xFFFFFFFF != crc:
-                        raise ValueError(f"bad CRC in {tag!r} chunk")
-                    if tag == b"IHDR":
-                        w, h, depth, ctype, comp, filt, inter = (
-                            _struct.unpack(">IIBBBBB", body)
-                        )
-                        if (depth, ctype, comp, filt, inter) != (8, 2, 0, 0, 0):
-                            raise ValueError(
-                                "unsupported PNG (need 8-bit RGB, "
-                                "non-interlaced): depth="
-                                f"{depth} ctype={ctype} interlace={inter}"
-                            )
-                    elif tag == b"IDAT":
-                        idat += body
-                        n_idat += 1
-                    elif tag == b"IEND":
-                        break
-                    pos += 12 + ln
-                if w is None or not idat:
-                    raise ValueError("missing IHDR/IDAT")
-                raw = _zlib.decompress(bytes(idat))
-                bpp = 3
-                stride = w * bpp
-                if len(raw) != h * (stride + 1):
-                    raise ValueError("inflated size mismatch")
-                img = _np.zeros((h, stride), dtype=_np.uint8)
-                prev = _np.zeros(stride, dtype=_np.int64)
-                for r in range(h):
-                    ft = raw[r * (stride + 1)]
-                    line = _np.frombuffer(
-                        raw, dtype=_np.uint8, count=stride,
-                        offset=r * (stride + 1) + 1,
-                    ).astype(_np.int64)
-                    out = _np.zeros(stride, dtype=_np.int64)
-                    if ft == 0:
-                        out = line
-                    elif ft == 1:  # Sub
-                        for i in range(stride):
-                            left = out[i - bpp] if i >= bpp else 0
-                            out[i] = (line[i] + left) % 256
-                    elif ft == 2:  # Up
-                        out = (line + prev) % 256
-                    elif ft == 3:  # Average
-                        for i in range(stride):
-                            left = out[i - bpp] if i >= bpp else 0
-                            out[i] = (line[i] + (left + prev[i]) // 2) % 256
-                    elif ft == 4:  # Paeth
-                        for i in range(stride):
-                            left = out[i - bpp] if i >= bpp else 0
-                            ul = prev[i - bpp] if i >= bpp else 0
-                            out[i] = (
-                                line[i] + paeth(left, prev[i], ul)
-                            ) % 256
-                    else:
-                        raise ValueError(f"bad filter type {ft}")
-                    img[r] = out.astype(_np.uint8)
-                    prev = out
-                px = img.reshape(h, w, bpp)
-                f = px.astype(_np.float64)
-                rows["doc_id"].append(int(d))
-                rows["width"].append(int(w))
-                rows["height"].append(int(h))
-                rows["n_idat"].append(int(n_idat))
-                rows["mean_r"].append(float(f[:, :, 0].mean()))
-                rows["mean_g"].append(float(f[:, :, 1].mean()))
-                rows["mean_b"].append(float(f[:, :, 2].mean()))
-                rows["top_row_sum"].append(int(px[0].astype(_np.int64).sum()))
-                rows["byte_checksum"].append(
-                    int(px.astype(_np.int64).sum()) % 10**9
+    def decode(_d, buf):
+        if buf[:8] != b"\x89PNG\r\n\x1a\n":
+            raise ValueError("not a PNG")
+        pos, w = 8, None
+        idat = bytearray()
+        n_idat = 0
+        while pos < len(buf):
+            (ln,) = struct.unpack_from(">I", buf, pos)
+            tag = buf[pos + 4 : pos + 8]
+            body = buf[pos + 8 : pos + 8 + ln]
+            (crc,) = struct.unpack_from(">I", buf, pos + 8 + ln)
+            if zlib.crc32(tag + body) & 0xFFFFFFFF != crc:
+                raise ValueError(f"bad CRC in {tag!r} chunk")
+            if tag == b"IHDR":
+                w, h, depth, ctype, comp, filt, inter = struct.unpack(
+                    ">IIBBBBB", body
                 )
-            yield _pd.DataFrame(rows)
+                if (depth, ctype, comp, filt, inter) != (8, 2, 0, 0, 0):
+                    raise ValueError(
+                        "unsupported PNG (need 8-bit RGB, non-interlaced): "
+                        f"depth={depth} ctype={ctype} interlace={inter}"
+                    )
+            elif tag == b"IDAT":
+                idat += body
+                n_idat += 1
+            elif tag == b"IEND":
+                break
+            pos += 12 + ln
+        if w is None or not idat:
+            raise ValueError("missing IHDR/IDAT")
+        raw = zlib.decompress(bytes(idat))
+        bpp = 3
+        stride = w * bpp
+        if len(raw) != h * (stride + 1):
+            raise ValueError("inflated size mismatch")
+        img = np.zeros((h, stride), dtype=np.uint8)
+        prev = np.zeros(stride, dtype=np.int64)
+        for r in range(h):
+            ft = raw[r * (stride + 1)]
+            line = np.frombuffer(
+                raw, dtype=np.uint8, count=stride, offset=r * (stride + 1) + 1
+            ).astype(np.int64)
+            out = np.zeros(stride, dtype=np.int64)
+            if ft == 0:
+                out = line
+            elif ft == 1:  # Sub
+                for i in range(stride):
+                    left = out[i - bpp] if i >= bpp else 0
+                    out[i] = (line[i] + left) % 256
+            elif ft == 2:  # Up
+                out = (line + prev) % 256
+            elif ft == 3:  # Average
+                for i in range(stride):
+                    left = out[i - bpp] if i >= bpp else 0
+                    out[i] = (line[i] + (left + prev[i]) // 2) % 256
+            elif ft == 4:  # Paeth
+                for i in range(stride):
+                    left = out[i - bpp] if i >= bpp else 0
+                    ul = prev[i - bpp] if i >= bpp else 0
+                    out[i] = (line[i] + paeth(left, prev[i], ul)) % 256
+            else:
+                raise ValueError(f"bad filter type {ft}")
+            img[r] = out.astype(np.uint8)
+            prev = out
+        return {
+            "width": int(w), "height": int(h), "n_idat": int(n_idat),
+            "pixels": img.reshape(h, w, bpp),
+        }
 
-    out = media.mapInPandas(_decode, PNG_FEATURES_SCHEMA)
-    return out.select(
-        "doc_id", "width", "height", "n_idat",
-        F.round("mean_r", 6).alias("mean_r"),
-        F.round("mean_g", 6).alias("mean_g"),
-        F.round("mean_b", 6).alias("mean_b"),
-        "top_row_sum", "byte_checksum",
-    )
+    return _decode(media, decode, PNG_FEATURES_SCHEMA)
 
-
-# -- GIF (REAL decode: LSB-first bit unpacking + LZW dictionary) -----------
 
 GIF_FEATURES_SCHEMA = (
     "doc_id bigint, width int, height int, n_subblocks int, mean_r double, "
@@ -1152,45 +1063,27 @@ def synthesize_gif_media(docs: DataFrame) -> DataFrame:
     """(doc_id, payload binary): a VALID GIF87a per document — logical
     screen descriptor, 256-color global palette, one non-interlaced
     image, REAL LZW-compressed pixel data (9..12-bit codes, LSB-first
-    packing, 255-byte sub-blocks), trailer. Pixel index (x, y) =
-    (3*doc_id + 5*x + 7*y) % 256; palette[i] = (i, (i+11)%256,
-    (i+22)%256) — so decoded channel means have the same closed form as
-    the PNG/BMP family. w = 5 + doc_id mod 9, h = 4 + doc_id mod 5."""
+    packing, 255-byte sub-blocks), trailer. Pixel index (x, y) = channel 0
+    of ``_test_image``, (3*doc_id + 5*x + 7*y) % 256, over
+    ``_TEST_PALETTE`` — so decoded channel means have the same closed form
+    as the PNG/BMP family. w = 5 + doc_id mod 9, h = 4 + doc_id mod 5."""
     lzw_encode, _ = _make_lzw_codec()
 
-    def _gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct as _struct
+    def encode(d):
+        w, h = 5 + d % 9, 4 + d % 5
+        indices = _test_image(d, w, h)[:, :, 0].ravel().tolist()
+        out = b"GIF87a"
+        # packed: GCT flag set, 8-bit color res, 256-entry table
+        out += struct.pack("<HHBBB", w, h, 0xF7, 0, 0) + _TEST_PALETTE
+        out += b"\x2c" + struct.pack("<HHHH", 0, 0, w, h) + b"\x00"
+        out += bytes([8])  # LZW minimum code size
+        z = lzw_encode(indices, 8)
+        for i in range(0, len(z), 255):
+            sub = z[i : i + 255]
+            out += bytes([len(sub)]) + sub
+        return out + b"\x00\x3b"
 
-        import pandas as _pd
-
-        for pdf in batches:
-            payloads = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                w, h = 5 + d % 9, 4 + d % 5
-                indices = [
-                    (3 * d + 5 * x + 7 * y) % 256
-                    for y in range(h)
-                    for x in range(w)
-                ]
-                palette = bytearray()
-                for i in range(256):
-                    palette += bytes((i, (i + 11) % 256, (i + 22) % 256))
-                out = b"GIF87a"
-                # packed: GCT flag set, 8-bit color res, 256-entry table
-                out += _struct.pack("<HHBBB", w, h, 0xF7, 0, 0)
-                out += bytes(palette)
-                out += b"\x2c" + _struct.pack("<HHHH", 0, 0, w, h) + b"\x00"
-                out += bytes([8])  # LZW minimum code size
-                z = lzw_encode(indices, 8)
-                for i in range(0, len(z), 255):
-                    chunk = z[i : i + 255]
-                    out += bytes([len(chunk)]) + chunk
-                out += b"\x00\x3b"
-                payloads.append(out)
-            yield _pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    return docs.select("doc_id").mapInPandas(_gen, "doc_id bigint, payload binary")
+    return _synthesize(docs, encode)
 
 
 def decode_gif(media: DataFrame) -> DataFrame:
@@ -1199,90 +1092,56 @@ def decode_gif(media: DataFrame) -> DataFrame:
     sub-block reassembly, and a full LZW decoder (variable 9..12-bit
     codes read LSB-first, dictionary growth, CLEAR resets, the KwKwK
     self-referencing case). 87a/89a, single non-interlaced image with a
-    global palette; anything else raises loudly. Emits the multimodal
-    family's standard stats via palette lookup."""
+    global palette; anything else raises loudly. Emits the standard
+    image stats via palette lookup."""
     _, lzw_decode = _make_lzw_codec()
 
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct as _struct
+    def decode(_d, buf):
+        if buf[:6] not in (b"GIF87a", b"GIF89a"):
+            raise ValueError("not a GIF")
+        _sw, _sh, packed, _bg, _ar = struct.unpack_from("<HHBBB", buf, 6)
+        pos = 13
+        if not packed & 0x80:
+            raise ValueError("GIF without a global palette unsupported")
+        gct_n = 2 << (packed & 0x07)
+        palette = np.frombuffer(
+            buf, dtype=np.uint8, count=gct_n * 3, offset=pos
+        ).reshape(gct_n, 3)
+        pos += gct_n * 3
+        if buf[pos] != 0x2C:
+            raise ValueError(
+                f"expected image descriptor, got 0x{buf[pos]:02x} "
+                "(extensions unsupported)"
+            )
+        _left, _top, w, h, ipacked = struct.unpack_from("<HHHHB", buf, pos + 1)
+        pos += 10
+        if ipacked & 0x40:
+            raise ValueError("interlaced GIF unsupported")
+        if ipacked & 0x80:
+            raise ValueError("local palette unsupported")
+        min_code = buf[pos]
+        pos += 1
+        z = bytearray()
+        n_sub = 0
+        while True:
+            ln = buf[pos]
+            pos += 1
+            if ln == 0:
+                break
+            z += buf[pos : pos + ln]
+            pos += ln
+            n_sub += 1
+        if buf[pos] != 0x3B:
+            raise ValueError("missing GIF trailer")
+        idx = lzw_decode(bytes(z), min_code, w * h)
+        img = palette[np.array(idx, dtype=np.int32)].reshape(h, w, 3)
+        return {
+            "width": int(w), "height": int(h), "n_subblocks": n_sub,
+            "pixels": img,
+        }
 
-        import numpy as _np
-        import pandas as _pd
+    return _decode(media, decode, GIF_FEATURES_SCHEMA)
 
-        for pdf in batches:
-            rows = {k: [] for k in (
-                "doc_id", "width", "height", "n_subblocks", "mean_r",
-                "mean_g", "mean_b", "top_row_sum", "byte_checksum",
-            )}
-            for d, b in zip(pdf["doc_id"], pdf["payload"]):
-                buf = bytes(b)
-                if buf[:6] not in (b"GIF87a", b"GIF89a"):
-                    raise ValueError("not a GIF")
-                sw, sh, packed, _bg, _ar = _struct.unpack_from("<HHBBB", buf, 6)
-                pos = 13
-                if not packed & 0x80:
-                    raise ValueError("GIF without a global palette unsupported")
-                gct_n = 2 << (packed & 0x07)
-                palette = _np.frombuffer(
-                    buf, dtype=_np.uint8, count=gct_n * 3, offset=pos
-                ).reshape(gct_n, 3)
-                pos += gct_n * 3
-                if buf[pos] != 0x2C:
-                    raise ValueError(
-                        f"expected image descriptor, got 0x{buf[pos]:02x} "
-                        "(extensions unsupported)"
-                    )
-                left, top, w, h, ipacked = _struct.unpack_from(
-                    "<HHHHB", buf, pos + 1
-                )
-                pos += 10
-                if ipacked & 0x40:
-                    raise ValueError("interlaced GIF unsupported")
-                if ipacked & 0x80:
-                    raise ValueError("local palette unsupported")
-                min_code = buf[pos]
-                pos += 1
-                z = bytearray()
-                n_sub = 0
-                while True:
-                    ln = buf[pos]
-                    pos += 1
-                    if ln == 0:
-                        break
-                    z += buf[pos : pos + ln]
-                    pos += ln
-                    n_sub += 1
-                if buf[pos] != 0x3B:
-                    raise ValueError("missing GIF trailer")
-                idx = lzw_decode(bytes(z), min_code, w * h)
-                img = palette[_np.array(idx, dtype=_np.int32)].reshape(
-                    h, w, 3
-                )
-                f = img.astype(_np.float64)
-                rows["doc_id"].append(int(d))
-                rows["width"].append(int(w))
-                rows["height"].append(int(h))
-                rows["n_subblocks"].append(n_sub)
-                rows["mean_r"].append(float(f[:, :, 0].mean()))
-                rows["mean_g"].append(float(f[:, :, 1].mean()))
-                rows["mean_b"].append(float(f[:, :, 2].mean()))
-                rows["top_row_sum"].append(int(img[0].astype(_np.int64).sum()))
-                rows["byte_checksum"].append(
-                    int(img.astype(_np.int64).sum()) % 10**9
-                )
-            yield _pd.DataFrame(rows)
-
-    out = media.mapInPandas(_decode, GIF_FEATURES_SCHEMA)
-    return out.select(
-        "doc_id", "width", "height", "n_subblocks",
-        F.round("mean_r", 6).alias("mean_r"),
-        F.round("mean_g", 6).alias("mean_g"),
-        F.round("mean_b", 6).alias("mean_b"),
-        "top_row_sum", "byte_checksum",
-    )
-
-
-# -- PCX (REAL decode: RLE runs + VGA palette) ------------------------------
 
 PCX_FEATURES_SCHEMA = (
     "doc_id bigint, width int, height int, rle_ratio double, mean_r double, "
@@ -1296,64 +1155,45 @@ def synthesize_pcx_media(docs: DataFrame) -> DataFrame:
     bytes-per-line stride), REAL RLE-compressed scanlines (runs encoded
     as 0xC0|len + value, literals >= 0xC0 forced into 1-runs — the
     format's escape rule), and the 256-entry VGA palette after the 0x0C
-    marker. Pixel index and palette share the GIF family's closed form:
-    index(x, y) = (3*doc_id + 5*x + 7*y) % 256, palette[i] = (i,
-    (i+11)%256, (i+22)%256). To exercise real runs, every third row is
-    CONSTANT (index of its first pixel), so RLE produces genuine
-    multi-byte runs alongside literal stretches."""
+    marker. Pixel index and palette are the GIF family's:
+    index(x, y) = (3*doc_id + 5*x + 7*y) % 256 over ``_TEST_PALETTE``.
+    To exercise real runs, every third row is CONSTANT (index of its
+    first pixel), so RLE produces genuine multi-byte runs alongside
+    literal stretches."""
 
-    def _gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct as _struct
+    def rle_encode(row):
+        out = bytearray()
+        i = 0
+        while i < len(row):
+            v = row[i]
+            run = 1
+            while i + run < len(row) and row[i + run] == v and run < 63:
+                run += 1
+            if run > 1 or v >= 0xC0:
+                out.append(0xC0 | run)
+            out.append(v)
+            i += run
+        return bytes(out)
 
-        import pandas as _pd
+    def encode(d):
+        w, h = 5 + d % 9, 4 + d % 5
+        stride = w + (w & 1)  # even bytes-per-line per the spec
+        hdr = bytearray(128)
+        hdr[0] = 0x0A           # manufacturer
+        hdr[1] = 5              # version 5 (palette-capable)
+        hdr[2] = 1              # RLE encoding
+        hdr[3] = 8              # bits per pixel
+        struct.pack_into("<HHHH", hdr, 4, 0, 0, w - 1, h - 1)
+        struct.pack_into("<HH", hdr, 12, 72, 72)  # dpi
+        hdr[65] = 1             # planes
+        struct.pack_into("<H", hdr, 66, stride)
+        idx = _test_image(d, w, h)[:, :, 0].copy()
+        idx[2::3] = idx[2::3, :1]  # constant rows -> genuine RLE runs
+        pad = b"\x00" * (stride - w)
+        body = b"".join(rle_encode(idx[y].tobytes() + pad) for y in range(h))
+        return bytes(hdr) + body + b"\x0c" + _TEST_PALETTE
 
-        def rle_encode(row):
-            out = bytearray()
-            i = 0
-            while i < len(row):
-                v = row[i]
-                run = 1
-                while i + run < len(row) and row[i + run] == v and run < 63:
-                    run += 1
-                if run > 1 or v >= 0xC0:
-                    out.append(0xC0 | run)
-                out.append(v)
-                i += run
-            return bytes(out)
-
-        for pdf in batches:
-            payloads = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                w, h = 5 + d % 9, 4 + d % 5
-                stride = w + (w & 1)  # even bytes-per-line per the spec
-                hdr = bytearray(128)
-                hdr[0] = 0x0A           # manufacturer
-                hdr[1] = 5              # version 5 (palette-capable)
-                hdr[2] = 1              # RLE encoding
-                hdr[3] = 8              # bits per pixel
-                _struct.pack_into("<HHHH", hdr, 4, 0, 0, w - 1, h - 1)
-                _struct.pack_into("<HH", hdr, 12, 72, 72)  # dpi
-                hdr[65] = 1             # planes
-                _struct.pack_into("<H", hdr, 66, stride)
-                body = bytearray()
-                for y in range(h):
-                    if y % 3 == 2:  # constant row -> genuine RLE runs
-                        base = (3 * d + 7 * y) % 256
-                        row = bytes([base]) * w
-                    else:
-                        row = bytes(
-                            (3 * d + 5 * x + 7 * y) % 256 for x in range(w)
-                        )
-                    row = row + b"\x00" * (stride - w)
-                    body += rle_encode(row)
-                palette = bytearray()
-                for i in range(256):
-                    palette += bytes((i, (i + 11) % 256, (i + 22) % 256))
-                payloads.append(bytes(hdr) + bytes(body) + b"\x0c" + bytes(palette))
-            yield _pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    return docs.select("doc_id").mapInPandas(_gen, "doc_id bigint, payload binary")
+    return _synthesize(docs, encode)
 
 
 def decode_pcx(media: DataFrame) -> DataFrame:
@@ -1362,279 +1202,54 @@ def decode_pcx(media: DataFrame) -> DataFrame:
     RLE expansion (0xC0-escaped runs, literals below 0xC0), stride-
     padding strip, trailing VGA-palette lookup behind the 0x0C marker.
     8-bit single-plane only; anything else raises loudly. Emits the
-    multimodal family's standard stats plus the measured RLE
-    compression ratio (expanded/encoded — proves real runs were
-    decoded, not a passthrough)."""
+    standard image stats plus the measured RLE compression ratio
+    (expanded/encoded — proves real runs were decoded, not a
+    passthrough)."""
 
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct as _struct
+    def decode(_d, buf):
+        if len(buf) < 128 + 769 or buf[0] != 0x0A:
+            raise ValueError("not a PCX")
+        if buf[2] != 1 or buf[3] != 8 or buf[65] != 1:
+            raise ValueError(
+                "unsupported PCX (need RLE, 8 bpp, 1 plane): "
+                f"enc={buf[2]} bpp={buf[3]} planes={buf[65]}"
+            )
+        x0, y0, x1, y1 = struct.unpack_from("<HHHH", buf, 4)
+        (stride,) = struct.unpack_from("<H", buf, 66)
+        w, h = x1 - x0 + 1, y1 - y0 + 1
+        if buf[-769] != 0x0C:
+            raise ValueError("missing VGA palette marker")
+        palette = np.frombuffer(
+            buf, dtype=np.uint8, count=768, offset=len(buf) - 768
+        ).reshape(256, 3)
+        need = stride * h
+        out = bytearray()
+        pos = 128
+        end = len(buf) - 769
+        while len(out) < need:
+            if pos >= end:
+                raise ValueError("truncated PCX scanline data")
+            v = buf[pos]
+            pos += 1
+            if (v & 0xC0) == 0xC0:
+                run = v & 0x3F
+                if pos >= end:
+                    raise ValueError("dangling RLE escape")
+                out += bytes([buf[pos]]) * run
+                pos += 1
+            else:
+                out.append(v)
+        if len(out) != need:
+            raise ValueError("RLE expansion overran the image")
+        idx = np.frombuffer(bytes(out), dtype=np.uint8).reshape(h, stride)[:, :w]
+        return {
+            "width": int(w), "height": int(h),
+            "rle_ratio": need / max(1, pos - 128),
+            "pixels": palette[idx.astype(np.int32)],
+        }
 
-        import numpy as _np
-        import pandas as _pd
+    return _decode(media, decode, PCX_FEATURES_SCHEMA)
 
-        for pdf in batches:
-            rows = {k: [] for k in (
-                "doc_id", "width", "height", "rle_ratio", "mean_r",
-                "mean_g", "mean_b", "top_row_sum", "byte_checksum",
-            )}
-            for d, b in zip(pdf["doc_id"], pdf["payload"]):
-                buf = bytes(b)
-                if len(buf) < 128 + 769 or buf[0] != 0x0A:
-                    raise ValueError("not a PCX")
-                if buf[2] != 1 or buf[3] != 8 or buf[65] != 1:
-                    raise ValueError(
-                        "unsupported PCX (need RLE, 8 bpp, 1 plane): "
-                        f"enc={buf[2]} bpp={buf[3]} planes={buf[65]}"
-                    )
-                x0, y0, x1, y1 = _struct.unpack_from("<HHHH", buf, 4)
-                (stride,) = _struct.unpack_from("<H", buf, 66)
-                w, h = x1 - x0 + 1, y1 - y0 + 1
-                if buf[-769] != 0x0C:
-                    raise ValueError("missing VGA palette marker")
-                palette = _np.frombuffer(
-                    buf, dtype=_np.uint8, count=768, offset=len(buf) - 768
-                ).reshape(256, 3)
-                need = stride * h
-                out = bytearray()
-                pos = 128
-                end = len(buf) - 769
-                while len(out) < need:
-                    if pos >= end:
-                        raise ValueError("truncated PCX scanline data")
-                    v = buf[pos]
-                    pos += 1
-                    if (v & 0xC0) == 0xC0:
-                        run = v & 0x3F
-                        if pos >= end:
-                            raise ValueError("dangling RLE escape")
-                        out += bytes([buf[pos]]) * run
-                        pos += 1
-                    else:
-                        out.append(v)
-                if len(out) != need:
-                    raise ValueError("RLE expansion overran the image")
-                ratio = need / max(1, pos - 128)
-                idx = _np.frombuffer(bytes(out), dtype=_np.uint8).reshape(
-                    h, stride
-                )[:, :w]
-                img = palette[idx.astype(_np.int32)]
-                f = img.astype(_np.float64)
-                rows["doc_id"].append(int(d))
-                rows["width"].append(int(w))
-                rows["height"].append(int(h))
-                rows["rle_ratio"].append(float(round(ratio, 6)))
-                rows["mean_r"].append(float(f[:, :, 0].mean()))
-                rows["mean_g"].append(float(f[:, :, 1].mean()))
-                rows["mean_b"].append(float(f[:, :, 2].mean()))
-                rows["top_row_sum"].append(int(img[0].astype(_np.int64).sum()))
-                rows["byte_checksum"].append(
-                    int(img.astype(_np.int64).sum()) % 10**9
-                )
-            yield _pd.DataFrame(rows)
-
-    out = media.mapInPandas(_decode, PCX_FEATURES_SCHEMA)
-    return out.select(
-        "doc_id", "width", "height", "rle_ratio",
-        F.round("mean_r", 6).alias("mean_r"),
-        F.round("mean_g", 6).alias("mean_g"),
-        F.round("mean_b", 6).alias("mean_b"),
-        "top_row_sum", "byte_checksum",
-    )
-
-
-# -- TIFF (REAL decode: IFD tag walk + strip reassembly) --------------------
-
-TIFF_FEATURES_SCHEMA = (
-    "doc_id bigint, width int, height int, n_strips int, mean_r double, "
-    "mean_g double, mean_b double, top_row_sum bigint, byte_checksum bigint"
-)
-
-
-def synthesize_tiff_media(docs: DataFrame) -> DataFrame:
-    """(doc_id, payload binary): a VALID little-endian baseline TIFF per
-    document — 'II*\\0' header, one IFD with the required baseline tags
-    (width/length, BitsPerSample 8,8,8 stored BY OFFSET, Compression=1,
-    Photometric=RGB, SamplesPerPixel=3, RowsPerStrip=2 so images split
-    into MULTIPLE strips with per-strip offsets/bytecounts arrays), and
-    uncompressed RGB strip data. Pixel (x, y): R = (3*doc_id + 5*x +
-    7*y) % 256, G = +11, B = +22 (the PNG family's formula).
-    Short-count tag values that fit 4 bytes are stored INLINE — the
-    TIFF subtlety a decoder must honor both ways."""
-
-    def _gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct as _struct
-
-        import numpy as _np
-        import pandas as _pd
-
-        for pdf in batches:
-            payloads = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                w, h = 5 + d % 9, 4 + d % 5
-                x = _np.arange(w, dtype=_np.int64)[None, :]
-                y = _np.arange(h, dtype=_np.int64)[:, None]
-                base = 3 * d + 5 * x + 7 * y
-                img = _np.stack(
-                    [base % 256, (base + 11) % 256, (base + 22) % 256],
-                    axis=2,
-                ).astype(_np.uint8)
-                rows_per_strip = 2
-                strips = [
-                    img[r : r + rows_per_strip].tobytes()
-                    for r in range(0, h, rows_per_strip)
-                ]
-                n_strips = len(strips)
-                # layout: header(8) | IFD | bits-array | offsets | counts | strips
-                n_tags = 9
-                ifd_at = 8
-                ifd_size = 2 + n_tags * 12 + 4
-                bits_at = ifd_at + ifd_size
-                soff_at = bits_at + 6
-                scnt_at = soff_at + 4 * n_strips
-                data_at = scnt_at + 4 * n_strips
-                strip_offsets = []
-                pos = data_at
-                for s in strips:
-                    strip_offsets.append(pos)
-                    pos += len(s)
-
-                def entry(tag, typ, count, value):
-                    return _struct.pack("<HHI4s", tag, typ, count, value)
-
-                def inline_short(v):
-                    return _struct.pack("<HH", v, 0)
-
-                def inline_long(v):
-                    return _struct.pack("<I", v)
-
-                entries = [
-                    entry(256, 3, 1, inline_short(w)),       # ImageWidth
-                    entry(257, 3, 1, inline_short(h)),       # ImageLength
-                    entry(258, 3, 3, inline_long(bits_at)),  # BitsPerSample -> offset
-                    entry(259, 3, 1, inline_short(1)),       # Compression: none
-                    entry(262, 3, 1, inline_short(2)),       # Photometric: RGB
-                    entry(
-                        273, 4, n_strips,
-                        inline_long(strip_offsets[0]) if n_strips == 1
-                        else inline_long(soff_at),
-                    ),                                       # StripOffsets
-                    entry(277, 3, 1, inline_short(3)),       # SamplesPerPixel
-                    entry(278, 3, 1, inline_short(rows_per_strip)),
-                    entry(
-                        279, 4, n_strips,
-                        inline_long(len(strips[0])) if n_strips == 1
-                        else inline_long(scnt_at),
-                    ),                                       # StripByteCounts
-                ]
-                out = b"II*\x00" + _struct.pack("<I", ifd_at)
-                out += _struct.pack("<H", n_tags) + b"".join(entries)
-                out += _struct.pack("<I", 0)  # no next IFD
-                out += _struct.pack("<HHH", 8, 8, 8)
-                out += b"".join(_struct.pack("<I", o) for o in strip_offsets)
-                out += b"".join(_struct.pack("<I", len(s)) for s in strips)
-                out += b"".join(strips)
-                payloads.append(out)
-            yield _pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    return docs.select("doc_id").mapInPandas(_gen, "doc_id bigint, payload binary")
-
-
-def decode_tiff(media: DataFrame) -> DataFrame:
-    """REAL TIFF decode via mapInPandas — no imaging library: byte-order
-    check, IFD tag walk with the inline-vs-offset value rule (SHORT and
-    LONG types; values whose byte size fits 4 bytes live inside the
-    entry, larger ones behind an offset), multi-strip reassembly via the
-    StripOffsets/StripByteCounts arrays. Baseline uncompressed 8-bit RGB
-    little-endian only; anything else raises loudly."""
-
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct as _struct
-
-        import numpy as _np
-        import pandas as _pd
-
-        TYPE_SIZE = {3: 2, 4: 4}
-
-        def read_values(buf, typ, count, raw):
-            size = TYPE_SIZE.get(typ)
-            if size is None:
-                raise ValueError(f"unsupported TIFF tag type {typ}")
-            fmt = "<" + ("H" if typ == 3 else "I") * count
-            if size * count <= 4:
-                return list(_struct.unpack_from(fmt, raw, 0))
-            (off,) = _struct.unpack_from("<I", raw, 0)
-            return list(_struct.unpack_from(fmt, buf, off))
-
-        for pdf in batches:
-            rows = {k: [] for k in (
-                "doc_id", "width", "height", "n_strips", "mean_r", "mean_g",
-                "mean_b", "top_row_sum", "byte_checksum",
-            )}
-            for d, b in zip(pdf["doc_id"], pdf["payload"]):
-                buf = bytes(b)
-                if buf[:4] != b"II*\x00":
-                    raise ValueError(
-                        "not a little-endian TIFF (big-endian 'MM' and "
-                        "BigTIFF unsupported)"
-                    )
-                (ifd_at,) = _struct.unpack_from("<I", buf, 4)
-                (n_tags,) = _struct.unpack_from("<H", buf, ifd_at)
-                tags = {}
-                for i in range(n_tags):
-                    tag, typ, count = _struct.unpack_from(
-                        "<HHI", buf, ifd_at + 2 + i * 12
-                    )
-                    raw = buf[ifd_at + 2 + i * 12 + 8 : ifd_at + 2 + i * 12 + 12]
-                    tags[tag] = read_values(buf, typ, count, raw)
-                for req in (256, 257, 273, 279):
-                    if req not in tags:
-                        raise ValueError(f"missing required TIFF tag {req}")
-                w, h = tags[256][0], tags[257][0]
-                if tags.get(259, [1])[0] != 1:
-                    raise ValueError("compressed TIFF unsupported")
-                if tags.get(277, [1])[0] != 3 or tags.get(258, [8, 8, 8]) != [8, 8, 8]:
-                    raise ValueError("need 8-bit RGB samples")
-                offs, cnts = tags[273], tags[279]
-                if len(offs) != len(cnts):
-                    raise ValueError("strip offset/count arity mismatch")
-                data = bytearray()
-                for o, c in zip(offs, cnts):
-                    if o + c > len(buf):
-                        raise ValueError("truncated TIFF strip")
-                    data += buf[o : o + c]
-                if len(data) != w * h * 3:
-                    raise ValueError(
-                        f"strip bytes {len(data)} != {w}x{h}x3"
-                    )
-                img = _np.frombuffer(bytes(data), dtype=_np.uint8).reshape(
-                    h, w, 3
-                )
-                f = img.astype(_np.float64)
-                rows["doc_id"].append(int(d))
-                rows["width"].append(int(w))
-                rows["height"].append(int(h))
-                rows["n_strips"].append(len(offs))
-                rows["mean_r"].append(float(f[:, :, 0].mean()))
-                rows["mean_g"].append(float(f[:, :, 1].mean()))
-                rows["mean_b"].append(float(f[:, :, 2].mean()))
-                rows["top_row_sum"].append(int(img[0].astype(_np.int64).sum()))
-                rows["byte_checksum"].append(
-                    int(img.astype(_np.int64).sum()) % 10**9
-                )
-            yield _pd.DataFrame(rows)
-
-    out = media.mapInPandas(_decode, TIFF_FEATURES_SCHEMA)
-    return out.select(
-        "doc_id", "width", "height", "n_strips",
-        F.round("mean_r", 6).alias("mean_r"),
-        F.round("mean_g", 6).alias("mean_g"),
-        F.round("mean_b", 6).alias("mean_b"),
-        "top_row_sum", "byte_checksum",
-    )
-
-
-# -- QOI (REAL decode: run/index/diff/luma op stream) -----------------------
 
 QOI_FEATURES_SCHEMA = (
     "doc_id bigint, width int, height int, qoi_ratio double, mean_r double, "
@@ -1754,31 +1369,19 @@ def synthesize_qoi_media(docs: DataFrame) -> DataFrame:
     """(doc_id, payload binary): a VALID QOI (RGB) per document, really
     encoded — the +5/+7 formula steps emit LUMA ops, every fourth row
     is constant (RUN ops), repeated colors hit the 64-slot INDEX, and
-    first-of-kind pixels fall back to full RGB ops. Pixel (x, y):
-    R = (3*doc_id + 5*x + 7*y) % 256 (G = +11, B = +22), except rows
-    with y % 4 == 3 which repeat their first pixel."""
+    first-of-kind pixels fall back to full RGB ops. The pixels are
+    ``_test_image`` in R, G, B order (R = (3*doc_id + 5*x + 7*y) % 256,
+    G = +11, B = +22), except rows with y % 4 == 3, which repeat their
+    first pixel."""
     qoi_encode, _ = _make_qoi_codec()
 
-    def _gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pandas as _pd
+    def encode(d):
+        w, h = 5 + d % 9, 4 + d % 5
+        img = _test_image(d, w, h)
+        img[3::4] = img[3::4, :1]
+        return qoi_encode([tuple(p) for p in img.reshape(-1, 3).tolist()], w, h)
 
-        for pdf in batches:
-            payloads = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                w, h = 5 + d % 9, 4 + d % 5
-                pixels = []
-                for y in range(h):
-                    for x in range(w):
-                        xe = 0 if y % 4 == 3 else x
-                        base = (3 * d + 5 * xe + 7 * y) % 256
-                        pixels.append(
-                            (base, (base + 11) % 256, (base + 22) % 256)
-                        )
-                payloads.append(qoi_encode(pixels, w, h))
-            yield _pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    return docs.select("doc_id").mapInPandas(_gen, "doc_id bigint, payload binary")
+    return _synthesize(docs, encode)
 
 
 def decode_qoi(media: DataFrame) -> DataFrame:
@@ -1786,54 +1389,31 @@ def decode_qoi(media: DataFrame) -> DataFrame:
     dispatch (RUN with its 62 cap, the running 64-slot color INDEX with
     the spec's multiplicative hash, 2-bit DIFF, LUMA green-delta
     encoding, literal RGB) plus end-marker verification. 3-channel only;
-    emits the multimodal family's standard stats and the measured
-    compression ratio."""
+    emits the standard image stats and the measured compression ratio."""
     _, qoi_decode = _make_qoi_codec()
 
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as _np
-        import pandas as _pd
+    def decode(_d, buf):
+        w, h, pixels, consumed = qoi_decode(buf)
+        return {
+            "width": int(w), "height": int(h),
+            "qoi_ratio": w * h * 3 / max(1, consumed - 22),
+            "pixels": np.array(pixels, dtype=np.uint8).reshape(h, w, 3),
+        }
 
-        for pdf in batches:
-            rows = {k: [] for k in (
-                "doc_id", "width", "height", "qoi_ratio", "mean_r",
-                "mean_g", "mean_b", "top_row_sum", "byte_checksum",
-            )}
-            for d, b in zip(pdf["doc_id"], pdf["payload"]):
-                buf = bytes(b)
-                w, h, pixels, consumed = qoi_decode(buf)
-                img = _np.array(pixels, dtype=_np.uint8).reshape(h, w, 3)
-                f = img.astype(_np.float64)
-                rows["doc_id"].append(int(d))
-                rows["width"].append(int(w))
-                rows["height"].append(int(h))
-                rows["qoi_ratio"].append(
-                    float(round(w * h * 3 / max(1, consumed - 22), 6))
-                )
-                rows["mean_r"].append(float(f[:, :, 0].mean()))
-                rows["mean_g"].append(float(f[:, :, 1].mean()))
-                rows["mean_b"].append(float(f[:, :, 2].mean()))
-                rows["top_row_sum"].append(int(img[0].astype(_np.int64).sum()))
-                rows["byte_checksum"].append(
-                    int(img.astype(_np.int64).sum()) % 10**9
-                )
-            yield _pd.DataFrame(rows)
-
-    out = media.mapInPandas(_decode, QOI_FEATURES_SCHEMA)
-    return out.select(
-        "doc_id", "width", "height", "qoi_ratio",
-        F.round("mean_r", 6).alias("mean_r"),
-        F.round("mean_g", 6).alias("mean_g"),
-        F.round("mean_b", 6).alias("mean_b"),
-        "top_row_sum", "byte_checksum",
-    )
+    return _decode(media, decode, QOI_FEATURES_SCHEMA)
 
 
-# -- JPEG (REAL baseline decode: Annex-K Huffman + IDCT) -------------------
+# ---- JPEG: Annex-K Huffman + IDCT, baseline through progressive ----------
 
 JPEG_FEATURES_SCHEMA = (
     "doc_id bigint, width int, height int, n_blocks int, mean_px double, "
     "top_row_sum bigint, byte_checksum bigint"
+)
+
+_JpegCodec = namedtuple(
+    "_JpegCodec",
+    "encode_gray encode_color decode encode_color_420 "
+    "encode_gray_progressive encode_color_422 encode_gray_progressive_sa",
 )
 
 
@@ -1849,8 +1429,9 @@ def _make_jpeg_codec():
     separable float IDCT, and (color) interleaved 4:4:4 YCbCr MCUs with
     the spec's YCbCr->RGB conversion.
 
-    Returns ``(encode_gray, encode_color, decode, encode_color_420)``.
-    ``encode_gray(blocks, w, h)`` takes QUANTIZED coefficient blocks
+    Returns a ``_JpegCodec`` (a namedtuple, so positional unpacking
+    works too); closures capture its fields, never the tuple, so only
+    factory-made functions ship. ``encode_gray(blocks, w, h)`` takes QUANTIZED coefficient blocks
     (8x8 int arrays in natural order, T.81 convention: row index =
     VERTICAL frequency v, column = horizontal u — the orientation the
     zigzag scan implies; quant tables all ones) in raster MCU order;
@@ -2767,7 +2348,7 @@ def _make_jpeg_codec():
             + b"\xff\xd9"
         )
 
-    return (
+    return _JpegCodec(
         encode_gray, encode_color, decode, encode_color_420,
         encode_gray_progressive, encode_color_422,
         encode_gray_progressive_sa,
@@ -2777,42 +2358,40 @@ def _make_jpeg_codec():
 def synthesize_jpeg_media(docs: DataFrame) -> DataFrame:
     """(doc_id, payload binary): a VALID baseline JFIF grayscale JPEG
     per document, really entropy-coded with the Annex-K tables. The
-    image is PIECEWISE-CONSTANT per 8x8 block — block (bx, by) has gray
-    value (3*doc_id + 17*bx + 29*by) % 256 — which makes the lossy codec
-    EXACT here: a constant block's DCT is DC-only (DC = 8*(v-128),
-    integral), the all-ones quant table preserves it, and the IDCT
-    returns the constant bit-for-bit after rounding. DC prediction
-    chains across blocks (varying block values exercise it), AC coding
-    contributes EOBs; non-zero AC coefficients are exercised by the
+    image is PIECEWISE-CONSTANT per 8x8 block (``_gray_blocks``: block
+    (bx, by) has gray value (3*doc_id + 17*bx + 29*by) % 256), which
+    makes the lossy codec EXACT here: a constant block's DCT is DC-only,
+    the all-ones quant table preserves it, and the IDCT returns the
+    constant bit-for-bit after rounding. DC prediction chains across
+    blocks (varying block values exercise it), AC coding contributes
+    EOBs; non-zero AC coefficients are exercised by the
     coefficient-roundtrip unit tests (their decoded pixels have no
     closed form the SQL oracle could state).
     w = 8*(1 + doc_id mod 3), h = 8*(1 + doc_id mod 2)."""
+    encode_gray = _make_jpeg_codec().encode_gray
+    return _synthesize(docs, lambda d: encode_gray(*_gray_blocks(d)))
 
-    # bind the factory's RETURNED closure (shipped by value with its
-    # cells) — capturing the module-level factory function itself would
-    # pickle by reference and die with ModuleNotFoundError on workers
-    # whose PYTHONPATH lacks the repo (verify-from-/tmp gotcha)
-    encode_gray, *_rest = _make_jpeg_codec()
 
-    def _gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pandas as _pd
+def synthesize_jpeg_progressive_media(docs: DataFrame) -> DataFrame:
+    """(doc_id, payload binary): a VALID PROGRESSIVE (SOF2, spectral
+    selection) grayscale JPEG per document — a DC scan for every block
+    followed by a full 1..63 AC band scan with real cross-block EOBn
+    runs (DC-only blocks make the AC scan one long EOB run, the
+    progressive-specific coding). Same image formula and geometry as
+    the sequential synthesizer, so the two containers decode to the
+    same closed-form stats."""
+    encode_prog = _make_jpeg_codec().encode_gray_progressive
+    return _synthesize(docs, lambda d: encode_prog(*_gray_blocks(d)))
 
-        for pdf in batches:
-            payloads = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                bw, bh = 1 + d % 3, 1 + d % 2
-                blocks = []
-                for by in range(bh):
-                    for bx in range(bw):
-                        v = (3 * d + 17 * bx + 29 * by) % 256
-                        blk = [[0] * 8 for _ in range(8)]
-                        blk[0][0] = 8 * (v - 128)
-                        blocks.append(blk)
-                payloads.append(encode_gray(blocks, bw * 8, bh * 8))
-            yield _pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
 
-    return docs.select("doc_id").mapInPandas(_gen, "doc_id bigint, payload binary")
+def synthesize_jpeg_sa_media(docs: DataFrame) -> DataFrame:
+    """(doc_id, payload binary): a VALID progressive JPEG with
+    SUCCESSIVE APPROXIMATION per document (four scans: DC and the full
+    AC band at Al=1, then one-bit refinements to Al=0) — same image
+    formula and geometry as the sequential/progressive synthesizers, so
+    all three containers decode to the same closed-form stats."""
+    encode_sa = _make_jpeg_codec().encode_gray_progressive_sa
+    return _synthesize(docs, lambda d: encode_sa(*_gray_blocks(d)))
 
 
 def decode_jpeg(media: DataFrame) -> DataFrame:
@@ -2825,46 +2404,25 @@ def decode_jpeg(media: DataFrame) -> DataFrame:
     payloads, so this operator VALIDATES the decoded frame is
     single-component and raises loudly on a color JPEG (whose per-pixel
     stats would otherwise silently average the flattened RGB planes) —
-    route those to ``decode_jpeg_color`` / the 4:2:0 and progressive
-    variants. Emits the multimodal family's standard stats (single
-    channel: mean_px)."""
+    route those to ``decode_jpeg_color``. Emits the standard image stats
+    (single channel: mean_px)."""
+    decode_frame = _make_jpeg_codec().decode
 
-    _, _, decode_gray, *_rest = _make_jpeg_codec()  # closure: ships by value
+    def decode(d, buf):
+        w, h, pixels, n_blocks = decode_frame(buf)
+        img = np.array(pixels, dtype=np.int64)
+        if img.ndim != 2:
+            raise ValueError(
+                f"decode_jpeg: doc {d} decoded to {img.ndim - 1}-channel "
+                "pixels — this operator computes single-component "
+                "(grayscale) stats; use decode_jpeg_color for color payloads"
+            )
+        return {
+            "width": int(w), "height": int(h), "n_blocks": int(n_blocks),
+            "pixels": img,
+        }
 
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as _np
-        import pandas as _pd
-
-        for pdf in batches:
-            rows = {k: [] for k in (
-                "doc_id", "width", "height", "n_blocks", "mean_px",
-                "top_row_sum", "byte_checksum",
-            )}
-            for d, b in zip(pdf["doc_id"], pdf["payload"]):
-                w, h, pixels, n_blocks = decode_gray(bytes(b))
-                img = _np.array(pixels, dtype=_np.int64)
-                if img.ndim != 2:
-                    raise ValueError(
-                        f"decode_jpeg: doc {int(d)} decoded to "
-                        f"{img.ndim - 1}-channel pixels — this operator "
-                        "computes single-component (grayscale) stats; "
-                        "use decode_jpeg_color for color payloads"
-                    )
-                rows["doc_id"].append(int(d))
-                rows["width"].append(int(w))
-                rows["height"].append(int(h))
-                rows["n_blocks"].append(int(n_blocks))
-                rows["mean_px"].append(float(img.mean()))
-                rows["top_row_sum"].append(int(img[0].sum()))
-                rows["byte_checksum"].append(int(img.sum()) % 10**9)
-            yield _pd.DataFrame(rows)
-
-    out = media.mapInPandas(_decode, JPEG_FEATURES_SCHEMA)
-    return out.select(
-        "doc_id", "width", "height", "n_blocks",
-        F.round("mean_px", 6).alias("mean_px"),
-        "top_row_sum", "byte_checksum",
-    )
+    return _decode(media, decode, JPEG_FEATURES_SCHEMA)
 
 
 JPEG_COLOR_FEATURES_SCHEMA = (
@@ -2884,77 +2442,20 @@ def synthesize_jpeg_color_media(docs: DataFrame) -> DataFrame:
     RGB (including out-of-gamut CLAMPING after the YCbCr->RGB matrix)
     has a closed form the SQL oracle can state.
     w = 8*(1 + doc_id mod 2), h = 8*(1 + doc_id mod 3)."""
+    encode_color = _make_jpeg_codec().encode_color
 
-    _, encode_color, *_rest = _make_jpeg_codec()  # closure: ships by value
+    def encode(d):
+        bw, bh = 1 + d % 2, 1 + d % 3
+        ys = [
+            _dc_block((7 * d + 13 * bx + 19 * by) % 256)
+            for by in range(bh)
+            for bx in range(bw)
+        ]
+        cbs = [_dc_block((5 * d) % 256) for _ in ys]
+        crs = [_dc_block((11 * d) % 256) for _ in ys]
+        return encode_color(ys, cbs, crs, bw * 8, bh * 8)
 
-    def _gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pandas as _pd
-
-        for pdf in batches:
-            payloads = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                bw, bh = 1 + d % 2, 1 + d % 3
-                cb_v, cr_v = (5 * d) % 256, (11 * d) % 256
-
-                def dc_block(v):
-                    blk = [[0] * 8 for _ in range(8)]
-                    blk[0][0] = 8 * (v - 128)
-                    return blk
-
-                ys, cbs, crs = [], [], []
-                for by in range(bh):
-                    for bx in range(bw):
-                        ys.append(dc_block((7 * d + 13 * bx + 19 * by) % 256))
-                        cbs.append(dc_block(cb_v))
-                        crs.append(dc_block(cr_v))
-                payloads.append(encode_color(ys, cbs, crs, bw * 8, bh * 8))
-            yield _pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    return docs.select("doc_id").mapInPandas(_gen, "doc_id bigint, payload binary")
-
-
-def decode_jpeg_color(media: DataFrame) -> DataFrame:
-    """REAL baseline color JPEG decode via mapInPandas: everything the
-    grayscale path does, plus multi-table DQT/DHT bookkeeping, the
-    interleaved 3-component MCU loop with per-component DC predictors,
-    and the T.871 YCbCr->RGB conversion with half-up rounding and
-    clamping. 4:4:4 only — subsampled/progressive files raise loudly
-    (the honest seam is now chroma subsampling + progressive scans)."""
-
-    _, _, decode, *_rest = _make_jpeg_codec()  # closure: ships by value
-
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as _np
-        import pandas as _pd
-
-        for pdf in batches:
-            rows = {k: [] for k in (
-                "doc_id", "width", "height", "n_mcus", "mean_r", "mean_g",
-                "mean_b", "top_row_sum", "byte_checksum",
-            )}
-            for d, b in zip(pdf["doc_id"], pdf["payload"]):
-                w, h, pixels, n_mcus = decode(bytes(b))
-                img = _np.array(pixels, dtype=_np.int64)  # (h, w, 3)
-                rows["doc_id"].append(int(d))
-                rows["width"].append(int(w))
-                rows["height"].append(int(h))
-                rows["n_mcus"].append(int(n_mcus))
-                rows["mean_r"].append(float(img[:, :, 0].mean()))
-                rows["mean_g"].append(float(img[:, :, 1].mean()))
-                rows["mean_b"].append(float(img[:, :, 2].mean()))
-                rows["top_row_sum"].append(int(img[0].sum()))
-                rows["byte_checksum"].append(int(img.sum()) % 10**9)
-            yield _pd.DataFrame(rows)
-
-    out = media.mapInPandas(_decode, JPEG_COLOR_FEATURES_SCHEMA)
-    return out.select(
-        "doc_id", "width", "height", "n_mcus",
-        F.round("mean_r", 6).alias("mean_r"),
-        F.round("mean_g", 6).alias("mean_g"),
-        F.round("mean_b", 6).alias("mean_b"),
-        "top_row_sum", "byte_checksum",
-    )
+    return _synthesize(docs, encode)
 
 
 def synthesize_jpeg_420_media(docs: DataFrame) -> DataFrame:
@@ -2964,114 +2465,157 @@ def synthesize_jpeg_420_media(docs: DataFrame) -> DataFrame:
     ((11*doc_id + 23*bx + 31*by) % 256); chroma constant per doc, so
     the upsampling filter choice cannot affect the closed-form oracle.
     w = 16*(1 + doc_id mod 2), h = 16."""
+    encode_color_420 = _make_jpeg_codec().encode_color_420
 
-    _, _, _, encode_color_420, *_rest = _make_jpeg_codec()  # ships by value
+    def encode(d):
+        w, h = 16 * (1 + d % 2), 16
+        ys = [
+            _dc_block((11 * d + 23 * bx + 31 * by) % 256)
+            for by in range(h // 8)
+            for bx in range(w // 8)
+        ]
+        n_mcus = (w // 16) * (h // 16)
+        cbs = [_dc_block((7 * d) % 256) for _ in range(n_mcus)]
+        crs = [_dc_block((13 * d) % 256) for _ in range(n_mcus)]
+        return encode_color_420(ys, cbs, crs, w, h)
 
-    def _gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pandas as _pd
-
-        def dc_block(v):
-            blk = [[0] * 8 for _ in range(8)]
-            blk[0][0] = 8 * (v - 128)
-            return blk
-
-        for pdf in batches:
-            payloads = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                w, h = 16 * (1 + d % 2), 16
-                bw_y, bh_y = w // 8, h // 8
-                cb_v, cr_v = (7 * d) % 256, (13 * d) % 256
-                ys = [
-                    dc_block((11 * d + 23 * bx + 31 * by) % 256)
-                    for by in range(bh_y)
-                    for bx in range(bw_y)
-                ]
-                n_mcus = (w // 16) * (h // 16)
-                cbs = [dc_block(cb_v) for _ in range(n_mcus)]
-                crs = [dc_block(cr_v) for _ in range(n_mcus)]
-                payloads.append(encode_color_420(ys, cbs, crs, w, h))
-            yield _pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    return docs.select("doc_id").mapInPandas(_gen, "doc_id bigint, payload binary")
+    return _synthesize(docs, encode)
 
 
-def synthesize_jpeg_progressive_media(docs: DataFrame) -> DataFrame:
-    """(doc_id, payload binary): a VALID PROGRESSIVE (SOF2, spectral
-    selection) grayscale JPEG per document — a DC scan for every block
-    followed by a full 1..63 AC band scan with real cross-block EOBn
-    runs (DC-only blocks make the AC scan one long EOB run, the
-    progressive-specific coding). Same image formula and geometry as
-    the sequential synthesizer, so the two containers decode to the
-    same closed-form stats."""
+def decode_jpeg_color(media: DataFrame) -> DataFrame:
+    """REAL color JPEG decode via mapInPandas: everything the grayscale
+    path does, plus multi-table DQT/DHT bookkeeping, the interleaved
+    3-component MCU loop with per-component DC predictors, 4:2:0 and
+    4:2:2 chroma upsampling, and the T.871 YCbCr->RGB conversion with
+    half-up rounding and clamping."""
+    decode_frame = _make_jpeg_codec().decode
 
-    _eg, _ec, _d, _e420, encode_prog, *_r = _make_jpeg_codec()  # by value
+    def decode(_d, buf):
+        w, h, pixels, n_mcus = decode_frame(buf)
+        return {
+            "width": int(w), "height": int(h), "n_mcus": int(n_mcus),
+            "pixels": pixels,  # (h, w, 3)
+        }
 
-    def _gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pandas as _pd
-
-        for pdf in batches:
-            payloads = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                bw, bh = 1 + d % 3, 1 + d % 2
-                blocks = []
-                for by in range(bh):
-                    for bx in range(bw):
-                        v = (3 * d + 17 * bx + 29 * by) % 256
-                        blk = [[0] * 8 for _ in range(8)]
-                        blk[0][0] = 8 * (v - 128)
-                        blocks.append(blk)
-                payloads.append(encode_prog(blocks, bw * 8, bh * 8))
-            yield _pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    return docs.select("doc_id").mapInPandas(_gen, "doc_id bigint, payload binary")
+    return _decode(media, decode, JPEG_COLOR_FEATURES_SCHEMA)
 
 
-def synthesize_jpeg_sa_media(docs: DataFrame) -> DataFrame:
-    """(doc_id, payload binary): a VALID progressive JPEG with
-    SUCCESSIVE APPROXIMATION per document (four scans: DC and the full
-    AC band at Al=1, then one-bit refinements to Al=0) — same image
-    formula and geometry as the sequential/progressive synthesizers, so
-    all three containers decode to the same closed-form stats."""
-
-    codec = _make_jpeg_codec()
-    encode_sa = codec[6]  # closure: ships by value
-
-    def _gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pandas as _pd
-
-        for pdf in batches:
-            payloads = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                bw, bh = 1 + d % 3, 1 + d % 2
-                blocks = []
-                for by in range(bh):
-                    for bx in range(bw):
-                        v = (3 * d + 17 * bx + 29 * by) % 256
-                        blk = [[0] * 8 for _ in range(8)]
-                        blk[0][0] = 8 * (v - 128)
-                        blocks.append(blk)
-                payloads.append(encode_sa(blocks, bw * 8, bh * 8))
-            yield _pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    return docs.select("doc_id").mapInPandas(_gen, "doc_id bigint, payload binary")
-
-
-# ---- MJPEG/AVI: real RIFF video container, real JPEG frames ---------------
+# ---- RIFF/AVI: Motion-JPEG video, optionally with a PCM audio track -------
 #
-# The honest next step behind the external-codec seam (VERDICT r6 #8):
-# compose the RIFF chunk grammar (already spoken by the WAV decoder
-# above) with the now-complete baseline JPEG codec into Motion-JPEG —
-# the one mainstream video format whose every byte this repo can
-# produce and consume without an external library. H.264/VP9 stay the
-# NotImplementedError seam (multimodal.py::decode_media).
+# The RIFF chunk grammar (spoken by the WAV decoder above) composed with
+# the baseline JPEG codec: Motion-JPEG is the one mainstream video format
+# whose every byte this module produces and consumes without an external
+# library.
 
 MJPEG_FRAME_SCHEMA = (
     "doc_id bigint, frame_idx int, n_frames int, width int, height int, "
     "mean_px double, top_row_sum bigint"
 )
+
+
+def _make_avi_codec():
+    """Factory for the RIFF/AVI writer and reader (shipped by value)."""
+
+    def chunk(fourcc: bytes, body: bytes) -> bytes:
+        pad = b"\x00" if len(body) % 2 else b""
+        return fourcc + struct.pack("<I", len(body)) + body + pad
+
+    def lst(kind: bytes, body: bytes) -> bytes:
+        return chunk(b"LIST", kind + body)
+
+    def walk(buf: bytes, start: int, end: int):
+        """Yield (fourcc, body_start, body_len) for chunks in [start, end)."""
+        pos = start
+        while pos + 8 <= end:
+            (size,) = struct.unpack_from("<I", buf, pos + 4)
+            yield buf[pos : pos + 4], pos + 8, size
+            pos += 8 + size + (size % 2)  # word-aligned
+
+    def write_avi(frames, w, h, audio=None, sample_rate=0):
+        """RIFF/AVI bytes: stream 0 'vids'/'MJPG' carrying ``frames`` (JPEG
+        files of w x h); with ``audio`` (one PCM16-mono chunk per frame),
+        stream 1 'auds' whose '01wb' chunks follow each '00dc' (strict
+        interleaving, the layout real muxers emit). The idx1 index lists
+        every movi chunk."""
+        n_frames = len(frames)
+        buf_size = max(len(body) for body in [*frames, *(audio or [])])
+        avih = struct.pack(
+            "<IIIIIIIIII4I",
+            40000, 0, 0, 0x10,  # usec/frame, maxbps, pad, HASINDEX
+            n_frames, 0, 2 if audio else 1, buf_size, w, h, 0, 0, 0, 0,
+        )
+        strh_v = struct.pack(
+            "<4s4sIHHIIIIIIII4h",
+            b"vids", b"MJPG", 0, 0, 0, 0,
+            1, 25, 0, n_frames, buf_size, 0xFFFFFFFF, 0,
+            0, 0, w, h,
+        )
+        strf_v = struct.pack(
+            "<IiiHH4sIiiII", 40, w, h, 1, 24, b"MJPG", w * h * 3, 0, 0, 0, 0
+        )
+        strls = lst(b"strl", chunk(b"strh", strh_v) + chunk(b"strf", strf_v))
+        if audio:
+            n_samples = sum(len(a) for a in audio) // 2
+            strh_a = struct.pack(
+                "<4s4sIHHIIIIIIII4h",
+                b"auds", b"\x00\x00\x00\x00", 0, 0, 0, 0,
+                1, sample_rate, 0, n_samples, buf_size, 0xFFFFFFFF, 2,
+                0, 0, 0, 0,
+            )
+            strf_a = struct.pack(
+                "<HHIIHH", 1, 1, sample_rate, sample_rate * 2, 2, 16
+            )
+            strls += lst(b"strl", chunk(b"strh", strh_a) + chunk(b"strf", strf_a))
+        movi = []
+        for f, fr in enumerate(frames):
+            movi.append((b"00dc", fr))
+            if audio:
+                movi.append((b"01wb", audio[f]))
+        movi_body, idx1 = b"", b""
+        for ck, body in movi:
+            # idx1 offsets are relative to the 'movi' fourcc
+            idx1 += ck + struct.pack("<III", 0x10, 4 + len(movi_body), len(body))
+            movi_body += chunk(ck, body)
+        riff_body = (
+            b"AVI " + lst(b"hdrl", chunk(b"avih", avih) + strls)
+            + lst(b"movi", movi_body) + chunk(b"idx1", idx1)
+        )
+        return b"RIFF" + struct.pack("<I", len(riff_body)) + riff_body
+
+    def read_avi(buf):
+        """Walk a RIFF/AVI file's chunk tree. Returns (avih, streams, movi,
+        idx1): the ten avih uint32 fields (None when absent), one
+        (strh, strf) body pair per stream (None when absent), the movi
+        chunks as (fourcc, idx1-style offset, body), and the idx1 entries
+        as (fourcc, flags, offset, size)."""
+        if buf[:4] != b"RIFF" or buf[8:12] != b"AVI ":
+            raise ValueError("not a RIFF/AVI file")
+        avih, streams, movi, idx1 = None, [], [], []
+        for fourcc, at, size in walk(buf, 12, len(buf)):
+            kind = buf[at : at + 4]
+            if fourcc == b"LIST" and kind == b"hdrl":
+                for fc2, at2, sz2 in walk(buf, at + 4, at + size):
+                    if fc2 == b"avih":
+                        avih = struct.unpack_from("<10I", buf, at2)
+                    elif fc2 == b"LIST" and buf[at2 : at2 + 4] == b"strl":
+                        parts = {
+                            fc3: buf[at3 : at3 + sz3]
+                            for fc3, at3, sz3 in walk(buf, at2 + 4, at2 + sz2)
+                        }
+                        streams.append((parts.get(b"strh"), parts.get(b"strf")))
+            elif fourcc == b"LIST" and kind == b"movi":
+                movi = [
+                    (fc2, at2 - 8 - at, buf[at2 : at2 + sz2])
+                    for fc2, at2, sz2 in walk(buf, at + 4, at + size)
+                ]
+            elif fourcc == b"idx1":
+                idx1 = [
+                    struct.unpack_from("<4sIII", buf, at + 16 * i)
+                    for i in range(size // 16)
+                ]
+        return avih, streams, movi, idx1
+
+    return write_avi, read_avi
 
 
 def synthesize_avi_mjpeg_media(docs: DataFrame) -> DataFrame:
@@ -3081,87 +2625,21 @@ def synthesize_avi_mjpeg_media(docs: DataFrame) -> DataFrame:
     a LIST movi of word-aligned '00dc' chunks each holding a COMPLETE
     baseline JFIF grayscale JPEG (really entropy-coded via
     _make_jpeg_codec's Annex-K encoder), and a standard idx1 index whose
-    offsets/sizes the decoder cross-checks. Frame f is piecewise-constant
-    per 8x8 block — block (bx, by) = (3*doc_id + 17*bx + 29*by + 41*f)
-    % 256 — so the lossy codec is exact (DC-only blocks, all-ones quant
+    offsets/sizes the decoder cross-checks. Frame f is ``_gray_blocks(
+    doc_id, f)``: block (bx, by) = (3*doc_id + 17*bx + 29*by + 41*f) %
+    256, so the lossy codec is exact (DC-only blocks, all-ones quant
     table) and a closed-form SQL oracle can state every sampled frame's
     stats. Geometry matches the still-image family: w = 8*(1 + d mod 3),
     h = 8*(1 + d mod 2); n_frames = 3 + d mod 4."""
+    encode_gray = _make_jpeg_codec().encode_gray
+    write_avi, _ = _make_avi_codec()
 
-    encode_gray, *_rest = _make_jpeg_codec()  # closure: ships by value
+    def encode(d):
+        frames = [encode_gray(*_gray_blocks(d, f)) for f in range(3 + d % 4)]
+        _, w, h = _gray_blocks(d)
+        return write_avi(frames, w, h)
 
-    def _gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct as _struct
-
-        import pandas as _pd
-
-        def _chunk(fourcc: bytes, body: bytes) -> bytes:
-            pad = b"\x00" if len(body) % 2 else b""
-            return fourcc + _struct.pack("<I", len(body)) + body + pad
-
-        def _lst(kind: bytes, body: bytes) -> bytes:
-            return _chunk(b"LIST", kind + body)
-
-        for pdf in batches:
-            payloads = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                bw, bh = 1 + d % 3, 1 + d % 2
-                w, h = bw * 8, bh * 8
-                n_frames = 3 + d % 4
-                frames = []
-                for f in range(n_frames):
-                    blocks = []
-                    for by in range(bh):
-                        for bx in range(bw):
-                            v = (3 * d + 17 * bx + 29 * by + 41 * f) % 256
-                            blk = [[0] * 8 for _ in range(8)]
-                            blk[0][0] = 8 * (v - 128)
-                            blocks.append(blk)
-                    frames.append(encode_gray(blocks, w, h))
-                buf_size = max(len(fr) for fr in frames)
-
-                avih = _struct.pack(
-                    "<IIIIIIIIII4I",
-                    40000, 0, 0, 0x10,  # usec/frame, maxbps, pad, HASINDEX
-                    n_frames, 0, 1, buf_size, w, h, 0, 0, 0, 0,
-                )
-                strh = _struct.pack(
-                    "<4s4sIHHIIIIIIII4h",
-                    b"vids", b"MJPG", 0, 0, 0, 0,
-                    1, 25, 0, n_frames, buf_size, 0xFFFFFFFF, 0,
-                    0, 0, w, h,
-                )
-                strf = _struct.pack(
-                    "<IiiHH4sIiiII",
-                    40, w, h, 1, 24, b"MJPG", w * h * 3, 0, 0, 0, 0,
-                )
-                hdrl = _lst(
-                    b"hdrl",
-                    _chunk(b"avih", avih)
-                    + _lst(b"strl", _chunk(b"strh", strh) + _chunk(b"strf", strf)),
-                )
-                movi_body = b""
-                idx_entries = []
-                for fr in frames:
-                    # idx1 offsets are relative to the 'movi' fourcc
-                    idx_entries.append((4 + len(movi_body), len(fr)))
-                    movi_body += _chunk(b"00dc", fr)
-                movi = _lst(b"movi", movi_body)
-                idx1 = _chunk(
-                    b"idx1",
-                    b"".join(
-                        b"00dc" + _struct.pack("<III", 0x10, off, size)
-                        for off, size in idx_entries
-                    ),
-                )
-                riff_body = b"AVI " + hdrl + movi + idx1
-                payloads.append(
-                    b"RIFF" + _struct.pack("<I", len(riff_body)) + riff_body
-                )
-            yield _pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    return docs.select("doc_id").mapInPandas(_gen, "doc_id bigint, payload binary")
+    return _synthesize(docs, encode)
 
 
 def decode_avi_mjpeg(media: DataFrame, every_k: int = 2) -> DataFrame:
@@ -3177,114 +2655,51 @@ def decode_avi_mjpeg(media: DataFrame, every_k: int = 2) -> DataFrame:
     non-grayscale or wrong-geometry frames."""
     if every_k < 1:
         raise ValueError(f"every_k must be >= 1, got {every_k}")
+    decode_frame = _make_jpeg_codec().decode
+    _, read_avi = _make_avi_codec()
 
-    _, _, decode_frame, *_rest = _make_jpeg_codec()  # ships by value
+    def decode(_d, buf):
+        avih, streams, movi, idx1 = read_avi(buf)
+        (riff_size,) = struct.unpack_from("<I", buf, 4)
+        if 8 + riff_size != len(buf):
+            raise ValueError("RIFF size does not match payload")
+        if avih is None or not streams or any(None in s for s in streams):
+            raise ValueError("missing AVI header chain")
+        total, hdr_w, hdr_h = avih[4], avih[8], avih[9]
+        for strh, strf in streams:
+            if strh[:8] != b"vidsMJPG":
+                raise ValueError("stream is not vids/MJPG")
+            bi = struct.unpack_from("<IiiHH4s", strf)
+            if bi[5] != b"MJPG":
+                raise ValueError("strf biCompression != MJPG")
+            if (bi[1], bi[2]) != (hdr_w, hdr_h):
+                raise ValueError("strf dims disagree with avih")
+        for ck, fl, _off, _sz in idx1:
+            if ck != b"00dc" or not fl & 0x10:
+                raise ValueError("unexpected idx1 entry")
+        frames = [(off, body) for ck, off, body in movi if ck == b"00dc"]
+        if len(frames) != total:
+            raise ValueError(f"movi has {len(frames)} frames, avih says {total}")
+        if [(off, sz) for _ck, _fl, off, sz in idx1] != [
+            (off, len(body)) for off, body in frames
+        ]:
+            raise ValueError("idx1 disagrees with movi chunks")
+        rows = []
+        for f in range(0, total, every_k):
+            w, h, pixels, _n = decode_frame(frames[f][1])
+            img = np.array(pixels, dtype=np.int64)
+            if img.ndim != 2:
+                raise ValueError("MJPEG frame decoded non-grayscale")
+            if (w, h) != (hdr_w, hdr_h):
+                raise ValueError("frame dims disagree with avih")
+            rows.append({
+                "frame_idx": f, "n_frames": int(total),
+                "width": int(w), "height": int(h), "pixels": img,
+            })
+        return rows
 
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct as _struct
+    return _decode(media, decode, MJPEG_FRAME_SCHEMA)
 
-        import numpy as _np
-        import pandas as _pd
-
-        def _walk(buf: bytes, start: int, end: int):
-            """Yield (fourcc, body_start, body_len) for chunks in [start, end)."""
-            pos = start
-            while pos + 8 <= end:
-                fourcc = buf[pos : pos + 4]
-                (size,) = _struct.unpack_from("<I", buf, pos + 4)
-                yield fourcc, pos + 8, size
-                pos += 8 + size + (size % 2)  # word-aligned
-
-        for pdf in batches:
-            rows = {k: [] for k in (
-                "doc_id", "frame_idx", "n_frames", "width", "height",
-                "mean_px", "top_row_sum",
-            )}
-            for d, b in zip(pdf["doc_id"], pdf["payload"]):
-                buf = bytes(b)
-                if buf[:4] != b"RIFF" or buf[8:12] != b"AVI ":
-                    raise ValueError("not a RIFF/AVI file")
-                (riff_size,) = _struct.unpack_from("<I", buf, 4)
-                if 8 + riff_size != len(buf):
-                    raise ValueError("RIFF size does not match payload")
-                total = hdr_w = hdr_h = None
-                stream_ok = strf_ok = False
-                frames: list[tuple[int, bytes]] = []  # (idx1-style offset, jpeg)
-                idx1: list[tuple[int, int]] = []
-                for fourcc, at, size in _walk(buf, 12, len(buf)):
-                    if fourcc == b"LIST" and buf[at : at + 4] == b"hdrl":
-                        for fc2, at2, sz2 in _walk(buf, at + 4, at + size):
-                            if fc2 == b"avih":
-                                vals = _struct.unpack_from("<10I", buf, at2)
-                                total, hdr_w, hdr_h = vals[4], vals[8], vals[9]
-                            elif fc2 == b"LIST" and buf[at2 : at2 + 4] == b"strl":
-                                for fc3, at3, _s3 in _walk(buf, at2 + 4, at2 + sz2):
-                                    if fc3 == b"strh":
-                                        if buf[at3 : at3 + 8] != b"vidsMJPG":
-                                            raise ValueError(
-                                                "stream is not vids/MJPG"
-                                            )
-                                        stream_ok = True
-                                    elif fc3 == b"strf":
-                                        bi = _struct.unpack_from(
-                                            "<IiiHH4s", buf, at3
-                                        )
-                                        if bi[5] != b"MJPG":
-                                            raise ValueError(
-                                                "strf biCompression != MJPG"
-                                            )
-                                        if (bi[1], bi[2]) != (hdr_w, hdr_h):
-                                            raise ValueError(
-                                                "strf dims disagree with avih"
-                                            )
-                                        strf_ok = True
-                    elif fourcc == b"LIST" and buf[at : at + 4] == b"movi":
-                        movi_at = at  # offset of the 'movi' fourcc
-                        for fc2, at2, sz2 in _walk(buf, at + 4, at + size):
-                            if fc2 == b"00dc":
-                                frames.append(
-                                    (at2 - 8 - movi_at, buf[at2 : at2 + sz2])
-                                )
-                    elif fourcc == b"idx1":
-                        for i in range(size // 16):
-                            ck, fl, off, sz = _struct.unpack_from(
-                                "<4sIII", buf, at + 16 * i
-                            )
-                            if ck != b"00dc" or not fl & 0x10:
-                                raise ValueError("unexpected idx1 entry")
-                            idx1.append((off, sz))
-                if not (stream_ok and strf_ok) or total is None:
-                    raise ValueError("missing AVI header chain")
-                if len(frames) != total:
-                    raise ValueError(
-                        f"movi has {len(frames)} frames, avih says {total}"
-                    )
-                if idx1 != [(off, len(fr)) for off, fr in frames]:
-                    raise ValueError("idx1 disagrees with movi chunks")
-                for f in range(0, total, every_k):
-                    w, h, pixels, _n = decode_frame(frames[f][1])
-                    img = _np.array(pixels, dtype=_np.int64)
-                    if img.ndim != 2:
-                        raise ValueError("MJPEG frame decoded non-grayscale")
-                    if (w, h) != (hdr_w, hdr_h):
-                        raise ValueError("frame dims disagree with avih")
-                    rows["doc_id"].append(int(d))
-                    rows["frame_idx"].append(f)
-                    rows["n_frames"].append(int(total))
-                    rows["width"].append(int(w))
-                    rows["height"].append(int(h))
-                    rows["mean_px"].append(float(img.mean()))
-                    rows["top_row_sum"].append(int(img[0].sum()))
-            yield _pd.DataFrame(rows)
-
-    out = media.mapInPandas(_decode, MJPEG_FRAME_SCHEMA)
-    return out.select(
-        "doc_id", "frame_idx", "n_frames", "width", "height",
-        F.round("mean_px", 6).alias("mean_px"), "top_row_sum",
-    )
-
-
-# ---- AVI audio+video: two interleaved streams, real demux -----------------
 
 AVI_AV_SCHEMA = (
     "doc_id bigint, n_frames int, width int, height int, "
@@ -3304,103 +2719,17 @@ def synthesize_avi_av_media(docs: DataFrame, sample_rate: int = 16000) -> DataFr
     stream) and an idx1 covering both streams. Exercises the demux a
     multimodal pipeline actually needs: routing chunk types to their
     stream decoders from one container walk."""
+    encode_gray = _make_jpeg_codec().encode_gray
+    write_avi, _ = _make_avi_codec()
 
-    encode_gray, *_rest = _make_jpeg_codec()  # closure: ships by value
+    def encode(d):
+        n_frames, n_per = 3 + d % 4, 100 + d % 50
+        frames = [encode_gray(*_gray_blocks(d, f)) for f in range(n_frames)]
+        audio = [_pcm16(d, f * n_per, n_per) for f in range(n_frames)]
+        _, w, h = _gray_blocks(d)
+        return write_avi(frames, w, h, audio, sample_rate)
 
-    def _gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct as _struct
-
-        import numpy as _np
-        import pandas as _pd
-
-        def _chunk(fourcc: bytes, body: bytes) -> bytes:
-            pad = b"\x00" if len(body) % 2 else b""
-            return fourcc + _struct.pack("<I", len(body)) + body + pad
-
-        def _lst(kind: bytes, body: bytes) -> bytes:
-            return _chunk(b"LIST", kind + body)
-
-        for pdf in batches:
-            payloads = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                bw, bh = 1 + d % 3, 1 + d % 2
-                w, h = bw * 8, bh * 8
-                n_frames = 3 + d % 4
-                n_per = 100 + d % 50
-                frames, audio = [], []
-                for f in range(n_frames):
-                    blocks = []
-                    for by in range(bh):
-                        for bx in range(bw):
-                            v = (3 * d + 17 * bx + 29 * by + 41 * f) % 256
-                            blk = [[0] * 8 for _ in range(8)]
-                            blk[0][0] = 8 * (v - 128)
-                            blocks.append(blk)
-                    frames.append(encode_gray(blocks, w, h))
-                    j = _np.arange(f * n_per, (f + 1) * n_per, dtype=_np.int64)
-                    audio.append(
-                        (((31 * d + 17 * j) % 65536) - 32768)
-                        .astype("<i2").tobytes()
-                    )
-                buf_size = max(
-                    max(len(fr) for fr in frames), max(len(a) for a in audio)
-                )
-
-                avih = _struct.pack(
-                    "<IIIIIIIIII4I",
-                    40000, 0, 0, 0x10,
-                    n_frames, 0, 2, buf_size, w, h, 0, 0, 0, 0,
-                )
-                strh_v = _struct.pack(
-                    "<4s4sIHHIIIIIIII4h",
-                    b"vids", b"MJPG", 0, 0, 0, 0,
-                    1, 25, 0, n_frames, buf_size, 0xFFFFFFFF, 0,
-                    0, 0, w, h,
-                )
-                strf_v = _struct.pack(
-                    "<IiiHH4sIiiII",
-                    40, w, h, 1, 24, b"MJPG", w * h * 3, 0, 0, 0, 0,
-                )
-                strh_a = _struct.pack(
-                    "<4s4sIHHIIIIIIII4h",
-                    b"auds", b"\x00\x00\x00\x00", 0, 0, 0, 0,
-                    1, sample_rate, 0, n_frames * n_per, buf_size,
-                    0xFFFFFFFF, 2,
-                    0, 0, 0, 0,
-                )
-                strf_a = _struct.pack(
-                    "<HHIIHH",
-                    1, 1, sample_rate, sample_rate * 2, 2, 16,
-                )
-                hdrl = _lst(
-                    b"hdrl",
-                    _chunk(b"avih", avih)
-                    + _lst(b"strl", _chunk(b"strh", strh_v) + _chunk(b"strf", strf_v))
-                    + _lst(b"strl", _chunk(b"strh", strh_a) + _chunk(b"strf", strf_a)),
-                )
-                movi_body = b""
-                idx_entries = []
-                for fr, au in zip(frames, audio):
-                    idx_entries.append((b"00dc", 4 + len(movi_body), len(fr)))
-                    movi_body += _chunk(b"00dc", fr)
-                    idx_entries.append((b"01wb", 4 + len(movi_body), len(au)))
-                    movi_body += _chunk(b"01wb", au)
-                movi = _lst(b"movi", movi_body)
-                idx1 = _chunk(
-                    b"idx1",
-                    b"".join(
-                        ck + _struct.pack("<III", 0x10, off, size)
-                        for ck, off, size in idx_entries
-                    ),
-                )
-                riff_body = b"AVI " + hdrl + movi + idx1
-                payloads.append(
-                    b"RIFF" + _struct.pack("<I", len(riff_body)) + riff_body
-                )
-            yield _pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    return docs.select("doc_id").mapInPandas(_gen, "doc_id bigint, payload binary")
+    return _synthesize(docs, encode)
 
 
 def demux_avi_av(media: DataFrame) -> DataFrame:
@@ -3411,129 +2740,63 @@ def demux_avi_av(media: DataFrame) -> DataFrame:
     interleaving (video then audio, the muxer layout), and every idx1
     entry against the chunks found. Emits one row per document: video
     stats over ALL frames + audio stats over the concatenated track."""
+    decode_frame = _make_jpeg_codec().decode
+    _, read_avi = _make_avi_codec()
 
-    _, _, decode_frame, *_rest = _make_jpeg_codec()  # ships by value
+    def decode(_d, buf):
+        avih, streams, movi, idx1 = read_avi(buf)
+        rate = None
+        for strh, strf in streams:
+            if strh is None or strf is None:
+                continue
+            if strh[:4] == b"vids":
+                if struct.unpack_from("<IiiHH4s", strf)[5] != b"MJPG":
+                    raise ValueError("video strf is not MJPG")
+            elif strh[:4] == b"auds":
+                wf = struct.unpack_from("<HHIIHH", strf)
+                if (wf[0], wf[1], wf[5]) != (1, 1, 16):
+                    raise ValueError("audio strf is not PCM16 mono")
+                rate = wf[2]
+        for _ck, fl, _off, _sz in idx1:
+            if not fl & 0x10:
+                raise ValueError("unexpected idx1 flags")
+        stream_types = [strh[:4] for strh, _ in streams if strh is not None]
+        if stream_types != [b"vids", b"auds"] or avih is None or avih[6] != 2:
+            raise ValueError("expected exactly vids+auds streams")
+        total, hdr_w, hdr_h = avih[4], avih[8], avih[9]
+        if rate is None:
+            raise ValueError("missing AVI header chain")
+        chunks = [c for c in movi if c[0] in (b"00dc", b"01wb")]
+        if [(ck, off, sz) for ck, _fl, off, sz in idx1] != [
+            (ck, off, len(body)) for ck, off, body in chunks
+        ]:
+            raise ValueError("idx1 disagrees with movi chunks")
+        vid = [body for ck, _, body in chunks if ck == b"00dc"]
+        aud = [body for ck, _, body in chunks if ck == b"01wb"]
+        if len(vid) != total or len(aud) != total:
+            raise ValueError(
+                f"chunk counts {len(vid)}v/{len(aud)}a disagree "
+                f"with avih total_frames={total}"
+            )
+        # strict muxer interleaving: 00dc, 01wb, 00dc, 01wb, ...
+        if [c[0] for c in chunks] != [b"00dc", b"01wb"] * total:
+            raise ValueError("movi chunks are not interleaved")
+        px_sum, px_cnt = 0, 0
+        for fr in vid:
+            w, h, pixels, _n = decode_frame(fr)
+            img = np.array(pixels, dtype=np.int64)
+            if img.ndim != 2:
+                raise ValueError("MJPEG frame decoded non-grayscale")
+            if (w, h) != (hdr_w, hdr_h):
+                raise ValueError("frame dims disagree with avih")
+            px_sum += int(img.sum())
+            px_cnt += img.size
+        track = np.frombuffer(b"".join(aud), dtype="<i2")
+        return {
+            "n_frames": int(total), "width": int(hdr_w), "height": int(hdr_h),
+            "video_mean_px": px_sum / px_cnt,
+            "n_samples": int(track.size), "sample_rate": int(rate),
+            "audio_rms": float(np.sqrt((track.astype(np.float64) ** 2).mean())),
+        }
 
-    def _demux(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct as _struct
-
-        import numpy as _np
-        import pandas as _pd
-
-        def _walk(buf: bytes, start: int, end: int):
-            pos = start
-            while pos + 8 <= end:
-                fourcc = buf[pos : pos + 4]
-                (size,) = _struct.unpack_from("<I", buf, pos + 4)
-                yield fourcc, pos + 8, size
-                pos += 8 + size + (size % 2)
-
-        for pdf in batches:
-            rows = {k: [] for k in (
-                "doc_id", "n_frames", "width", "height", "video_mean_px",
-                "n_samples", "sample_rate", "audio_rms",
-            )}
-            for d, b in zip(pdf["doc_id"], pdf["payload"]):
-                buf = bytes(b)
-                if buf[:4] != b"RIFF" or buf[8:12] != b"AVI ":
-                    raise ValueError("not a RIFF/AVI file")
-                total = hdr_w = hdr_h = None
-                n_streams = None
-                rate = None
-                stream_types = []
-                chunks = []  # (fourcc, idx1-style offset, payload)
-                idx1 = []
-                for fourcc, at, size in _walk(buf, 12, len(buf)):
-                    if fourcc == b"LIST" and buf[at : at + 4] == b"hdrl":
-                        for fc2, at2, sz2 in _walk(buf, at + 4, at + size):
-                            if fc2 == b"avih":
-                                vals = _struct.unpack_from("<10I", buf, at2)
-                                total, n_streams = vals[4], vals[6]
-                                hdr_w, hdr_h = vals[8], vals[9]
-                            elif fc2 == b"LIST" and buf[at2 : at2 + 4] == b"strl":
-                                for fc3, at3, _s3 in _walk(buf, at2 + 4, at2 + sz2):
-                                    if fc3 == b"strh":
-                                        stream_types.append(buf[at3 : at3 + 4])
-                                    elif fc3 == b"strf":
-                                        if stream_types[-1] == b"vids":
-                                            bi = _struct.unpack_from(
-                                                "<IiiHH4s", buf, at3
-                                            )
-                                            if bi[5] != b"MJPG":
-                                                raise ValueError(
-                                                    "video strf is not MJPG"
-                                                )
-                                        elif stream_types[-1] == b"auds":
-                                            wf = _struct.unpack_from(
-                                                "<HHIIHH", buf, at3
-                                            )
-                                            if (wf[0], wf[1], wf[5]) != (1, 1, 16):
-                                                raise ValueError(
-                                                    "audio strf is not "
-                                                    "PCM16 mono"
-                                                )
-                                            rate = wf[2]
-                    elif fourcc == b"LIST" and buf[at : at + 4] == b"movi":
-                        movi_at = at
-                        for fc2, at2, sz2 in _walk(buf, at + 4, at + size):
-                            if fc2 in (b"00dc", b"01wb"):
-                                chunks.append(
-                                    (fc2, at2 - 8 - movi_at, buf[at2 : at2 + sz2])
-                                )
-                    elif fourcc == b"idx1":
-                        for i in range(size // 16):
-                            ck, fl, off, sz = _struct.unpack_from(
-                                "<4sIII", buf, at + 16 * i
-                            )
-                            if not fl & 0x10:
-                                raise ValueError("unexpected idx1 flags")
-                            idx1.append((ck, off, sz))
-                if stream_types != [b"vids", b"auds"] or n_streams != 2:
-                    raise ValueError("expected exactly vids+auds streams")
-                if rate is None or total is None:
-                    raise ValueError("missing AVI header chain")
-                if idx1 != [(ck, off, len(body)) for ck, off, body in chunks]:
-                    raise ValueError("idx1 disagrees with movi chunks")
-                vid = [c for c in chunks if c[0] == b"00dc"]
-                aud = [c for c in chunks if c[0] == b"01wb"]
-                if len(vid) != total or len(aud) != total:
-                    raise ValueError(
-                        f"chunk counts {len(vid)}v/{len(aud)}a disagree "
-                        f"with avih total_frames={total}"
-                    )
-                # strict muxer interleaving: 00dc, 01wb, 00dc, 01wb, ...
-                want = [b"00dc", b"01wb"] * total
-                if [c[0] for c in chunks] != want:
-                    raise ValueError("movi chunks are not interleaved")
-                px_sum, px_cnt = 0, 0
-                for _, _, fr in vid:
-                    w, h, pixels, _n = decode_frame(fr)
-                    img = _np.array(pixels, dtype=_np.int64)
-                    if img.ndim != 2:
-                        raise ValueError("MJPEG frame decoded non-grayscale")
-                    if (w, h) != (hdr_w, hdr_h):
-                        raise ValueError("frame dims disagree with avih")
-                    px_sum += int(img.sum())
-                    px_cnt += img.size
-                track = _np.frombuffer(
-                    b"".join(body for _, _, body in aud), dtype="<i2"
-                )
-                rows["doc_id"].append(int(d))
-                rows["n_frames"].append(int(total))
-                rows["width"].append(int(hdr_w))
-                rows["height"].append(int(hdr_h))
-                rows["video_mean_px"].append(px_sum / px_cnt)
-                rows["n_samples"].append(int(track.size))
-                rows["sample_rate"].append(int(rate))
-                rows["audio_rms"].append(
-                    float(_np.sqrt((track.astype(_np.float64) ** 2).mean()))
-                )
-            yield _pd.DataFrame(rows)
-
-    out = media.mapInPandas(_demux, AVI_AV_SCHEMA)
-    return out.select(
-        "doc_id", "n_frames", "width", "height",
-        F.round("video_mean_px", 6).alias("video_mean_px"),
-        "n_samples", "sample_rate",
-        F.round("audio_rms", 6).alias("audio_rms"),
-    )
+    return _decode(media, decode, AVI_AV_SCHEMA)

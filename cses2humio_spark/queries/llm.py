@@ -645,6 +645,23 @@ def weighted_sample_top100(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _rrf_fuse(lex: DataFrame, vec: DataFrame) -> DataFrame:
+    """Reciprocal rank fusion (k=60) of two ranked lists, ``lex(doc_id,
+    rl)`` and ``vec(doc_id, rv)``, joined full-outer (a document missing
+    from one list scores 0 there): the top 10 by fused score, doc-id
+    tie-break, score rounded to 6 places."""
+    rrf = F.coalesce(1.0 / (60 + F.col("rl")), F.lit(0.0)) + F.coalesce(
+        1.0 / (60 + F.col("rv")), F.lit(0.0)
+    )
+    return (
+        lex.join(vec, on="doc_id", how="full_outer")
+        .withColumn("__rrf", rrf)
+        .orderBy(F.col("__rrf").desc(), F.col("doc_id").asc())
+        .limit(10)
+        .select("doc_id", F.round("__rrf", 6).alias("rrf"))
+    )
+
+
 @query(
     "rrf_hybrid_top10",
     oracle=rf"""
@@ -751,21 +768,27 @@ def rrf_hybrid_top10(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("r", F.row_number().over(w_vec))
         .select("doc_id", "r")
     )
-    fused = lex.withColumnRenamed("r", "rl").join(
-        vec.withColumnRenamed("r", "rv"), on="doc_id", how="full_outer"
-    )
-    rrf = F.coalesce(1.0 / (60 + F.col("rl")), F.lit(0.0)) + F.coalesce(
-        1.0 / (60 + F.col("rv")), F.lit(0.0)
-    )
-    return (
-        fused.withColumn("__rrf", rrf)
-        .orderBy(F.col("__rrf").desc(), F.col("doc_id").asc())
-        .limit(10)
-        .select("doc_id", F.round("__rrf", 6).alias("rrf"))
+    return _rrf_fuse(
+        lex.withColumnRenamed("r", "rl"), vec.withColumnRenamed("r", "rv")
     )
 
 
 # ---- multimodal columns -------------------------------------------------
+
+def _media_stats(
+    spark: SparkSession, sf_dir: str, fmt: str, decoder: str,
+    id_cut: int = 300, **decode_args,
+) -> DataFrame:
+    """The synthesize -> decode shape of the real-decoder queries: documents
+    below ``id_cut`` -> ``synthesize_<fmt>_media`` -> ``repartition_for_media``
+    -> ``decoder`` (both named in ``operators/multimodal.py``)."""
+    from cses2humio_spark.operators import multimodal
+
+    docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < id_cut)
+    media = getattr(multimodal, f"synthesize_{fmt}_media")(docs)
+    decode = getattr(multimodal, decoder)
+    return decode(multimodal.repartition_for_media(media), **decode_args)
+
 
 @query(
     "multimodal_decode_features",
@@ -1667,16 +1690,8 @@ def ppm_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     means + checksum; the oracle recomputes the SAME statistics from the
     generative formula with generate_series — it never touches bytes, so
     a decoder bug cannot cancel out. All integer sums stay < 2^53, making
-    both sides bit-exact. External-codec formats (JPEG etc.) remain behind
-    the NotImplementedError seam in operators/multimodal.py."""
-    from cses2humio_spark.operators.multimodal import (
-        decode_ppm,
-        repartition_for_media,
-        synthesize_ppm_media,
-    )
-
-    docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 300)
-    return decode_ppm(repartition_for_media(synthesize_ppm_media(docs)))
+    both sides bit-exact."""
+    return _media_stats(spark, sf_dir, "ppm", "decode_ppm")
 
 
 @query(
@@ -1700,17 +1715,8 @@ def pgm_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     closed-form byte formula; decode_pgm parses the binary (shared bounded
     PNM header parser, magic=P5) and emits gray mean + checksum; the
     oracle recomputes the statistics from the generative formula with
-    generate_series — it never touches bytes. Widens the real-decoder
-    family (P6 color, P5 gray, PCM16 WAV, VID0 container); compressed
-    codecs stay behind the NotImplementedError seam."""
-    from cses2humio_spark.operators.multimodal import (
-        decode_pgm,
-        repartition_for_media,
-        synthesize_pgm_media,
-    )
-
-    docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 300)
-    return decode_pgm(repartition_for_media(synthesize_pgm_media(docs)))
+    generate_series — it never touches bytes."""
+    return _media_stats(spark, sf_dir, "pgm", "decode_pgm")
 
 
 @query(
@@ -1876,14 +1882,7 @@ def bmp_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     un-flip fails the oracle; the checksum excludes padding bytes, so
     mis-stridden reads fail too. The oracle recomputes everything from
     the generative formula over an (x, y) grid — it never touches bytes."""
-    from cses2humio_spark.operators.multimodal import (
-        decode_bmp,
-        repartition_for_media,
-        synthesize_bmp_media,
-    )
-
-    docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 300)
-    return decode_bmp(repartition_for_media(synthesize_bmp_media(docs)))
+    return _media_stats(spark, sf_dir, "bmp", "decode_bmp")
 
 
 @query(
@@ -1906,14 +1905,7 @@ def wav_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     chunk structure and frombuffers the samples; the oracle recomputes
     rate/count/RMS from the formula. Sample-square sums stay < 2^53 so
     RMS is bit-identical across numpy and DuckDB."""
-    from cses2humio_spark.operators.multimodal import (
-        decode_wav,
-        repartition_for_media,
-        synthesize_wav_media,
-    )
-
-    docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 300)
-    return decode_wav(repartition_for_media(synthesize_wav_media(docs)))
+    return _media_stats(spark, sf_dir, "wav", "decode_wav")
 
 
 @query(
@@ -1940,15 +1932,8 @@ def video_frame_sample_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     sampled frame's red-channel mean. The oracle recomputes the same
     stats from the formula — the frame-offset arithmetic, header parsing,
     and pixel decode are all genuinely exercised."""
-    from cses2humio_spark.operators.multimodal import (
-        repartition_for_media,
-        sample_video_frames,
-        synthesize_video_media,
-    )
-
-    docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
-    return sample_video_frames(
-        repartition_for_media(synthesize_video_media(docs)), every_k=2
+    return _media_stats(
+        spark, sf_dir, "video", "sample_video_frames", id_cut=200, every_k=2
     )
 
 
@@ -2054,14 +2039,7 @@ def tga_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     that assumes one orientation; the oracle recomputes every feature
     from the generative formula over an (x, y) grid — it never touches
     bytes."""
-    from cses2humio_spark.operators.multimodal import (
-        decode_tga,
-        repartition_for_media,
-        synthesize_tga_media,
-    )
-
-    docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 300)
-    return decode_tga(repartition_for_media(synthesize_tga_media(docs)))
+    return _media_stats(spark, sf_dir, "tga", "decode_tga")
 
 
 @query(
@@ -2090,26 +2068,17 @@ def tga_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def png_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL PNG decode, oracle-checked — the first COMPRESSED image
-    codec decoded byte-for-byte (zlib is stdlib; JPEG/H.264 stay behind
-    the NotImplementedError seam): chunk walk with CRC32 verification,
-    multi-IDAT reassembly, inflate, and the full reverse scanline-filter
-    pass. Each synthesized row is filtered with type (doc_id+row) % 5,
-    so all five reverse filters (None/Sub/Up/Average/Paeth) are
-    exercised — faking any one cannot reproduce the closed-form means
-    the oracle computes from the generative formula without touching
-    bytes. n_idat is excluded here (chunk split depends on deflate
-    output length, not SQL-expressible) and pinned by unit test."""
-    from cses2humio_spark.operators.multimodal import (
-        decode_png,
-        repartition_for_media,
-        synthesize_png_media,
-    )
-
-    docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 300)
-    return decode_png(
-        repartition_for_media(synthesize_png_media(docs))
-    ).drop("n_idat")
+    """REAL PNG decode, oracle-checked — the first COMPRESSED image codec
+    decoded byte-for-byte (zlib is stdlib): chunk walk with CRC32
+    verification, multi-IDAT reassembly, inflate, and the full reverse
+    scanline-filter pass. Each synthesized row is filtered with type
+    (doc_id+row) % 5, so all five reverse filters
+    (None/Sub/Up/Average/Paeth) are exercised — faking any one cannot
+    reproduce the closed-form means the oracle computes from the
+    generative formula without touching bytes. n_idat is excluded here
+    (chunk split depends on deflate output length, not SQL-expressible)
+    and pinned by unit test."""
+    return _media_stats(spark, sf_dir, "png", "decode_png").drop("n_idat")
 
 
 def _l2sq_sql(a: str, b: str) -> str:
@@ -2508,16 +2477,7 @@ def gif_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     touching bytes. n_subblocks (the 255-byte sub-block framing) is
     excluded here — it depends on the LZW output length — and pinned by
     unit test."""
-    from cses2humio_spark.operators.multimodal import (
-        decode_gif,
-        repartition_for_media,
-        synthesize_gif_media,
-    )
-
-    docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 300)
-    return decode_gif(
-        repartition_for_media(synthesize_gif_media(docs))
-    ).drop("n_subblocks")
+    return _media_stats(spark, sf_dir, "gif", "decode_gif").drop("n_subblocks")
 
 
 @query(
@@ -2558,16 +2518,7 @@ def pcx_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     SQL-expressible — and pinned by unit test); the oracle computes all
     stats from the generative formula, including the constant-row
     branch, without touching bytes."""
-    from cses2humio_spark.operators.multimodal import (
-        decode_pcx,
-        repartition_for_media,
-        synthesize_pcx_media,
-    )
-
-    docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 300)
-    return decode_pcx(
-        repartition_for_media(synthesize_pcx_media(docs))
-    ).drop("rle_ratio")
+    return _media_stats(spark, sf_dir, "pcx", "decode_pcx").drop("rle_ratio")
 
 
 @query(
@@ -2606,14 +2557,7 @@ def tiff_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     ceil(h/2) and IS oracle-checkable, unlike the compression-dependent
     framing of the PNG/GIF twins). The oracle recomputes everything,
     including the strip count, from the closed form."""
-    from cses2humio_spark.operators.multimodal import (
-        decode_tiff,
-        repartition_for_media,
-        synthesize_tiff_media,
-    )
-
-    docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 300)
-    return decode_tiff(repartition_for_media(synthesize_tiff_media(docs)))
+    return _media_stats(spark, sf_dir, "tiff", "decode_tiff")
 
 
 @query(
@@ -2653,16 +2597,7 @@ def qoi_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     compression ratio is excluded (encoded length is not
     SQL-expressible; unit-pinned); the oracle computes all stats,
     including the constant-row branch, from the closed form."""
-    from cses2humio_spark.operators.multimodal import (
-        decode_qoi,
-        repartition_for_media,
-        synthesize_qoi_media,
-    )
-
-    docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 300)
-    return decode_qoi(
-        repartition_for_media(synthesize_qoi_media(docs))
-    ).drop("qoi_ratio")
+    return _media_stats(spark, sf_dir, "qoi", "decode_qoi").drop("qoi_ratio")
 
 
 _JPEG_GRAY_ORACLE = """
@@ -2690,25 +2625,17 @@ _JPEG_GRAY_ORACLE = """
 def jpeg_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL baseline JPEG decode, oracle-checked — the FIFTH compression
     family (Annex-K canonical Huffman + run/size AC coding + DCT,
-    alongside zlib, LZW, RLE and QOI; VERDICT r5 #5, the last named
-    codec behind the seam): the synthesizer is a real JFIF encoder and
-    the decoder entropy-decodes, dequantizes, inverse-DCTs, level-shifts
-    and clamps. The lossy codec is EXACT here by construction — the
-    images are piecewise-constant per 8x8 block, so every block is
+    alongside zlib, LZW, RLE and QOI): the synthesizer is a real JFIF
+    encoder and the decoder entropy-decodes, dequantizes, inverse-DCTs,
+    level-shifts and clamps. The lossy codec is EXACT here by construction
+    — the images are piecewise-constant per 8x8 block, so every block is
     DC-only under the all-ones quant table and the IDCT returns the
     constant bit-for-bit — which is what lets a closed-form SQL oracle
     state the decoded stats; DC prediction chains across blocks with
     varying values, and nonzero-AC blocks (no closed form) are pinned by
     the coefficient-roundtrip unit tests against an independent direct
     IDCT."""
-    from cses2humio_spark.operators.multimodal import (
-        decode_jpeg,
-        repartition_for_media,
-        synthesize_jpeg_media,
-    )
-
-    docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 300)
-    return decode_jpeg(repartition_for_media(synthesize_jpeg_media(docs)))
+    return _media_stats(spark, sf_dir, "jpeg", "decode_jpeg")
 
 
 @query("jpeg_sa_decode_stats", oracle=_JPEG_GRAY_ORACLE)
@@ -2719,17 +2646,8 @@ def jpeg_sa_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     through the jcphuff coding discipline — zero-history runs, buffered
     correction bits, EOBn-attached corrections. With this the JPEG
     family covers every coding mode of baseline+progressive Huffman
-    JPEG; the remaining media seam is inter-frame video."""
-    from cses2humio_spark.operators.multimodal import (
-        decode_jpeg,
-        repartition_for_media,
-        synthesize_jpeg_sa_media,
-    )
-
-    docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 300)
-    return decode_jpeg(
-        repartition_for_media(synthesize_jpeg_sa_media(docs))
-    )
+    JPEG."""
+    return _media_stats(spark, sf_dir, "jpeg_sa", "decode_jpeg")
 
 
 @query("jpeg_progressive_decode_stats", oracle=_JPEG_GRAY_ORACLE)
@@ -2741,16 +2659,7 @@ def jpeg_progressive_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame
     the AC scan exactly as real progressive encoders ship) but the
     decoded image must not. Successive approximation (Ah/Al != 0)
     remains the honest refusal."""
-    from cses2humio_spark.operators.multimodal import (
-        decode_jpeg,
-        repartition_for_media,
-        synthesize_jpeg_progressive_media,
-    )
-
-    docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 300)
-    return decode_jpeg(
-        repartition_for_media(synthesize_jpeg_progressive_media(docs))
-    )
+    return _media_stats(spark, sf_dir, "jpeg_progressive", "decode_jpeg")
 
 
 @query(
@@ -2796,18 +2705,8 @@ def jpeg_color_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     range, so clamping genuinely fires). DC-only blocks under all-ones
     tables keep the lossy codec exact, so the oracle states the decoded
     RGB — including the conversion arithmetic, in the decoder's exact
-    IEEE expression order — in closed form. The remaining honest seam
-    is chroma subsampling (4:2:0) and progressive scans."""
-    from cses2humio_spark.operators.multimodal import (
-        decode_jpeg_color,
-        repartition_for_media,
-        synthesize_jpeg_color_media,
-    )
-
-    docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 300)
-    return decode_jpeg_color(
-        repartition_for_media(synthesize_jpeg_color_media(docs))
-    )
+    IEEE expression order — in closed form."""
+    return _media_stats(spark, sf_dir, "jpeg_color", "decode_jpeg_color")
 
 
 @query(
@@ -2852,18 +2751,8 @@ def jpeg_420_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     per 8x8 block so the four-blocks-per-MCU interleave order is load-
     bearing (a decoder that walks Y blocks in the wrong order scrambles
     top_row_sum); chroma is constant per doc, so the upsampling filter
-    choice cannot leak into the closed-form oracle. The remaining
-    honest JPEG seam is progressive scans."""
-    from cses2humio_spark.operators.multimodal import (
-        decode_jpeg_color,
-        repartition_for_media,
-        synthesize_jpeg_420_media,
-    )
-
-    docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 300)
-    return decode_jpeg_color(
-        repartition_for_media(synthesize_jpeg_420_media(docs))
-    )
+    choice cannot leak into the closed-form oracle."""
+    return _media_stats(spark, sf_dir, "jpeg_420", "decode_jpeg_color")
 
 
 @query(
@@ -2890,25 +2779,16 @@ def jpeg_420_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def mjpeg_avi_frame_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL Motion-JPEG video decode, oracle-checked — the composition
-    the r6 verdict names (#8): a RIFF/AVI container (header tree, movi
-    chunk list, idx1 index — all validated and cross-checked by the
-    walker) whose '00dc' chunks are complete baseline JPEGs from the
-    Annex-K encoder; every 2nd frame is entropy-decoded, inverse-DCT'd
-    and reduced to per-frame grayscale stats. Frames are piecewise-
-    constant per 8x8 block so the lossy codec is exact and the oracle
-    can state every sampled frame's mean/top-row from the synthesis
-    formula. External codecs (H.264/VP9) remain the honest
-    NotImplementedError seam at ``multimodal.py::decode_media``."""
-    from cses2humio_spark.operators.multimodal import (
-        decode_avi_mjpeg,
-        repartition_for_media,
-        synthesize_avi_mjpeg_media,
-    )
-
-    docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
-    return decode_avi_mjpeg(
-        repartition_for_media(synthesize_avi_mjpeg_media(docs)), every_k=2
+    """REAL Motion-JPEG video decode, oracle-checked: a RIFF/AVI container
+    (header tree, movi chunk list, idx1 index — all validated and
+    cross-checked by the walker) whose '00dc' chunks are complete baseline
+    JPEGs from the Annex-K encoder; every 2nd frame is entropy-decoded,
+    inverse-DCT'd and reduced to per-frame grayscale stats. Frames are
+    piecewise-constant per 8x8 block so the lossy codec is exact and the
+    oracle can state every sampled frame's mean/top-row from the synthesis
+    formula. Inter-frame codecs (H.264, VP9) are not implemented."""
+    return _media_stats(
+        spark, sf_dir, "avi_mjpeg", "decode_avi_mjpeg", id_cut=200, every_k=2
     )
 
 
@@ -3433,14 +3313,7 @@ def avi_av_demux_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     are closed-form (piecewise-constant frames -> exact lossy video;
     the WAV family's sample formula -> exact int64 square sums), so the
     oracle states every per-document stat without touching bytes."""
-    from cses2humio_spark.operators.multimodal import (
-        demux_avi_av,
-        repartition_for_media,
-        synthesize_avi_av_media,
-    )
-
-    docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 150)
-    return demux_avi_av(repartition_for_media(synthesize_avi_av_media(docs)))
+    return _media_stats(spark, sf_dir, "avi_av", "demux_avi_av", id_cut=150)
 
 
 @query(
@@ -3696,24 +3569,24 @@ _RRF_INDEX_ORACLE = rf"""
 
 @query("rrf_index_hybrid_top10", oracle=_RRF_INDEX_ORACLE)
 def rrf_index_hybrid_top10(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hybrid retrieval ENTIRELY on persisted indexes (VERDICT r10 #2):
-    the BM25 arm reads the standing ``InvertedTextIndex`` posting lists
-    (3 of 64 token-bucket directories, document text never scanned) and
-    the ANN arm reads the standing ``PQIndex`` codes (m small ints per
-    vector, no encode stage), fused by reciprocal rank (k=60) exactly
-    like the fused twin ``rrf_hybrid_top10`` — which re-tokenizes the
-    corpus and re-scores raw vectors inline on every run. This is the
-    production RAG shape: both arms are build-once/search-many, and a
-    query's corpus-sized inputs are ONE narrow doc-length scan (the
-    BM25 collection statistics) plus the codes scan.
+    """Hybrid retrieval ENTIRELY on persisted indexes: the BM25 arm reads
+    the standing ``InvertedTextIndex`` posting lists (3 of 64 token-bucket
+    directories, document text never scanned) and the ANN arm reads the
+    standing ``PQIndex`` codes (m small ints per vector, no encode stage),
+    fused by reciprocal rank (k=60) exactly like the fused twin
+    ``rrf_hybrid_top10`` — which re-tokenizes the corpus and re-scores raw
+    vectors inline on every run. This is the production RAG shape: both
+    arms are build-once/search-many, and a query's corpus-sized inputs are
+    ONE narrow doc-length scan (the BM25 collection statistics) plus the
+    codes scan.
 
     Determinism: the ANN arm's ADC ranking is exact-DECIMAL and
-    cross-engine reproducible, so the oracle replays encode -> ADC ->
-    rank verbatim (the ``pq_index_search`` contract); the lexical arm
-    ranks over 6-decimal-ROUNDED scores with doc-id tie-break, so the
-    index search over-fetches to k=60 and the rank-50 cut happens on
-    the rounded frame — the ``limit`` boundary never depends on
-    last-ulp float sum order. Fusion joins two 50-row frames."""
+    cross-engine reproducible, so the oracle replays encode -> ADC -> rank
+    verbatim (the ``pq_index_search`` contract); the lexical arm ranks
+    over 6-decimal-ROUNDED scores with doc-id tie-break, so the index
+    search over-fetches to k=60 and the rank-50 cut happens on the rounded
+    frame — the ``limit`` boundary never depends on last-ulp float sum
+    order. Fusion joins two 50-row frames."""
     tidx = _text_index_for(spark, sf_dir)
     lex60 = tidx.search(
         spark, list(_BM25_TERMS), k=60, k1=_BM25_K1, b=_BM25_B
@@ -3732,13 +3605,4 @@ def rrf_index_hybrid_top10(spark: SparkSession, sf_dir: str) -> DataFrame:
     vec = pidx.search(spark, probe, k=50).select(
         F.col("vec_id").alias("doc_id"), F.col("rank").alias("rv")
     )
-    fused = lex.join(vec, on="doc_id", how="full_outer")
-    rrf = F.coalesce(1.0 / (60 + F.col("rl")), F.lit(0.0)) + F.coalesce(
-        1.0 / (60 + F.col("rv")), F.lit(0.0)
-    )
-    return (
-        fused.withColumn("__rrf", rrf)
-        .orderBy(F.col("__rrf").desc(), F.col("doc_id").asc())
-        .limit(10)
-        .select("doc_id", F.round("__rrf", 6).alias("rrf"))
-    )
+    return _rrf_fuse(lex, vec)

@@ -1116,3 +1116,70 @@ def test_avi_av_demux_rejects_deinterleaved_and_wrong_audio(spark):
     struct.pack_into("<H", lied, astrf + 8 + 14, 8)  # wBitsPerSample
     with pytest.raises(Exception, match="PCM16"):
         demux_avi_av(as_df(bytes(lied))).collect()
+
+
+def test_worker_closures_ship_by_value(spark, monkeypatch, tmp_path):
+    """Python workers cannot import this package when the application
+    starts from another directory, so every function a media operator
+    hands to mapInPandas must pickle BY VALUE. Record each one, pickle it
+    the way PySpark ships it, and load it in a fresh interpreter where
+    the package is unimportable. A module-level def is the negative control:
+    cloudpickle ships it by reference, so its load must fail there."""
+    import inspect
+    import pickle
+    import subprocess
+    import sys
+
+    from pyspark.serializers import CloudPickleSerializer
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    import cses2humio_spark.operators.multimodal as mm
+
+    captured = []
+    delegate = DataFrame.mapInPandas
+
+    def recording(self, func, schema, *args, **kwargs):
+        captured.append(func)
+        return delegate(self, func, schema, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrame, "mapInPandas", recording)
+    docs = spark.createDataFrame([(1, "a b c")], "doc_id bigint, text string")
+    media = mm.synthesize_media(docs)
+    operators = [
+        fn for name, fn in vars(mm).items()
+        if inspect.isfunction(fn) and fn.__module__ == mm.__name__
+        and not name.startswith("_") and fn.__qualname__ == name
+    ]
+    pure_sql = {"synthesize_media", "repartition_for_media", "frame_sample"}
+    shipped = []
+    for fn in operators:
+        before = len(captured)
+        fn(docs if fn.__name__.startswith("synthesize_") else media)
+        expected = 0 if fn.__name__ in pure_sql else 1
+        assert len(captured) - before == expected, fn.__name__
+        shipped += [(fn.__name__, f) for f in captured[before:]]
+    assert len(shipped) == len(operators) - len(pure_sql)
+
+    ser = CloudPickleSerializer()
+    blobs = [(name, ser.dumps(f)) for name, f in shipped]
+    blobs.append(("control", ser.dumps(mm._synthesize)))
+    (tmp_path / "closures.pkl").write_bytes(pickle.dumps(blobs))
+    loader = (
+        "import pickle, sys\n"
+        "sys.modules['cses2humio_spark'] = None\n"
+        "for name, blob in pickle.load(open('closures.pkl', 'rb')):\n"
+        "    try:\n"
+        "        pickle.loads(blob)\n"
+        "        print('OK', name)\n"
+        "    except Exception as e:\n"
+        "        print('FAIL', name, type(e).__name__, e)\n"
+    )
+    res = subprocess.run(
+        [sys.executable, "-c", loader], cwd=tmp_path,
+        capture_output=True, text=True, timeout=120,
+    )
+    assert res.returncode == 0, res.stderr
+    lines = res.stdout.splitlines()
+    assert lines[-1].startswith("FAIL control ModuleNotFoundError"), lines[-1]
+    failed = [ln for ln in lines[:-1] if not ln.startswith("OK ")]
+    assert not failed and len(lines) == len(blobs), failed
