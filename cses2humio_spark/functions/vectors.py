@@ -1,18 +1,31 @@
-"""Vector math over ``array<float>`` embedding columns.
+"""Vector math over ``array<float>`` embedding columns, in two
+formulations of one arithmetic:
 
-Built on higher-order functions (``zip_with`` + ``aggregate``) — the whole
-dot product runs JVM-side inside codegen; no Python, no UDF serialization.
-Doubles accumulate left-to-right over the array, which is a *deterministic*
-order (array element order is data, not partitioning), so results are
-reproducible and oracle-checkable after rounding.
+- JVM column builders (``dot``, ``sq_l2``, ``cosine_similarity``, ...)
+  on higher-order functions (``zip_with`` + ``aggregate``): the whole
+  computation runs JVM-side, no Python, no UDF serialization;
+- ``make_vector_kernel``: the numpy bodies every Arrow vector operator
+  runs (cosine blocks, paired cosines, hyperplane dots).
+
+Both accumulate doubles left-to-right over the array, which is a
+*deterministic* order (array element order is data, not partitioning),
+so the two formulations and DuckDB's ``list_reduce`` oracle agree bit for
+bit and results are oracle-checkable after rounding.
 """
 
 from __future__ import annotations
+
+from collections import namedtuple
 
 import pandas as pd
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+
+def as_double(a: Column) -> Column:
+    """``a`` with every element cast to double."""
+    return F.transform(a, lambda x: x.cast("double"))
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -21,6 +34,22 @@ def dot(a: Column, b: Column) -> Column:
         F.lit(0.0),
         lambda acc, x: acc + x,
     )
+
+
+def sq_l2(a: Column, b: Column) -> Column:
+    """Squared L2 between two double arrays: zip in index order, left
+    fold (0.0 + e1 + e2 ... == the oracle's list_reduce, IEEE-exact)."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
+        F.lit(0.0),
+        lambda acc, v: acc + v,
+    )
+
+
+def residual(a: Column, b: Column) -> Column:
+    """Elementwise ``a - b`` in double: a vector's residual against its
+    coarse centroid."""
+    return F.zip_with(as_double(a), as_double(b), lambda x, y: x - y)
 
 
 def l2_norm(a: Column) -> Column:
@@ -45,7 +74,7 @@ def quantize_int8(a: Column) -> tuple[Column, Column]:
     an all-zero code vector. Pure codegen HOFs — a narrow projection that
     cuts embedding bytes 4x before they ride any shuffle, which at 100 TB
     is the difference between shipping vectors and shipping codes."""
-    v = F.transform(a, lambda x: x.cast("double"))
+    v = as_double(a)
     amax = F.array_max(F.transform(v, F.abs))
     scale = amax / F.lit(127.0)
     q = F.when(amax == 0.0, F.transform(v, lambda x: F.lit(0))).otherwise(
@@ -58,7 +87,7 @@ def dequantize_error(a: Column, scale: Column, q: Column) -> Column:
     """RMS reconstruction error of an int8 quantization: sqrt(mean((x -
     q*scale)^2)) with a left-to-right double fold (DuckDB list_reduce
     parity)."""
-    v = F.transform(a, lambda x: x.cast("double"))
+    v = as_double(a)
     sq = F.zip_with(
         v, q, lambda x, qi: (x - qi.cast("double") * scale) * (x - qi.cast("double") * scale)
     )
@@ -66,6 +95,96 @@ def dequantize_error(a: Column, scale: Column, q: Column) -> Column:
         F.aggregate(sq, F.lit(0.0), lambda acc, x: acc + x)
         / F.size(v).cast("double")
     )
+
+
+_VectorKernel = namedtuple(
+    "_VectorKernel", "matrix sq_norms dots cos_block cos_rows"
+)
+
+
+def make_vector_kernel():
+    """The numpy bodies of the Arrow vector operators, as a closure
+    factory: call it on the driver and capture the returned functions
+    (by name — ``make_vector_kernel().cos_block`` — never the namedtuple
+    itself) in worker closures, so cloudpickle ships them by value;
+    Python workers cannot import this package when the application
+    starts from another directory.
+
+    Every body accumulates float64 dimension by dimension, j = 0..dim-1,
+    one IEEE multiply and one add per step — the order of the ``dot`` /
+    ``cosine_similarity`` folds and of DuckDB's list_reduce.
+
+    - ``matrix(values) -> (M, lens)``: the vectors as float64 rows
+      zero-padded to the longest one; ``lens[i]`` is row i's length, -1
+      for a NULL vector. Padding adds exact zeros, so a same-length pair
+      scores as if unpadded.
+    - ``sq_norms(A)``, ``dots(A, B)`` (an n x m block): over padded
+      matrices.
+    - ``cos_block(a, b)`` (n x m) and ``cos_rows(a, b)`` (paired rows)
+      over ``(M, lens)`` pairs return ``(cos, defined)``. The length rule:
+      a pair with a NULL side or with different lengths has a NULL
+      cosine (the fold's zip_with pads the shorter side with NULL) —
+      ``defined`` is False and ``cos`` NaN there. A zero-norm vector
+      gives a NaN cosine with ``defined`` True."""
+    import numpy as np
+
+    def matrix(values):
+        vals = list(values)
+        lens = np.array(
+            [-1 if v is None else len(v) for v in vals], dtype=np.int64
+        )
+        width = int(lens.max(initial=0))
+        full = lens == width
+        if full.all():
+            M = np.asarray(vals, dtype=np.float64).reshape(len(vals), width)
+            return M, lens
+        M = np.zeros((len(vals), width), dtype=np.float64)
+        if full.any():
+            M[full] = np.asarray(
+                [vals[i] for i in np.flatnonzero(full)], dtype=np.float64
+            ).reshape(-1, width)
+        for i in np.flatnonzero((lens > 0) & ~full):
+            M[i, : lens[i]] = vals[i]
+        return M, lens
+
+    def widen(A, width):
+        if A.shape[1] == width:
+            return A
+        return np.pad(A, ((0, 0), (0, width - A.shape[1])))
+
+    def row_dots(A, B):
+        acc = np.zeros(A.shape[0], dtype=np.float64)
+        for j in range(A.shape[1]):
+            acc += A[:, j] * B[:, j]
+        return acc
+
+    def sq_norms(A):
+        return row_dots(A, A)
+
+    def dots(A, B):
+        width = max(A.shape[1], B.shape[1])
+        A, B = widen(A, width), widen(B, width)
+        acc = np.zeros((A.shape[0], B.shape[0]), dtype=np.float64)
+        for j in range(width):
+            acc += A[:, j : j + 1] * B[:, j]
+        return acc
+
+    def cos_block(a, b):
+        (A, la), (B, lb) = a, b
+        nrm_a, nrm_b = np.sqrt(sq_norms(A)), np.sqrt(sq_norms(B))
+        cos = dots(A, B) / (nrm_a[:, None] * nrm_b[None, :])
+        defined = (la[:, None] == lb[None, :]) & (la[:, None] >= 0)
+        return np.where(defined, cos, np.nan), defined
+
+    def cos_rows(a, b):
+        (A, la), (B, lb) = a, b
+        width = max(A.shape[1], B.shape[1])
+        A, B = widen(A, width), widen(B, width)
+        cos = row_dots(A, B) / (np.sqrt(sq_norms(A)) * np.sqrt(sq_norms(B)))
+        defined = (la == lb) & (la >= 0)
+        return np.where(defined, cos, np.nan), defined
+
+    return _VectorKernel(matrix, sq_norms, dots, cos_block, cos_rows)
 
 
 def cosine_pairs_lookup(
@@ -89,41 +208,39 @@ def cosine_pairs_lookup(
     This is the §8-style "decide with small rows" shape for verify
     stages whose vector side is ALREADY broadcast-sized by contract
     (``embedding_near_dup_pairs(broadcast_vectors=True)``, the
-    admission loops' bounded micro-batch + candidate-partner set): the
-    previous formulation broadcast the same table into two hash joins
-    and then paid ~1 KB/pair of Arrow traffic to evaluate the cosine —
-    measured 85-670 s of task time for 1.25M pairs at sf0.1, vs a few
-    seconds for the id-indexed gather.
+    admission loops' bounded micro-batch + candidate-partner set):
+    broadcasting the same table into two hash joins pays ~1 KB/pair of
+    Arrow traffic to evaluate the cosine — measured 85-670 s of task
+    time for 1.25M pairs at sf0.1, vs a few seconds for the id-indexed
+    gather.
 
     Semantics are identical to ``cosine_pairs`` over
     ``pairs JOIN vectors ON id_a JOIN vectors ON id_b``:
 
-    - accumulation is dimension-by-dimension float64 (the engine-wide
-      left-to-right IEEE order), bit-identical to the fold and DuckDB;
+    - the kernel's ``cos_rows`` scores each pair, bit-identical to the
+      fold and DuckDB;
     - an id absent from ``vectors``, or one whose vector is NULL,
-      yields NULL (the inner-join formulation dropped the pair; a NULL
+      yields NULL (the inner-join formulation drops the pair; a NULL
       cosine fails every downstream threshold the same way);
-    - mismatched vector lengths yield NULL (the fold's zip_with pads
-      with NULL), zero-norm vectors yield NaN — both preserved;
+    - mismatched vector lengths and zero-norm vectors yield NULL;
     - a duplicated id in ``vectors`` is an error (the join would have
       fanned the pair out; refuse loudly instead of guessing).
 
     ``max_vectors`` is the refuse-loudly bound on the collected ROW
     count (same contract as ``cosine_topk_bruteforce.max_probes``);
     ``max_matrix_bytes`` bounds the collected matrix's DRIVER/EXECUTOR
-    memory dimension-aware (rows x dim x 8 bytes of float64 — VERDICT
-    r14 #6: a row-count bound alone scales linearly with dim, so
-    4M x dim-512 rows would be 16 GB). Both are checked by one
-    aggregate (row count, total vector length) BEFORE the collect, so a
-    violating table is never collected; callers whose vector side
-    can exceed either bound must keep the join formulation."""
+    memory dimension-aware (non-NULL rows x the longest vector x 8
+    bytes of float64 — a row-count bound alone scales linearly with
+    dim, so 4M x dim-512 rows would be 16 GB). Both are checked by one
+    aggregate BEFORE the collect, so a violating table is never
+    collected; callers whose vector side can exceed either bound must
+    keep the join formulation."""
     import numpy as np
 
     from pyspark.sql.functions import pandas_udf
 
-    n_rows, n_floats = vectors.agg(
-        F.count(F.lit(1)),
-        F.sum(F.when(F.col(vec_col).isNotNull(), F.size(vec_col))),
+    n_rows, n_vectors, width = vectors.agg(
+        F.count(F.lit(1)), F.count(vec_col), F.max(F.size(vec_col))
     ).collect()[0]
     if n_rows > max_vectors:
         raise ValueError(
@@ -131,107 +248,47 @@ def cosine_pairs_lookup(
             f"{max_vectors} rows — it no longer fits the broadcast "
             "contract; use the join + cosine_pairs formulation"
         )
-    if (n_floats or 0) * 8 > max_matrix_bytes:
+    if n_vectors * (width or 0) * 8 > max_matrix_bytes:
         raise ValueError(
             "cosine_pairs_lookup: vector matrix exceeds "
-            f"max_matrix_bytes={max_matrix_bytes} ({n_rows} rows, "
-            f"{n_floats} floats x 8 B float64) — it no longer fits the "
+            f"max_matrix_bytes={max_matrix_bytes} ({n_vectors} vectors "
+            f"x {width} floats x 8 B float64) — it no longer fits the "
             "broadcast contract; use the join + cosine_pairs formulation"
         )
     rows = vectors.select(id_col, vec_col).collect()
-    by_id: dict = {}
-    vecs: list = []
-    for r in rows:
-        rid = r[0]
-        if rid in by_id:
-            raise ValueError(
-                f"cosine_pairs_lookup: duplicate id {rid!r} in the "
-                "vector table — the join formulation would fan pairs "
-                "out; dedup the vector side first"
-            )
-        v = r[1]
-        if v is None:
-            by_id[rid] = -1  # NULL vector: cosine is NULL
-        else:
-            by_id[rid] = len(vecs)
-            vecs.append([float(x) for x in v])
-    # group by length so ragged tables still gather correctly; the
-    # common case is one uniform dim
+    ids = pd.Index([r[0] for r in rows])
+    if not ids.is_unique:
+        raise ValueError(
+            f"cosine_pairs_lookup: duplicate id "
+            f"{ids[ids.duplicated()][0]!r} in the vector table — the join "
+            "formulation would fan pairs out; dedup the vector side first"
+        )
+    kernel = make_vector_kernel()
+    # one matrix row per non-NULL vector plus a trailing NULL row (length
+    # -1, so every pair touching it is undefined). ``row_of`` maps an
+    # id's position in ``ids`` to its matrix row; NULL vectors, and
+    # absent ids through row_of's own trailing entry (get_indexer's -1),
+    # map to -1, the NULL row
+    present = np.array([r[1] is not None for r in rows] + [False])
+    row_of = np.where(present, np.cumsum(present) - 1, -1)
+    mat = kernel.matrix([r[1] for r in rows if r[1] is not None] + [None])
     sc = pairs.sparkSession.sparkContext
-    lens = sorted({len(v) for v in vecs})
-    mats = {
-        ln: np.asarray([v for v in vecs if len(v) == ln], dtype=np.float64)
-        for ln in lens
-    }
-    # positional gather tables keyed by ONE pd.Index over the ids (the
-    # per-pair id -> row lookup runs through Index.get_indexer — a C
-    # hash probe per id — instead of a per-element Python dict map,
-    # which dominated the UDF at ~450k pairs/eval): len_arr[i] is id
-    # i's length class (-1 = NULL vector), row_arr[i] its row within
-    # that class's matrix
-    ids_index = pd.Index([r[0] for r in rows])
-    len_arr = np.empty(len(rows), dtype=np.int64)
-    row_arr = np.empty(len(rows), dtype=np.int64)
-    perlen_counter = {ln: 0 for ln in lens}
-    for i, r in enumerate(rows):
-        ix = by_id[r[0]]
-        if ix < 0:
-            len_arr[i] = -1
-            row_arr[i] = -1
-        else:
-            ln = len(vecs[ix])
-            len_arr[i] = ln
-            row_arr[i] = perlen_counter[ln]
-            perlen_counter[ln] += 1
-    b_index = sc.broadcast(ids_index)
-    b_len = sc.broadcast(len_arr)
-    b_row = sc.broadcast(row_arr)
-    b_mats = sc.broadcast(mats)
+    b_ids, b_row, b_mat = sc.broadcast(ids), sc.broadcast(row_of), sc.broadcast(mat)
+    cos_rows = kernel.cos_rows
 
     @pandas_udf("double")
     def _cos(ia: pd.Series, ib: pd.Series) -> pd.Series:
-        index_ = b_index.value
-        len_ = b_len.value
-        row_ = b_row.value
-        mats_ = b_mats.value
-        n = len(ia)
-        out = np.full(n, np.nan, dtype=np.float64)
-        valid = np.zeros(n, dtype=bool)
-        # vectorized positional gather; ids absent from the table (and
-        # NULL pair ids) resolve to -1 and stay length class -2
-        pa = index_.get_indexer(ia)
-        pb = index_.get_indexer(ib)
-        la = np.where(pa >= 0, len_[pa], -2)
-        lb = np.where(pb >= 0, len_[pb], -2)
-        ra = np.where(pa >= 0, row_[pa], -1)
-        rb = np.where(pb >= 0, row_[pb], -1)
-        for ln, M in mats_.items():
-            sel = (la == ln) & (lb == ln)
-            if not sel.any():
-                continue
-            A = M[ra[sel]]
-            B = M[rb[sel]]
-            d = np.zeros(A.shape[0], dtype=np.float64)
-            na = np.zeros(A.shape[0], dtype=np.float64)
-            nb = np.zeros(A.shape[0], dtype=np.float64)
-            for j in range(ln):
-                # same left-to-right IEEE order as the fold / DuckDB
-                d += A[:, j] * B[:, j]
-                na += A[:, j] * A[:, j]
-                nb += B[:, j] * B[:, j]
-            out[sel] = d / (np.sqrt(na) * np.sqrt(nb))
-            valid[sel] = True
-        if valid.all():
-            # fast path (every pair resolved): a plain float64 series —
-            # computed NaNs (zero-norm vectors) pass through as NaN
-            return pd.Series(out)
-        # object series so missing/NULL-vector pairs stay SQL NULL while
-        # computed NaNs (zero-norm) stay NaN — Spark's NaN orders above
-        # every number, NULL fails every comparison; the two must not mix
-        res = pd.Series([None] * n, dtype=object)
-        if valid.any():
-            res[valid] = out[valid].tolist()
-        return res
+        ids_, row_ = b_ids.value, b_row.value
+        M, lens = b_mat.value
+
+        def gather(col):
+            # a C hash probe per id (Index.get_indexer), not a per-element
+            # Python dict map
+            r = row_[ids_.get_indexer(col)]
+            return M[r], lens[r]
+
+        # computed NaNs and undefined pairs both reach Spark as NULL
+        return pd.Series(cos_rows(gather(ia), gather(ib))[0])
 
     # asNondeterministic: the function IS deterministic, but the marker
     # stops the optimizer's pushed-down filter from DUPLICATING the
@@ -246,34 +303,20 @@ def cosine_pairs_lookup(
 def cosine_pairs(a: Column, b: Column) -> Column:
     """Arrow-vectorized cosine between two vector columns.
 
-    One pandas UDF computes dot + both norms for the whole batch,
-    accumulated dimension-by-dimension in float64 — the SAME
-    left-to-right addition order as the ``cosine_similarity`` fold and
-    DuckDB's list_reduce, so all three agree bit-for-bit (pinned by
-    tests/test_approx.py). Use on candidate-pair hot paths where the
-    interpreted fold costs ~µs per array element; NULL in either input
-    yields NULL, matching the fold."""
+    One pandas UDF scores the whole batch with the kernel's
+    ``cos_rows`` — bit-identical to the ``cosine_similarity`` fold
+    (pinned by tests/test_approx.py). Use on candidate-pair hot paths
+    where the interpreted fold costs ~µs per array element. NULL in
+    either input, or vectors of different lengths, yield NULL, matching
+    the fold; a zero-norm vector yields NULL too (the fold gives NaN)."""
     from pyspark.sql.functions import pandas_udf
+
+    kernel = make_vector_kernel()
+    matrix, cos_rows = kernel.matrix, kernel.cos_rows
 
     @pandas_udf("double")
     def _cos(va: pd.Series, vb: pd.Series) -> pd.Series:
-        import numpy as np
-
-        mask = (va.notna() & vb.notna()).to_numpy()
-        out = pd.Series([None] * len(va), dtype=object)
-        if not mask.any():
-            return out
-        A = np.asarray(va[mask].tolist(), dtype=np.float64)
-        B = np.asarray(vb[mask].tolist(), dtype=np.float64)
-        d = np.zeros(A.shape[0], dtype=np.float64)
-        na = np.zeros(A.shape[0], dtype=np.float64)
-        nb = np.zeros(A.shape[0], dtype=np.float64)
-        for j in range(A.shape[1]):
-            d += A[:, j] * B[:, j]
-            na += A[:, j] * A[:, j]
-            nb += B[:, j] * B[:, j]
-        out[mask] = (d / (np.sqrt(na) * np.sqrt(nb))).tolist()
-        return out
+        return pd.Series(cos_rows(matrix(va), matrix(vb))[0])
 
     # asNondeterministic stops filter pushdown from duplicating the
     # ArrowEvalPython node when the caller filters on the cosine column

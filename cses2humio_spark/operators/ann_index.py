@@ -30,19 +30,18 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from cses2humio_spark.functions.vectors import as_double, residual, sq_l2
 from cses2humio_spark.operators.index_store import VersionedSegmentStore
 from cses2humio_spark.operators.similarity import (
     adc_rank,
     adc_tables,
+    adc_topk,
     ivf_assign,
     ivfpq_probe_tables,
     pq_codebook,
     pq_encode,
+    topk_per_probe,
 )
-
-
-def _dvec(c):
-    return F.transform(c, lambda x: x.cast("double"))
 
 
 class PQIndex(VersionedSegmentStore):
@@ -148,7 +147,7 @@ class PQIndex(VersionedSegmentStore):
             self._write_dir(
                 centroids.select(
                     F.col(cid_col).alias("cid"),
-                    _dvec(F.col(self.vec_col)).alias("cvec"),
+                    as_double(F.col(self.vec_col)).alias("cvec"),
                 ),
                 self._centroids_dir(version),
                 manifest,
@@ -196,11 +195,7 @@ class PQIndex(VersionedSegmentStore):
             .select(
                 self.id_col,
                 "cid",
-                F.zip_with(
-                    _dvec(F.col(self.vec_col)),
-                    F.col("__cvec"),
-                    lambda a, b: a - b,
-                ).alias("__rvec"),
+                residual(F.col(self.vec_col), F.col("__cvec")).alias("__rvec"),
             )
         )
 
@@ -312,35 +307,12 @@ class PQIndex(VersionedSegmentStore):
             # nprobe prune is ONE equi-join on cid against the
             # cid-partitioned segments — assignment never lives as a
             # separate table
-            cand = probe_cells.join(codes, on="cid")
-            approx = (
-                cand.join(
-                    F.broadcast(tables),
-                    on=[probe_id_col, "cid", "sub_id", "code"],
-                )
-                .groupBy(probe_id_col, self.id_col)
-                .agg(
-                    F.sum(F.col("__d").cast("decimal(28,8)"))
-                    .cast("double")
-                    .alias("adist"),
-                    F.count(F.lit(1)).alias("__m"),
-                )
-                .filter(F.col("__m") == self.m)
+            looked_up = probe_cells.join(codes, on="cid").join(
+                F.broadcast(tables),
+                on=[probe_id_col, "cid", "sub_id", "code"],
             )
-            from pyspark.sql.window import Window
-
-            wk = Window.partitionBy(probe_id_col).orderBy(
-                F.col("adist").asc(), F.col(self.id_col).asc()
-            )
-            approx_topk = (
-                approx.withColumn("rank", F.row_number().over(wk))
-                .filter(F.col("rank") <= k_adc)
-                .select(
-                    probe_id_col,
-                    self.id_col,
-                    F.round("adist", 6).alias("adist"),
-                    "rank",
-                )
+            approx_topk = adc_topk(
+                looked_up, self.m, k_adc, self.id_col, probe_id_col
             )
         if not refine:
             return approx_topk
@@ -362,16 +334,12 @@ class PQIndex(VersionedSegmentStore):
         score with exact squared L2, keeping the smallest k. Column
         casts to double happen here so float32-stored corpora and
         double probes meet in one space."""
-        from pyspark.sql.window import Window
-
-        from cses2humio_spark.operators.similarity import _l2sq
-
         cand_ids = candidates.select(probe_id_col, self.id_col)
         cvecs = vectors.select(
-            F.col(self.id_col), _dvec(F.col(self.vec_col)).alias("__cv")
+            F.col(self.id_col), as_double(F.col(self.vec_col)).alias("__cv")
         )
         pvecs = probes.select(
-            F.col(probe_id_col), _dvec(F.col(self.vec_col)).alias("__pv")
+            F.col(probe_id_col), as_double(F.col(self.vec_col)).alias("__pv")
         )
         exact = (
             cvecs.join(F.broadcast(cand_ids), on=self.id_col)
@@ -379,16 +347,11 @@ class PQIndex(VersionedSegmentStore):
             .select(
                 probe_id_col,
                 self.id_col,
-                F.round(_l2sq(F.col("__pv"), F.col("__cv")), 6).alias(
+                F.round(sq_l2(F.col("__pv"), F.col("__cv")), 6).alias(
                     "edist"
                 ),
             )
         )
-        wk = Window.partitionBy(probe_id_col).orderBy(
-            F.col("edist").asc(), F.col(self.id_col).asc()
-        )
-        return (
-            exact.withColumn("rank", F.row_number().over(wk))
-            .filter(F.col("rank") <= k)
-            .select(probe_id_col, self.id_col, "edist", "rank")
+        return topk_per_probe(
+            exact, k, "edist", probe_id_col, self.id_col, ascending=True
         )

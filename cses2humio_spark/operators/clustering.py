@@ -33,17 +33,14 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from cses2humio_spark.functions.vectors import sq_l2
+
 
 def sq_dist_to(vec: Column, centroid: Sequence[float]) -> Column:
     """Squared euclidean distance from a double-array column to a literal
     centroid, accumulated left-to-right (0.0 + d0) + d1 + ... so the fold
     order is engine-independent."""
-    c = F.array(*[F.lit(float(x)) for x in centroid])
-    return F.aggregate(
-        F.zip_with(vec, c, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+    return sq_l2(vec, F.array(*[F.lit(float(x)) for x in centroid]))
 
 
 def assign_to_nearest(vec: Column, centroids: Sequence[Sequence[float]]) -> Column:

@@ -28,8 +28,10 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from cses2humio_spark.functions.vectors import dot
 
 
 @dataclass(frozen=True)
@@ -129,16 +131,6 @@ def pca_fit(df: DataFrame, vec_col: str, k: int) -> PcaModel:
     )
 
 
-def _lit_dot(vec: Column, weights) -> Column:
-    """dot(vec, literal weights) as a left-to-right codegen fold."""
-    arr = F.array(*[F.lit(float(w)) for w in weights])
-    return F.aggregate(
-        F.zip_with(vec, arr, lambda a, b: a * b),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
 def pca_project(
     df: DataFrame, vec_col: str, model: PcaModel, out_col: str = "pca"
 ) -> DataFrame:
@@ -150,5 +142,6 @@ def pca_project(
     comps = []
     for w in model.components:
         center = sum(m * wi for m, wi in zip(model.mean, w))
-        comps.append(_lit_dot(v, w) - F.lit(float(center)))
+        weights = F.array(*[F.lit(float(x)) for x in w])
+        comps.append(dot(v, weights) - F.lit(float(center)))
     return df.withColumn(out_col, F.array(*comps))

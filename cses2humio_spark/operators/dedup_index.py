@@ -30,6 +30,7 @@ import inspect
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from cses2humio_spark.functions.vectors import make_vector_kernel
 from cses2humio_spark.operators.dedup import (
     alternating_star_components,
     minhash_signatures,
@@ -599,8 +600,9 @@ class EmbeddingLshIndex(AdmissionIndex):
     def _signatures(self, vecs: DataFrame) -> DataFrame:
         """One Arrow-batched rowwise projection per vector — no
         aggregation, so legal in streaming append mode and on any probe
-        path (the bit-for-bit equality of the Arrow, JVM-fold and DuckDB
-        signature paths is pinned in tests/test_approx.py)."""
+        path (the bit-for-bit equality of the Arrow signature with a
+        ``dot`` fold per plane and with DuckDB is pinned in
+        tests/test_approx.py)."""
         sigs = lsh_signatures(
             vecs, self.dim, self.n_planes * self.n_bands, self.vec_col
         )
@@ -677,12 +679,11 @@ class EmbeddingLshIndex(AdmissionIndex):
         # The CURATED eval suite is collected once (bounded by policy —
         # eval suites are thousands of vectors) and shipped in a
         # mapInPandas closure; each Arrow batch of fresh vectors computes
-        # its full cosine block against the suite matrix in one pass. A
-        # crossJoin would ship batch_rows x suite_rows PAIRS of full
-        # vectors through Arrow; this ships each side exactly once.
-        # Accumulation is dimension-by-dimension in float64 — the same
-        # left-to-right order as cosine_pairs and DuckDB's list_reduce,
-        # so borderline comparisons agree bit-for-bit.
+        # its full cosine block against the suite matrix in one pass of
+        # the vector kernel. A crossJoin would ship batch_rows x
+        # suite_rows PAIRS of full vectors through Arrow; this ships each
+        # side exactly once. NULL vectors and length mismatches have a
+        # NULL cosine and never hit.
         if eval_vectors is None:
             return None
         idc, vc = self.id_col, self.vec_col
@@ -693,32 +694,16 @@ class EmbeddingLshIndex(AdmissionIndex):
         ]
         if not ev_rows:
             return None
-        import numpy as np
-
-        E = np.asarray(ev_rows, dtype=np.float64)  # (suite, dim)
+        kernel = make_vector_kernel()
+        matrix, cos_block = kernel.matrix, kernel.cos_block
+        E = matrix(ev_rows)
         thr = float(eval_threshold)
 
         def _eval_gate(batches):
-            import numpy as np  # noqa: PLC0415 — worker-side import
-
-            nb = np.zeros(E.shape[0], dtype=np.float64)
-            for j in range(E.shape[1]):
-                nb += E[:, j] * E[:, j]
             for pdf in batches:
-                mask = pdf[vc].notna()
-                if not mask.any():
-                    continue
-                sub = pdf.loc[mask]
-                A = np.asarray(sub[vc].tolist(), dtype=np.float64)
-                d = np.zeros((A.shape[0], E.shape[0]), dtype=np.float64)
-                na = np.zeros(A.shape[0], dtype=np.float64)
-                for j in range(A.shape[1]):
-                    d += A[:, j : j + 1] * E[:, j][None, :]
-                    na += A[:, j] * A[:, j]
-                cos = d / (np.sqrt(na)[:, None] * np.sqrt(nb)[None, :])
-                hit = (cos >= thr).any(axis=1)
+                hit = (cos_block(matrix(pdf[vc]), E)[0] >= thr).any(axis=1)
                 if hit.any():
-                    yield sub.loc[hit, [idc]]
+                    yield pdf.loc[hit, [idc]]
 
         id_sql_type = fresh.schema[idc].dataType.simpleString()
         return fresh.mapInPandas(

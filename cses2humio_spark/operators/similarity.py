@@ -21,40 +21,35 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from cses2humio_spark.functions.vectors import cosine_pairs, cosine_similarity
+from cses2humio_spark.functions.vectors import (
+    as_double,
+    cosine_pairs,
+    cosine_similarity,
+    make_vector_kernel,
+    residual,
+    sq_l2,
+)
 
 
-def cosine_topk_bruteforce_fold(
-    corpus: DataFrame,
-    probes: DataFrame,
+def topk_per_probe(
+    scored: DataFrame,
     k: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+    score: str,
     probe_id_col: str = "probe_id",
+    id_col: str = "vec_id",
+    ascending: bool = False,
+    out: list | None = None,
 ) -> DataFrame:
-    """Pure-JVM exact cosine top-k: broadcast cross join + fold-based
-    cosine per pair + ranking window. Reference semantics for the
-    vectorized path below (and the no-Arrow fallback) — the folds evaluate
-    interpreted, so this pays ~µs per array element."""
-    from cses2humio_spark.sources.catalog import fan_out
-
-    p = probes.select(
-        F.col(probe_id_col), F.col(vec_col).alias("__pvec")
-    )
-    scored = fan_out(corpus).join(F.broadcast(p)).select(
-        F.col(probe_id_col),
-        F.col(id_col),
-        F.round(
-            cosine_similarity(F.col(vec_col), F.col("__pvec")), 6
-        ).alias("cos_sim"),
-    )
-    w = Window.partitionBy(probe_id_col).orderBy(
-        F.col("cos_sim").desc(), F.col(id_col).asc()
-    )
+    """Each probe's ``k`` best rows: ``row_number() <= k`` over a window
+    partitioned by probe, ordered by ``score`` (descending, or ascending
+    for distances), ties to the lowest id. Returns ``(probe, id, *out,
+    rank)`` with ``out`` defaulting to the score column."""
+    order = F.col(score).asc() if ascending else F.col(score).desc()
+    w = Window.partitionBy(probe_id_col).orderBy(order, F.col(id_col).asc())
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-        .select(probe_id_col, id_col, "cos_sim", "rank")
+        .select(probe_id_col, id_col, *(out or [score]), "rank")
     )
 
 
@@ -70,9 +65,8 @@ def cosine_topk_bruteforce(
     """Exact cosine top-k neighbors for each probe vector, Arrow path.
 
     One mapInPandas over the corpus: each batch computes its full
-    (batch x probes) cosine matrix in numpy — accumulated
-    dimension-by-dimension in float64, the same addition order as the JVM
-    fold and the DuckDB list_reduce oracle, so scores are bit-identical —
+    (batch x probes) cosine block with the vector kernel — scores
+    bit-identical to the JVM fold and the DuckDB list_reduce oracle —
     and emits only its LOCAL top candidates per probe. The batch keeps
     every row with unrounded cos >= (k-th best in batch) - 1e-6: rounding
     to 6 decimals moves a value by < 5e-7, so any row that could still
@@ -81,13 +75,19 @@ def cosine_topk_bruteforce(
     rounded too). The final window then ranks batches*k-ish rows instead
     of |corpus| x |probes| — the shuffle shrinks from the cross product to
     the candidate set, which is what lets brute force serve as the exact
-    baseline at scale. Rows whose vector is NULL are skipped (the fold
-    path yields NULL cos, which likewise never ranks).
+    baseline at scale. A row whose cosine is NULL (a NULL vector, or one
+    whose length differs from the probe's) or NaN (zero norm) never
+    ranks. An empty probe set yields an empty frame of the same schema.
     """
-    import math
-
     from cses2humio_spark.sources.catalog import fan_out
 
+    if k < 1:
+        raise ValueError(f"k must be >= 1, got {k}")
+    id_type = corpus.schema[id_col].dataType.simpleString()
+    pid_type = probes.schema[probe_id_col].dataType.simpleString()
+    out_schema = (
+        f"{probe_id_col} {pid_type}, {id_col} {id_type}, cos_sim double"
+    )
     # The probe set is collected to the driver and broadcast into every
     # batch's numpy matrix — its size contract ("probes are small") must be
     # ENFORCED, not assumed: an accidental probes=corpus call at scale is a
@@ -104,44 +104,23 @@ def cosine_topk_bruteforce(
             "explicitly if the driver can hold them"
         )
     if not probe_rows:
-        return cosine_topk_bruteforce_fold(
-            corpus, probes, k, id_col, vec_col, probe_id_col
+        return corpus.sparkSession.createDataFrame(
+            [], f"{out_schema}, rank int"
         )
+    kernel = make_vector_kernel()
+    matrix, cos_block = kernel.matrix, kernel.cos_block
     pids = [r[0] for r in probe_rows]
-    pvecs = [list(r[1]) for r in probe_rows]
-    dim = len(pvecs[0])
-    id_type = corpus.schema[id_col].dataType.simpleString()
-    pid_type = probes.schema[probe_id_col].dataType.simpleString()
-    out_schema = (
-        f"{probe_id_col} {pid_type}, {id_col} {id_type}, cos_sim double"
-    )
+    P = matrix([r[1] for r in probe_rows])
 
     def batch_topk(batches):
         import numpy as np
         import pandas as pd
 
-        P = np.asarray(pvecs, dtype=np.float64)  # (p, dim)
-        np_norm = np.zeros(P.shape[0], dtype=np.float64)
-        for j in range(dim):
-            np_norm += P[:, j] * P[:, j]
-        np_norm = np.sqrt(np_norm)
         for pdf in batches:
-            if pdf.empty:
-                continue
-            keep = pdf[vec_col].notna().to_numpy()
-            pdf = pdf[keep]
-            if pdf.empty:
-                continue
-            v = np.asarray(pdf[vec_col].tolist(), dtype=np.float64)  # (n, dim)
+            cos = cos_block(matrix(pdf[vec_col]), P)[0]
             ids = pdf[id_col].to_numpy()
-            dotm = np.zeros((v.shape[0], P.shape[0]), dtype=np.float64)
-            na = np.zeros(v.shape[0], dtype=np.float64)
-            for j in range(dim):
-                dotm += v[:, j : j + 1] * P[:, j]
-                na += v[:, j] * v[:, j]
-            cos = dotm / (np.sqrt(na)[:, None] * np_norm[None, :])
             out_pid, out_id, out_cos = [], [], []
-            for pi in range(P.shape[0]):
+            for pi in range(cos.shape[1]):
                 col = cos[:, pi]
                 valid = ~np.isnan(col)
                 cvals = col[valid]
@@ -160,18 +139,12 @@ def cosine_topk_bruteforce(
                     {probe_id_col: out_pid, id_col: out_id, "cos_sim": out_cos}
                 )
 
-    assert math.isfinite(k) and k >= 1
     cand = fan_out(corpus).select(id_col, vec_col).mapInPandas(
         batch_topk, schema=out_schema
     )
-    w = Window.partitionBy(probe_id_col).orderBy(
-        F.col("cos_sim").desc(), F.col(id_col).asc()
-    )
-    return (
-        cand.withColumn("cos_sim", F.round(F.col("cos_sim"), 6))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(probe_id_col, id_col, "cos_sim", "rank")
+    return topk_per_probe(
+        cand.withColumn("cos_sim", F.round(F.col("cos_sim"), 6)),
+        k, "cos_sim", probe_id_col, id_col,
     )
 
 
@@ -187,32 +160,6 @@ def _hyperplane(dim: int, plane_idx: int) -> list[float]:
     return vals
 
 
-def lsh_signatures_fold(
-    df: DataFrame,
-    dim: int,
-    n_planes: int = 8,
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Pure-JVM LSH signature: bit i = sign(v . plane_i), each dot a
-    zip_with + left fold. Reference semantics for the vectorized path
-    below (higher-order functions evaluate interpreted, so 60 folds cost
-    seconds per million rows — keep this as the no-Arrow fallback and the
-    parity baseline)."""
-    from cses2humio_spark.sources.catalog import fan_out
-
-    df = fan_out(df)
-    sig = F.lit(0).cast("bigint")
-    for i in range(n_planes):
-        plane = F.array(*[F.lit(v) for v in _hyperplane(dim, i)])
-        d = F.aggregate(
-            F.zip_with(F.col(vec_col), plane, lambda x, y: x.cast("double") * y),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        sig = sig + F.when(d > 0, F.lit(1 << i)).otherwise(F.lit(0))
-    return df.withColumn("lsh_sig", sig)
-
-
 def lsh_signatures(
     df: DataFrame,
     dim: int,
@@ -222,43 +169,40 @@ def lsh_signatures(
     """Append an integer LSH signature: bit i = sign(v . plane_i).
 
     Computed in one Arrow-batched pandas UDF: all n_planes dots per vector
-    in a single vectorized pass, accumulated dimension-by-dimension in
-    float64 — the SAME left-to-right addition order as the JVM fold and
-    DuckDB's list_reduce, so the three paths agree bit-for-bit (pinned by
-    tests/test_approx.py::test_lsh_signature_paths_identical). ~20x faster
-    than n_planes interpreted higher-order folds."""
+    in a single pass of the vector kernel's ``dots`` — bit-identical to a
+    ``dot`` fold per plane and to DuckDB's list_reduce (pinned by
+    tests/test_approx.py::test_lsh_signature_paths_identical), ~20x
+    faster than n_planes interpreted higher-order folds. A NULL vector
+    signs as 0; a vector whose length is not ``dim`` fails the task with
+    a ValueError naming both lengths."""
+    import numpy as np
+
     from pyspark.sql.functions import pandas_udf
 
     from cses2humio_spark.sources.catalog import fan_out
 
-    planes_list = [list(_hyperplane(dim, i)) for i in range(n_planes)]
+    kernel = make_vector_kernel()
+    matrix, dots = kernel.matrix, kernel.dots
+    planes = np.array(
+        [_hyperplane(dim, i) for i in range(n_planes)], dtype=np.float64
+    )
+    weights = np.left_shift(1, np.arange(n_planes, dtype=np.int64))
 
     @pandas_udf("bigint")
     def _sig(vec: pd.Series) -> pd.Series:
-        import numpy as np
-
-        planes = np.array(planes_list, dtype=np.float64)  # (P, dim)
-        rows = [
-            np.zeros(dim, dtype=np.float64) if x is None else x for x in vec
-        ]
-        v = np.asarray(rows, dtype=np.float64)  # (n, dim)
-        acc = np.zeros((v.shape[0], planes.shape[0]), dtype=np.float64)
-        for j in range(dim):
-            # acc += v_j * p_ij : one IEEE multiply + one add per (row,
-            # plane), applied j = 0..dim-1 — identical float order to the
-            # sequential fold
-            acc += v[:, j : j + 1] * planes[:, j]
-        weights = np.left_shift(
-            np.ones(planes.shape[0], dtype=np.int64),
-            np.arange(planes.shape[0], dtype=np.int64),
-        )
-        return pd.Series(((acc > 0).astype(np.int64) @ weights).astype(np.int64))
+        V, lens = matrix(vec)
+        bad = lens[(lens >= 0) & (lens != dim)]
+        if bad.size:
+            raise ValueError(
+                f"lsh_signatures: vector of length {bad[0]} in a "
+                f"signature of dim={dim}"
+            )
+        return pd.Series((dots(V, planes) > 0).astype(np.int64) @ weights)
 
     # asNondeterministic: joining on lsh_sig makes Catalyst infer an
     # IsNotNull(lsh_sig) filter and push it BELOW the projection, which
     # duplicates the ArrowEvalPython signature pass per join side
-    # (guide §4.4 — visible as 2x ArrowEvalPython per side in the r14
-    # before-plans); the marker pins one evaluation. The function is
+    # (guide §4.4); the marker pins one evaluation. The function is
     # pure — the marker only constrains the optimizer.
     return fan_out(df).withColumn(
         "lsh_sig", _sig.asNondeterministic()(F.col(vec_col))
@@ -307,14 +251,7 @@ def lsh_topk(
             "cos_sim"
         ),
     )
-    w = Window.partitionBy(probe_id_col).orderBy(
-        F.col("cos_sim").desc(), F.col(id_col).asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(probe_id_col, id_col, "cos_sim", "rank")
-    )
+    return topk_per_probe(scored, k, "cos_sim", probe_id_col, id_col)
 
 
 def embedding_near_dup_pairs(
@@ -385,7 +322,7 @@ def embedding_near_dup_pairs(
         )
     cand = embedding_candidate_pairs(sigs, n_planes, n_bands, id_col)
     if broadcast_vectors:
-        # broadcast-contract verify (r14): the vector table is already
+        # broadcast-contract verify: the vector table is already
         # asserted broadcast-sized, so score the pairs by id-indexed
         # gather against ONE collected matrix instead of two broadcast
         # joins + ~1 KB/pair of Arrow traffic (cosine_pairs_lookup —
@@ -597,24 +534,20 @@ def ivf_assign(
     centroid by cosine (ties -> lowest centroid id). Centroids are broadcast
     (tiny by construction); the argmax is a grouped MIN over a
     ``(-cos, cid)`` struct — struct ordering is lexicographic, so the
-    minimum is exactly (highest cosine, ties -> lowest cid) — NOT a
-    row_number window (ADVICE r12). Measured honestly (docs/SCALING.md
-    round 13): on this Spark the window variant did NOT shuffle
-    |corpus| x k rows — the WindowGroupLimit rule already pushed the
-    rn==1 cap map-side, so both plans exchange ~one row per vector.
-    The aggregate form still wins: it drops the per-partition SORT the
-    window needs (hash partials replace sort+rank), reads slightly
-    faster walls, and does not depend on a rank-pushdown optimizer rule
-    holding — min is associative by construction, on any engine.
+    minimum is exactly (highest cosine, ties -> lowest cid) — not a
+    row_number window. Both plans exchange ~one row per vector (Spark's
+    WindowGroupLimit rule pushes an rn==1 cap map-side), but the
+    aggregate drops the per-partition SORT the window needs (hash
+    partials replace sort+rank) and does not depend on a rank-pushdown
+    optimizer rule holding — min is associative by construction, on any
+    engine (docs/SCALING.md).
 
-    CONTRACT (ADVICE r13): corpus vectors must be well-formed — no NULL
-    vectors and no zero-norm vectors. Degenerate cosines order
-    differently between the min-struct and the old desc-nulls-last
-    window (NaN = 0/0 sorts first under ``__cos DESC`` but last after
-    negation; a NULL cosine struct wins a MIN but lost the window), so
-    such vectors could be assigned to a different centroid than the
-    pre-r13 form. Every registered corpus satisfies the contract (the
-    oracle hash-matches pin it); callers feeding user vectors should
+    CONTRACT: corpus vectors must be well-formed — no NULL vectors and
+    no zero-norm vectors. Degenerate cosines have no meaningful nearest
+    centroid: NaN = 0/0 sorts last after negation, and a NULL cosine
+    struct wins the MIN, so such a vector lands on an arbitrary-looking
+    centroid. Every registered corpus satisfies the contract (the oracle
+    hash-matches pin it); callers feeding user vectors should
     drop/normalize degenerate rows first."""
     from cses2humio_spark.sources.catalog import fan_out
 
@@ -657,20 +590,8 @@ def ivf_topk(
     Recall < 1 by design (like FAISS IVF with small nprobe)."""
     assign = ivf_assign(corpus, centroids, id_col, vec_col, cid_col)
     c = centroids.select(F.col(cid_col), F.col(vec_col).alias("__cvec"))
-    p = probes.select(F.col(probe_id_col), F.col(vec_col).alias("__pvec"))
-    probe_cent = p.join(F.broadcast(c)).select(
-        probe_id_col,
-        cid_col,
-        "__pvec",
-        cosine_similarity(F.col("__pvec"), F.col("__cvec")).alias("__cos"),
-    )
-    wp = Window.partitionBy(probe_id_col).orderBy(
-        F.col("__cos").desc(), F.col(cid_col).asc()
-    )
-    probe_lists = (
-        probe_cent.withColumn("__rn", F.row_number().over(wp))
-        .filter(F.col("__rn") <= nprobe)
-        .select(probe_id_col, cid_col, "__pvec")
+    probe_lists = _nearest_cells(
+        probes, c, nprobe, vec_col, probe_id_col, cid_col
     )
     cand = probe_lists.join(assign, on=cid_col).select(
         probe_id_col, id_col, "__pvec"
@@ -682,13 +603,29 @@ def ivf_topk(
             "cos_sim"
         ),
     )
-    wk = Window.partitionBy(probe_id_col).orderBy(
-        F.col("cos_sim").desc(), F.col(id_col).asc()
+    return topk_per_probe(scored, k, "cos_sim", probe_id_col, id_col)
+
+
+def _nearest_cells(
+    probes: DataFrame,
+    cvecs: DataFrame,
+    nprobe: int,
+    vec_col: str,
+    probe_id_col: str,
+    cid_col: str,
+) -> DataFrame:
+    """Each probe's ``nprobe`` nearest cells by cosine against the
+    broadcast ``cvecs`` (``cid_col``, ``__cvec``), ties to the lowest
+    cell id: ``(probe, cid, __pvec, rank)``."""
+    p = probes.select(F.col(probe_id_col), F.col(vec_col).alias("__pvec"))
+    scored = p.join(F.broadcast(cvecs)).select(
+        probe_id_col,
+        cid_col,
+        "__pvec",
+        cosine_similarity(F.col("__pvec"), F.col("__cvec")).alias("__cos"),
     )
-    return (
-        scored.withColumn("rank", F.row_number().over(wk))
-        .filter(F.col("rank") <= k)
-        .select(probe_id_col, id_col, "cos_sim", "rank")
+    return topk_per_probe(
+        scored, nprobe, "__cos", probe_id_col, cid_col, out=["__pvec"]
     )
 
 
@@ -730,24 +667,22 @@ def semdedup_within_cluster(
     dimension in float64 — the engine-wide left-to-right IEEE order —
     so the threshold compare is bit-identical cross-engine.
 
-    Execution shape (r14, measured): the pairwise stage is a grouped
-    ``applyInPandas`` over the centroid id — each cluster's vectors
-    cross the Arrow boundary ONCE and the |cluster|² cosines run
-    blockwise in numpy — instead of the previous cid-keyed self-join,
-    which shuffled every vector twice, evaluated the cosine as an
-    interpreted per-pair fold, and (with k distinct join keys) was
-    coalesced by AQE onto a near-single task (6.8 s single-threaded at
-    sf0.1; the grouped form runs the same 125k pairs in < 0.1 s of
-    vectorized math). The group-fits-a-worker premise is exactly the
-    paper's contract — k is chosen so clusters fit — and the
-    ``semdedup_kmeans_profile`` query measures that bound per cluster.
-    Decision parity with the join form is exact: NULL vectors never
-    drop and are never dropped (their cosine is NULL in the fold, and
-    they are excluded here); a NaN cosine (zero-norm vector) QUALIFIES
-    as a duplicate on either form (Spark compares NaN greater than any
-    number, so ``NaN >= τ`` is true — replicated with an explicit
-    isnan-or); mixed-length vectors fall back to the per-pair fold
-    semantics (NULL cosine) via a ragged-input guard."""
+    Execution shape: the pairwise stage is a grouped ``applyInPandas``
+    over the centroid id — each cluster's vectors cross the Arrow
+    boundary ONCE and the |cluster|² cosines run blockwise in the vector
+    kernel — not a cid-keyed self-join, which shuffles every vector
+    twice, evaluates the cosine as an interpreted per-pair fold, and
+    (with k distinct join keys) is coalesced by AQE onto a near-single
+    task (6.8 s single-threaded at sf0.1; the grouped form runs the same
+    125k pairs in < 0.1 s of vectorized math). The group-fits-a-worker
+    premise is exactly the paper's contract — k is chosen so clusters
+    fit — and the ``semdedup_kmeans_profile`` query measures that bound
+    per cluster. Decision parity with the join form is exact: NULL
+    vectors and pairs of different lengths have a NULL cosine, so they
+    never drop and are never dropped; a NaN cosine (zero-norm vector)
+    QUALIFIES as a duplicate on either form (Spark compares NaN greater
+    than any number, so ``NaN >= τ`` is true — replicated with an
+    explicit isnan-or)."""
     import numpy as np
     import pandas as pd
 
@@ -756,44 +691,24 @@ def semdedup_within_cluster(
     id_type = corpus.schema[id_col].dataType.simpleString()
     thr = float(threshold)
     vc, idc = vec_col, id_col
+    kernel = make_vector_kernel()
+    matrix, cos_block = kernel.matrix, kernel.cos_block
 
     def _dedup_cluster(pdf: pd.DataFrame) -> pd.DataFrame:
-        sub = pdf[pdf[vc].notna()]
+        sub = pdf[pdf[vc].notna()].sort_values(idc, kind="stable")
         empty = pd.DataFrame({idc: [], "dup_of": []})
         if len(sub) < 2:
             return empty
-        lens = sub[vc].map(len)
-        if lens.nunique() != 1:
-            # ragged vectors: a cross-length pair's fold cosine is NULL
-            # (zip_with pads with NULL), so only same-length pairs can
-            # qualify — evaluate each length class independently
-            return pd.concat(
-                [
-                    _dedup_cluster(sub[lens == ln])
-                    for ln in sorted(lens.unique())
-                ],
-                ignore_index=True,
-            ) if len(sub) else empty
-        sub = sub.sort_values(idc, kind="stable")
         ids = sub[idc].to_numpy()
-        V = np.asarray(sub[vc].tolist(), dtype=np.float64)
-        n, dim = V.shape
-        nrm = np.zeros(n, dtype=np.float64)
-        for j in range(dim):
-            nrm += V[:, j] * V[:, j]
-        nrm = np.sqrt(nrm)
+        V, lens = matrix(sub[vc])
+        n = len(ids)
         first = np.full(n, -1, dtype=np.int64)
-        chunk = max(1, min(1024, 8_000_000 // max(n, 1)))
+        chunk = max(1, min(1024, 8_000_000 // n))
         cols = np.arange(n)
         for c0 in range(0, n, chunk):
             c1 = min(c0 + chunk, n)
-            d = np.zeros((c1 - c0, n), dtype=np.float64)
-            for j in range(dim):
-                # one IEEE multiply + add per (pair, dim), j ascending —
-                # identical float order to the sequential fold
-                d += V[c0:c1, j : j + 1] * V[:, j][None, :]
-            cos = d / (nrm[c0:c1][:, None] * nrm[None, :])
-            qual = (cos >= thr) | np.isnan(cos)
+            cos, defined = cos_block((V[c0:c1], lens[c0:c1]), (V, lens))
+            qual = ((cos >= thr) | np.isnan(cos)) & defined
             qual &= np.arange(c0, c1)[:, None] < cols[None, :]
             hit = qual.any(axis=0)
             firstrow = np.argmax(qual, axis=0) + c0
@@ -867,14 +782,14 @@ def signed_random_projection(
 # -- product quantization (ADC approximate nearest neighbor) ---------------
 
 
-def _l2sq(a: Column, b: Column) -> Column:
-    """Squared L2 between two double arrays — zip in index order, left
-    fold (0.0 + e1 + e2 ... == the oracle's list_reduce, IEEE-exact)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
+def _subspaces(m: int) -> Column:
+    """One row per PQ subspace id 0..m-1 (an explode)."""
+    return F.explode(F.array(*[F.lit(s) for s in range(m)])).alias("sub_id")
+
+
+def _subspace_slice(vec: Column, sub_len: int) -> Column:
+    """Subspace ``sub_id``'s slice of ``vec``, in double."""
+    return as_double(F.slice(vec, F.col("sub_id") * sub_len + 1, sub_len))
 
 
 def pq_codebook(
@@ -893,25 +808,14 @@ def pq_codebook(
     construction."""
     if dim % m != 0:
         raise ValueError(f"dim {dim} not divisible by m={m} subspaces")
-    sub_len = dim // m
-    subs = F.explode(
-        F.array(*[F.lit(s) for s in range(m)])
-    ).alias("sub_id")
     return (
         src.filter(F.col(id_col) < k_codes)
         .select(F.col(id_col).alias("code"), vec_col)
-        .select("code", subs, F.col(vec_col))
+        .select("code", _subspaces(m), F.col(vec_col))
         .select(
             "sub_id",
             "code",
-            F.transform(
-                F.slice(
-                    F.col(vec_col),
-                    F.col("sub_id") * sub_len + 1,
-                    sub_len,
-                ),
-                lambda x: x.cast("double"),
-            ).alias("cvec"),
+            _subspace_slice(F.col(vec_col), dim // m).alias("cvec"),
         )
     )
 
@@ -926,7 +830,7 @@ def pq_codebook_kmeans(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """k-means-TRAINED PQ codebooks (the opt-in recall upgrade over the
-    deterministic id-prefix convention; VERDICT r5 #2): subspace j's
+    deterministic id-prefix convention): subspace j's
     k_codes centroids are Lloyd-refined over the corpus's j-th slices.
 
     All m subspaces train TOGETHER: each iteration is ONE scan of the
@@ -952,12 +856,7 @@ def pq_codebook_kmeans(
     sub_len = dim // m
     seeds = (
         src.filter(F.col(id_col) < k_codes)
-        .select(
-            F.col(id_col),
-            F.transform(F.col(vec_col), lambda x: x.cast("double")).alias(
-                "__v"
-            ),
-        )
+        .select(F.col(id_col), as_double(F.col(vec_col)).alias("__v"))
         .orderBy(id_col)
         .collect()
     )
@@ -973,20 +872,12 @@ def pq_codebook_kmeans(
         for s in range(m)
     ]
     if n_iter > 0:
-        subs = F.explode(F.array(*[F.lit(s) for s in range(m)])).alias(
-            "sub_id"
-        )
         sliced = (
             fan_out(src)
-            .select(subs, F.col(vec_col))
+            .select(_subspaces(m), F.col(vec_col))
             .select(
                 "sub_id",
-                F.transform(
-                    F.slice(
-                        F.col(vec_col), F.col("sub_id") * sub_len + 1, sub_len
-                    ),
-                    lambda x: x.cast("double"),
-                ).alias("__svec"),
+                _subspace_slice(F.col(vec_col), sub_len).alias("__svec"),
             )
         )
         for _ in range(n_iter):
@@ -1084,25 +975,20 @@ def pq_encode(
     whole corpus — at 100 TB, the index-build cost)."""
     from cses2humio_spark.sources.catalog import fan_out
 
-    sub_len = dim // m
-    subs = F.explode(F.array(*[F.lit(s) for s in range(m)])).alias("sub_id")
     sliced = fan_out(corpus).select(F.col(id_col), F.col(vec_col)).select(
         id_col,
-        subs,
+        _subspaces(m),
         F.col(vec_col),
     ).select(
         id_col,
         "sub_id",
-        F.transform(
-            F.slice(F.col(vec_col), F.col("sub_id") * sub_len + 1, sub_len),
-            lambda x: x.cast("double"),
-        ).alias("__svec"),
+        _subspace_slice(F.col(vec_col), dim // m).alias("__svec"),
     )
     scored = sliced.join(F.broadcast(codebook), on="sub_id").select(
         id_col,
         "sub_id",
         "code",
-        F.round(_l2sq(F.col("__svec"), F.col("cvec")), 8).alias("__d"),
+        F.round(sq_l2(F.col("__svec"), F.col("cvec")), 8).alias("__d"),
     )
     # min over the (distance, code) struct == ORDER BY d ASC, code ASC
     # LIMIT 1 — identical tie-break, but partial-aggregable
@@ -1128,23 +1014,18 @@ def adc_tables(
     """Per-probe ADC lookup tables: (probe_id, sub_id, code, __d) — the
     probe's squared-L2 to every codebook centroid in every subspace.
     P * m * k_codes rows, broadcast-sized by construction."""
-    sub_len = dim // m
-    subs = F.explode(F.array(*[F.lit(s) for s in range(m)])).alias("sub_id")
     p_sliced = probes.select(
-        F.col(probe_id_col), subs, F.col(vec_col)
+        F.col(probe_id_col), _subspaces(m), F.col(vec_col)
     ).select(
         probe_id_col,
         "sub_id",
-        F.transform(
-            F.slice(F.col(vec_col), F.col("sub_id") * sub_len + 1, sub_len),
-            lambda x: x.cast("double"),
-        ).alias("__pvec"),
+        _subspace_slice(F.col(vec_col), dim // m).alias("__pvec"),
     )
     return p_sliced.join(F.broadcast(codebook), on="sub_id").select(
         probe_id_col,
         "sub_id",
         "code",
-        F.round(_l2sq(F.col("__pvec"), F.col("cvec")), 8).alias("__d"),
+        F.round(sq_l2(F.col("__pvec"), F.col("cvec")), 8).alias("__d"),
     )
 
 
@@ -1161,24 +1042,38 @@ def adc_rank(
     cross-subspace addition order must not depend on partitioning),
     smallest-first top-k. The scan side ships m code rows per vector —
     never the embedding."""
+    return adc_topk(
+        codes.join(F.broadcast(tables), on=["sub_id", "code"]),
+        m, k, id_col, probe_id_col,
+    )
+
+
+def adc_topk(
+    looked_up: DataFrame,
+    m: int,
+    k: int,
+    id_col: str = "vec_id",
+    probe_id_col: str = "probe_id",
+) -> DataFrame:
+    """The ADC tail over ``looked_up`` (one ``__d`` row per probe,
+    vector and subspace): the per-(probe, vec) partial sum in exact
+    DECIMAL (the cross-subspace addition order must not depend on
+    partitioning), kept only where all ``m`` subspaces contributed,
+    smallest-first top-k; ``adist`` is rounded to 6 places after
+    ranking."""
     approx = (
-        codes.join(F.broadcast(tables), on=["sub_id", "code"])
-        .groupBy(probe_id_col, id_col)
+        looked_up.groupBy(probe_id_col, id_col)
         .agg(
             F.sum(F.col("__d").cast("decimal(28,8)"))
             .cast("double")
             .alias("adist"),
             F.count(F.lit(1)).alias("__m"),
         )
-        .filter(F.col("__m") == m)  # every subspace contributed
+        .filter(F.col("__m") == m)
     )
-    wk = Window.partitionBy(probe_id_col).orderBy(
-        F.col("adist").asc(), F.col(id_col).asc()
-    )
-    return (
-        approx.withColumn("rank", F.row_number().over(wk))
-        .filter(F.col("rank") <= k)
-        .select(probe_id_col, id_col, F.round("adist", 6).alias("adist"), "rank")
+    return topk_per_probe(
+        approx, k, "adist", probe_id_col, id_col, ascending=True,
+        out=[F.round("adist", 6).alias("adist")],
     )
 
 
@@ -1241,7 +1136,6 @@ def ivfpq_topk(
     gets its own (sub, code) table — still broadcast-sized
     (P * nprobe * m * k_codes rows). Distances sum in exact DECIMAL;
     smallest-first top-k."""
-    dvec = lambda c: F.transform(c, lambda x: x.cast("double"))  # noqa: E731
     assign = ivf_assign(corpus, centroids, id_col, vec_col, cid_col)
     cvecs = centroids.select(F.col(cid_col), F.col(vec_col).alias("__cvec"))
     resid = (
@@ -1250,10 +1144,7 @@ def ivfpq_topk(
         .select(
             id_col,
             cid_col,
-            F.zip_with(
-                dvec(F.col(vec_col)), dvec(F.col("__cvec")),
-                lambda a, b: a - b,
-            ).alias("__rvec"),
+            residual(F.col(vec_col), F.col("__cvec")).alias("__rvec"),
         )
     )
     cb = pq_codebook(resid, m, k_codes, dim, id_col, "__rvec")
@@ -1284,34 +1175,18 @@ def ivfpq_probe_tables(
     visited-cell) residual ADC tables — the probe's per-cell RESIDUAL
     slice scored against every codebook centroid.
     P * nprobe * m * k_codes rows — broadcast-sized."""
-    dvec = lambda c: F.transform(c, lambda x: x.cast("double"))  # noqa: E731
     cvecs = centroids.select(F.col(cid_col), F.col(vec_col).alias("__cvec"))
-    p = probes.select(F.col(probe_id_col), F.col(vec_col).alias("__pvec"))
-    probe_cent = p.join(F.broadcast(cvecs)).select(
-        probe_id_col,
-        cid_col,
-        "__pvec",
-        cosine_similarity(F.col("__pvec"), F.col("__cvec")).alias("__cos"),
-    )
-    wp = Window.partitionBy(probe_id_col).orderBy(
-        F.col("__cos").desc(), F.col(cid_col).asc()
-    )
-    probe_lists = (
-        probe_cent.withColumn("__rn", F.row_number().over(wp))
-        .filter(F.col("__rn") <= nprobe)
-        .select(probe_id_col, cid_col, "__pvec")
+    probe_lists = _nearest_cells(
+        probes, cvecs, nprobe, vec_col, probe_id_col, cid_col
     )
     sub_len = dim // m
-    subs = F.explode(F.array(*[F.lit(s) for s in range(m)])).alias("sub_id")
     probe_resid = probe_lists.join(F.broadcast(cvecs), on=cid_col).select(
         probe_id_col,
         cid_col,
-        F.zip_with(
-            dvec(F.col("__pvec")), dvec(F.col("__cvec")), lambda a, b: a - b
-        ).alias("__prvec"),
+        residual(F.col("__pvec"), F.col("__cvec")).alias("__prvec"),
     )
     tables = (
-        probe_resid.select(probe_id_col, cid_col, subs, "__prvec")
+        probe_resid.select(probe_id_col, cid_col, _subspaces(m), "__prvec")
         .select(
             probe_id_col,
             cid_col,
@@ -1326,7 +1201,7 @@ def ivfpq_probe_tables(
             cid_col,
             "sub_id",
             "code",
-            F.round(_l2sq(F.col("__pslice"), F.col("cvec")), 8).alias("__d"),
+            F.round(sq_l2(F.col("__pslice"), F.col("cvec")), 8).alias("__d"),
         )
     )
     return probe_lists.select(probe_id_col, cid_col), tables
@@ -1346,28 +1221,13 @@ def ivfpq_adc_rank(
     """IVF-PQ candidate scoring over pre-encoded residual codes: the
     candidate fetch is an equi-join of visited cells against the
     inverted-list assignment (touching ~nprobe/n_cells of the corpus),
-    then the standard ADC join + exact-DECIMAL sum + top-k."""
-    cand = probe_cells.join(assign, on=cid_col)
-    approx = (
-        cand.join(codes, on=id_col)
+    then the standard ADC join + ``adc_topk`` tail."""
+    looked_up = (
+        probe_cells.join(assign, on=cid_col)
+        .join(codes, on=id_col)
         .join(
             F.broadcast(tables),
             on=[probe_id_col, cid_col, "sub_id", "code"],
         )
-        .groupBy(probe_id_col, id_col)
-        .agg(
-            F.sum(F.col("__d").cast("decimal(28,8)"))
-            .cast("double")
-            .alias("adist"),
-            F.count(F.lit(1)).alias("__m"),
-        )
-        .filter(F.col("__m") == m)
     )
-    wk = Window.partitionBy(probe_id_col).orderBy(
-        F.col("adist").asc(), F.col(id_col).asc()
-    )
-    return (
-        approx.withColumn("rank", F.row_number().over(wk))
-        .filter(F.col("rank") <= k)
-        .select(probe_id_col, id_col, F.round("adist", 6).alias("adist"), "rank")
-    )
+    return adc_topk(looked_up, m, k, id_col, probe_id_col)

@@ -2173,9 +2173,11 @@ def sq8_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_approx.py). Oracle replays quantization + fold exactly
     (SQL ROUND half-away, left-to-right double fold)."""
     from cses2humio_spark.functions.vectors import (
+        as_double,
         cosine_similarity,
         quantize_int8,
     )
+    from cses2humio_spark.operators.similarity import topk_per_probe
     from cses2humio_spark.sources.catalog import fan_out
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -2183,9 +2185,7 @@ def sq8_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     qtab = emb.select("vec_id", qv.alias("qv"))
     p = emb.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("probe_id"),
-        F.transform(F.col("embedding"), lambda x: x.cast("double")).alias(
-            "__pvec"
-        ),
+        as_double(F.col("embedding")).alias("__pvec"),
     )
     scored = fan_out(qtab).join(F.broadcast(p)).select(
         "probe_id",
@@ -2194,14 +2194,7 @@ def sq8_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             cosine_similarity(F.col("qv"), F.col("__pvec")), 6
         ).alias("cos_sim"),
     )
-    w = Window.partitionBy("probe_id").orderBy(
-        F.col("cos_sim").desc(), F.col("vec_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 5)
-        .select("probe_id", "vec_id", "cos_sim", "rank")
-    )
+    return topk_per_probe(scored, 5, "cos_sim")
 
 
 _STANDING_INDEXES: dict[tuple, object] = {}

@@ -166,45 +166,48 @@ def test_embedding_neardup_recall(spark):
 
 
 def test_lsh_signature_paths_identical(spark):
-    """The vectorized (Arrow/numpy) LSH signature path must agree
-    bit-for-bit with the pure-JVM fold on every row — both accumulate the
-    dot dimension-by-dimension in float64, so this is exact equality, not
+    """The vectorized (Arrow/numpy) LSH signature must agree bit-for-bit
+    with a reference built inline from the JVM ``dot`` fold over the
+    ``_hyperplane`` literals, on every row — both accumulate the dot
+    dimension-by-dimension in float64, so this is exact equality, not
     tolerance. Guards the oracle contract: DuckDB's list_reduce fold is
     the same order."""
     from pyspark.sql import functions as F
 
+    from cses2humio_spark.functions.vectors import dot
     from cses2humio_spark.operators.similarity import (
+        _hyperplane,
         lsh_signatures,
-        lsh_signatures_fold,
     )
     from cses2humio_spark.sources.catalog import load_table
 
     emb = load_table(spark, "/root/testdata/sf0.01", "embeddings")
     for planes in (8, 60):
+        ref = F.lit(0).cast("bigint")
+        for i in range(planes):
+            plane = F.array(*[F.lit(v) for v in _hyperplane(64, i)])
+            bit = dot(F.col("embedding"), plane) > 0
+            ref = ref + F.when(bit, F.lit(1 << i)).otherwise(F.lit(0))
         j = (
             lsh_signatures(emb, 64, planes)
             .select("vec_id", F.col("lsh_sig").alias("s1"))
-            .join(
-                lsh_signatures_fold(emb, 64, planes).select(
-                    "vec_id", F.col("lsh_sig").alias("s2")
-                ),
-                "vec_id",
-            )
+            .join(emb.select("vec_id", ref.alias("s2")), "vec_id")
         )
+        assert j.count() == emb.count()
         assert j.filter(F.col("s1") != F.col("s2")).count() == 0, planes
 
 
 def test_cosine_topk_paths_identical(spark):
     """The Arrow brute-force top-k (per-batch partial top-k with the
-    1e-6 rounding margin) must return EXACTLY the fold path's rows —
-    same ids, same rounded scores, same ranks — since both feed the same
-    rounded-then-id-tiebroken ranking."""
+    1e-6 rounding margin) must return EXACTLY the rows of a reference
+    built inline from the JVM ``cosine_similarity`` fold — a cross join
+    plus the rank window: same ids, same rounded scores, same ranks,
+    since both feed the same rounded-then-id-tiebroken ranking."""
     from pyspark.sql import functions as F
+    from pyspark.sql.window import Window
 
-    from cses2humio_spark.operators.similarity import (
-        cosine_topk_bruteforce,
-        cosine_topk_bruteforce_fold,
-    )
+    from cses2humio_spark.functions.vectors import cosine_similarity
+    from cses2humio_spark.operators.similarity import cosine_topk_bruteforce
     from cses2humio_spark.sources.catalog import load_table
 
     emb = load_table(spark, "/root/testdata/sf0.01", "embeddings")
@@ -212,9 +215,24 @@ def test_cosine_topk_paths_identical(spark):
         F.col("vec_id").alias("probe_id"), "embedding"
     )
     a = sorted(map(tuple, cosine_topk_bruteforce(emb, probes, k=7).collect()))
-    b = sorted(
-        map(tuple, cosine_topk_bruteforce_fold(emb, probes, k=7).collect())
+    pairs = emb.crossJoin(
+        probes.select("probe_id", F.col("embedding").alias("__pvec"))
+    ).select(
+        "probe_id",
+        "vec_id",
+        F.round(
+            cosine_similarity(F.col("embedding"), F.col("__pvec")), 6
+        ).alias("cos_sim"),
     )
+    w = Window.partitionBy("probe_id").orderBy(
+        F.col("cos_sim").desc(), F.col("vec_id").asc()
+    )
+    ref = (
+        pairs.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= 7)
+        .select("probe_id", "vec_id", "cos_sim", "rank")
+    )
+    b = sorted(map(tuple, ref.collect()))
     assert a == b and len(a) == 25 * 7
 
 
@@ -1075,3 +1093,236 @@ def test_bucket_cap_keeps_smallest_ids_and_refuses_non_positive(spark):
     for bad in (0, -1):
         with pytest.raises(ValueError, match="max_bucket_size must be >= 1"):
             embedding_candidate_pairs(sigs, 4, 2, max_bucket_size=bad)
+
+
+def test_vector_length_rule_null_cosine_and_dim_checked_signatures(spark):
+    """One length rule for every vector body: a pair of vectors of
+    different lengths has a NULL cosine — in ``cosine_pairs`` (also when
+    every row of a batch is mismatched), in ``cosine_pairs_lookup`` and
+    in the fold — and ``cosine_topk_bruteforce`` leaves such a corpus
+    row out, as it does a NULL vector, even when its prefix equals the
+    probe. ``lsh_signatures`` signs a NULL vector as 0 and refuses a
+    vector whose length is not ``dim``."""
+    import pytest
+
+    from cses2humio_spark.functions.vectors import (
+        cosine_pairs,
+        cosine_pairs_lookup,
+        cosine_similarity,
+    )
+    from cses2humio_spark.operators.similarity import (
+        cosine_topk_bruteforce,
+        lsh_signatures,
+    )
+
+    schema = "id long, a array<double>, b array<double>"
+    mixed = spark.createDataFrame(
+        [
+            (1, [1.0, 2.0], [2.0, 1.0]),
+            (2, [1.0, 2.0], [1.0, 2.0, 3.0]),
+            (3, [1.0, 2.0, 0.0], [1.0, 2.0]),
+        ],
+        schema,
+    ).coalesce(1)
+    only_ragged = spark.createDataFrame(
+        [(4, [1.0] * 16, [1.0] * 8), (5, [2.0] * 16, [1.0] * 8)], schema
+    ).coalesce(1)
+    got = {
+        r.id: (r.c, r.fold)
+        for r in mixed.unionByName(only_ragged)
+        .select(
+            "id",
+            cosine_pairs(F.col("a"), F.col("b")).alias("c"),
+            cosine_similarity(F.col("a"), F.col("b")).alias("fold"),
+        )
+        .collect()
+    }
+    assert got[1][0] == got[1][1] == pytest.approx(0.8)
+    assert all(got[i] == (None, None) for i in (2, 3, 4, 5)), got
+
+    vecs = spark.createDataFrame(
+        [(1, [1.0, 2.0]), (2, [1.0, 2.0, 3.0]), (3, [2.0, 4.0])],
+        "vid long, v array<double>",
+    )
+    pairs = spark.createDataFrame([(1, 2), (1, 3)], "id_a long, id_b long")
+    looked = {
+        (r.id_a, r.id_b): r["__cos"]
+        for r in cosine_pairs_lookup(pairs, vecs, "vid", "v").collect()
+    }
+    assert looked[(1, 2)] is None and looked[(1, 3)] == pytest.approx(1.0)
+    # an empty vector table resolves every id to the NULL row
+    assert [
+        r["__cos"]
+        for r in cosine_pairs_lookup(pairs, vecs.limit(0), "vid", "v").collect()
+    ] == [None, None]
+
+    corpus = spark.createDataFrame(
+        [(1, [1.0, 0.0]), (2, [1.0, 0.0, 0.0]), (3, [0.0, 1.0]), (4, None)],
+        "vec_id long, embedding array<double>",
+    )
+    probes = spark.createDataFrame(
+        [(0, [1.0, 0.0])], "probe_id long, embedding array<double>"
+    )
+    top = cosine_topk_bruteforce(corpus, probes, k=3).collect()
+    assert [(r.vec_id, r.cos_sim, r.rank) for r in top] == [
+        (1, 1.0, 1),
+        (3, 0.0, 2),
+    ]
+
+    signed = {
+        r.vec_id: r.lsh_sig
+        for r in lsh_signatures(
+            corpus.filter("vec_id != 2"), 2, 8
+        ).collect()
+    }
+    assert signed[4] == 0 and len(signed) == 3
+    with pytest.raises(Exception, match="vector of length 3 in a signature of dim=2"):
+        lsh_signatures(corpus, 2, 8).collect()
+
+
+def test_cosine_topk_input_checks_and_empty_probe_schema(spark):
+    """``k < 1`` is refused before any Spark job runs; an empty probe set
+    returns a typed empty frame with the column names and types of a
+    non-empty call."""
+    import pytest
+
+    from cses2humio_spark.operators.similarity import cosine_topk_bruteforce
+
+    emb = spark.createDataFrame(
+        [(i, [float(i), 1.0]) for i in range(6)],
+        "vec_id long, embedding array<double>",
+    )
+    probes = emb.selectExpr("CAST(vec_id AS INT) AS probe_id", "embedding")
+    sc = spark.sparkContext
+    sc.setJobGroup("topk_k0", "k < 1 must not launch a job")
+    try:
+        with pytest.raises(ValueError, match="k must be >= 1"):
+            cosine_topk_bruteforce(emb, probes, k=0)
+        assert list(sc.statusTracker().getJobIdsForGroup("topk_k0")) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+    def shape(df):
+        return [(f.name, f.dataType) for f in df.schema.fields]
+
+    full = cosine_topk_bruteforce(emb, probes, k=2)
+    empty = cosine_topk_bruteforce(emb, probes.filter("probe_id < 0"), k=2)
+    assert shape(empty) == shape(full)
+    assert [f.name for f in full.schema.fields] == [
+        "probe_id", "vec_id", "cos_sim", "rank"
+    ]
+    assert empty.count() == 0 and full.count() == 12
+
+
+def test_vector_worker_closures_ship_by_value(spark, monkeypatch, tmp_path):
+    """Python workers cannot import this package when the application
+    starts from another directory, so every function the vector
+    operators hand to mapInPandas, applyInPandas or pandas_udf must
+    pickle BY VALUE — the vector kernel's bodies included. Record each
+    one, pickle it the way PySpark ships it, and load it in a fresh
+    interpreter where the package is unimportable. The kernel factory
+    itself (a module-level def) is the negative control: cloudpickle
+    ships it by reference, so a closure that called it would fail the
+    load exactly as the control does."""
+    import pickle
+    import subprocess
+    import sys
+
+    import pyspark.sql.functions as PF
+    from pyspark.broadcast import Broadcast
+    from pyspark.serializers import CloudPickleSerializer
+    from pyspark.sql.classic.dataframe import DataFrame
+    from pyspark.sql.group import GroupedData
+
+    from cses2humio_spark.functions import vectors
+    from cses2humio_spark.operators import similarity as sim
+    from cses2humio_spark.operators.dedup_index import EmbeddingLshIndex
+
+    captured = []
+    real_map = DataFrame.mapInPandas
+    real_apply = GroupedData.applyInPandas
+    real_udf = PF.pandas_udf
+
+    def rec_map(self, func, *args, **kwargs):
+        captured.append(func)
+        return real_map(self, func, *args, **kwargs)
+
+    def rec_apply(self, func, *args, **kwargs):
+        captured.append(func)
+        return real_apply(self, func, *args, **kwargs)
+
+    def rec_udf(f=None, returnType=None, functionType=None):
+        if callable(f):
+            captured.append(f)
+            return real_udf(f, returnType, functionType)
+
+        def deco(fn):
+            captured.append(fn)
+            return real_udf(fn, f, functionType)
+
+        return deco
+
+    monkeypatch.setattr(DataFrame, "mapInPandas", rec_map)
+    monkeypatch.setattr(GroupedData, "applyInPandas", rec_apply)
+    monkeypatch.setattr(PF, "pandas_udf", rec_udf)
+    emb = spark.createDataFrame(
+        [(i, [float(i), 1.0, 0.5]) for i in range(6)],
+        "vec_id long, embedding array<double>",
+    )
+    probes = emb.filter("vec_id < 2").withColumnRenamed("vec_id", "probe_id")
+    cents = emb.filter("vec_id < 2").withColumnRenamed("vec_id", "cid")
+    pairs = spark.createDataFrame([(0, 1)], "id_a long, id_b long")
+    lsh_index = EmbeddingLshIndex(str(tmp_path / "e"), dim=3)
+    operators = {
+        "cosine_topk_bruteforce": lambda: sim.cosine_topk_bruteforce(
+            emb, probes, k=2
+        ),
+        "lsh_signatures": lambda: sim.lsh_signatures(emb, 3, 4),
+        "semdedup_within_cluster": lambda: sim.semdedup_within_cluster(
+            emb, cents, 0.9
+        ),
+        "EmbeddingLshIndex eval gate": lambda: lsh_index._contaminated_ids(
+            emb, eval_vectors=emb
+        ),
+        "cosine_pairs": lambda: emb.select(
+            vectors.cosine_pairs(F.col("embedding"), F.col("embedding"))
+        ),
+        "cosine_pairs_lookup": lambda: vectors.cosine_pairs_lookup(
+            pairs, emb, "vec_id", "embedding"
+        ),
+    }
+    shipped = []
+    for name, build in operators.items():
+        before = len(captured)
+        build()
+        # GroupedData.applyInPandas re-enters itself: count distinct bodies
+        new = list({id(f): f for f in captured[before:]}.values())
+        assert len(new) == 1, name
+        shipped.append((name, new[0]))
+
+    # a broadcast handle pickles as a registry id the fresh interpreter
+    # cannot resolve; it carries no code, so stand a marker in for it
+    monkeypatch.setattr(Broadcast, "__reduce__", lambda self: (str, ("bc",)))
+    ser = CloudPickleSerializer()
+    blobs = [(name, ser.dumps(f)) for name, f in shipped]
+    blobs.append(("control", ser.dumps(vectors.make_vector_kernel)))
+    (tmp_path / "closures.pkl").write_bytes(pickle.dumps(blobs))
+    loader = (
+        "import pickle, sys\n"
+        "sys.modules['cses2humio_spark'] = None\n"
+        "for name, blob in pickle.load(open('closures.pkl', 'rb')):\n"
+        "    try:\n"
+        "        pickle.loads(blob)\n"
+        "        print('OK', name)\n"
+        "    except Exception as e:\n"
+        "        print('FAIL', name, type(e).__name__, e)\n"
+    )
+    res = subprocess.run(
+        [sys.executable, "-c", loader], cwd=tmp_path,
+        capture_output=True, text=True, timeout=120,
+    )
+    assert res.returncode == 0, res.stderr
+    lines = res.stdout.splitlines()
+    assert lines[-1].startswith("FAIL control ModuleNotFoundError"), lines[-1]
+    failed = [ln for ln in lines[:-1] if not ln.startswith("OK ")]
+    assert not failed and len(lines) == len(blobs), failed

@@ -724,6 +724,24 @@ def test_embedding_admit_uncovered_partner_raises(spark, vec_corpus, tmp_path):
         idx.admit_batch(batch, stale, threshold=0.9).collect()
 
 
+def test_embedding_admit_wrong_length_vector_raises(
+    spark, vec_corpus, tmp_path
+):
+    """A batch vector whose length is not the index's dim cannot be
+    signed: admission fails with a ValueError naming dim and the
+    offending length — a longer vector is not signed on its prefix
+    (this one's 8-prefix points where corpus vector 1 does), and a
+    shorter one does not surface as a numpy broadcast error."""
+    idx = EmbeddingLshIndex(str(tmp_path / "e"), dim=8, n_planes=4, n_bands=5)
+    idx.build(vec_corpus)
+    for n in (16, 3):
+        batch = _vdf(spark, [(10, _vec(1, dim=n))])
+        with pytest.raises(
+            Exception, match=f"ValueError: .*length {n} in a signature of dim=8"
+        ):
+            idx.admit_batch(batch, vec_corpus, threshold=0.9).collect()
+
+
 def test_embedding_admit_and_ingest_first_seen_replay_and_gc(
     spark, vec_corpus, tmp_path
 ):
