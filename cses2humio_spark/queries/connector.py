@@ -25,12 +25,12 @@ from cses2humio_spark.sources.catalog import load_table
 from cses2humio_spark.streaming.pipeline import enrich_events, parse_events
 
 #: Per-stage wall seconds of the LAST run of each composed pipeline
-#: query, keyed by query name (VERDICT r11 #5): the pipelines' bench
-#: standings are full end-to-end walls dominated by streaming fixed
-#: costs (feed drain, checkpoint WAL), so a multiple-x regression in one
-#: SCALE-BEARING stage (admission, index ingest, search) could hide
-#: inside the 2x end-to-end gate. bench.py copies this into its JSON as
-#: ``pipeline_stages`` — informational, the gate stays the total wall.
+#: query, keyed by query name. The pipelines' bench standings are full
+#: end-to-end walls dominated by streaming fixed costs (feed drain,
+#: checkpoint WAL), so a multiple-x regression in one SCALE-BEARING stage
+#: (admission, index ingest, search) could hide inside the 2x end-to-end
+#: gate. bench.py copies this into its JSON as ``pipeline_stages`` —
+#: informational, the gate stays the total wall.
 PIPELINE_STAGE_WALLS: dict[str, dict[str, float]] = {}
 
 
@@ -119,21 +119,20 @@ def connector_enrich_envelope_variant(spark: SparkSession, sf_dir: str) -> DataF
 
     parsed = parse_events_variant(_synth_lines(spark, sf_dir))
     ev = F.col("event_variant")
-    event_map = F.map_filter(
-        F.variant_get(ev, "$", "map<string,string>"),
-        lambda k, _: k != "AuditKeyValues",
-    )
-    akv = F.variant_get(
-        ev, "$.AuditKeyValues", "array<struct<Key string, ValueString string>>"
-    )
-    flat = _flatten_event(event_map, akv)
-    return parsed.select(
-        F.col("offset"),
-        F.col("timestamp"),
-        F.col("eventType"),
-        flat["user_id"].alias("user_id_str"),
-        flat["vt"].alias("vt"),
-        flat["k_lifted"].alias("k_lifted"),
+    keys = [F.col("offset"), F.col("timestamp"), F.col("eventType")]
+    # the fold reads named columns, so the variant casts are selected first
+    flat = parsed.select(
+        *keys,
+        F.variant_get(ev, "$", "map<string,string>").alias("__event_map"),
+        F.variant_get(
+            ev, "$.AuditKeyValues", "array<struct<Key string, ValueString string>>"
+        ).alias("__akv"),
+    ).select(*keys, _flatten_event("__event_map", "__akv").alias("event"))
+    return flat.select(
+        *keys,
+        F.col("event")["user_id"].alias("user_id_str"),
+        F.col("event")["vt"].alias("vt"),
+        F.col("event")["k_lifted"].alias("k_lifted"),
     )
 
 
@@ -316,11 +315,11 @@ def rollup_materialized_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).alias("value")
     tmpdir = tempfile.mkdtemp(prefix="sgraft_rollup_")
     try:
-        # Synthesize the drop files with a DISTRIBUTED write (VERDICT r9
-        # #5 — this used to .collect() the filtered events table onto
-        # the driver, a pattern that scales with the fact table): each
-        # row is assigned a deterministic chunk (event_id % 3), written
-        # by Spark as one text file per chunk, then MOVED (a metadata
+        # Synthesize the drop files with a DISTRIBUTED write, so no row
+        # of the events table is collected onto the driver (that would
+        # scale driver memory with the fact table): each row is
+        # assigned a deterministic chunk (event_id % 3), written by
+        # Spark as one text file per chunk, then MOVED (a metadata
         # op — no row ever crosses the driver) into the stream source
         # dir with strictly increasing mtimes, because the file stream
         # source orders micro-batches by modification time, not name.
@@ -521,17 +520,17 @@ def cdc_upsert_latest_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def falcon_feed_http_demo(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """R1 end to end through the NATIVE chunked-HTTP source (r10,
-    VERDICT r9 #3): a two-partition fake feed (sources/fake_feed.py —
-    offset query-param replay, keep-alive blanks, token auth, held-open
-    chunked response; the exact transport of app.py:93-102) serves
-    Falcon-shaped events synthesized from events.parquet, the
-    ``falcon_feed`` Python Data Source (sources/http_feed.py) streams
-    them with per-partition offsets, and the result is aggregated per
-    partition — counts, offset range, and a payload-integrity sum the
-    oracle recomputes from the base columns. Proves the full path:
-    partition-from-URL, authoritative metadata.offset positions,
-    auth header, keep-alive skip, availableNow drain."""
+    """R1 end to end through the NATIVE chunked-HTTP source: a
+    two-partition fake feed (sources/fake_feed.py — offset query-param
+    replay, keep-alive blanks, token auth, held-open chunked response;
+    the exact transport of app.py:93-102) serves Falcon-shaped events
+    synthesized from events.parquet, the ``falcon_feed`` Python Data
+    Source (sources/http_feed.py) streams them with per-partition
+    offsets, and the result is aggregated per partition — counts,
+    offset range, and a payload-integrity sum the oracle recomputes from
+    the base columns. Proves the full path: partition-from-URL,
+    authoritative metadata.offset positions, auth header, keep-alive
+    skip, availableNow drain."""
     import shutil
 
     from cses2humio_spark.sources import http_feed
@@ -610,16 +609,16 @@ def falcon_feed_http_demo(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def falcon_feed_pipeline_timechart(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The COMPLETE reference pipeline through the native source, in one
-    streaming query (r10 parity artifact): chunked-HTTP feed
-    (``falcon_feed`` over a two-partition fake) -> R3 decode -> R4
-    permissive parse -> R5 envelope (``parse_events``/``enrich_events``,
-    the same stages the production pipeline runs) -> memory sink, then
-    the Humio-analog hourly timechart over the enveloped rows. A user of
-    the reference points it at a feed URL and charts events-per-hour in
-    Humio; this query is that exact path on the engine, oracle-checked
-    against plain SQL over the base columns. Hour buckets are integer
-    epoch-ms arithmetic (floor(ts_ms / 3600000)) so no session timezone
-    can touch the result."""
+    streaming query: chunked-HTTP feed (``falcon_feed`` over a
+    two-partition fake) -> R3 decode -> R4 permissive parse -> R5
+    envelope (``parse_events``/``enrich_events``, the same stages the
+    production pipeline runs) -> memory sink, then the Humio-analog
+    hourly timechart over the enveloped rows. A user of the reference
+    points it at a feed URL and charts events-per-hour in Humio; this
+    query is that exact path on the engine, oracle-checked against plain
+    SQL over the base columns. Hour buckets are integer epoch-ms
+    arithmetic (floor(ts_ms / 3600000)) so no session timezone can touch
+    the result."""
     import shutil
     import uuid
 

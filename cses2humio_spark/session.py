@@ -27,6 +27,14 @@ but every conf below is chosen for the 1000-executor / 100 TB posture:
   log write; ``FileSystem.rename`` is one ``rename(2)``, and the manager
   still checks for an existing batch file first, so a log entry is never
   overwritten. Cluster sessions keep FileContext's atomic rename on HDFS.
+- PySpark's DataFrame debugging is off, local and cluster alike. With it
+  on, every ``pyspark.sql.functions`` call and Column method makes extra
+  driver→JVM round trips (active-session lookup, a reflective lookup of
+  ``PySparkCurrentOrigin``, a conf read, origin set and clear) plus a
+  Python stack walk, only to put a Python call site into error text —
+  and for HQL and connector plans that call site is an engine frame,
+  not the user's query. Errors keep their error class and SQL state.
+  PySpark reads the conf once per process, at the first Column call.
 """
 
 from __future__ import annotations
@@ -64,6 +72,7 @@ def session_conf(local: bool = True) -> dict[str, str]:
         "spark.sql.session.timeZone": "UTC",
         "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
         "spark.ui.enabled": "false",
+        "spark.python.sql.dataFrameDebugging.enabled": "false",
     }
     if local:
         conf["spark.python.daemon.module"] = "spark_graft_daemon"
@@ -93,9 +102,9 @@ def evict_on_gc(result_df, *cached_dfs):
     Query functions return lazy DataFrames, so a helper ``.persist()``
     that the plan still references cannot be unpersisted inside the
     function — but leaving it cached for the session is a slow leak in a
-    long-lived engine process (VERDICT r7 "What's wrong" #2). This
-    registers a ``weakref.finalize`` on the result: once the caller drops
-    the result (after collecting it), the next GC evicts the helper
+    long-lived engine process: storage grows with every query served.
+    This registers a ``weakref.finalize`` on the result: once the caller
+    drops the result (after collecting it), the next GC evicts the helper
     caches. Best-effort by design — eviction after session stop, or at
     interpreter exit, is silently skipped.
 
@@ -105,9 +114,9 @@ def evict_on_gc(result_df, *cached_dfs):
     reachable from the live finalizer registry and can never be
     collected. The admission loop legitimately ties a persisted frame's
     cache to ITSELF (``evict_on_gc(decisions, decisions)``), which under
-    a Python-object capture would silently pin the frame forever
-    (VERDICT r8 "What's wrong" #1); holding ``df._jdf`` instead keeps
-    the self-referencing case collectable. Pinned by
+    a Python-object capture would silently pin the frame forever;
+    holding ``df._jdf`` instead keeps the self-referencing case
+    collectable. Pinned by
     ``tests/test_dedup_index.py::test_evict_on_gc_self_reference``.
     """
     import weakref

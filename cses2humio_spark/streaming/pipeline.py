@@ -41,9 +41,6 @@ ENVELOPE_SCHEMA = (
     "_corrupt_record string"
 )
 
-def _empty_map() -> Column:
-    return F.from_json(F.lit("{}"), "map<string,string>")
-
 
 def parse_events(df: DataFrame, raw_col: str = "value") -> DataFrame:
     """R4: permissive JSON parse; malformed lines are dropped (reference
@@ -77,29 +74,31 @@ def parse_events(df: DataFrame, raw_col: str = "value") -> DataFrame:
     )
 
 
-def _flatten_event(event_map: Column, akv: Column) -> Column:
+def _flatten_event(event_map: str, akv: str) -> Column:
     """R6+R7: lift AuditKeyValues [{Key,ValueString}] into event.*
     (last-wins, stringly — app.py:123-127) and drop the array itself.
+    ``event_map`` names a ``map<string,string>`` column and ``akv`` an
+    ``array<struct<Key,ValueString>>`` column; either may be null.
 
     Last-wins is implemented as an explicit left fold (remove key, then add
     it back) so the semantics do NOT depend on the session's
     ``spark.sql.mapKeyDedupPolicy`` — the accumulator never holds a
     duplicate key, under any conf. Null-keyed entries (no ``Key`` field)
-    are dropped, as a JSON object cannot round-trip them either."""
-    base = F.map_filter(
-        F.coalesce(event_map, _empty_map()), lambda k, _: k != "AuditKeyValues"
-    )
-    entries = F.filter(
-        F.coalesce(akv, F.array().cast("array<struct<Key string, ValueString string>>")),
-        lambda x: x["Key"].isNotNull(),
-    )
-    return F.aggregate(
-        entries,
-        base,
-        lambda acc, e: F.map_concat(
-            F.map_filter(acc, lambda k, _: k != e["Key"]),
-            F.create_map(e["Key"], e["ValueString"]),
-        ),
+    are dropped, as a JSON object cannot round-trip them either.
+
+    The fold is ONE SQL expression: the JVM parses it in one call, where
+    each Python-lambda HOF costs a chain of py4j calls to create its
+    lambda variables — most of a connector drain's plan build."""
+    return F.expr(
+        f"""aggregate(
+          filter(
+            coalesce(`{akv}`, cast(array() AS array<struct<Key: string, ValueString: string>>)),
+            e -> e.Key IS NOT NULL),
+          map_filter(
+            coalesce(`{event_map}`, cast(map() AS map<string, string>)),
+            (k, v) -> k != 'AuditKeyValues'),
+          (acc, e) -> map_concat(
+            map_filter(acc, (k, v) -> k != e.Key), map(e.Key, e.ValueString)))"""
     )
 
 
@@ -113,7 +112,7 @@ def enrich_events(
     {timestamp, rawstring, attributes} (app.py:117-134). ``with_metadata``
     merges @host/@stream (app.py:129-130, 364-368). Pure map-side — no
     shuffle at any scale."""
-    event = _flatten_event(F.col("__event_map"), F.col("__akv"))
+    event = _flatten_event("__event_map", "__akv")
     attr_fields = [
         F.col("metadata").alias("metadata"),
         event.alias("event"),

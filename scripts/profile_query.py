@@ -1,7 +1,14 @@
 """Profile one query with the Spark event log: run N passes, then parse
 the event log for per-job wall, task count, task time, GC time,
 deserialize time and shuffle bytes. The event log is written to a
-temporary directory, which is removed once parsed. Usage:
+temporary directory, which is removed once parsed.
+
+Each pass is split into its build (the query function returning its
+DataFrame: plan construction on the driver, plus any action a
+side-effecting query runs while it builds) and its run (``collect``);
+the build's driver→JVM py4j commands are counted, so a plan that costs
+hundreds of round trips to construct shows up before any job runs.
+Usage:
 
     SPARK_GRAFT_CPUS=32 python scripts/profile_query.py <query> [n]
 """
@@ -16,6 +23,22 @@ import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+
+def _count_py4j_commands() -> list[int]:
+    """Count every command the driver sends to the JVM from now on;
+    returns the one-element counter."""
+    import py4j.clientserver as cs
+
+    sent = [0]
+    real = cs.ClientServerConnection.send_command
+
+    def counting(self, command):
+        sent[0] += 1
+        return real(self, command)
+
+    cs.ClientServerConnection.send_command = counting
+    return sent
 
 
 def main() -> None:
@@ -45,6 +68,7 @@ def main() -> None:
         .getOrCreate()
     )
     spark.range(1).collect()
+    sent = _count_py4j_commands()
     fn = QUERIES[name]
     fn(spark, "/root/testdata/sf0.001").collect()
     spark.catalog.clearCache()
@@ -52,9 +76,21 @@ def main() -> None:
     marks = []
     for i in range(n):
         spark.sparkContext.setJobDescription(f"PASS{i}:{name}")
+        calls0 = sent[0]
         t0 = time.perf_counter()
-        fn(spark, sf_dir).collect()
-        marks.append(round(time.perf_counter() - t0, 3))
+        df = fn(spark, sf_dir)
+        t1 = time.perf_counter()
+        build_calls = sent[0] - calls0
+        df.collect()
+        t2 = time.perf_counter()
+        del df
+        marks.append(
+            {
+                "build_s": round(t1 - t0, 3),
+                "run_s": round(t2 - t1, 3),
+                "build_py4j_calls": build_calls,
+            }
+        )
         spark.sparkContext.setJobDescription(None)
         spark.catalog.clearCache()
         spark.sparkContext._jvm.System.gc()

@@ -215,3 +215,102 @@ def test_variant_parse_drops_malformed(spark):
     rows = out.collect()
     assert len(rows) == 1
     assert rows[0].offset == 101
+
+
+_META = '"metadata":{"offset":1,"eventCreationTime":1723500000000,"eventType":"T"}'
+
+
+def _line(event: str) -> str:
+    return "{" + _META + ',"event":' + event + "}"
+
+
+#: (case, NDJSON line, flattened ``attributes.event`` — or DROPPED when
+#: the line does not survive ``parse_events``). Any change to how a line
+#: is parsed (a single typed parse, a map-typed envelope) must keep every
+#: row of this table.
+DROPPED = object()
+EDGE_LINES = [
+    ("dup_event_keys", _line('{"a":"1","b":"x","a":"2"}'), {"a": "2", "b": "x"}),
+    (
+        "keyless_akv_entries",
+        _line(
+            '{"p":"q","AuditKeyValues":[{"ValueString":"x"},'
+            '{"Key":"k","ValueString":"v"},{"Key":null,"ValueString":"y"}]}'
+        ),
+        {"p": "q", "k": "v"},
+    ),
+    (
+        "nested_bool_float_null_values",
+        _line('{"n":{"x":1,"y":[1,2]},"b":true,"f":1.5,"e":1e3,"z":null,"i":7}'),
+        {"n": '{"x":1,"y":[1,2]}', "b": "true", "f": "1.5", "e": "1000.0", "z": None, "i": "7"},
+    ),
+    ("event_array", _line("[1,2]"), DROPPED),
+    ("event_string", _line('"str"'), DROPPED),
+    ("event_missing", "{" + _META + "}", {}),
+    ("metadata_null", '{"metadata":null,"event":{"a":"1"}}', DROPPED),
+    (
+        "event_creation_time_non_numeric",
+        '{"metadata":{"offset":1,"eventCreationTime":"abc"},"event":{"a":"1"}}',
+        DROPPED,
+    ),
+    ("akv_string", _line('{"a":"1","AuditKeyValues":"abc"}'), DROPPED),
+    (
+        "akv_single_object",
+        _line('{"a":"1","AuditKeyValues":{"Key":"k","ValueString":"v"}}'),
+        DROPPED,
+    ),
+    ("akv_number", _line('{"a":"1","AuditKeyValues":5}'), DROPPED),
+    ("akv_null", _line('{"a":"1","AuditKeyValues":null}'), {"a": "1"}),
+    ("akv_empty", _line('{"a":"1","AuditKeyValues":[]}'), {"a": "1"}),
+    ("akv_ints", _line('{"a":"1","AuditKeyValues":[1,2]}'), DROPPED),
+    (
+        "akv_non_string_value",
+        _line(
+            '{"a":"1","AuditKeyValues":[{"Key":"k","ValueString":5},'
+            '{"Key":"b","ValueString":true}]}'
+        ),
+        {"a": "1", "k": "5", "b": "true"},
+    ),
+    (
+        "akv_string_holding_json_array",
+        _line(
+            '{"a":"1","AuditKeyValues":'
+            + json.dumps(json.dumps([{"Key": "k", "ValueString": "v"}]))
+            + "}"
+        ),
+        DROPPED,
+    ),
+    ("not_json", "not json at all", DROPPED),
+    ("json_array_line", "[1,2,3]", DROPPED),
+    ("truncated", '{"metadata":{"offset":7,"eventCrea', DROPPED),
+]
+
+
+def test_edge_lines_kept_dropped_and_flattened(spark):
+    df = spark.createDataFrame(
+        [(case, line) for case, line, _ in EDGE_LINES], "case string, value string"
+    )
+    got = {
+        r.case: dict(r.attributes.event)
+        for r in enrich_events(parse_events(df)).collect()
+    }
+    for case, _, expected in EDGE_LINES:
+        if expected is DROPPED:
+            assert case not in got, f"{case}: kept as {got.get(case)}"
+        else:
+            assert got.get(case, DROPPED) == expected, case
+
+
+def test_kv_fold_independent_of_map_key_dedup_policy(spark):
+    # the fold itself never builds a map with a repeated key, so it runs
+    # under EXCEPTION too (parse_events pins LAST_WIN only for raw JSON)
+    df = spark.createDataFrame([(COLLISION_LINE,), (AKV_DUP_LINE,)], ["value"])
+    out = enrich_events(parse_events(df))
+    key = "spark.sql.mapKeyDedupPolicy"
+    spark.conf.set(key, "EXCEPTION")
+    try:
+        rows = {r.attributes.metadata.offset: r.attributes.event for r in out.collect()}
+    finally:
+        spark.conf.set(key, "LAST_WIN")
+    assert rows[102] == {"Success": "override"}
+    assert rows[104] == {"k": "second"}

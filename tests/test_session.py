@@ -1,4 +1,5 @@
-"""The Python worker daemon ``get_spark`` sessions start workers from."""
+"""The session factory's confs and the Python worker daemon ``get_spark``
+sessions start workers from."""
 
 from __future__ import annotations
 
@@ -10,7 +11,9 @@ from collections import Counter
 
 import pytest
 
-from cses2humio_spark.session import PYDAEMON_DIR
+from cses2humio_spark.session import PYDAEMON_DIR, session_conf
+
+DEBUGGING = "spark.python.sql.dataFrameDebugging.enabled"
 
 
 def _load_daemon():
@@ -135,3 +138,88 @@ def test_deleted_archive_drops_cache_entry(temp_zip):
     assert temp_zip not in zipimport._zip_directory_cache
     assert imp._files == {}
     assert imp.find_spec("old_mod") is None
+
+
+def test_dataframe_debugging_off_in_every_session_conf(spark):
+    assert session_conf()[DEBUGGING] == "false"
+    assert session_conf(local=False)[DEBUGGING] == "false"
+    assert spark.conf.get(DEBUGGING) == "false"
+
+
+@pytest.fixture
+def py4j_calls(monkeypatch):
+    """``calls(build)``: the fewest driver→JVM commands ``build()`` sent
+    over three runs (the first run is a warm-up; py4j's own object
+    release commands land at random and only ever add)."""
+    import py4j.clientserver as cs
+
+    sent = [0]
+    real = cs.ClientServerConnection.send_command
+
+    def counting(self, command):
+        sent[0] += 1
+        return real(self, command)
+
+    monkeypatch.setattr(cs.ClientServerConnection, "send_command", counting)
+
+    def calls(build) -> int:
+        build()
+        counts = []
+        for _ in range(3):
+            before = sent[0]
+            build()
+            counts.append(sent[0] - before)
+        return min(counts)
+
+    return calls
+
+
+def test_ship_frame_builds_in_few_round_trips(spark, tmp_path, py4j_calls):
+    from cses2humio_spark.sources.event_source import ndjson_stream
+    from cses2humio_spark.streaming.pipeline import enrich_events, parse_events
+
+    line = '{"metadata":{"offset":1,"eventCreationTime":1},"event":{"a":"1"}}'
+    (tmp_path / "part-0.ndjson").write_text(line + "\n")
+    n = py4j_calls(
+        lambda: enrich_events(
+            parse_events(ndjson_stream(spark, str(tmp_path), max_files_per_trigger=4)),
+            app_id="a",
+            with_metadata=True,
+            host="h",
+        )
+    )
+    # 669 with DataFrame debugging on and a Python-lambda KV fold; 125
+    # with both off. A third of 669 leaves room for harmless additions.
+    assert n <= 223, n
+
+
+def test_hql_compiles_in_few_round_trips(spark, py4j_calls):
+    from pyspark.sql import functions as F
+
+    from cses2humio_spark.hql import hql
+
+    df = spark.range(10).select(
+        F.lit("x").alias("event_type"), F.col("id").alias("user_id")
+    )
+    n = py4j_calls(lambda: hql(df, "#event_type = x | groupBy(user_id)"))
+    # 121 with DataFrame debugging on, 31 with it off
+    assert n <= 60, n
+
+
+def test_hql_runtime_error_keeps_its_class(spark):
+    from pyspark.errors import ArithmeticException
+    from pyspark.sql import functions as F
+
+    from cses2humio_spark.hql import hql
+
+    df = spark.range(3).select(F.lit("x").alias("event_type"), F.col("id").alias("user_id"))
+    ansi = "spark.sql.ansi.enabled"
+    was = spark.conf.get(ansi)
+    spark.conf.set(ansi, "true")
+    try:
+        with pytest.raises(ArithmeticException) as err:
+            hql(df, "x := user_id / 0").collect()
+    finally:
+        spark.conf.set(ansi, was)
+    assert err.value.getCondition() == "DIVIDE_BY_ZERO"
+    assert err.value.getSqlState() == "22012"
